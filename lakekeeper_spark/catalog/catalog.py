@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import difflib
 import json
+from collections.abc import Container
 from typing import Any
 
 from . import commit as commit_engine
@@ -57,6 +58,10 @@ class NotModified(Exception):
 
 
 CommitFailedException = CommitConflict
+
+# what table_by_id / table_by_location rows carry: the S3 signer's
+# lookups never read the metadata blob
+_SIGNER_COLUMNS = "t.id, t.name, t.location, t.deleted_ms, n.ns_stored"
 
 _DEFAULT_WAREHOUSE_PROPS = {
     "format-version-policy": 3,  # max allowed format version
@@ -976,19 +981,42 @@ class Catalog:
         return self.register_table(warehouse, levels, name, metadata)
 
     def load_table(
-        self, warehouse: str, levels, name: str, etag: int | None = None
+        self, warehouse: str, levels, name: str, etag: int | Container[int] | None = None
     ) -> tuple[dict[str, Any], int]:
         """Returns (metadata, etag). Raises NotModified when the caller's
         etag still matches (reference If-None-Match -> 304)."""
+        text, seq, _ = self.load_table_text(warehouse, levels, name, etag)
+        return unpack_metadata(text), seq
+
+    def load_table_text(
+        self, warehouse: str, levels, name: str, etag: int | Container[int] | None = None
+    ) -> tuple[str, int, str | None]:
+        """Returns (stored metadata text, etag, location column).
+
+        The text is the pooled document ``pack_metadata`` wrote (see
+        catalog/metadoc.py); callers that can take the pooled form use it
+        verbatim. ``etag`` is the caller's version, or a container of
+        versions (an If-None-Match list); NotModified is raised when the
+        stored version is in it. With an etag, the version is checked by
+        a narrow read and the blob is read only when it differs."""
         wh = self._warehouse(warehouse)
         self._authorize("get_metadata", wh["wh_key"], ident.res_key(levels, name))
-        row = self._tabular_row(wh["wh_key"], levels, name, "table")
-        if not row:
+        key = (wh["wh_key"], ident.ns_key(levels), ident.fold(name))
+        cond = "wh_key=? AND ns_key=? AND name_key=? AND kind='table' AND deleted_ms IS NULL"
+        if etag is not None:
+            tags = (etag,) if isinstance(etag, int) else etag
+            head = self.store.one(f"SELECT metadata_seq FROM tabulars WHERE {cond}", key)
+            if head is not None and head["metadata_seq"] in tags:
+                raise NotModified()
+        # the version returned is the one read with the blob, even if a
+        # commit landed after the check above
+        row = self.store.one(
+            f"SELECT metadata, metadata_seq, location FROM tabulars WHERE {cond}", key
+        )
+        if row is None:
             raise NoSuchEntity(f"table {'.'.join(levels)}.{name} not found")
-        if etag is not None and etag == row["metadata_seq"]:
-            raise NotModified()
         self.store.record_endpoint("load_table", wh["wh_key"])
-        return unpack_metadata(row["metadata"]), row["metadata_seq"]
+        return row["metadata"], row["metadata_seq"], row["location"]
 
     def report_metrics(
         self, warehouse: str, levels, name: str, report: dict[str, Any]
@@ -1045,7 +1073,7 @@ class Catalog:
         (reference get_table_info with TabularListFlags, sign.rs:131-140)."""
         wh = self._warehouse(warehouse)
         r = self.store.one(
-            "SELECT t.*, n.ns_stored FROM tabulars t"
+            f"SELECT {_SIGNER_COLUMNS} FROM tabulars t"
             " JOIN namespaces n ON n.wh_key = t.wh_key AND n.ns_key = t.ns_key"
             " WHERE t.wh_key=? AND t.id=? AND t.kind='table'",
             (wh["wh_key"], table_id),
@@ -1058,7 +1086,8 @@ class Catalog:
         self, warehouse: str, location: str
     ) -> tuple[tuple[str, ...], str, dict[str, Any]] | None:
         """Resolve the table whose location contains ``location`` (itself
-        or a sublocation) -> (namespace levels, name, row metadata dict).
+        or a sublocation) -> (namespace levels, name, row), the row holding
+        the ``_SIGNER_COLUMNS``.
 
         Backs the S3 remote-signing endpoint (reference
         get_tabular_infos_by_s3_location, service/catalog_store/
@@ -1074,7 +1103,7 @@ class Catalog:
             if want.startswith(prefix):
                 want = "s3://" + want[len(prefix):]
         rows = self.store.query(
-            "SELECT t.*, n.ns_stored FROM tabulars t"
+            f"SELECT {_SIGNER_COLUMNS} FROM tabulars t"
             " JOIN namespaces n ON n.wh_key = t.wh_key AND n.ns_key = t.ns_key"
             " WHERE t.wh_key=? AND t.kind='table' AND t.location IS NOT NULL",
             (wh["wh_key"],),
@@ -1137,6 +1166,7 @@ class Catalog:
         requirements: list[dict[str, Any]],
         updates: list[dict[str, Any]],
         idempotency_key: str | None = None,
+        packed: list[str] | None = None,
     ) -> dict[str, Any]:
         return self.commit_transaction(
             warehouse,
@@ -1149,6 +1179,7 @@ class Catalog:
                 }
             ],
             idempotency_key=idempotency_key,
+            packed=packed,
         )[0]
 
     def commit_transaction(
@@ -1156,10 +1187,16 @@ class Catalog:
         warehouse: str,
         table_changes: list[dict[str, Any]],
         idempotency_key: str | None = None,
+        packed: list[str] | None = None,
     ) -> list[dict[str, Any]]:
         """Multi-table atomic commit (reference CommitTransaction,
         server/tables.rs:948 -> try_commit_tables:1523): all tables
-        validated + CAS-updated inside ONE metastore transaction."""
+        validated + CAS-updated inside ONE metastore transaction.
+
+        ``packed``, when given, receives the stored text of each new
+        version in ``table_changes`` order — the one encode a commit
+        makes (catalog/metadoc.py). An idempotent replay leaves it
+        empty and returns the recorded results."""
         wh = self._warehouse(warehouse)
         if idempotency_key:
             prior = self.store.idempotency_get(idempotency_key)
@@ -1184,6 +1221,7 @@ class Catalog:
         st.begin()
         try:
             results = []
+            texts = []
             for ch in table_changes:
                 row = self._tabular_row(wh["wh_key"], ch["levels"], ch["name"], "table")
                 meta = unpack_metadata(row["metadata"]) if row else None
@@ -1198,16 +1236,18 @@ class Catalog:
                     raise NoSuchEntity(f"table {ch['name']} not found")
                 new_meta.pop("staged", None)  # a successful commit finalizes staged creates
                 expired_files.extend(
-                    self._roll_metadata_log(wh, row["metadata_seq"], meta, new_meta)
+                    self._roll_metadata_log(wh, row, meta, new_meta)
                 )
+                text = pack_metadata(new_meta)
                 cur = st.execute(
                     "UPDATE tabulars SET metadata=?, metadata_seq=metadata_seq+1, updated_ms=?"
                     " WHERE id=? AND metadata_seq=?",
-                    (pack_metadata(new_meta), now_ms(), row["id"], row["metadata_seq"]),
+                    (text, now_ms(), row["id"], row["metadata_seq"]),
                 )
                 if cur.rowcount != 1:
                     raise CommitConflict("concurrent update lost the race")
                 results.append(new_meta)
+                texts.append(text)
                 st.emit_event(
                     "commit-table",
                     wh["wh_key"],
@@ -1226,12 +1266,14 @@ class Catalog:
             Path(f).unlink(missing_ok=True)
         if idempotency_key:
             self.store.idempotency_put(idempotency_key, {"results": results})
+        if packed is not None:
+            packed.extend(texts)
         return results
 
     def _roll_metadata_log(
         self,
         wh: dict[str, Any],
-        metadata_seq: int,
+        prev_row: Any,
         prev_meta: dict[str, Any] | None,
         new_meta: dict[str, Any],
     ) -> list[str]:
@@ -1239,7 +1281,8 @@ class Catalog:
 
         Mirrors the reference's commit-time metadata maintenance
         (server/tables.rs:1550-1737): the previous TableMetadata is written
-        to ``<location>/metadata/<seq>-<uuid>.metadata.json``, appended to
+        to ``<location>/metadata/<seq>-<uuid>.metadata.json`` (``prev_row``'s
+        stored text, verbatim; ``prev_meta`` is its parsed form), appended to
         the new metadata's ``metadata-log``, and the log is trimmed to
         ``write.metadata.previous-versions-max`` (default from warehouse
         props, reference default 100). Returns the expired files to delete
@@ -1258,9 +1301,10 @@ class Catalog:
         mdir = Path(loc) / "metadata"
         try:
             mdir.mkdir(parents=True, exist_ok=True)
-            fpath = str(mdir / f"{metadata_seq:05d}-{new_uuid()[:8]}.metadata.json")
+            seq = prev_row["metadata_seq"]
+            fpath = str(mdir / f"{seq:05d}-{new_uuid()[:8]}.metadata.json")
             with open(fpath, "w") as f:
-                f.write(pack_metadata(prev_meta))
+                f.write(prev_row["metadata"])
         except OSError:
             return []  # location not writable (e.g. registered external table)
         log = new_meta.setdefault("metadata-log", [])

@@ -24,6 +24,18 @@ not one growing JSON blob).
 ``unpack_metadata`` accepts plain (pre-pooling / foreign) documents
 unchanged, so registered external metadata files and pre-round-16 rows
 keep loading.
+
+Encode once: the catalog encodes a metadata version once, with
+``pack_metadata``, when the write that creates it stores it in
+``tabulars.metadata``. Every consumer that can take the pooled form
+then gets that stored text verbatim, never a re-encode of its parsed
+form: a ``?pooled-manifests=true`` loadTable reply
+(``Catalog.load_table_text``), the archived previous version a commit
+writes to ``metadata/``, and a ``?pooled-manifests=true`` commit reply
+(``commit_transaction(packed=...)``). A 304 revalidation reads only
+``metadata_seq``. Only consumers that need the parsed document — the
+commit engine, ``snapshots=refs``, plain spec-document replies — call
+``unpack_metadata``.
 """
 
 from __future__ import annotations

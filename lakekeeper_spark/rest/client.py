@@ -320,13 +320,17 @@ class RestCatalogClient:
         self, warehouse, levels, name, requirements, updates, idempotency_key=None
     ):
         headers = {"Idempotency-Key": idempotency_key} if idempotency_key else {}
+        # the pooled reply is the text the server stored for the new
+        # version, sent without a second encode (see load_table)
         _, body, _ = self._request(
             "POST",
-            self._tbl(warehouse, levels, name),
+            self._tbl(warehouse, levels, name) + "?pooled-manifests=true",
             {"requirements": requirements, "updates": updates},
             headers=headers,
         )
-        return body["metadata"]
+        from ..catalog.metadoc import unpack_document
+
+        return unpack_document(body["metadata"])
 
     def commit_transaction(self, warehouse, table_changes, idempotency_key=None):
         headers = {"Idempotency-Key": idempotency_key} if idempotency_key else {}

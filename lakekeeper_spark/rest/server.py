@@ -25,8 +25,10 @@ Catalog methods, which hold all the real logic.
 from __future__ import annotations
 
 import json
+import logging
 import re
 import threading
+from collections.abc import Container
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 from urllib.parse import parse_qs, unquote, urlparse
@@ -55,6 +57,36 @@ def _error_body(code: int, etype: str, message: str) -> bytes:
     return json.dumps(
         {"error": {"message": message, "type": etype, "code": code}}
     ).encode()
+
+
+def _metadata_envelope(metadata_json: str, rest: dict[str, Any]) -> bytes:
+    """``{"metadata": <metadata_json>, **rest}``, the document spliced in
+    as given: stored metadata text goes out with no parse or re-encode."""
+    return ('{"metadata": ' + metadata_json + ", " + json.dumps(rest)[1:]).encode()
+
+
+class _AnyVersion:
+    """``If-None-Match: *``: matches whatever version the table is at."""
+
+    def __contains__(self, seq: object) -> bool:
+        return True
+
+
+def _if_none_match(header: str | None) -> Container[int] | None:
+    """The table versions an If-None-Match header names (RFC 9110
+    §13.1.2, weak comparison): ``*`` names any version, and a tag that is
+    not one of this server's ``W/"<seq>"`` etags names none."""
+    if header is None:
+        return None
+    tags = [t.strip() for t in header.split(",")]
+    if "*" in tags:
+        return _AnyVersion()
+    seqs = set()
+    for t in tags:
+        t = t.removeprefix("W/").strip('"')
+        if t.isascii() and t.isdigit():
+            seqs.add(int(t))
+    return seqs or None
 
 
 # (method, compiled path regex) -> handler name; group names feed kwargs
@@ -107,7 +139,14 @@ class _Handler(BaseHTTPRequestHandler):
         headers: dict[str, str] | None = None,
         head_only: bool = False,
     ) -> None:
-        data = b"" if payload is None else json.dumps(payload).encode()
+        """``payload`` is JSON-encoded, except ``bytes``, which are an
+        already-encoded JSON document and go out as they are."""
+        if payload is None:
+            data = b""
+        elif isinstance(payload, bytes):
+            data = payload
+        else:
+            data = json.dumps(payload).encode()
         self.send_response(code)
         for k, v in (headers or {}).items():
             self.send_header(k, v)
@@ -213,7 +252,8 @@ class _Handler(BaseHTTPRequestHandler):
                 self._reply_err(
                     400, "BadRequestException", f"invalid request: {e!r}"
                 )
-            except Exception as e:  # pragma: no cover - surfaced to client
+            except Exception as e:
+                logging.getLogger(__name__).exception("%s %s failed", method, self.path)
                 self._reply_err(500, "InternalServerError", e)
             return
         self._reply_err(404, "NoSuchRouteException", f"{method} {parsed.path}")
@@ -359,8 +399,7 @@ class _Handler(BaseHTTPRequestHandler):
 
     @route("GET", rf"/catalog/v1/{P}/namespaces/{NS}/tables/{TBL}")
     def load_table(self, prefix, ns, tbl):
-        inm = self.headers.get("If-None-Match")
-        etag = int(inm.strip('W/"')) if inm else None
+        etag = _if_none_match(self.headers.get("If-None-Match"))
         # DEFINER/INVOKER view-chain security (docs/view-security.md;
         # authorize_load.rs): ?referenced-by=<dotted view idents, comma
         # separated, entry point first>. Only honored for a matched
@@ -396,40 +435,45 @@ class _Handler(BaseHTTPRequestHandler):
         # DEFINER owner's grant level, authorize_load.rs ResolvedTabular
         # is_delegated_execution)
         self.catalog._actor = effective
-        meta, seq = self.catalog.load_table(prefix, _ns(ns), unquote(tbl), etag)
-        # ?snapshots=refs trims the snapshot list to ref-reachable ancestry
-        # (reference LoadTableQuery, api/iceberg/v1/tables.rs:83-86)
-        if self.query.get("snapshots") == "refs":
-            meta = dict(meta)
-            by_id = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
-            keep: set[int] = set()
-            stack = [r["snapshot-id"] for r in meta.get("refs", {}).values()]
-            while stack:
-                sid = stack.pop()
-                if sid in keep or sid not in by_id:
-                    continue
-                keep.add(sid)
-                parent = by_id[sid].get("parent-snapshot-id")
-                if parent is not None:
-                    stack.append(parent)
-            meta["snapshots"] = [
-                s for s in meta["snapshots"] if s["snapshot-id"] in keep
-            ]
+        text, seq, location = self.catalog.load_table_text(
+            prefix, _ns(ns), unquote(tbl), etag
+        )
         # ?pooled-manifests=true (vendor extension, engine clients
         # only): serve the descriptor-POOLED document — with manifest
         # reuse, consecutive snapshots repeat descriptors, so the
         # pooled payload is O(snapshots + manifests) on the wire where
-        # the denormal one is O(snapshots x manifests). Foreign clients
+        # the denormal one is O(snapshots x manifests). The stored text
+        # IS that document, so it goes out verbatim. Foreign clients
         # never send the flag and get the plain spec document.
-        if self.query.get("pooled-manifests") == "true":
-            from ..catalog.metadoc import pool_document
+        pooled = self.query.get("pooled-manifests") == "true"
+        # ?snapshots=refs trims the snapshot list to ref-reachable ancestry
+        # (reference LoadTableQuery, api/iceberg/v1/tables.rs:83-86)
+        refs_only = self.query.get("snapshots") == "refs"
+        if pooled and not refs_only:
+            doc = text
+        else:
+            from ..catalog.metadoc import pool_document, unpack_metadata
 
-            meta = pool_document(meta)
-        out = {
-            "metadata": meta,
-            "metadata-location": meta.get("location"),
-            "config": {},
-        }
+            meta = unpack_metadata(text)
+            if refs_only:
+                by_id = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
+                keep: set[int] = set()
+                stack = [r["snapshot-id"] for r in meta.get("refs", {}).values()]
+                while stack:
+                    sid = stack.pop()
+                    if sid in keep or sid not in by_id:
+                        continue
+                    keep.add(sid)
+                    parent = by_id[sid].get("parent-snapshot-id")
+                    if parent is not None:
+                        stack.append(parent)
+                meta["snapshots"] = [
+                    s for s in meta["snapshots"] if s["snapshot-id"] in keep
+                ]
+            doc = json.dumps(pool_document(meta) if pooled else meta)
+        # metadata-location: the location column always equals the
+        # document's "location" (set-location cannot change it)
+        out: dict[str, Any] = {"metadata-location": location, "config": {}}
         # X-Iceberg-Access-Delegation: vended-credentials — include
         # downscoped storage credentials at the level the authorizer grants
         # THIS principal (reference load_table.rs:268-313 +
@@ -448,7 +492,7 @@ class _Handler(BaseHTTPRequestHandler):
                 ]
             except AuthorizationError:
                 pass  # metadata-only load
-        self._reply(200, out, headers={"ETag": f'W/"{seq}"'})
+        self._reply(200, _metadata_envelope(doc, out), headers={"ETag": f'W/"{seq}"'})
 
     @route("HEAD", rf"/catalog/v1/{P}/namespaces/{NS}/tables/{TBL}")
     def head_table(self, prefix, ns, tbl):
@@ -459,6 +503,7 @@ class _Handler(BaseHTTPRequestHandler):
     @route("POST", rf"/catalog/v1/{P}/namespaces/{NS}/tables/{TBL}")
     def commit_table(self, prefix, ns, tbl):
         body = self._body()
+        packed: list[str] = []
         meta = self.catalog.commit_table(
             prefix,
             _ns(ns),
@@ -466,8 +511,15 @@ class _Handler(BaseHTTPRequestHandler):
             body.get("requirements") or [],
             body.get("updates") or [],
             idempotency_key=self.headers.get("Idempotency-Key"),
+            packed=packed,
         )
-        self._reply(200, {"metadata": meta, "metadata-location": meta.get("location")})
+        out = {"metadata-location": meta.get("location")}
+        # ?pooled-manifests=true: reply with the pooled text the commit
+        # stored (an idempotent replay has none and replies as below)
+        if packed and self.query.get("pooled-manifests") == "true":
+            self._reply(200, _metadata_envelope(packed[0], out))
+        else:
+            self._reply(200, {"metadata": meta, **out})
 
     @route("DELETE", rf"/catalog/v1/{P}/namespaces/{NS}/tables/{TBL}")
     def drop_table(self, prefix, ns, tbl):
