@@ -1196,7 +1196,14 @@ class Catalog:
         ``packed``, when given, receives the stored text of each new
         version in ``table_changes`` order — the one encode a commit
         makes (catalog/metadoc.py). An idempotent replay leaves it
-        empty and returns the recorded results."""
+        empty and returns the recorded results.
+
+        The Idempotency-Key is re-checked after BEGIN and recorded inside
+        the transaction, so a key applies at most once: a commit whose
+        record insert finds the key already taken (a concurrent request
+        on PostgreSQL, where BEGIN takes no write lock) rolls back and
+        replays the recorded results. A rolled-back attempt also removes
+        the archive files it wrote."""
         wh = self._warehouse(warehouse)
         if idempotency_key:
             prior = self.store.idempotency_get(idempotency_key)
@@ -1213,13 +1220,20 @@ class Catalog:
             self._authorize(
                 "commit", wh["wh_key"], ident.res_key(ch["levels"], ch["name"])
             )
+        from pathlib import Path
+
         from . import warehouse as wh_ops
 
         allowed_versions = wh_ops.allowed_format_version_set(wh["properties"])
         st = self.store
+        archived: list[str] = []
         expired_files: list[str] = []
         st.begin()
         try:
+            prior = st.idempotency_get(idempotency_key) if idempotency_key else None
+            if prior is not None:
+                st.rollback()
+                return prior["results"]
             results = []
             texts = []
             for ch in table_changes:
@@ -1236,7 +1250,7 @@ class Catalog:
                     raise NoSuchEntity(f"table {ch['name']} not found")
                 new_meta.pop("staged", None)  # a successful commit finalizes staged creates
                 expired_files.extend(
-                    self._roll_metadata_log(wh, row, meta, new_meta)
+                    self._roll_metadata_log(wh, row, meta, new_meta, archived)
                 )
                 text = pack_metadata(new_meta)
                 cur = st.execute(
@@ -1254,18 +1268,26 @@ class Catalog:
                     f"{'.'.join(ch['levels'])}.{ch['name']}",
                     {"n_updates": len(ch["updates"])},
                 )
+            if idempotency_key and not st.idempotency_put(
+                idempotency_key, {"results": results}
+            ):
+                raise CommitConflict("idempotency key recorded concurrently")
             st.commit()
-        except BaseException:
+        except BaseException as exc:
             st.rollback()
+            # the archives this attempt wrote belong to no committed
+            # version: leave no orphaned file behind
+            for f in archived:
+                Path(f).unlink(missing_ok=True)
+            if idempotency_key and isinstance(exc, CommitConflict):
+                prior = st.idempotency_get(idempotency_key)
+                if prior is not None:
+                    return prior["results"]
             raise
         # delete expired metadata files only after the transaction landed
         # (delete-after-commit, reference server/tables.rs:1730,2083)
-        from pathlib import Path
-
         for f in expired_files:
             Path(f).unlink(missing_ok=True)
-        if idempotency_key:
-            self.store.idempotency_put(idempotency_key, {"results": results})
         if packed is not None:
             packed.extend(texts)
         return results
@@ -1276,6 +1298,7 @@ class Catalog:
         prev_row: Any,
         prev_meta: dict[str, Any] | None,
         new_meta: dict[str, Any],
+        archived: list[str],
     ) -> list[str]:
         """Archive the superseded metadata version and trim the log.
 
@@ -1288,8 +1311,9 @@ class Catalog:
         props, reference default 100). Returns the expired files to delete
         AFTER the transaction commits when
         ``write.metadata.delete-after-commit.enabled`` (default true,
-        tables.rs:96-97,2083) — orphaning files on rollback is safe, losing
-        referenced files is not.
+        tables.rs:96-97,2083) — losing referenced files is not safe. The
+        archive's path is appended to ``archived`` so that a rolled-back
+        commit can remove it.
         """
         from pathlib import Path
 
@@ -1304,6 +1328,7 @@ class Catalog:
             seq = prev_row["metadata_seq"]
             fpath = str(mdir / f"{seq:05d}-{new_uuid()[:8]}.metadata.json")
             with open(fpath, "w") as f:
+                archived.append(fpath)
                 f.write(prev_row["metadata"])
         except OSError:
             return []  # location not writable (e.g. registered external table)

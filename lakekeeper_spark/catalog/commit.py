@@ -306,10 +306,33 @@ def apply_commit(
     ``allowed_format_versions`` is the v0.13 allowed-set form of the same
     policy (warehouse/mod.rs:257 — versions "that may be created in, or
     upgraded to"); when given, an upgrade target must be a member.
+
+    Structural sharing: the result is a new top-level dict whose list and
+    dict values are shallow copies, so everything below them — snapshots,
+    schemas, specs, descriptors — is SHARED with ``meta``. A commit then
+    costs CPU in proportion to its updates, not to the table's history,
+    and ``meta`` is still never mutated. That holds only while every
+    ``_apply_update`` branch keeps this invariant; it may:
+
+      - assign top-level keys of the output;
+      - append to, pop from, filter into a new list, or update a
+        top-level container of the output (``snapshots``, ``refs``,
+        ``properties``, ``snapshot-log`` ...);
+      - mutate an object it has just ``_deep_copy``'d from the update
+        payload (e.g. the v3 ``first-row-id`` stamps on the new
+        snapshot's descriptors).
+
+    It must never mutate an object reached through a top-level container
+    (an existing snapshot, schema, ref or descriptor): replace it with a
+    new object instead. Callers get the same contract: after the call,
+    the objects below the top level belong to both documents.
+    ``tests/test_commit_properties.py`` checks purity for every action.
     """
     for req in requirements:
         check_requirement(req, meta)
-    out = _deep_copy(meta)
+    out = {
+        k: v.copy() if isinstance(v, (dict, list)) else v for k, v in meta.items()
+    }
     for upd in updates:
         _apply_update(out, upd, max_format_version, allowed_format_versions)
     out["last-updated-ms"] = int(time.time() * 1000)
@@ -530,6 +553,11 @@ def _apply_update(  # noqa: C901 - intentionally a flat 24-way dispatch
         ids = set(upd["snapshot-ids"])
         meta["snapshots"] = [s for s in meta["snapshots"] if s["snapshot-id"] not in ids]
         meta["snapshot-log"] = [e for e in meta["snapshot-log"] if e["snapshot-id"] not in ids]
+        # refs to a removed snapshot go with it (Iceberg's TableMetadata
+        # drops dangling refs on RemoveSnapshots)
+        meta["refs"] = {
+            n: r for n, r in meta["refs"].items() if r["snapshot-id"] not in ids
+        }
         if meta["current-snapshot-id"] in ids:
             meta["current-snapshot-id"] = None
     elif action == "remove-snapshot-ref":

@@ -36,27 +36,59 @@ writes to ``metadata/``, and a ``?pooled-manifests=true`` commit reply
 ``metadata_seq``. Only consumers that need the parsed document — the
 commit engine, ``snapshots=refs``, plain spec-document replies — call
 ``unpack_metadata``.
+
+Pool keying: two descriptors share a pool entry exactly when their
+canonical JSON (sorted keys, compact separators) is equal, and the pool
+keeps the first descriptor of each distinct key in snapshot order. Keys
+are computed only when needed. Descriptors are bucketed by ``path``: a
+descriptor joins a same-path entry without any encoding when both have
+the same keys and every value is the SAME object. That is what
+``unpack_document``'s per-snapshot ``dict(pool[i])`` copies and the
+commit engine's structural sharing carry forward. Any other descriptor
+is encoded and looked up among the keys of its bucket's entries, which
+are encoded lazily; one without a string ``path`` is matched by key
+alone. Identity implies equal JSON, so the pooled text is exactly what
+keying every descriptor by its JSON would give; plain ``==`` would not
+be safe, as it equates ``1``, ``1.0`` and ``True``. A commit's pack
+therefore encodes only the descriptors its new snapshot brought in,
+not the table's history.
 """
 
 from __future__ import annotations
 
 import json
+import operator
+from itertools import repeat
 from typing import Any
 
 POOL_KEY = "manifest-descriptor-pool"
 REFS_KEY = "manifests-pooled"
 
 
+_CANONICAL = json.JSONEncoder(sort_keys=True, separators=(",", ":"))
+# never a document value, so ``d.get(k, _MISSING) is p[k]`` implies k in d
+_MISSING = object()
+
+
+def _canonical_key(desc: Any) -> str:
+    """The pool key of a descriptor: its canonical JSON."""
+    return _CANONICAL.encode(desc)
+
+
 def pool_document(meta: dict[str, Any]) -> dict[str, Any]:
     """The pooled FORM of a metadata document (same object when there
     is nothing to pool). Pure: the input is never mutated (callers keep
     using it) — snapshots are rebuilt, descriptors shared by reference
-    into the pool."""
+    into the pool. Keying follows the module docstring's rule."""
     snaps = meta.get("snapshots")
     if not snaps or not any("manifests" in s for s in snaps):
         return meta
     pool: list[dict[str, Any]] = []
-    index: dict[str, int] = {}
+    keys: list[str | None] = []  # canonical key per entry, once computed
+    index: dict[str, int] = {}  # computed canonical key -> entry
+    # pool indices by path; None holds what has no string path (or is no
+    # plain dict) and is matched by canonical key only
+    by_path: dict[str | None, list[int]] = {}
     out_snaps: list[dict[str, Any]] = []
     for s in snaps:
         descs = s.get("manifests")
@@ -65,12 +97,41 @@ def pool_document(meta: dict[str, Any]) -> dict[str, Any]:
             continue
         refs: list[int] = []
         for d in descs:
-            key = json.dumps(d, sort_keys=True, separators=(",", ":"))
-            i = index.get(key)
+            path = d.get("path") if type(d) is dict else None
+            if type(path) is not str:
+                path = None
+            bucket = by_path.setdefault(path, [])
+            i = None
+            if path is not None:
+                # inline (this loop runs once per descriptor of every
+                # snapshot): same keys, each bound to the same object
+                for j in bucket:
+                    p = pool[j]
+                    if p is d or (
+                        len(p) == len(d)
+                        and all(
+                            map(operator.is_, p.values(), map(d.get, p, repeat(_MISSING)))
+                        )
+                    ):
+                        i = j
+                        break
+            key = None
+            if i is None and bucket:
+                # entries join a non-empty bucket keyed, so only its
+                # first entry can still lack a key
+                first = bucket[0]
+                if keys[first] is None:
+                    keys[first] = _canonical_key(pool[first])
+                    index[keys[first]] = first
+                key = _canonical_key(d)
+                i = index.get(key)
             if i is None:
                 i = len(pool)
                 pool.append(d)
-                index[key] = i
+                keys.append(key)
+                bucket.append(i)
+                if key is not None:
+                    index[key] = i
             refs.append(i)
         s2 = {k: v for k, v in s.items() if k != "manifests"}
         s2[REFS_KEY] = refs
@@ -86,8 +147,9 @@ def pack_metadata(meta: dict[str, Any]) -> str:
 def unpack_metadata(text: str) -> dict[str, Any]:
     """Parse a stored metadata document, rehydrating pooled descriptors
     into per-snapshot COPIES (snapshots must not share mutable dicts —
-    the commit engine assigns per-snapshot first-row-id state). Plain
-    documents pass through untouched."""
+    an edit to one snapshot's descriptor must not reach another's; the
+    copies share their values, which is what lets ``pool_document``
+    match them by identity). Plain documents pass through untouched."""
     return unpack_document(json.loads(text))
 
 

@@ -904,9 +904,10 @@ class Metastore:
         row = self.one("SELECT response FROM idempotency WHERE key=?", (key,))
         return json.loads(row["response"]) if row else None
 
-    def idempotency_put(self, key: str, response: dict[str, Any]) -> None:
-        self.con.execute(
+    def idempotency_put(self, key: str, response: dict[str, Any]) -> bool:
+        """Record ``key``; False when it was already recorded."""
+        return self.con.execute(
             "INSERT INTO idempotency (key, response, created_ms) VALUES (?,?,?)"
             " ON CONFLICT (key) DO NOTHING",
             (key, json.dumps(response), now_ms()),
-        )
+        ).rowcount == 1

@@ -4,6 +4,9 @@ protection, pagination, search, concurrency)."""
 
 from __future__ import annotations
 
+import threading
+from pathlib import Path
+
 import pytest
 
 from lakekeeper_spark.catalog.catalog import (
@@ -134,6 +137,90 @@ def test_multi_table_transaction_atomic(catalog):
         catalog.commit_transaction("wh", bad)
     m1, _ = catalog.load_table("wh", ["ns"], "t1")
     assert m1["properties"]["k"] == "1"  # rollback happened
+
+
+def _archives(catalog, name: str) -> list[str]:
+    meta, _ = catalog.load_table("wh", ["ns"], name)
+    return sorted(p.name for p in Path(meta["location"], "metadata").glob("*.metadata.json"))
+
+
+def test_rolled_back_transaction_leaves_no_archive_file(catalog):
+    # table A applies (and archives its previous version), then table B
+    # fails its requirement: the whole transaction rolls back, and so
+    # must A's archive file (no orphaned files)
+    catalog.create_namespace("wh", ["ns"])
+    catalog.create_table("wh", ["ns"], "a", SCHEMA)
+    catalog.create_table("wh", ["ns"], "b", SCHEMA)
+    catalog.commit_table(
+        "wh", ["ns"], "a", [], [{"action": "set-properties", "updates": {"k": "1"}}]
+    )
+    before = _archives(catalog, "a")
+    meta_before, seq_before = catalog.load_table("wh", ["ns"], "a")
+    changes = [
+        {"levels": ["ns"], "name": "a", "requirements": [],
+         "updates": [{"action": "set-properties", "updates": {"k": "2"}}]},
+        {"levels": ["ns"], "name": "b",
+         "requirements": [{"type": "assert-current-schema-id", "current-schema-id": 7}],
+         "updates": []},
+    ]
+    with pytest.raises(CommitFailedException):
+        catalog.commit_transaction("wh", changes)
+    assert catalog.load_table("wh", ["ns"], "a") == (meta_before, seq_before)
+    assert _archives(catalog, "a") == before
+
+
+def test_idempotency_key_applies_once_under_concurrency(catalog, monkeypatch):
+    # both requests pass the pre-transaction key check before either
+    # commits; the re-check inside the transaction must stop the second
+    catalog.create_namespace("wh", ["ns"])
+    catalog.create_table("wh", ["ns"], "t", SCHEMA)
+    store = catalog.store
+    real_get = store.idempotency_get
+    barrier = threading.Barrier(2, timeout=20)
+    first_call = threading.local()
+
+    def get(key):
+        out = real_get(key)
+        if not getattr(first_call, "done", False):
+            first_call.done = True
+            barrier.wait()
+        return out
+
+    monkeypatch.setattr(store, "idempotency_get", get)
+    upds = [{"action": "set-properties", "updates": {"n": "1"}}]
+    replies: list = []
+
+    def commit():
+        replies.append(
+            catalog.commit_table("wh", ["ns"], "t", [], upds, idempotency_key="k-1")
+        )
+
+    threads = [threading.Thread(target=commit) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+        assert not t.is_alive()
+    assert len(replies) == 2
+    assert replies[0] == replies[1]
+    _, seq = catalog.load_table("wh", ["ns"], "t")
+    assert seq == 2  # created at 1, one commit applied
+
+
+def test_failed_idempotency_record_leaves_table_unchanged(catalog, monkeypatch):
+    catalog.create_namespace("wh", ["ns"])
+    catalog.create_table("wh", ["ns"], "t", SCHEMA)
+    before = catalog.load_table("wh", ["ns"], "t")
+
+    def broken_put(key, response):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(catalog.store, "idempotency_put", broken_put)
+    upds = [{"action": "set-properties", "updates": {"n": "1"}}]
+    with pytest.raises(OSError):
+        catalog.commit_table("wh", ["ns"], "t", [], upds, idempotency_key="k-2")
+    assert catalog.load_table("wh", ["ns"], "t") == before
+    assert catalog.store.idempotency_get("k-2") is None
 
 
 def test_rename_and_cross_case_rename(catalog):

@@ -11,6 +11,13 @@ TableMetadata invariants Iceberg requires after EVERY fold step:
   - snapshot-log only references live snapshots
   - apply_commit is pure (input metadata is never mutated) and
     deterministic (same input -> same output)
+  - structural sharing: snapshots an update does not remove are the
+    SAME objects in the input and the output (apply_commit copies one
+    level, never the history)
+
+The sequences reach every TableUpdate action, including the v3 upgrade
+followed by out-of-line ``manifests`` (the first-row-id path), non-main
+refs, statistics, encryption keys and schema/spec removal.
 """
 
 from __future__ import annotations
@@ -60,9 +67,23 @@ def update_sequences(draw):
                     "set-properties",
                     "remove-properties",
                     "remove-snapshot-ref",
+                    "upgrade-v3",
+                    "manifests-snapshot",
+                    "remove-snapshots",
+                    "set-branch-or-tag",
+                    "set-statistics",
+                    "remove-statistics",
+                    "set-partition-statistics",
+                    "remove-partition-statistics",
+                    "add-encryption-key",
+                    "remove-encryption-key",
+                    "remove-schemas",
+                    "remove-partition-specs",
                 ]
             )
         )
+        # an id that may or may not name a live snapshot
+        some_snapshot = draw(st.integers(min_value=1, max_value=next_snapshot))
         if kind == "add-schema":
             fields = [
                 {"id": i, "name": f"c{i}", "type": "int", "required": False}
@@ -112,6 +133,83 @@ def update_sequences(draw):
             )
         elif kind == "remove-snapshot-ref":
             updates.append({"action": "remove-snapshot-ref", "ref-name": "main"})
+        elif kind in ("upgrade-v3", "manifests-snapshot"):
+            if kind == "upgrade-v3":
+                updates.append({"action": "upgrade-format-version", "format-version": 3})
+            # out-of-line manifests: a new data descriptor (first-row-id
+            # assigned in v3), a carried one keeping its id, a delete one
+            sid = next_snapshot
+            next_snapshot += 1
+            manifests = [
+                {"path": f"m{sid}.avro", "content": "data",
+                 "null-id-rows": draw(st.integers(min_value=0, max_value=5))},
+                {"path": "m0.avro", "content": "data", "null-id-rows": 0,
+                 "first-row-id": 0},
+                {"path": f"d{sid}.avro", "content": "deletes"},
+            ]
+            updates.append(
+                {
+                    "action": "add-snapshot",
+                    "snapshot": {
+                        "snapshot-id": sid,
+                        "timestamp-ms": 1000 + sid,
+                        "manifests": manifests,
+                        "summary": {"operation": "append"},
+                    },
+                }
+            )
+            updates.append(
+                {"action": "set-snapshot-ref", "ref-name": "main", "snapshot-id": sid}
+            )
+        elif kind == "remove-snapshots":
+            updates.append({"action": "remove-snapshots", "snapshot-ids": [some_snapshot]})
+        elif kind == "set-branch-or-tag":
+            ref_type = draw(st.sampled_from(["branch", "tag"]))
+            updates.append(
+                {
+                    "action": "set-snapshot-ref",
+                    "ref-name": f"{ref_type}-1",
+                    "type": ref_type,
+                    "snapshot-id": some_snapshot,
+                    "max-ref-age-ms": 1000,
+                }
+            )
+        elif kind in ("set-statistics", "set-partition-statistics"):
+            field = kind.removeprefix("set-")
+            updates.append(
+                {
+                    "action": kind,
+                    field: {
+                        "snapshot-id": some_snapshot,
+                        "statistics-path": f"/tmp/t/stats-{some_snapshot}",
+                        "file-size-in-bytes": 10,
+                    },
+                }
+            )
+        elif kind in ("remove-statistics", "remove-partition-statistics"):
+            updates.append({"action": kind, "snapshot-id": some_snapshot})
+        elif kind == "add-encryption-key":
+            updates.append(
+                {
+                    "action": "add-encryption-key",
+                    "encryption-key": {
+                        "key-id": draw(st.sampled_from(["k1", "k2"])),
+                        "encrypted-key-metadata": "AA==",
+                    },
+                }
+            )
+        elif kind == "remove-encryption-key":
+            updates.append(
+                {"action": "remove-encryption-key", "key-id": draw(st.sampled_from(["k1", "k2"]))}
+            )
+        elif kind == "remove-schemas":
+            updates.append(
+                {"action": "remove-schemas", "schema-ids": [draw(st.integers(0, 3))]}
+            )
+        elif kind == "remove-partition-specs":
+            updates.append(
+                {"action": "remove-partition-specs", "spec-ids": [draw(st.integers(0, 3))]}
+            )
     return updates
 
 
@@ -130,6 +228,25 @@ def _check_invariants(meta):
     assert all(e["snapshot-id"] in snap_ids for e in meta["snapshot-log"])
     for name, ref in meta["refs"].items():
         assert ref["snapshot-id"] in snap_ids, name
+    key_ids = [k["key-id"] for k in meta["encryption-keys"]]
+    assert len(key_ids) == len(set(key_ids))
+    for kind in ("statistics", "partition-statistics"):
+        stat_ids = [s["snapshot-id"] for s in meta[kind]]
+        assert len(stat_ids) == len(set(stat_ids))
+    if meta["format-version"] >= 3:
+        # every claimed row-id range lies below next-row-id
+        for s in meta["snapshots"]:
+            for d in s.get("manifests", []):
+                if d.get("first-row-id") is not None:
+                    assert d["first-row-id"] + d["null-id-rows"] <= meta["next-row-id"]
+
+
+def _check_sharing(before, after):
+    """Snapshots the update kept are the same objects, not copies."""
+    kept = {id(s) for s in after["snapshots"]}
+    for s in before["snapshots"]:
+        if any(o["snapshot-id"] == s["snapshot-id"] for o in after["snapshots"]):
+            assert id(s) in kept, s["snapshot-id"]
 
 
 @settings(max_examples=60, deadline=None)
@@ -147,6 +264,7 @@ def test_commit_engine_invariants_hold(updates):
             continue
         assert arg == before  # purity: the input dict is never mutated
         _check_invariants(meta)
+        _check_sharing(arg, meta)
 
 
 @settings(max_examples=30, deadline=None)
@@ -154,12 +272,14 @@ def test_commit_engine_invariants_hold(updates):
 def test_commit_engine_pure_and_deterministic(updates):
     meta = _fresh_meta()
     frozen = copy.deepcopy(meta)
+    frozen_updates = copy.deepcopy(updates)
     try:
         out1 = apply_commit(meta, [], updates)
     except (CommitConflict, CommitValidationError):
         assert meta == frozen
         return
     assert meta == frozen  # purity: input untouched
+    assert updates == frozen_updates  # ...and so are the update payloads
     out2 = apply_commit(meta, [], updates)
     out1.pop("last-updated-ms"), out2.pop("last-updated-ms")
     for s in out1["snapshots"] + out2["snapshots"]:

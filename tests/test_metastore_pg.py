@@ -11,6 +11,7 @@ from __future__ import annotations
 import shutil
 import subprocess
 import tempfile
+import threading
 import time
 import uuid
 from pathlib import Path
@@ -136,6 +137,48 @@ def test_pg_commit_cas_conflict(pg_store, tmp_path):
         )
     meta, _ = cat.load_table("wh", ["ns"], "t")
     assert meta["properties"]["k"] == "1"
+
+
+def test_pg_idempotency_key_applies_once_under_concurrency(
+    pg_store, tmp_path, monkeypatch
+):
+    """On postgres BEGIN takes no write lock, so two requests with one
+    Idempotency-Key can both pass the in-transaction re-check; the key
+    insert (or the CAS) then decides, and the loser replays."""
+    cat = Catalog(pg_store)
+    cat.create_warehouse("wh", str(tmp_path / "wh"))
+    cat.create_namespace("wh", ["ns"])
+    cat.create_table("wh", ["ns"], "t", SCHEMA)
+    real_get = pg_store.idempotency_get
+    barrier = threading.Barrier(2, timeout=20)
+    calls = threading.local()
+
+    def get(key):
+        out = real_get(key)
+        calls.n = getattr(calls, "n", 0) + 1
+        if calls.n == 2:  # the re-check, inside the transaction
+            barrier.wait()
+        return out
+
+    monkeypatch.setattr(pg_store, "idempotency_get", get)
+    upds = [{"action": "set-properties", "updates": {"n": "1"}}]
+    replies: list = []
+
+    def commit():
+        replies.append(
+            cat.commit_table("wh", ["ns"], "t", [], upds, idempotency_key="k-1")
+        )
+
+    threads = [threading.Thread(target=commit) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+        assert not t.is_alive()
+    assert len(replies) == 2
+    assert replies[0] == replies[1]
+    _, seq = cat.load_table("wh", ["ns"], "t")
+    assert seq == 2
 
 
 def test_pg_tasks_and_lifecycle(pg_store, tmp_path):
