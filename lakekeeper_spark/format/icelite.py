@@ -38,7 +38,10 @@ Query surface provided (reference test_spark.py parity):
 
 from __future__ import annotations
 
+import contextlib
 import json
+import logging
+import os
 import time
 import uuid
 from pathlib import Path
@@ -63,6 +66,8 @@ from .types import (
 )
 
 MAIN = "main"
+
+_log = logging.getLogger(__name__)
 
 
 def _now_ms() -> int:
@@ -236,20 +241,6 @@ _DELETE_KINDS = ("position-deletes", "equality-deletes", "deletion-vectors")
 # (one writer task each) instead of funnelling every compressed bitmap
 # through a single task (round-7 verdict watch item).
 _DV_BLOBS_PER_CONTAINER = 512
-# Above this metadata-known position count a MOR delete keeps the
-# distributed per-file DV encode; at or below it the encode and the
-# container write fuse into one coalesced task (<= ~32 MB of int64
-# positions plus pandas overhead — far under an executor's task memory).
-_DV_FUSED_ROWS_MAX = 4_000_000
-# r18: a MOR delete/update whose matched set is already driver-collected
-# (<= _MAX_RANGE_ROWS rows, the lineage-range bound) merges prior DVs and
-# writes the new containers entirely driver-side when the prior artifacts
-# decode to at most this many positions — zero Spark jobs on the artifact
-# path (the encode + container write are pure functions; read_deletion_
-# vectors_cached already decodes driver-side for the inline scan filter).
-# Above the gate, or on any decode failure, the distributed encode path
-# runs unchanged.
-_DV_LOCAL_MERGE_MAX = 100_000
 # At or below this total tombstone cardinality a positioned scan inlines
 # the (file, pos) set as a literal anti-filter (driver-decoded, one
 # expression) instead of building a broadcast anti-join per action; the
@@ -262,6 +253,56 @@ _DV_INLINE_POS_MAX = 8192
 # the sequence-aware broadcast anti-join path applies unchanged.
 _EQ_INLINE_ROWS_MAX = 512
 _EQ_INLINE_TYPES = {"int", "long", "short", "byte", "string", "boolean"}
+
+
+def _write_dv_containers(
+    out_dir: str,
+    encoded: list[tuple[str, bytes, int]],
+    snapshot_id: int,
+    seq: int,
+) -> list[dict[str, Any]]:
+    """Write (referenced file, dv payload, cardinality) triples as Puffin
+    containers under ``out_dir`` and return one metadata row per
+    container. The one container writer: the driver DV lane calls it
+    directly, the distributed lane inside each writer task.
+
+    Sorted file order, at most _DV_BLOBS_PER_CONTAINER blobs per
+    container — a HARD bound: repartitionByRange balances by sampling,
+    so a skewed partition can exceed it, and chunking here keeps the
+    memory bound independent of sampling accuracy (round-8 ADVICE).
+    On any failure the containers written so far are deleted, and
+    ``out_dir`` too once empty, so a failed lane leaves no orphaned
+    ``.puffin`` file behind."""
+    from lakekeeper_spark.format.dv import write_deletion_vector_blobs
+
+    encoded = sorted(encoded, key=lambda t: t[0])
+    rows: list[dict[str, Any]] = []
+    written: list[str] = []
+    try:
+        for i in range(0, len(encoded), _DV_BLOBS_PER_CONTAINER):
+            chunk = encoded[i : i + _DV_BLOBS_PER_CONTAINER]
+            os.makedirs(out_dir, exist_ok=True)
+            cpath = os.path.join(out_dir, f"dv-{uuid.uuid4().hex[:12]}.puffin")
+            written.append(cpath)
+            size, layout = write_deletion_vector_blobs(
+                cpath, chunk, snapshot_id=snapshot_id, sequence_number=seq
+            )
+            rows.append(
+                {
+                    "path": cpath,
+                    "size": size,
+                    "record_count": sum(c for _, _, c in chunk),
+                    "layout": json.dumps({fp: list(v) for fp, v in layout.items()}),
+                }
+            )
+    except BaseException:
+        for p in written:
+            with contextlib.suppress(OSError):
+                os.remove(p)
+        with contextlib.suppress(OSError):
+            os.rmdir(out_dir)
+        raise
+    return rows
 
 
 def _split_manifest(
@@ -2878,17 +2919,15 @@ class SparkTable:
         plan as ``NOT ((file='a' AND _pos IN (...)) OR ...)``. Returns
         None when a container can't be decoded (caller falls back to the
         distributed anti-join)."""
-        from .dv import read_deletion_vectors_cached
-
-        by_file: dict[str, list] = {}
         try:
-            for e in pos_like:
-                for fp, poss in read_deletion_vectors_cached(
-                    f"{loc}/{e['path']}"
-                ).items():
-                    if poss.size:
-                        by_file.setdefault(fp, []).append(poss)
-        except Exception:
+            by_file = self._prior_dv_positions(loc, pos_like)
+        except Exception as exc:
+            _log.warning(
+                "inline position-delete filter failed, scan falls back to "
+                "the anti-join lane: %r",
+                exc,
+                exc_info=True,
+            )
             return None
         if not by_file:
             return F.lit(True)
@@ -3099,7 +3138,14 @@ class SparkTable:
                 columns=[w for w, _, _ in pairs],
             )
             cols = [tbl.column(w).to_pylist() for w, _, _ in pairs]
-        except Exception:
+        except Exception as exc:
+            _log.warning(
+                "inline equality-delete filter failed for %s, scan falls "
+                "back to the anti-join lane: %r",
+                e["path"],
+                exc,
+                exc_info=True,
+            )
             return None
         tups = set(zip(*cols)) if cols and cols[0] else set()
         seq = int(e.get("sequence-number", 0))
@@ -3316,12 +3362,77 @@ class SparkTable:
             df = self._apply_position_deletes(df, meta, delete_entries, data_entries)
         return df
 
+    def _mor_matched(
+        self, meta: dict[str, Any], rows: DataFrame, distinct: bool = False
+    ) -> tuple[DataFrame, int, Any]:
+        """The matched set of a MOR DELETE/UPDATE/MERGE: returns
+        (positions, n, pdf). ``rows`` are positioned live rows (``_file``,
+        ``_pos`` and, on v3, ``_row_id``).
+
+        The narrow projection (file_path, pos[, _row_id]) is checkpointed
+        so its consumers never re-run the read or join that produced it,
+        counted once — the empty-probe and the range/small-commit bound —
+        and, on v3 at or below _MAX_RANGE_ROWS rows, collected once:
+        ``pdf`` then feeds the deleted-row-id ranges and, for a small
+        commit (_small_commit), the driver DV lane. ``distinct`` drops the
+        duplicate positions a MERGE source with repeated keys produces."""
+        lineage = meta.get("format-version", 2) >= 3
+        narrow = rows.select(
+            self._rel_file(meta["location"]).alias("file_path"),
+            F.col("_pos").alias("pos"),
+            *(["_row_id"] if lineage else []),
+        )
+        if distinct:
+            narrow = narrow.distinct()
+        narrow = narrow.localCheckpoint(eager=False)  # the count materializes it
+        n = narrow.count()
+        pdf = narrow.toPandas() if lineage and 0 < n <= self._MAX_RANGE_ROWS else None
+        return narrow.select("file_path", "pos"), n, pdf
+
+    def _mor_commit(
+        self,
+        meta: dict[str, Any],
+        snap: dict[str, Any],
+        matched: tuple[DataFrame, int, Any],
+        operation: str,
+        new_rows: DataFrame | None = None,
+        extra_summary: dict[str, Any] | None = None,
+    ) -> dict[str, Any]:
+        """The one MOR commit path: tombstones for the matched set (see
+        _positional_artifacts), an append of ``new_rows`` (updated images
+        and MERGE inserts) and one snapshot carrying both. Commits nothing
+        when neither artifact has rows."""
+        positions, n, pdf = matched
+        base_manifest, del_entries, removed = self._positional_artifacts(
+            meta, snap, positions, n, pdf
+        )
+        add_entries = self._write_files(meta, new_rows) if new_rows is not None else []
+        if not del_entries and not add_entries:
+            return meta
+        # v3 lineage: this commit's newly-deleted row ids as compact
+        # [start, end] ranges — metadata-only CDC planning
+        # (changelog_row_ids) emits delete events from this alone, no
+        # parent data file opened. Absent when the matched set is over
+        # _MAX_RANGE_ROWS or too scattered to record.
+        ranges = self._ranges_from_series(pdf["_row_id"]) if pdf is not None else None
+        return self._commit_snapshot(
+            meta,
+            base_manifest + del_entries + add_entries,
+            operation,
+            extra_summary={
+                "added-delete-files": len(del_entries),
+                "added-position-deletes": sum(e["record-count"] for e in del_entries),
+                "removed-delete-files": removed,
+                **(extra_summary or {}),
+                **({"deleted-row-id-ranges": ranges} if ranges else {}),
+            },
+        )
+
     def _mor_delete(self, condition: str) -> dict[str, Any]:
         """MOR DELETE: v2 stacks a position-delete file; v3 consolidates
-        into a single deletion vector (reference v3 DELETE test,
-        test_spark.py:1321-1340; puffin DV encoding swapped for a parquet
-        (file_path, pos) vector — same semantics, the container has no
-        puffin writer). Policy lives in _positional_artifacts."""
+        into a single Puffin deletion vector per data file (reference v3
+        DELETE test, test_spark.py:1321-1340). Policy lives in
+        _positional_artifacts."""
         meta = self.metadata()
         snap = self._resolve_snapshot(meta)
         if snap is None:
@@ -3329,82 +3440,23 @@ class SparkTable:
         schema = self._current_schema(meta)
         lineage = meta.get("format-version", 2) >= 3
         df = self._mor_positions(meta, schema, snap, lineage=lineage)
-        # localCheckpoint: the matched (file_path, pos) set is consumed
-        # TWICE (empty-probe + artifact write; on v3 also the DV merge) —
-        # materialize it once instead of re-scanning the table per use.
-        # Bounded by the delete's match count, the same rows the artifact
-        # write must hold anyway; spills executor-local beyond memory.
-        # Lazy: the count below materializes it — one job, not two.
-        matched = (
-            df.filter(condition)
-            .select(
-                self._rel_file(meta["location"]).alias("file_path"),
-                F.col("_pos").alias("pos"),
-                *(["_row_id"] if lineage else []),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # one count serves the empty-probe AND _row_id_ranges' cap check
-        # (matched rows are 1:1 with their row ids here)
-        n_matched = matched.count()
-        if n_matched == 0:
+        matched = self._mor_matched(meta, df.filter(condition))
+        if matched[1] == 0:
             return meta  # DELETE matching nothing commits no snapshot
-        # r18: a metadata-small matched set collects ONCE (reading the
-        # just-materialized checkpoint) and serves the row-id ranges AND
-        # the driver-side DV consolidation — replacing the separate
-        # ranges transfer plus the distributed encode/collect job.
-        pdf = (
-            matched.toPandas()
-            if lineage
-            and n_matched <= min(self._MAX_RANGE_ROWS, _DV_LOCAL_MERGE_MAX)
-            else None
-        )
-        positions = matched.select("file_path", "pos")
-        base_manifest, del_entries, removed = self._positional_artifacts(
-            meta,
-            snap,
-            positions,
-            n_rows=n_matched,
-            positions_pdf=pdf[["file_path", "pos"]] if pdf is not None else None,
-        )
-        if not del_entries:
-            return meta
-        if not lineage:
-            ranges = None
-        elif pdf is not None:
-            ranges = self._ranges_from_series(pdf["_row_id"])
-        else:
-            ranges = self._row_id_ranges(
-                matched.select("_row_id"), n=n_matched, pinned=True
-            )
-        return self._commit_snapshot(
-            meta,
-            base_manifest + del_entries,
-            "delete",
-            extra_summary={
-                "added-delete-files": len(del_entries),
-                "added-position-deletes": sum(e["record-count"] for e in del_entries),
-                "removed-delete-files": removed,
-                # v3 lineage: this commit's newly-deleted row ids as
-                # compact [start, end] ranges — metadata-only CDC planning
-                # (changelog_row_ids) emits delete events from this alone,
-                # no parent data file opened. Bounded (see _row_id_ranges);
-                # absent when the delete is too large to record.
-                **({"deleted-row-id-ranges": ranges} if ranges else {}),
-            },
-        )
+        return self._mor_commit(meta, snap, matched, "delete")
 
-    # deleted-row-id-range recording bounds: a delete matching more rows
-    # than this keeps the summary metadata-sized by NOT recording (CDC
-    # falls back to reading parent files); the range list itself is also
-    # capped for pathological scatter
+    # deleted-row-id-range recording bound: a MOR commit or equality
+    # delete matching more rows than this keeps the summary
+    # metadata-sized by NOT recording (CDC falls back to reading parent
+    # files); the range list itself is also capped for pathological
+    # scatter. The same bound decides a small MOR commit (_small_commit).
     _MAX_RANGE_ROWS = 100_000
     _MAX_RANGES = 4096
 
     def _ranges_from_series(self, col: Any) -> list[list[int]] | None:
-        """numpy gaps-and-islands over a driver-local id series (the
-        pinned-caller core of _row_id_ranges, shared by the r18
-        collected-matched fast path)."""
+        """numpy gaps-and-islands over a driver-local id series: sorted
+        inclusive [start, end] ranges, or None (record nothing) for NULL
+        ids or more than _MAX_RANGES ranges."""
         import numpy as np
 
         if col.isna().any():
@@ -3417,83 +3469,67 @@ class SparkTable:
         ends = np.concatenate((breaks, [arr.size - 1]))
         return [[int(arr[s]), int(arr[e])] for s, e in zip(starts, ends)]
 
-    def _row_id_ranges(
-        self, ids: DataFrame, n: int | None = None, pinned: bool = False
-    ) -> list[list[int]] | None:
-        """Compress a set of row ids into sorted inclusive [start, end]
-        ranges (gaps-and-islands). Returns None — record nothing —
-        beyond the row/range caps, so commit metadata stays bounded no
-        matter how large the delete. Order matters: COUNT first (never
-        materialize an over-cap id set — a 10M-row delete must not park
-        10M ids in block storage just to discard them), then checkpoint
-        the <=100k survivors so the window reads a local copy instead of
-        re-executing the id derivation (often a join against the live
-        rows).
-
-        r17: callers that already hold the ids materialized pass
-        ``n`` (known row count — skips the counting job) and
-        ``pinned=True`` (ids project a checkpointed frame — skips the
-        re-checkpoint). _mor_delete/_mor_update pin ``matched`` anyway,
-        so each saved two ~0.3 s driver barriers per DML commit."""
-        from pyspark.sql.window import Window
-
-        if n is None:
-            n = ids.count()
+    def _row_id_ranges(self, ids: DataFrame) -> list[list[int]] | None:
+        """Compress a one-column frame of row ids into ranges (see
+        _ranges_from_series). COUNT first — never collect an over-cap id
+        set: a 10M-row delete records nothing — then one Arrow transfer.
+        MOR commits derive theirs from the matched set's collected frame
+        instead (_mor_matched)."""
+        n = ids.count()
         if n == 0 or n > self._MAX_RANGE_ROWS:
             return None
-        if pinned:
-            # r17 opt: pinned callers hold <= _MAX_RANGE_ROWS unique ids
-            # locally — one Arrow transfer + numpy gaps-and-islands beats
-            # the single-partition window + collect (two driver barriers).
-            # Ids here are unique (1:1 with distinct (file, pos) rows), so
-            # the ranges are identical to the window derivation's.
-            pdf = ids.toPandas()
-            return self._ranges_from_series(pdf[pdf.columns[0]])
-        ids = ids.localCheckpoint(eager=True)
-        # <= 100k rows: a single-partition window is trivially cheap here
-        grp = F.col("_row_id") - F.row_number().over(
-            Window.orderBy("_row_id")
+        pdf = ids.toPandas()
+        return self._ranges_from_series(pdf[pdf.columns[0]])
+
+    def _small_commit(self, n: int, pos_like: list[dict[str, Any]]) -> bool:
+        """The small-commit predicate: a v3 MOR commit of ``n`` new
+        positions over prior positional artifacts ``pos_like`` takes the
+        driver DV lane when every prior is a Puffin DV and both ``n`` and
+        the priors' record counts are within _MAX_RANGE_ROWS."""
+        return (
+            n <= self._MAX_RANGE_ROWS
+            and all(e["path"].endswith(".puffin") for e in pos_like)
+            and sum(int(e.get("record-count", 0)) for e in pos_like)
+            <= self._MAX_RANGE_ROWS
         )
-        ranges = (
-            ids.withColumn("__g", grp)
-            .groupBy("__g")
-            .agg(F.min("_row_id").alias("s"), F.max("_row_id").alias("e"))
-            .orderBy("s")
-            .limit(self._MAX_RANGES + 1)
-            .collect()
-        )
-        if len(ranges) > self._MAX_RANGES:
-            return None
-        if any(r["s"] is None for r in ranges):
-            return None  # pre-lineage rows resolved NULL: not rangeable
-        return [[int(r["s"]), int(r["e"])] for r in ranges]
 
     def _positional_artifacts(
         self,
         meta: dict[str, Any],
         snap: dict[str, Any],
         positions: DataFrame,
-        n_rows: int | None = None,
-        positions_pdf: Any | None = None,
+        n: int,
+        positions_pdf: Any | None,
     ) -> tuple[list[dict[str, Any]], list[dict[str, Any]], int]:
         """Shared tombstone-writing policy for the MOR DML family: returns
         (base_manifest, new_delete_entries, removed_delete_files).
 
-        v2: the new tombstones stack onto the existing manifest.
-        v3: they CONSOLIDATE with every prior positional artifact into a
-        single deletion vector that replaces them (at most one positional
+        v2: the new tombstones stack onto the existing manifest as a
+        parquet position-delete file.
+        v3: they CONSOLIDATE with every prior positional artifact into
+        deletion vectors that replace them (at most one positional
         artifact chain per data file — the v3 invariant); equality-delete
-        entries pass through untouched.
+        entries pass through untouched. Two lanes write the same
+        artifacts (same payloads, container chunking and manifest
+        entries):
 
-        ``positions_pdf`` (r18): the caller's already-driver-collected
-        (file_path, pos) pandas frame. When present and every prior
-        positional artifact is a Puffin DV totalling at most
-        _DV_LOCAL_MERGE_MAX positions, the v3 consolidation runs fully
-        driver-side (decode + merge + encode + container write are pure
-        functions) — zero Spark jobs; same artifacts by construction.
-        Any decode failure falls back to the distributed path."""
+        - driver lane, when ``positions_pdf`` (the matched set collected
+          by _mor_matched) exists and _small_commit(n, priors) holds:
+          prior DVs decode on the driver (_prior_dv_positions), merge with
+          the new positions, encode and write with zero Spark jobs;
+        - distributed lane otherwise, or when the driver lane raises:
+          per-file encode on the executors, then
+          ceil(files / _DV_BLOBS_PER_CONTAINER) container-writer tasks
+          (_write_deletion_vectors).
+
+        Both run through _write_dv_containers. Lane parity is pinned by
+        tests/test_scan_fastpaths.py::test_fast_paths_match_fallback_paths
+        (every MOR op with _small_commit forced False) and the driver
+        lane's fallback by
+        tests/test_scan_fastpaths.py::test_driver_dv_lane_failure_falls_back_without_orphans."""
         data_entries, delete_entries = _split_manifest(snapshot_entries(snap))
         if meta.get("format-version", 2) < 3:
+            _log.debug("MOR commit: n=%d, v2 position-delete file", n)
             return (
                 data_entries + delete_entries,
                 self._write_delete_files(meta, positions),
@@ -3501,52 +3537,103 @@ class SparkTable:
             )
         pos_like = [e for e in delete_entries if e.get("content") != "equality-deletes"]
         eq_dels = [e for e in delete_entries if e.get("content") == "equality-deletes"]
-        if (
-            positions_pdf is not None
-            and len(positions_pdf) <= _DV_LOCAL_MERGE_MAX
-            and all(e["path"].endswith(".puffin") for e in pos_like)
-            and sum(int(e.get("record-count", 0)) for e in pos_like)
-            <= _DV_LOCAL_MERGE_MAX
-        ):
+        lane = "distributed"
+        if positions_pdf is not None and self._small_commit(n, pos_like):
             try:
-                del_entries = self._dv_local_merge(meta, pos_like, positions_pdf)
-                return data_entries + eq_dels, del_entries, len(pos_like)
-            except Exception:
-                pass  # distributed consolidation below
-        merged = positions
-        if pos_like:
-            old = self._read_positional(meta, pos_like)
-            # no .distinct() here (r17): the DV encoder np.unique()s each
-            # file's positions anyway, so the pre-shuffle dedup was a
-            # second full exchange of the position set for nothing
-            merged = merged.unionByName(old)
-        # metadata-known bound on referenced files (positions only ever
-        # reference data files of this snapshot) — lets the writer pick
-        # the single-container fast path without a counting job. When the
-        # caller also knows the new-position count, the old artifacts'
-        # record-counts complete a metadata-known row bound that enables
-        # the fully-fused single-task encode+write.
-        approx = (
-            n_rows + sum(int(e.get("record-count", 0)) for e in pos_like)
-            if n_rows is not None
-            else None
+                del_entries = self._dv_driver_write(meta, pos_like, positions_pdf)
+                lane = "driver"
+            except Exception as exc:
+                _log.warning(
+                    "driver DV lane failed, commit falls back to the "
+                    "distributed lane: %r",
+                    exc,
+                    exc_info=True,
+                )
+        _log.debug(
+            "MOR commit: DV lane=%s n=%d prior_positions=%d all_priors_puffin=%s",
+            lane,
+            n,
+            sum(int(e.get("record-count", 0)) for e in pos_like),
+            all(e["path"].endswith(".puffin") for e in pos_like),
         )
-        del_entries = self._write_deletion_vectors(
-            meta, merged, max_files=len(data_entries), approx_rows=approx
-        )
+        if lane == "distributed":
+            merged = positions
+            if pos_like:
+                # no .distinct(): the encoder np.unique()s each file's
+                # positions anyway (r17)
+                merged = merged.unionByName(self._read_positional(meta, pos_like))
+            # positions only ever reference data files of this snapshot,
+            # so its data-file count bounds the referenced files
+            del_entries = self._write_deletion_vectors(
+                meta, merged, max_files=len(data_entries)
+            )
         return data_entries + eq_dels, del_entries, len(pos_like)
+
+    @staticmethod
+    def _prior_dv_positions(
+        loc: str, pos_like: list[dict[str, Any]]
+    ) -> dict[str, list[Any]]:
+        """Driver-side decode of Puffin positional artifacts: referenced
+        data file -> its non-empty position arrays (one per container).
+        The one prior-DV decoder behind the inline scan filter and the
+        driver DV lane (containers cache per process; raises when one
+        can't be decoded)."""
+        from .dv import read_deletion_vectors_cached
+
+        by_file: dict[str, list[Any]] = {}
+        for e in pos_like:
+            for fp, poss in read_deletion_vectors_cached(f"{loc}/{e['path']}").items():
+                if poss.size:
+                    by_file.setdefault(fp, []).append(poss)
+        return by_file
+
+    @staticmethod
+    def _dv_target(meta: dict[str, Any]) -> tuple[str, int, int]:
+        """(container directory, adding snapshot id, sequence number) of
+        the next DV commit. Blobs are stamped with the snapshot id that
+        ADDS them (the next id, mirroring _commit_snapshot's max+1
+        assignment) per Puffin blob semantics."""
+        out_dir = Path(meta["location"]) / "data" / "deletes" / uuid.uuid4().hex
+        new_sid = (
+            max((s["snapshot-id"] for s in meta.get("snapshots", [])), default=0) + 1
+        )
+        return str(out_dir), new_sid, _next_seq(meta)
+
+    def _dv_driver_write(
+        self,
+        meta: dict[str, Any],
+        pos_like: list[dict[str, Any]],
+        positions_pdf: Any,
+    ) -> list[dict[str, Any]]:
+        """Driver DV lane: merge prior DVs with the collected new
+        positions, encode and write the consolidated containers — no
+        Spark job. Raises on any decode or write problem (the caller
+        falls back to the distributed lane)."""
+        import numpy as np
+
+        from .dv import dv_payload
+
+        by_file = self._prior_dv_positions(meta["location"], pos_like)
+        for fp, grp in positions_pdf.groupby("file_path", sort=True):
+            by_file.setdefault(str(fp), []).append(grp["pos"].to_numpy(np.int64))
+        encoded = []
+        for fp, arrs in by_file.items():
+            poss = np.unique(np.concatenate(arrs))
+            encoded.append((fp, dv_payload(poss), int(poss.size)))
+        out_dir, new_sid, seq = self._dv_target(meta)
+        rows = _write_dv_containers(out_dir, encoded, new_sid, seq)
+        return self._dv_entries(meta, rows, seq)
 
     def _write_deletion_vectors(
         self,
         meta: dict[str, Any],
         positions: DataFrame,
-        max_files: int | None = None,
-        approx_rows: int | None = None,
+        max_files: int,
     ) -> list[dict[str, Any]]:
-        """v3 deletion vectors: ONE Puffin container with a
+        """Distributed DV lane: Puffin containers with one
         ``deletion-vector-v1`` blob (portable 64-bit roaring bitmap,
         Delta-compatible framing — format/dv.py) per referenced data
-        file, replacing the pre-round-6 parquet stand-in.
+        file.
 
         Scale shape: per-file roaring payloads ENCODE IN PARALLEL on the
         executors (applyInPandas per referenced file — the numpy-packed
@@ -3554,24 +3641,14 @@ class SparkTable:
         containers from the compressed payloads; raw positions never
         route through the driver OR any single process — the widest
         single-process frame is one container's worth of compressed
-        bitmaps (≤ _DV_BLOBS_PER_CONTAINER × rows-per-file/8 bytes). The
-        driver receives only one metadata row per container. A commit
-        referencing many files shards into ceil(n/_DV_BLOBS_PER_CONTAINER)
-        containers via repartitionByRange on file_path (spec-legal: the
-        manifest addresses each blob by container path + offset/length),
-        so a 100 TB-scale delete touching millions of files never funnels
-        through one task (round-7 verdict "What's wrong" #4).
-
-        Blobs are stamped with the snapshot id that ADDS them (the next
-        id, mirroring _commit_snapshot's max+1 assignment) per Puffin
-        blob semantics — the pre-round-7 writer stamped the parent."""
-        commit_id = uuid.uuid4().hex
-        out_dir = Path(meta["location"]) / "data" / "deletes" / commit_id
-        seq = _next_seq(meta)
-        new_sid = (
-            max((s["snapshot-id"] for s in meta.get("snapshots", [])), default=0) + 1
-        )
-        out_dir_s = str(out_dir)
+        bitmaps. The driver receives only one metadata row per container.
+        ``max_files`` (metadata-known: the snapshot's data-file count)
+        sizes the writer: ceil(max_files / _DV_BLOBS_PER_CONTAINER) tasks
+        via repartitionByRange on file_path (spec-legal: the manifest
+        addresses each blob by container path + offset/length), so a
+        delete touching millions of files never funnels through one task
+        (round-7 verdict "What's wrong" #4), and no counting job runs."""
+        out_dir, new_sid, seq = self._dv_target(meta)
 
         def encode(pdf):
             import numpy as np
@@ -3588,126 +3665,38 @@ class SparkTable:
                 }
             )
 
-        def _emit(encoded):
-            """Write sorted (file_path, payload, cardinality) triples as
-            chunked Puffin containers, yielding one metadata frame per
-            container. HARD per-container bound: repartitionByRange
-            balances by sampling, so a skewed partition can exceed
-            _DV_BLOBS_PER_CONTAINER — chunking here means no container
-            ever holds more (round-8 ADVICE: the documented memory bound
-            must not depend on range-sampling accuracy)."""
-            import json as _json
-            import os
-            import uuid as _uuid
-
+        def write_container(batches):
             import pandas as pd
 
-            from lakekeeper_spark.format.dv import write_deletion_vector_blobs
-
-            if not encoded:
-                return
-            os.makedirs(out_dir_s, exist_ok=True)
-            encoded.sort(key=lambda t: t[0])
-            for i in range(0, len(encoded), _DV_BLOBS_PER_CONTAINER):
-                chunk = encoded[i : i + _DV_BLOBS_PER_CONTAINER]
-                cpath = os.path.join(
-                    out_dir_s, f"dv-{_uuid.uuid4().hex[:12]}.puffin"
-                )
-                size, layout = write_deletion_vector_blobs(
-                    cpath, chunk, snapshot_id=new_sid, sequence_number=seq
-                )
-                yield pd.DataFrame(
-                    {
-                        "path": [cpath],
-                        "size": [size],
-                        "record_count": [sum(c for _, _, c in chunk)],
-                        "layout": [
-                            _json.dumps({fp: list(l) for fp, l in layout.items()})
-                        ],
-                    }
-                )
-
-        def write_container(batches):
-            encoded = []
-            for pdf in batches:
+            encoded = [
+                (str(fp), bytes(payload), int(card))
+                for pdf in batches
                 for fp, payload, card in zip(
                     pdf["file_path"], pdf["payload"], pdf["cardinality"]
-                ):
-                    encoded.append((str(fp), bytes(payload), int(card)))
-            yield from _emit(encoded)
-
-        if (
-            max_files is not None
-            and max_files <= _DV_BLOBS_PER_CONTAINER
-            and approx_rows is not None
-            and approx_rows <= _DV_FUSED_ROWS_MAX
-        ):
-            # FUSED small-delete path (r17): the metadata-known row bound
-            # proves one task can hold every raw position, so encode AND
-            # container write run in a single coalesced task — zero
-            # exchanges (the groupBy-encode + repartition(1) pair cost two
-            # AQE stage waves per DML commit). Large deletes keep the
-            # distributed per-file encode below.
-            def encode_write_all(batches):
-                import pandas as pd
-
-                frames = [p for p in batches]
-                if not frames:
-                    return
-                pdf = pd.concat(frames, ignore_index=True)
-                encoded = []
-                for fp, grp in pdf.groupby("file_path", sort=True):
-                    import numpy as np
-
-                    poss = np.unique(grp["pos"].to_numpy(np.int64))
-                    from lakekeeper_spark.format.dv import dv_payload
-
-                    encoded.append((str(fp), dv_payload(poss), int(poss.size)))
-                yield from _emit(encoded)
-
-            rows = (
-                positions.select("file_path", "pos")
-                .coalesce(1)
-                .mapInPandas(
-                    encode_write_all,
-                    "path string, size long, record_count long, layout string",
                 )
-                .collect()
-            )
-            return self._dv_entries(meta, rows, seq)
+            ]
+            rows = _write_dv_containers(out_dir, encoded, new_sid, seq)
+            if rows:
+                yield pd.DataFrame(rows)
 
-        encoded_df = positions.groupBy("file_path").applyInPandas(
-            encode, "file_path string, payload binary, cardinality long"
-        )
-        if max_files is not None and max_files <= _DV_BLOBS_PER_CONTAINER:
-            # single-container fast path: the caller's METADATA-derived
-            # bound (data-file count of the snapshot) proves one container
-            # suffices, so the whole write stays ONE job — no counting or
-            # checkpoint jobs on the commit path (they cost ~0.3 s each per
-            # DML step; c04's 13-step lifecycle made that a 3 s regression)
-            sharded = encoded_df.repartition(1)
-        else:
-            # pin the (n_files × ≤8 KB-payload) frame so the shard-count
-            # probe and the container write share one encode pass
-            encoded_df = encoded_df.localCheckpoint(eager=True)
-            n_files = encoded_df.count()
-            if n_files == 0:
-                return []
-            n_parts = -(-n_files // _DV_BLOBS_PER_CONTAINER)
-            sharded = (
-                encoded_df.repartition(1)
-                if n_parts == 1
-                else encoded_df.repartitionByRange(n_parts, "file_path")
+        rows = (
+            positions.groupBy("file_path")
+            .applyInPandas(encode, "file_path string, payload binary, cardinality long")
+            .repartitionByRange(
+                -(-max(max_files, 1) // _DV_BLOBS_PER_CONTAINER), "file_path"
             )
-        rows = sharded.mapInPandas(
-            write_container, "path string, size long, record_count long, layout string"
-        ).collect()
+            .mapInPandas(
+                write_container,
+                "path string, size long, record_count long, layout string",
+            )
+            .collect()
+        )
         return self._dv_entries(meta, rows, seq)
 
     def _dv_entries(
         self, meta: dict[str, Any], rows: list[Any], seq: int
     ) -> list[dict[str, Any]]:
-        """Manifest entries for collected DV-container metadata rows."""
+        """Manifest entries for DV-container metadata rows."""
         entries = []
         for row in sorted(rows, key=lambda r: r["path"]):
             layout = json.loads(row["layout"])
@@ -3734,84 +3723,8 @@ class SparkTable:
             )
         return entries
 
-    def _write_deletion_vectors_local(
-        self, meta: dict[str, Any], by_file: dict[str, Any]
-    ) -> list[dict[str, Any]]:
-        """Driver-side twin of ``_write_deletion_vectors`` for
-        metadata-small position sets: ``by_file`` maps referenced data
-        file -> sorted-unique int64 numpy positions. Same container
-        chunking (sorted file order, _DV_BLOBS_PER_CONTAINER per
-        container), same blob framing, same manifest entries — just no
-        Spark job. Bounded by the caller's _DV_LOCAL_MERGE_MAX gate."""
-        import os
-
-        from .dv import dv_payload, write_deletion_vector_blobs
-
-        commit_id = uuid.uuid4().hex
-        out_dir = Path(meta["location"]) / "data" / "deletes" / commit_id
-        seq = _next_seq(meta)
-        new_sid = (
-            max((s["snapshot-id"] for s in meta.get("snapshots", [])), default=0) + 1
-        )
-        encoded = [
-            (fp, dv_payload(poss), int(poss.size))
-            for fp, poss in sorted(by_file.items())
-        ]
-        if not encoded:
-            return []
-        os.makedirs(str(out_dir), exist_ok=True)
-        rows = []
-        for i in range(0, len(encoded), _DV_BLOBS_PER_CONTAINER):
-            chunk = encoded[i : i + _DV_BLOBS_PER_CONTAINER]
-            cpath = str(out_dir / f"dv-{uuid.uuid4().hex[:12]}.puffin")
-            size, layout = write_deletion_vector_blobs(
-                cpath, chunk, snapshot_id=new_sid, sequence_number=seq
-            )
-            rows.append(
-                {
-                    "path": cpath,
-                    "size": size,
-                    "record_count": sum(c for _, _, c in chunk),
-                    "layout": json.dumps(
-                        {fp: list(v) for fp, v in layout.items()}
-                    ),
-                }
-            )
-        return self._dv_entries(meta, rows, seq)
-
-    def _dv_local_merge(
-        self,
-        meta: dict[str, Any],
-        pos_like: list[dict[str, Any]],
-        positions_pdf: Any,
-    ) -> list[dict[str, Any]]:
-        """Merge prior positional artifacts with a driver-collected new
-        position set and write the consolidated DVs, all driver-side.
-        Raises on any decode problem — the caller falls back to the
-        distributed path (the _inline_pos_filter discipline)."""
-        import numpy as np
-
-        from .dv import read_deletion_vectors_cached
-
-        loc = meta["location"]
-        by_file: dict[str, list] = {}
-        for e in pos_like:
-            for fp, poss in read_deletion_vectors_cached(
-                f"{loc}/{e['path']}"
-            ).items():
-                if poss.size:
-                    by_file.setdefault(fp, []).append(poss)
-        for fp, grp in positions_pdf.groupby("file_path", sort=True):
-            by_file.setdefault(str(fp), []).append(
-                grp["pos"].to_numpy(np.int64)
-            )
-        merged = {
-            fp: np.unique(np.concatenate(arrs)) for fp, arrs in by_file.items()
-        }
-        return self._write_deletion_vectors_local(meta, merged)
-
     def _mor_update(self, condition: str, assignments: dict[str, str]) -> dict[str, Any]:
-        """MOR UPDATE = one commit carrying a position-delete of matched
+        """MOR UPDATE = one commit carrying tombstones for the matched
         rows plus an append of their updated images (v3: consolidated
         deletion vector, like every MOR mutation)."""
         meta = self.metadata()
@@ -3819,37 +3732,19 @@ class SparkTable:
         if snap is None:
             raise CatalogError("table has no data")
         schema = self._current_schema(meta)
-        # matched feeds THREE consumers (empty-probe, tombstone positions,
-        # updated images) — one materialization, not three table scans.
-        # v3: lineage rides along so updated images KEEP their row ids
+        # the full matched rows feed the updated images as well as the
+        # matched set — one materialization (the matched set's count
+        # fills it), not a second table scan. v3: lineage rides along so
+        # updated images KEEP their row ids
         lineage = meta.get("format-version", 2) >= 3
-        matched = (
+        rows = (
             self._mor_positions(meta, schema, snap, lineage=lineage)
             .filter(condition)
-            .localCheckpoint(eager=False)  # the count materializes it
+            .localCheckpoint(eager=False)
         )
-        # one count serves the empty-probe AND _row_id_ranges' cap check
-        n_matched = matched.count()
-        if n_matched == 0:
+        matched = self._mor_matched(meta, rows)
+        if matched[1] == 0:
             return meta  # UPDATE matching nothing commits no snapshot
-        positions = matched.select(
-            self._rel_file(meta["location"]).alias("file_path"),
-            F.col("_pos").alias("pos"),
-        )
-        # r18: same collected-matched fast path as _mor_delete, over a
-        # NARROW projection (never the full row images) — serves the
-        # driver-side DV consolidation and the row-id ranges in one
-        # cheap read of the materialized checkpoint.
-        pdf = (
-            matched.select(
-                self._rel_file(meta["location"]).alias("file_path"),
-                F.col("_pos").alias("pos"),
-                "_row_id",
-            ).toPandas()
-            if lineage
-            and n_matched <= min(self._MAX_RANGE_ROWS, _DV_LOCAL_MERGE_MAX)
-            else None
-        )
         # cast each assignment back to the column's DECLARED type: a bare
         # literal like `999.0` parses as DECIMAL(4,1), and writing that
         # into a double column would flip the file's physical type out
@@ -3857,7 +3752,7 @@ class SparkTable:
         # this path replaces the column, so it must cast explicitly)
         struct = schema_to_struct(schema)
         types = {f.name: f.dataType for f in struct.fields}
-        updated = matched
+        updated = rows
         for col_name, expr in assignments.items():
             updated = updated.withColumn(
                 col_name, F.expr(expr).cast(types[col_name])
@@ -3866,38 +3761,7 @@ class SparkTable:
             *[f["name"] for f in schema["fields"]],
             *(["_row_id"] if lineage else []),
         )
-        base_manifest, del_entries, removed = self._positional_artifacts(
-            meta,
-            snap,
-            positions,
-            n_rows=n_matched,
-            positions_pdf=pdf[["file_path", "pos"]] if pdf is not None else None,
-        )
-        if not del_entries:
-            return meta
-        add_entries = self._write_files(meta, updated)
-        if not lineage:
-            ranges = None
-        elif pdf is not None:
-            ranges = self._ranges_from_series(pdf["_row_id"])
-        else:
-            ranges = self._row_id_ranges(
-                matched.select("_row_id"), n=n_matched, pinned=True
-            )
-        return self._commit_snapshot(
-            meta,
-            base_manifest + del_entries + add_entries,
-            "overwrite",
-            extra_summary={
-                "added-delete-files": len(del_entries),
-                "added-position-deletes": sum(e["record-count"] for e in del_entries),
-                "removed-delete-files": removed,
-                # v3 lineage: the tombstoned (pre-update) rows as id
-                # ranges — metadata-only CDC plans the DELETE side of
-                # this commit without opening parent files
-                **({"deleted-row-id-ranges": ranges} if ranges else {}),
-            },
-        )
+        return self._mor_commit(meta, snap, matched, "overwrite", new_rows=updated)
 
     def _mor_merge(
         self,
@@ -3906,12 +3770,12 @@ class SparkTable:
         matched_update: dict[str, str] | None,
         not_matched_insert: bool,
     ) -> dict[str, Any]:
-        """Merge-on-read MERGE: ONE commit carrying position-delete
-        tombstones for every matched target row, an append of the matched
-        rows' updated images, and the unmatched source inserts. No data
-        file is rewritten (Iceberg write.merge.mode=merge-on-read). On
-        v3 tables the tombstones consolidate with all prior positional
-        artifacts into a single deletion vector (the v3 invariant)."""
+        """Merge-on-read MERGE: ONE commit carrying tombstones for every
+        matched target row, an append of the matched rows' updated images,
+        and the unmatched source inserts. No data file is rewritten
+        (Iceberg write.merge.mode=merge-on-read). On v3 tables the
+        tombstones consolidate with all prior positional artifacts into a
+        single deletion vector (the v3 invariant)."""
         meta = self.metadata()
         fv = meta.get("format-version", 2)
         if fv < 2:
@@ -3928,11 +3792,7 @@ class SparkTable:
         mcol = _fresh_names(source, "__src_match")[0]
         src = source.withColumn(mcol, F.lit(1)).alias("s")
         t = live.alias("t")
-        matched = t.join(src, F.expr(on), "inner")
-        positions = matched.select(
-            self._rel_file(meta["location"]).alias("file_path"),
-            F.col("_pos").alias("pos"),
-        ).distinct()
+        joined = t.join(src, F.expr(on), "inner")
         out_cols = []
         for c in cols:
             upd = (matched_update or {}).get(c)
@@ -3942,7 +3802,7 @@ class SparkTable:
         if lineage:
             # updated images keep their row ids (materialized column)
             out_cols.append(F.col("t._row_id").alias("_row_id"))
-        new_rows = matched.select(*out_cols)
+        new_rows = joined.select(*out_cols)
         if not_matched_insert:
             inserts = src.join(t, F.expr(on), "left_anti").select(
                 *_insert_cols(schema, source.columns),
@@ -3953,34 +3813,13 @@ class SparkTable:
                 ),
             )
             new_rows = new_rows.unionByName(inserts)
-        base_manifest, del_entries, removed_delete_files = self._positional_artifacts(
-            meta, snap, positions
-        )
-        add_entries = self._write_files(meta, new_rows)
-        if not del_entries and not add_entries:
-            return meta  # nothing matched, nothing to insert
-        ranges = (
-            self._row_id_ranges(
-                matched.select(F.col("t._row_id").alias("_row_id")).distinct()
-            )
-            if lineage and del_entries
-            else None
-        )
-        return self._commit_snapshot(
+        return self._mor_commit(
             meta,
-            base_manifest + del_entries + add_entries,
+            snap,
+            self._mor_matched(meta, joined.select("t.*"), distinct=True),
             "overwrite",
-            extra_summary={
-                "added-delete-files": len(del_entries),
-                "added-position-deletes": sum(
-                    e["record-count"] for e in del_entries
-                ),
-                "removed-delete-files": removed_delete_files,
-                "merge-mode": "merge-on-read",
-                # v3 lineage: tombstoned target rows as id ranges for
-                # metadata-only CDC planning of the delete side
-                **({"deleted-row-id-ranges": ranges} if ranges else {}),
-            },
+            new_rows=new_rows,
+            extra_summary={"merge-mode": "merge-on-read"},
         )
 
     def rewrite_position_deletes(self) -> dict[str, Any]:

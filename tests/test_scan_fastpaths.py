@@ -1,7 +1,7 @@
-"""Round-17 second-pass scan/DML fast paths vs their fallback paths.
+"""Scan/DML fast paths vs their fallback paths.
 
-The optimization round replaced several per-action driver barriers with
-metadata-gated fast paths:
+Several per-action driver barriers are replaced by metadata-gated fast
+paths:
 
   - equality-delete sequence tags and v3 lineage id/seq resolution attach
     as LITERAL map expressions below ``SparkTable._PATH_MAP_MAX`` (the
@@ -9,17 +9,19 @@ metadata-gated fast paths:
   - small Puffin tombstone sets (<= ``icelite._DV_INLINE_POS_MAX``
     positions) anti-filter as one literal expression instead of a
     broadcast anti-join;
-  - MOR deletes with a metadata-known small position count fuse the DV
-    encode + container write into one coalesced task
-    (``icelite._DV_FUSED_ROWS_MAX``);
-  - pinned row-id range derivation runs driver-side (numpy) instead of a
-    single-partition window.
+  - small equality-delete files (<= ``icelite._EQ_INLINE_ROWS_MAX`` rows)
+    anti-filter as a literal IN-list instead of a broadcast anti-join;
+  - a v3 merge-on-read DELETE/UPDATE/MERGE whose matched set and prior
+    deletion vectors are small (``SparkTable._small_commit``) writes its
+    deletion vectors in the driver lane instead of the distributed lane.
 
 Every fast path must emit EXACTLY what its fallback emits — these tests
 pin that by running the same lifecycle with the gates forced off.
 """
 
 from __future__ import annotations
+
+import logging
 
 import pytest
 
@@ -33,7 +35,8 @@ ROWS = [(i, float(i), f"s{i % 7}") for i in range(40)]
 
 def _lifecycle(spark, catalog, name, ns):
     """The c04-style mixed lifecycle: eq delete -> v3 upgrade -> two DV
-    deletes -> rewrite. Returns every observable the queries read."""
+    deletes -> MOR update -> MOR merge -> rewrite. Returns every
+    observable the queries read."""
     catalog.create_namespace("wh", [ns], exists_ok=True)
     df = spark.createDataFrame(ROWS, DDL).coalesce(2)
     catalog.create_table("wh", [ns], name, struct_to_schema(df.schema))
@@ -47,6 +50,19 @@ def _lifecycle(spark, catalog, name, ns):
     obs.append(sorted(r.id for r in t.scan().collect()))
     t.delete_where("id % 2 = 0 AND id >= 10", mode="merge-on-read")
     obs.append(sorted(r.id for r in t.scan().collect()))
+    t.update_where("id < 8", {"v": "v * 10"}, mode="merge-on-read")
+    obs.append(sorted((r.id, r.v) for r in t.scan().collect()))
+    # 11 and 13 match live rows, 100 is inserted
+    src = spark.createDataFrame(
+        [(11, 1.5, "m"), (13, 2.5, "m"), (100, 3.5, "new")], DDL
+    )
+    t.merge(
+        src,
+        "t.id = s.id",
+        matched_update={"v": "s.v", "s": "s.s"},
+        mode="merge-on-read",
+    )
+    obs.append(sorted((r.id, r.v, r.s) for r in t.scan().collect()))
     obs.append(t.delete_files().count())
     # summaries carry the deleted-row-id-ranges (driver-side numpy path)
     obs.append(
@@ -66,26 +82,18 @@ def _lifecycle(spark, catalog, name, ns):
 def test_fast_paths_match_fallback_paths(spark, catalog, monkeypatch):
     fast = _lifecycle(spark, catalog, "t_fast", "fp")
     # force every gate OFF: literal maps -> broadcast joins, inline
-    # tombstone filter -> broadcast anti-join, fused DV write -> the
-    # distributed per-file encode, driver-side ranges -> the window path
+    # tombstone/equality filters -> broadcast anti-joins, driver DV lane
+    # -> the distributed lane
     monkeypatch.setattr(SparkTable, "_PATH_MAP_MAX", -1)
     monkeypatch.setattr(icelite, "_DV_INLINE_POS_MAX", -1)
-    monkeypatch.setattr(icelite, "_DV_FUSED_ROWS_MAX", -1)
     monkeypatch.setattr(icelite, "_EQ_INLINE_ROWS_MAX", -1)
-    # r18: driver-side DV consolidation -> the distributed encode path
-    monkeypatch.setattr(icelite, "_DV_LOCAL_MERGE_MAX", -1)
-    orig_ranges = SparkTable._row_id_ranges
-
-    def window_ranges(self, ids, n=None, pinned=False):
-        return orig_ranges(self, ids, n=n, pinned=False)
-
-    monkeypatch.setattr(SparkTable, "_row_id_ranges", window_ranges)
+    monkeypatch.setattr(SparkTable, "_small_commit", lambda self, n, pos_like: False)
     slow = _lifecycle(spark, catalog, "t_slow", "fp")
     assert fast == slow
 
 
 def test_inline_pos_filter_falls_back_on_decode_failure(
-    spark, catalog, monkeypatch
+    spark, catalog, monkeypatch, caplog
 ):
     """A scan whose Puffin container can't be decoded driver-side must
     fall back to the distributed anti-join, not fail at plan time."""
@@ -97,9 +105,6 @@ def test_inline_pos_filter_falls_back_on_decode_failure(
     t._commit([], [{"action": "upgrade-format-version", "format-version": 3}])
     t.delete_where("id >= 35", mode="merge-on-read")
     want = sorted(r.id for r in t.scan().collect())
-
-    def boom(path):
-        raise RuntimeError("driver decode unavailable")
 
     import lakekeeper_spark.format.dv as dv_mod
 
@@ -116,43 +121,48 @@ def test_inline_pos_filter_falls_back_on_decode_failure(
         return _real(path)
 
     monkeypatch.setattr(dv_mod, "read_deletion_vectors_cached", guarded)
-    got = sorted(r.id for r in t.scan().collect())
+    with caplog.at_level(logging.WARNING, logger=icelite.__name__):
+        got = sorted(r.id for r in t.scan().collect())
     assert got == want
+    assert any(
+        "anti-join lane" in r.getMessage()
+        and "driver decode unavailable" in r.getMessage()
+        for r in caplog.records
+    )
 
 
-def test_row_id_ranges_numpy_matches_window(spark):
-    """The pinned numpy gaps-and-islands derivation == the window
-    derivation on unique id sets, including the range-count cap and the
-    NULL bail-out."""
+def test_row_id_ranges_literal_cases(spark):
+    """Row-id range derivation on literal cases, including the
+    range-count cap, the NULL bail-out and the row-count bound."""
     from pyspark.sql import functions as F
 
     t = SparkTable.__new__(SparkTable)
     t.spark = spark
     cases = [
-        [1, 2, 3, 7, 8, 20],
-        [5],
-        list(range(100, 200)) + [500, 502, 504],
-        [0, 2, 4, 6, 8, 10],
+        ([1, 2, 3, 7, 8, 20], [[1, 3], [7, 8], [20, 20]]),
+        ([5], [[5, 5]]),
+        (
+            list(range(100, 200)) + [500, 502, 504],
+            [[100, 199], [500, 500], [502, 502], [504, 504]],
+        ),
+        ([0, 2, 4, 6, 8, 10], [[i, i] for i in range(0, 11, 2)]),
     ]
-    for ids in cases:
-        df = spark.createDataFrame([(i,) for i in ids], "_row_id long")
-        pinned = df.localCheckpoint(eager=True)
-        fast = t._row_id_ranges(pinned, n=len(ids), pinned=True)
-        slow = t._row_id_ranges(df, n=len(ids), pinned=False)
-        assert fast == slow, ids
-    # NULL id -> not rangeable on both paths
+    for ids, want in cases:
+        # shuffled input: the derivation must not depend on row order
+        df = spark.createDataFrame([(i,) for i in reversed(ids)], "_row_id long")
+        assert t._row_id_ranges(df) == want, ids
+    # NULL id -> not rangeable
     df = spark.createDataFrame([(1,), (None,)], "_row_id long")
-    assert t._row_id_ranges(df.localCheckpoint(eager=True), n=2, pinned=True) is None
-    assert t._row_id_ranges(df, n=2, pinned=False) is None
-    # range-count cap: scattered ids exceeding _MAX_RANGES -> None on both
-    import pyspark.sql.functions as _F
-
-    sparse = spark.range(SparkTable._MAX_RANGES + 1).select(
-        (F.col("id") * 3).alias("_row_id")
-    )
-    n = SparkTable._MAX_RANGES + 1
-    assert t._row_id_ranges(sparse.localCheckpoint(eager=True), n=n, pinned=True) is None
-    assert t._row_id_ranges(sparse, n=n, pinned=False) is None
+    assert t._row_id_ranges(df) is None
+    # range-count cap: _MAX_RANGES scattered ids record, one more doesn't
+    for n, ok in ((SparkTable._MAX_RANGES, True), (SparkTable._MAX_RANGES + 1, False)):
+        sparse = spark.range(n).select((F.col("id") * 3).alias("_row_id"))
+        got = t._row_id_ranges(sparse)
+        assert got == ([[3 * i, 3 * i] for i in range(n)] if ok else None)
+    # empty and over-bound id sets record nothing
+    assert t._row_id_ranges(spark.range(0).toDF("_row_id")) is None
+    t._MAX_RANGE_ROWS = 2
+    assert t._row_id_ranges(spark.range(3).toDF("_row_id")) is None
 
 
 def test_inline_eq_filter_null_keys_fall_back(spark, tmp_path):
@@ -193,3 +203,120 @@ def test_path_map_expr_tolerates_duplicate_paths(spark):
         F.try_element_at(col, F.lit("b")).alias("vb"),
     ).collect()[0]
     assert row.va == 1 and row.vb is None
+
+
+def test_driver_dv_lane_failure_falls_back_without_orphans(
+    spark, catalog, monkeypatch, caplog
+):
+    """A driver DV lane that fails on its second container write (a
+    commit referencing more files than one container holds) deletes what
+    it wrote; the commit lands through the distributed lane and leaves
+    no unreferenced file under data/deletes/."""
+    from pathlib import Path
+
+    import lakekeeper_spark.format.dv as dv_mod
+
+    n_files = icelite._DV_BLOBS_PER_CONTAINER + 8
+    catalog.create_namespace("wh", ["dvf"], exists_ok=True)
+    df = spark.range(0, 2 * n_files, 1, n_files).selectExpr(
+        "cast(id as int) id", "cast(id as double) v", "'x' s"
+    )
+    catalog.create_table(
+        "wh", ["dvf"], "t", struct_to_schema(df.schema), format_version=3
+    )
+    t = SparkTable(spark, catalog, "wh", ["dvf"], "t")
+    t.append(df)
+    assert t.files_count() == n_files
+
+    real = dv_mod.write_deletion_vector_blobs
+    calls = []
+
+    def flaky(path, *args, **kwargs):
+        # executor tasks import the dv module fresh, so only the driver
+        # lane's writes pass through here
+        calls.append(path)
+        if len(calls) == 2:
+            raise OSError("injected container write failure")
+        return real(path, *args, **kwargs)
+
+    monkeypatch.setattr(dv_mod, "write_deletion_vector_blobs", flaky)
+    with caplog.at_level(logging.WARNING, logger=icelite.__name__):
+        t.delete_where("id % 2 = 0", mode="merge-on-read")
+    assert len(calls) == 2
+    assert any("driver DV lane failed" in r.getMessage() for r in caplog.records)
+
+    assert sorted(r.id for r in t.scan().collect()) == list(range(1, 2 * n_files, 2))
+    meta = t.metadata()
+    loc = Path(meta["location"].replace("file://", ""))
+    snap = next(
+        s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]
+    )
+    dvs = icelite.snapshot_delete_entries(snap)
+    assert len(dvs) == 2  # 512 + 8 blobs
+    assert sum(len(e["referenced-files"]) for e in dvs) == n_files
+    on_disk = {
+        p.relative_to(loc).as_posix()
+        for p in (loc / "data" / "deletes").rglob("*")
+        if p.is_file()
+    }
+    assert on_disk == {e["path"] for e in dvs}
+    assert [p for p in (loc / "data" / "deletes").iterdir() if not any(p.iterdir())] == []
+
+
+# Spark jobs per MOR op on a warm session (400-row v3 table, two files),
+# measured identically on two runs. Before the shared MOR commit path
+# the same ops took delete 3, update 4, merge 18.
+_MOR_JOBS = {"delete": 3, "update": 4, "merge": 8}
+
+
+def test_mor_commit_job_counts(spark, catalog):
+    """Deterministic job-count guard for the MOR commit path: each op
+    runs under its own job group and must not take more Spark jobs than
+    recorded in _MOR_JOBS."""
+    import uuid
+
+    sc = spark.sparkContext
+    catalog.create_namespace("wh", ["jobs"], exists_ok=True)
+
+    def jobs(fn):
+        group = f"mor-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group, False)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def cycle(name):
+        df = spark.range(400).selectExpr(
+            "cast(id as int) id", "cast(id as double) v", "concat('s', id % 7) s"
+        ).coalesce(2)
+        catalog.create_table(
+            "wh", ["jobs"], name, struct_to_schema(df.schema), format_version=3
+        )
+        t = SparkTable(spark, catalog, "wh", ["jobs"], name)
+        t.append(df)
+        assert t.files_count() == 2
+        src = spark.createDataFrame(
+            [(i, -1.0, "m") for i in range(100, 120)] + [(1000, -1.0, "new")], DDL
+        )
+        got = {
+            "delete": jobs(lambda: t.delete_where("id >= 380", mode="merge-on-read")),
+            "update": jobs(
+                lambda: t.update_where("id < 20", {"v": "v + 1"}, mode="merge-on-read")
+            ),
+            "merge": jobs(
+                lambda: t.merge(
+                    src, "t.id = s.id", matched_update={"v": "s.v"}, mode="merge-on-read"
+                )
+            ),
+        }
+        rows = {r.id: r.v for r in t.scan().collect()}
+        assert len(rows) == 381 and rows[1000] == -1.0 and rows[110] == -1.0
+        assert rows[5] == 6.0 and 380 not in rows
+        return got
+
+    cycle("warmup")
+    got = cycle("measured")
+    assert all(got[op] <= limit for op, limit in _MOR_JOBS.items()), got
