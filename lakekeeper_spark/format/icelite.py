@@ -1905,8 +1905,8 @@ class SparkTable:
         because surviving rows keep their physical position), and
         ``_last_updated_sequence_number`` = the file's data sequence
         number. Files committed before the v3 upgrade carry no
-        first-row-id and read ``_row_id`` as NULL (spec behavior). The
-        per-file map is metadata-sized and broadcast."""
+        first-row-id and read ``_row_id`` as NULL (spec behavior). See
+        _lineage_ids for the per-file map."""
         meta = self.metadata_cached() if use_cache else self.metadata()
         snap = self._resolve_snapshot(meta, snapshot_id, ref, as_of_ms)
         # head reads project the CURRENT schema (schema evolution applies to
@@ -1916,7 +1916,6 @@ class SparkTable:
             snap["schema-id"] if (snap and time_travel) else meta["current-schema-id"]
         )
         schema = next(s for s in meta["schemas"] if s["schema-id"] == schema_id)
-        struct = schema_to_struct(schema)
         # manifest-level pruning first (descriptor partition/bounds
         # summaries skip whole manifest files), then the per-entry
         # filters over what survived
@@ -1941,77 +1940,14 @@ class SparkTable:
                 f"(table is v{meta.get('format-version', 2)})"
             )
         self._report_scan(snap, partition_filter, entries, total)
-        if not entries:
-            df = local_df(self.spark, [], struct)
-            if row_lineage:
-                df = df.withColumn("_row_id", F.lit(None).cast("long")).withColumn(
-                    "_last_updated_sequence_number", F.lit(None).cast("long")
-                )
-            return df
-        if not row_lineage:
-            df = self._read_entries(
-                meta,
-                schema,
-                entries,
-                snap["schema-id"],
-                with_pos=bool(delete_entries),
-            )
-            if delete_entries:
-                df = self._apply_position_deletes(
-                    df, meta, delete_entries, entries
-                )
-                df = df.drop("_file", "_pos")
-            return df
-        # row lineage, the spec's PER-ROW inheritance rule in one read:
-        # every file is read with the physical ``_row_id`` column (files
-        # that never materialized it — plain appends — read it as NULL),
-        # and _row_id = coalesce(stored, file first-row-id + position).
-        # Row-id-preserving rewrites store ids for carried rows; rows a
-        # rewrite ADDS (merge inserts) store NULL and inherit from the
-        # file's claimed range. One metadata-sized broadcast map.
-        df = self._read_entries(
+        return self._live_rows(
             meta,
             schema,
             entries,
-            snap["schema-id"],
-            with_pos=True,
-            with_row_id=True,
+            delete_entries,
+            snap["schema-id"] if snap else schema_id,
+            lineage=row_lineage,
         )
-        fmap = local_df(self.spark, 
-            [
-                (
-                    e["path"],
-                    e.get("first-row-id"),
-                    e.get("sequence-number", 0),
-                )
-                for e in entries
-            ],
-            "lineage_path string, _frid long, _fseq long",
-        )
-        df = (
-            df.join(
-                F.broadcast(fmap),
-                self._rel_file(meta["location"]) == fmap["lineage_path"],
-                "left",
-            )
-            .withColumns(
-                {
-                    "_row_id": F.expr("coalesce(_row_id, _frid + _pos)"),
-                    # stored wins over the file's sequence number: a
-                    # carried (compacted/rewritten-unchanged) row keeps
-                    # the sequence number of the commit that last
-                    # MODIFIED it, not the rewrite's (spec row-lineage
-                    # inheritance)
-                    "_last_updated_sequence_number": F.expr(
-                        "coalesce(_last_updated_sequence_number, _fseq)"
-                    ),
-                }
-            )
-            .drop("lineage_path", "_frid", "_fseq")
-        )
-        if delete_entries:
-            df = self._apply_position_deletes(df, meta, delete_entries, entries)
-        return df.drop("_file", "_pos")
 
     def _read_entries(
         self,
@@ -2019,7 +1955,6 @@ class SparkTable:
         target_schema: dict[str, Any],
         entries: list[dict[str, Any]],
         default_schema_id: int,
-        with_file: bool = False,
         with_pos: bool = False,
         with_row_id: bool = False,
     ) -> DataFrame:
@@ -2028,7 +1963,8 @@ class SparkTable:
         target schema by field id — so RENAME COLUMN reaches old files,
         added columns read as NULL there, and dropped columns vanish. Files
         whose write schema equals the target (the common case) take a
-        single plain scan with no union.
+        single plain scan with no union. ``entries`` must be non-empty
+        (_live_rows owns the empty case).
 
         ``with_pos`` adds ``_file`` + ``_pos`` from the parquet reader's
         hidden ``_metadata`` struct (file_path / row_index) — the stable
@@ -2058,21 +1994,6 @@ class SparkTable:
                         ),
                     ]
                 )
-        if not entries:
-            empty = local_df(self.spark, [], tstruct)
-            if with_row_id:
-                empty = empty.withColumn(
-                    "_row_id", F.lit(None).cast("long")
-                ).withColumn(
-                    "_last_updated_sequence_number", F.lit(None).cast("long")
-                )
-            if with_pos:
-                empty = empty.withColumn("_file", F.lit(None).cast("string")).withColumn(
-                    "_pos", F.lit(None).cast("long")
-                )
-            elif with_file:
-                empty = empty.withColumn("_file", F.lit(None).cast("string"))
-            return empty
         # group by (write schema, commit dir): identity-partitioned writes
         # store the partition column in the HIVE DIRECTORY NAME, not the
         # file — reading with basePath=<commit dir> makes Spark restore it
@@ -2110,8 +2031,6 @@ class SparkTable:
                         "_metadata.file_path AS _file",
                         "_metadata.row_index AS _pos",
                     )
-                if with_file:
-                    return raw.selectExpr("*", "input_file_name() AS _file")
                 return raw
 
             if same_names:
@@ -2131,8 +2050,6 @@ class SparkTable:
                     keep += ["_row_id", "_last_updated_sequence_number"]
                 if with_pos:
                     keep += ["_file", "_pos"]
-                elif with_file:
-                    keep += ["_file"]
                 parts.append(raw.selectExpr(*[f"`{c}`" for c in keep]))
                 continue
             raw = _tag(
@@ -2158,15 +2075,58 @@ class SparkTable:
             if with_row_id:
                 cols.append(F.col("_row_id"))
                 cols.append(F.col("_last_updated_sequence_number"))
-            if with_file or with_pos:
-                cols.append(F.col("_file"))
             if with_pos:
+                cols.append(F.col("_file"))
                 cols.append(F.col("_pos"))
             parts.append(raw.select(*cols))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+    def _live_rows(
+        self,
+        meta: dict[str, Any],
+        schema: dict[str, Any],
+        entries: list[dict[str, Any]],
+        delete_entries: list[dict[str, Any]],
+        schema_id: int,
+        *,
+        lineage: bool = False,
+        keep_pos: bool = False,
+    ) -> DataFrame:
+        """The one live-row read: data ``entries`` read field-id-aware
+        into ``schema`` (_read_entries; ``schema_id`` is the write schema of
+        entries that carry none), v3 lineage ids resolved (``lineage``:
+        adds ``_row_id`` and ``_last_updated_sequence_number``, see
+        _lineage_ids), then every artifact in ``delete_entries`` applied
+        (_apply_position_deletes). Every read of a snapshot's rows goes
+        through here, including the empty case (no data entries: an empty
+        frame of the same shape, no lineage or delete work).
+
+        ``keep_pos`` keeps ``_file`` and ``_pos``. A row's file identity
+        has ONE source, ``_metadata.file_path`` (a percent-encoded URI),
+        and ONE convention: consumers compare the table-relative path
+        _rel_file derives from it with manifest ``path`` values."""
+        if not entries:
+            df = local_df(self.spark, [], schema_to_struct(schema))
+            extra = {}
+            if lineage:
+                extra["_row_id"] = "long"
+                extra["_last_updated_sequence_number"] = "long"
+            if keep_pos:
+                extra["_file"] = "string"
+                extra["_pos"] = "long"
+            return df.withColumns({c: F.lit(None).cast(t) for c, t in extra.items()})
+        positioned = lineage or keep_pos or bool(delete_entries)
+        df = self._read_entries(
+            meta, schema, entries, schema_id, with_pos=positioned, with_row_id=lineage
+        )
+        if lineage:
+            df = self._lineage_ids(df, meta, entries)
+        if delete_entries:
+            df = self._apply_position_deletes(df, meta, delete_entries, entries)
+        return df if keep_pos or not positioned else df.drop("_file", "_pos")
 
     def _report_scan(
         self,
@@ -2191,8 +2151,10 @@ class SparkTable:
                     "skipped-data-files": total - len(entries),
                 },
             )
-        except Exception:  # noqa: BLE001 - metrics must never fail a scan
-            pass
+        except Exception as exc:  # noqa: BLE001 - metrics must never fail a scan
+            _log.warning(
+                "scan report for %s was not filed: %r", self.name, exc, exc_info=True
+            )
 
     def scan_changes(
         self, from_snapshot_id: int | None, to_snapshot_id: int | None = None
@@ -2227,10 +2189,8 @@ class SparkTable:
         # delete manifests). The descriptor-level diff opens only
         # manifests the two snapshots DON'T share.
         added = _split_manifest(diff_snapshots(from_snap, to_snap)[0])[0]
-        if not added:
-            return local_df(self.spark, [], struct)
         # field-id-aware read: incremental scans survive column renames
-        return self._read_entries(meta, schema, added, to_snap["schema-id"])
+        return self._live_rows(meta, schema, added, [], to_snap["schema-id"])
 
     def changelog(
         self,
@@ -2337,42 +2297,22 @@ class SparkTable:
             added_data, added_dels = _split_manifest(added_all)
             removed_data, removed_dels = _split_manifest(removed_all)
             if added_data:
-                ins = self._read_entries(
-                    meta,
-                    schema,
-                    added_data,
-                    s["schema-id"],
-                    with_pos=row_lineage,
-                    with_row_id=row_lineage,
+                ins = self._live_rows(
+                    meta, schema, added_data, [], s["schema-id"], lineage=row_lineage
                 )
-                if row_lineage:
-                    ins = self._lineage_ids(ins, meta, added_data).drop(
-                        "_file", "_pos"
-                    )
                 parts.append(tag(ins, "insert"))
             if removed_data:
                 # only rows LIVE at the parent emit delete events: apply the
                 # parent's tombstones to the removed files' raw rows, else a
                 # CoW rewrite would re-emit rows a MOR delete already removed
-                p_dels = snapshot_delete_entries(parent)
-                removed_rows = self._read_entries(
+                removed_rows = self._live_rows(
                     meta,
                     schema,
                     removed_data,
+                    snapshot_delete_entries(parent),
                     parent["schema-id"],
-                    with_pos=bool(p_dels) or row_lineage,
-                    with_row_id=row_lineage,
+                    lineage=row_lineage,
                 )
-                if row_lineage:
-                    removed_rows = self._lineage_ids(
-                        removed_rows, meta, removed_data
-                    )
-                if p_dels:
-                    removed_rows = self._apply_position_deletes(
-                        removed_rows, meta, p_dels, removed_data
-                    )
-                if bool(p_dels) or row_lineage:
-                    removed_rows = removed_rows.drop("_file", "_pos")
                 parts.append(tag(removed_rows, "delete"))
             # newly-added tombstones -> deletes against the PARENT state
             pos_added = [
@@ -2389,17 +2329,15 @@ class SparkTable:
                     new_pos = new_pos.exceptAll(old_pos)
                 # content work: the parent's live state must be read
                 # anyway, so loading its data entries is not the cost
-                p_data = _split_manifest(snapshot_entries(parent))[0]
-                rows = self._read_entries(
+                rows = self._live_rows(
                     meta,
                     schema,
-                    p_data,
+                    _split_manifest(snapshot_entries(parent))[0],
+                    [],
                     parent["schema-id"],
-                    with_pos=True,
-                    with_row_id=row_lineage,
+                    lineage=row_lineage,
+                    keep_pos=True,
                 )
-                if row_lineage:
-                    rows = self._lineage_ids(rows, meta, p_data)
                 cond = (self._rel_file(meta["location"]) == new_pos["file_path"]) & (
                     F.col("_pos") == new_pos["pos"]
                 )
@@ -2407,41 +2345,20 @@ class SparkTable:
                     tag(rows.join(new_pos, cond, "left_semi").drop("_file", "_pos"), "delete")
                 )
             if eq_added and parent is not None:
-                live = self._data_df(
-                    meta, schema, parent, lineage=row_lineage
+                live = self._live_rows(
+                    meta,
+                    schema,
+                    *_split_manifest(snapshot_entries(parent)),
+                    parent["schema-id"],
+                    lineage=row_lineage,
                 )
-                by_id_cur = {f["id"]: f["name"] for f in schema["fields"]}
                 for e in eq_added:
-                    wschema = next(
-                        (
-                            sc
-                            for sc in meta["schemas"]
-                            if sc["schema-id"] == e.get("schema-id")
-                        ),
-                        schema,
-                    )
-                    by_id_w = {f["id"]: (f["name"], f["type"]) for f in wschema["fields"]}
-                    leg = is_legacy_schema(wschema)
-                    read_schema = ", ".join(
-                        f"`{by_id_w[fid][0]}` {spark_ddl_of(by_id_w[fid][1], legacy=leg)}"
-                        for fid in e["equality-ids"]
-                    )
-                    del_rows = self.spark.read.schema(read_schema).parquet(
-                        f"{meta['location']}/{e['path']}"
-                    )
-                    # field-id rename safety: align write-time names to current
-                    del_rows = del_rows.select(
-                        *[
-                            F.col(by_id_w[fid][0]).alias(by_id_cur[fid])
-                            for fid in e["equality-ids"]
-                        ]
-                    )
-                    cols = [by_id_cur[fid] for fid in e["equality-ids"]]
+                    del_rows = self._read_eq_delete(meta, e)
                     # NULL keys match, like _apply_equality_deletes — a
                     # name-list join would silently drop delete events
                     # for rows the table really removed
                     parts.append(
-                        tag(_null_safe_semi(live, del_rows, cols), "delete")
+                        tag(_null_safe_semi(live, del_rows, del_rows.columns), "delete")
                     )
         if not parts:
             return empty.limit(0)
@@ -2556,20 +2473,14 @@ class SparkTable:
                 # rows), never the parent state; the insert side falls
                 # through to the shared range/entry handling below
                 schema = self._current_schema(meta)
-                removed = plan["delete-file-entries"]
-                dels = self._read_entries(
+                dels = self._live_rows(
                     meta,
                     schema,
-                    removed,
+                    plan["delete-file-entries"],
+                    plan["delete-mask-entries"],
                     plan["parent-schema-id"],
-                    with_pos=True,
-                    with_row_id=True,
+                    lineage=True,
                 )
-                dels = self._lineage_ids(dels, meta, removed)
-                if plan["delete-mask-entries"]:
-                    dels = self._apply_position_deletes(
-                        dels, meta, plan["delete-mask-entries"], removed
-                    )
                 parts.append(_tagged(dels, "delete", sid))
             elif plan["content-fallback"]:
                 # an uncovered tombstone (oversized / pre-range-recording
@@ -2595,15 +2506,9 @@ class SparkTable:
             opened = plan["insert-file-entries"]
             if opened:
                 schema = self._current_schema(meta)
-                ins = self._read_entries(
-                    meta,
-                    schema,
-                    opened,
-                    plan["schema-id"],
-                    with_pos=True,
-                    with_row_id=True,
+                ins = self._live_rows(
+                    meta, schema, opened, [], plan["schema-id"], lineage=True
                 )
-                ins = self._lineage_ids(ins, meta, opened)
                 parts.append(_tagged(ins, "insert", sid))
             # delete side: the commit's recorded ranges, parent unread
             if plan["delete-ranges"]:
@@ -2894,15 +2799,23 @@ class SparkTable:
 
     @staticmethod
     def _rel_file_sql(location: str) -> str:
-        """SQL text of the table-relative ``_file`` path derivation."""
+        """SQL text of the table-relative ``_file`` path derivation.
+        ``_file`` is a percent-encoded URI (a space reads back as %20), so
+        it is decoded before the location prefix is cut. url_decode turns
+        a literal '+' into a space, so '+' is escaped to %2B first."""
         return (
-            "substring(regexp_replace(_file, '^file:(//)?', ''), "
-            f"{len(location) + 2}, {1 << 30})"
+            "substring(url_decode(replace(regexp_replace(_file, '^file:(//)?', ''), "
+            f"'+', '%2B')), {len(location) + 2}, {1 << 30})"
         )
 
     def _rel_file(self, location: str) -> F.Column:
         """Table-relative path derived from a ``_file`` URI, so tombstones
-        stay valid under SetLocation and match manifest entry paths.
+        stay valid under SetLocation and match manifest entry paths. This
+        is the one file-identity rule: ``_file`` always comes from
+        ``_metadata.file_path`` (_read_entries), and every consumer — delete
+        anti-joins, lineage and sequence maps, tombstone writers, the
+        copy-on-write file targeting — compares this path with manifest
+        ``path`` values.
 
         Built as ONE parsed expression string: the Column-API form costs
         ~10 py4j round trips per call and this runs on every positioned
@@ -2947,7 +2860,7 @@ class SparkTable:
         df: DataFrame,
         meta: dict[str, Any],
         delete_entries: list[dict[str, Any]],
-        data_entries: list[dict[str, Any]] | None = None,
+        data_entries: list[dict[str, Any]],
     ) -> DataFrame:
         """Anti-join every delete artifact kind out of a positioned read.
 
@@ -2989,7 +2902,7 @@ class SparkTable:
                 )
                 df = df.join(dels, cond, "left_anti")
         if eq_dels:
-            df = self._apply_equality_deletes(df, meta, eq_dels, data_entries or [])
+            df = self._apply_equality_deletes(df, meta, eq_dels, data_entries)
         return df
 
     def _apply_equality_deletes(
@@ -3001,36 +2914,11 @@ class SparkTable:
     ) -> DataFrame:
         """Sequence-aware anti-joins for equality-delete files. One
         anti-join per delete commit (bounded by snapshot count); the
-        per-file sequence map is a metadata-sized broadcast join keyed on
-        the read's `_file` column."""
-        if not data_entries:
-            tagged = df.withColumn("_seq", F.lit(None).cast("long"))
-        elif len(data_entries) <= self._PATH_MAP_MAX:
-            # literal path->sequence map: no broadcast-build job per scan
-            tagged = df.withColumn(
-                "_seq",
-                F.try_element_at(
-                    self._path_map_expr(
-                        [
-                            (e["path"], e.get("sequence-number", 0))
-                            for e in data_entries
-                        ]
-                    ),
-                    self._rel_file(meta["location"]),
-                ),
-            )
-        else:
-            file_seq = local_df(self.spark,
-                [(e["path"], e.get("sequence-number", 0)) for e in data_entries],
-                "file_path string, _seq long",
-            )
-            tagged = df.join(
-                F.broadcast(file_seq),
-                self._rel_file(meta["location"]) == file_seq["file_path"],
-                "left",
-            ).drop("file_path")
-        current = self._current_schema(meta)
-        by_id_cur = {f["id"]: f["name"] for f in current["fields"]}
+        per-file sequence number attaches by the read's `_file` column
+        (_file_values)."""
+        tagged = self._file_values(
+            df, meta, data_entries, {"_seq": lambda e: e.get("sequence-number", 0)}
+        )
         # the written and current column names usually coincide, so the
         # join condition needs side-disambiguated references. Renaming the
         # delete side to reserved __eqd_<i> names (one toDF round trip)
@@ -3040,26 +2928,12 @@ class SparkTable:
         # Columns if a table column ever collides with the prefix.
         plain = not any(c.startswith("__eqd_") for c in tagged.columns)
         for e in eq_dels:
-            wschema = next(
-                (s for s in meta["schemas"] if s["schema-id"] == e.get("schema-id")),
-                current,
-            )
-            by_id_w = {f["id"]: (f["name"], f["type"]) for f in wschema["fields"]}
-            leg = is_legacy_schema(wschema)
-            pairs = []  # (written name+type, current name) resolved by field id
-            for fid in e["equality-ids"]:
-                wname, wtype = by_id_w[fid]
-                pairs.append((wname, wtype, by_id_cur[fid]))
+            pairs = self._eq_delete_keys(meta, e)[0]
             inline = self._inline_eq_filter(meta, e, pairs)
             if inline is not None:
                 tagged = tagged.filter(inline)
                 continue
-            read_schema = ", ".join(
-                f"`{w}` {spark_ddl_of(t, legacy=leg)}" for w, t, _ in pairs
-            )
-            del_rows = self.spark.read.schema(read_schema).parquet(
-                f"{meta['location']}/{e['path']}"
-            )
+            del_rows = self._read_eq_delete(meta, e)
             seq = int(e.get("sequence-number", 0))
             if plain:
                 del_rows = del_rows.toDF(
@@ -3079,11 +2953,40 @@ class SparkTable:
                 )
             else:
                 cond = F.col("_seq") < F.lit(seq)
-                for wname, _, cname in pairs:
-                    cond = cond & (tagged[cname].eqNullSafe(del_rows[wname]))
+                for _, _, cname in pairs:
+                    cond = cond & (tagged[cname].eqNullSafe(del_rows[cname]))
             tagged = tagged.join(del_rows, cond, "left_anti")
         return tagged.drop("_seq")
 
+    def _eq_delete_keys(
+        self, meta: dict[str, Any], e: dict[str, Any]
+    ) -> tuple[list[tuple[str, Any, str]], bool]:
+        """(written name, written type, current name) per equality field
+        id of an equality-delete artifact, resolved by field id through
+        its WRITE-time schema, and whether that schema is legacy-typed."""
+        current = self._current_schema(meta)
+        by_id_cur = {f["id"]: f["name"] for f in current["fields"]}
+        wschema = next(
+            (s for s in meta["schemas"] if s["schema-id"] == e.get("schema-id")),
+            current,
+        )
+        by_id_w = {f["id"]: (f["name"], f["type"]) for f in wschema["fields"]}
+        pairs = [(*by_id_w[fid], by_id_cur[fid]) for fid in e["equality-ids"]]
+        return pairs, is_legacy_schema(wschema)
+
+    def _read_eq_delete(self, meta: dict[str, Any], e: dict[str, Any]) -> DataFrame:
+        """The one equality-delete reader: the artifact's rows read with
+        its write-time names and types, returned under the CURRENT column
+        names (field-id rename safety)."""
+        pairs, legacy = self._eq_delete_keys(meta, e)
+        read_schema = ", ".join(
+            f"`{w}` {spark_ddl_of(t, legacy=legacy)}" for w, t, _ in pairs
+        )
+        return (
+            self.spark.read.schema(read_schema)
+            .parquet(f"{meta['location']}/{e['path']}")
+            .toDF(*[c for _, _, c in pairs])
+        )
 
     # metadata path-keyed lookups: at or below this entry count the
     # per-file value attaches as a LITERAL map expression — zero
@@ -3094,15 +2997,25 @@ class SparkTable:
     _PATH_MAP_MAX = 200
 
     @staticmethod
-    def _path_map_expr(pairs: list[tuple[str, int | None]]) -> F.Column:
+    def _path_map_expr(pairs: list[tuple[str, int | None]]) -> F.Column | None:
         """Literal map('path', value, ...) over metadata-sized pairs.
 
         Pairs are deduped first: spark.sql.mapKeyDedupPolicy=EXCEPTION
         (the default) throws DUPLICATED_MAP_KEY on a repeated literal key,
         where the broadcast-join fallback tolerated duplicates (ADVICE
-        r17). Manifest paths are unique per snapshot, so last-wins is a
-        no-op in practice."""
-        pairs = list(dict(pairs).items())
+        r17). A path repeated with CONFLICTING values has no single map
+        value: returns None (logged) so the caller takes the broadcast
+        join, which surfaces every value."""
+        merged = dict(pairs)
+        conflicts = sorted({p for p, v in pairs if v != merged[p]})
+        if conflicts:
+            _log.warning(
+                "conflicting duplicate paths in a per-file map, lookup takes "
+                "the broadcast-join lane: %s",
+                conflicts[:5],
+            )
+            return None
+        pairs = list(merged.items())
         items = ", ".join(
             "'{}', {}".format(
                 p.replace("\\", "\\\\").replace("'", "\\'"),
@@ -3182,6 +3095,38 @@ class SparkTable:
         # condition non-TRUE — exactly the anti-join's keep behavior.
         return F.expr(f"NOT coalesce(_seq < {seq} AND ({in_expr}), false)")
 
+    def _file_values(
+        self,
+        df: DataFrame,
+        meta: dict[str, Any],
+        entries: list[dict[str, Any]],
+        values: dict[str, Any],
+    ) -> DataFrame:
+        """Attach per-data-file metadata as long columns: ``values`` maps
+        a column name to a function of the manifest entry, looked up by
+        the row's table-relative file (_rel_file). Metadata-sized: a
+        literal map expression per column at or below _PATH_MAP_MAX
+        entries (no broadcast-build job), a broadcast join beyond it or
+        when a path repeats with conflicting values (_path_map_expr)."""
+        rel = self._rel_file(meta["location"])
+        if 0 < len(entries) <= self._PATH_MAP_MAX:
+            maps = {
+                c: self._path_map_expr([(e["path"], fn(e)) for e in entries])
+                for c, fn in values.items()
+            }
+            if all(m is not None for m in maps.values()):
+                return df.withColumns(
+                    {c: F.try_element_at(m, rel) for c, m in maps.items()}
+                )
+        fmap = local_df(
+            self.spark,
+            [(e["path"], *[fn(e) for fn in values.values()]) for e in entries],
+            ", ".join(["__file_values_path string"] + [f"{c} long" for c in values]),
+        )
+        return df.join(
+            F.broadcast(fmap), rel == fmap["__file_values_path"], "left"
+        ).drop("__file_values_path")
+
     def _lineage_ids(
         self, df: DataFrame, meta: dict[str, Any], entries: list[dict[str, Any]]
     ) -> DataFrame:
@@ -3190,100 +3135,33 @@ class SparkTable:
         first-row-id + the row's position; same rule for
         ``_last_updated_sequence_number`` over the file's data sequence
         number. ``df`` must carry ``_file`` / ``_pos`` and the physical
-        columns (with_pos + with_row_id reads); the per-file map is
-        metadata-sized — attached as a literal map expression when small
-        (no broadcast-build job), broadcast-joined beyond _PATH_MAP_MAX."""
-        if 0 < len(entries) <= self._PATH_MAP_MAX:
-            rel = self._rel_file(meta["location"])
-            frid = F.try_element_at(
-                self._path_map_expr(
-                    [(e["path"], e.get("first-row-id")) for e in entries]
-                ),
-                rel,
-            )
-            fseq = F.try_element_at(
-                self._path_map_expr(
-                    [(e["path"], e.get("sequence-number", 0)) for e in entries]
-                ),
-                rel,
-            )
-            return df.withColumns(
-                {
-                    "_row_id": F.coalesce(F.col("_row_id"), frid + F.col("_pos")),
-                    "_last_updated_sequence_number": F.coalesce(
-                        F.col("_last_updated_sequence_number"), fseq
-                    ),
-                }
-            )
-        fmap = local_df(self.spark,
-            [
-                (e["path"], e.get("first-row-id"), e.get("sequence-number", 0))
-                for e in entries
-            ],
-            "lineage_path string, _frid long, _fseq long",
-        )
+        columns (with_pos + with_row_id reads); the per-file values attach
+        through _file_values (both of its lanes)."""
         return (
-            df.join(
-                F.broadcast(fmap),
-                self._rel_file(meta["location"]) == fmap["lineage_path"],
-                "left",
+            self._file_values(
+                df,
+                meta,
+                entries,
+                {
+                    "_frid": lambda e: e.get("first-row-id"),
+                    "_fseq": lambda e: e.get("sequence-number", 0),
+                },
             )
             .withColumns(
                 {
                     "_row_id": F.expr("coalesce(_row_id, _frid + _pos)"),
+                    # stored wins over the file's sequence number: a
+                    # carried (compacted/rewritten-unchanged) row keeps
+                    # the sequence number of the commit that last
+                    # MODIFIED it, not the rewrite's (spec row-lineage
+                    # inheritance)
                     "_last_updated_sequence_number": F.expr(
                         "coalesce(_last_updated_sequence_number, _fseq)"
                     ),
                 }
             )
-            .drop("lineage_path", "_frid", "_fseq")
+            .drop("_frid", "_fseq")
         )
-
-    def _data_df(
-        self,
-        meta: dict[str, Any],
-        schema: dict[str, Any],
-        snap: dict[str, Any],
-        with_file: bool = False,
-        lineage: bool = False,
-    ) -> DataFrame:
-        """Live rows of a snapshot: data entries read field-id-aware, with
-        any position deletes applied. The shared read for DML paths.
-        ``lineage=True`` (v3) also carries each row's resolved ``_row_id``
-        — coalesce(stored column, file first-row-id + position) — so
-        rewriting DML can materialize it back (row-id preservation)."""
-        data_entries, delete_entries = _split_manifest(snapshot_entries(snap))
-        if not data_entries:
-            df = local_df(self.spark, [], schema_to_struct(schema))
-            if with_file:
-                df = df.withColumn("_file", F.lit(None).cast("string"))
-            if lineage:
-                df = df.withColumn(
-                    "_row_id", F.lit(None).cast("long")
-                ).withColumn(
-                    "_last_updated_sequence_number", F.lit(None).cast("long")
-                )
-            return df
-        df = self._read_entries(
-            meta,
-            schema,
-            data_entries,
-            snap["schema-id"],
-            with_file=with_file and not (delete_entries or lineage),
-            with_pos=bool(delete_entries) or lineage,
-            with_row_id=lineage,
-        )
-        if lineage:
-            df = self._lineage_ids(df, meta, data_entries)
-        if delete_entries or lineage:
-            if delete_entries:
-                df = self._apply_position_deletes(
-                    df, meta, delete_entries, data_entries
-                )
-            df = df.drop("_pos")
-            if not with_file:
-                df = df.drop("_file")
-        return df
 
     def _write_delete_files(
         self,
@@ -3334,33 +3212,6 @@ class SparkTable:
                 )
             entries.append(entry)
         return entries
-
-    def _mor_positions(
-        self,
-        meta: dict[str, Any],
-        schema: dict[str, Any],
-        snap: dict[str, Any],
-        lineage: bool = False,
-    ) -> DataFrame:
-        """Positioned live rows (current deletes already applied), ready
-        for tombstone derivation. ``lineage=True`` (v3) carries each
-        row's resolved ``_row_id`` (stored column wins over inherited
-        first-row-id + position) so MOR UPDATE/MERGE can materialize it
-        into the updated images."""
-        data_entries, delete_entries = _split_manifest(snapshot_entries(snap))
-        df = self._read_entries(
-            meta,
-            schema,
-            data_entries,
-            snap["schema-id"],
-            with_pos=True,
-            with_row_id=lineage,
-        )
-        if lineage:
-            df = self._lineage_ids(df, meta, data_entries)
-        if delete_entries:
-            df = self._apply_position_deletes(df, meta, delete_entries, data_entries)
-        return df
 
     def _mor_matched(
         self, meta: dict[str, Any], rows: DataFrame, distinct: bool = False
@@ -3438,8 +3289,14 @@ class SparkTable:
         if snap is None:
             raise CatalogError("table has no data")
         schema = self._current_schema(meta)
-        lineage = meta.get("format-version", 2) >= 3
-        df = self._mor_positions(meta, schema, snap, lineage=lineage)
+        df = self._live_rows(
+            meta,
+            schema,
+            *_split_manifest(snapshot_entries(snap)),
+            snap["schema-id"],
+            lineage=meta.get("format-version", 2) >= 3,
+            keep_pos=True,
+        )
         matched = self._mor_matched(meta, df.filter(condition))
         if matched[1] == 0:
             return meta  # DELETE matching nothing commits no snapshot
@@ -3738,7 +3595,14 @@ class SparkTable:
         # updated images KEEP their row ids
         lineage = meta.get("format-version", 2) >= 3
         rows = (
-            self._mor_positions(meta, schema, snap, lineage=lineage)
+            self._live_rows(
+                meta,
+                schema,
+                *_split_manifest(snapshot_entries(snap)),
+                snap["schema-id"],
+                lineage=lineage,
+                keep_pos=True,
+            )
             .filter(condition)
             .localCheckpoint(eager=False)
         )
@@ -3788,7 +3652,14 @@ class SparkTable:
         schema = self._current_schema(meta)
         cols = [f["name"] for f in schema["fields"]]
         lineage = fv >= 3
-        live = self._mor_positions(meta, schema, snap, lineage=lineage)
+        live = self._live_rows(
+            meta,
+            schema,
+            *_split_manifest(snapshot_entries(snap)),
+            snap["schema-id"],
+            lineage=lineage,
+            keep_pos=True,
+        )
         mcol = _fresh_names(source, "__src_match")[0]
         src = source.withColumn(mcol, F.lit(1)).alias("s")
         t = live.alias("t")
@@ -3880,21 +3751,15 @@ class SparkTable:
                 "rewritten-data-files": 0,
                 "removed-delete-files": len(delete_entries),
             }
-        lineage = meta.get("format-version", 2) >= 3
-        df = self._read_entries(
+        # v3: materialization preserves row ids — survivors carry their
+        # resolved id into the rewritten files (per-row inheritance)
+        df = self._live_rows(
             meta,
             schema,
             affected,
+            delete_entries,
             snap["schema-id"],
-            with_pos=True,
-            with_row_id=lineage,
-        )
-        if lineage:
-            # materialization preserves row ids: survivors carry their
-            # resolved id into the rewritten files (per-row inheritance)
-            df = self._lineage_ids(df, meta, affected)
-        df = self._apply_position_deletes(df, meta, delete_entries, affected).drop(
-            "_file", "_pos"
+            lineage=meta.get("format-version", 2) >= 3,
         )
         new_entries = self._write_files(meta, df)
         self._commit_snapshot(
@@ -3921,7 +3786,8 @@ class SparkTable:
         affected: list[str] | None = None,
     ) -> dict[str, Any]:
         """Copy-on-write core: find files containing rows matching
-        `condition` (or take the precomputed `affected` file list), rewrite
+        `condition` (or take the precomputed `affected` list of
+        table-relative paths, as _rel_file gives them), rewrite
         ONLY those via `rewriter(df)`, keep the rest. This is the
         merge-on-write strategy Iceberg uses for DELETE/UPDATE/MERGE with
         copy-on-write tables (reference test_spark.py:1321-1340 exercises
@@ -3939,45 +3805,39 @@ class SparkTable:
         if snap is None:
             raise CatalogError("table has no data")
         schema = self._current_schema(meta)
-        loc = meta["location"]
         lineage = meta.get("format-version", 2) >= 3
-        df = self._data_df(meta, schema, snap, with_file=True, lineage=lineage)
+        df = self._live_rows(
+            meta,
+            schema,
+            *_split_manifest(snapshot_entries(snap)),
+            snap["schema-id"],
+            lineage=lineage,
+            keep_pos=True,
+        )
+        rel = self._rel_file(meta["location"])
         if affected is None:
             affected = [
-                r["_file"]
-                for r in df.filter(condition).select("_file").distinct().collect()
+                r[0] for r in df.filter(condition).select(rel).distinct().collect()
             ]
-        affected_set = {p.replace("file://", "").replace("file:", "") for p in affected}
+        affected_set = set(affected)
+        # the rewritten data files leave the manifest, and so does every
+        # delete entry whose referenced data files were all rewritten: its
+        # tombstones would point only at vanished files, costing scans
+        # the anti-join path (and accumulating forever). Entries without
+        # referenced-files (pre-upgrade tombstones) are conservatively kept.
         kept = [
             e
             for e in snapshot_entries(snap)
-            if str(Path(loc) / e["path"]) not in affected_set
-        ]
-        # prune delete entries whose every referenced data file was just
-        # rewritten: their tombstones now point at files gone from the
-        # manifest, so keeping them only costs scans the anti-join path
-        # (and they'd accumulate forever). Entries without referenced-files
-        # (pre-upgrade tombstones) are conservatively kept.
-        affected_rel = {
-            p[len(loc) + 1 :] if p.startswith(loc) else p for p in affected_set
-        }
-        kept = [
-            e
-            for e in kept
-            if not (
+            if e["path"] not in affected_set
+            and not (
                 e.get("content") in ("position-deletes", "deletion-vectors")
                 and e.get("referenced-files") is not None
-                and all(r in affected_rel for r in e["referenced-files"])
+                and all(r in affected_set for r in e["referenced-files"])
             )
         ]
         rewritten_entries: list[dict[str, Any]] = []
-        # the affected list may come from a different _file source than
-        # this read (input_file_name vs _metadata.file_path render the
-        # scheme differently) — compare scheme-stripped paths on both
-        # sides, like affected_set above
-        _clean = F.regexp_replace(F.col("_file"), "^file:(//)?", "")
         to_rewrite = (
-            df.filter(_clean.isin(sorted(affected_set))).drop("_file")
+            df.filter(rel.isin(sorted(affected_set))).drop("_file", "_pos")
             if affected
             else None
         )
@@ -4057,7 +3917,13 @@ class SparkTable:
         if missing:
             raise CatalogError(f"unknown equality columns: {missing}")
         lineage = meta.get("format-version", 2) >= 3
-        live = self._data_df(meta, schema, snap, lineage=lineage)
+        live = self._live_rows(
+            meta,
+            schema,
+            *_split_manifest(snapshot_entries(snap)),
+            snap["schema-id"],
+            lineage=lineage,
+        )
         del_rows = live.filter(condition).select(*cols).distinct()
         entries = self._write_delete_files(
             meta,
@@ -4203,21 +4069,26 @@ class SparkTable:
         snap = self._resolve_snapshot(meta)
         if snap is None:
             raise CatalogError("table has no data")
-        tgt_all = self._data_df(meta, schema, snap)
+        tgt = self._live_rows(
+            meta,
+            schema,
+            *_split_manifest(snapshot_entries(snap)),
+            snap["schema-id"],
+            keep_pos=True,
+        ).alias("t")
         inserts = None
         if not_matched_insert:
             inserts = (
-                src.join(tgt_all.alias("t"), F.expr(on), "left_anti")
+                src.join(tgt, F.expr(on), "left_anti")
                 .select(*_insert_cols(schema, source.columns))
             )
         # file targeting: LEFT SEMI join on the merge condition; only the
-        # distinct FILE LIST (metadata-sized) reaches the driver
+        # distinct table-relative FILE LIST (metadata-sized) reaches the
+        # driver
         affected = [
-            r["_file"]
-            for r in self._data_df(meta, schema, snap, with_file=True)
-            .alias("t")
-            .join(src, F.expr(on), "left_semi")
-            .select("_file")
+            r[0]
+            for r in tgt.join(src, F.expr(on), "left_semi")
+            .select(self._rel_file(meta["location"]))
             .distinct()
             .collect()
         ]

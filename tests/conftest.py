@@ -18,6 +18,27 @@ def spark():
 
 
 @pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` runs ``fn`` under a fresh Spark job group and
+    returns how many jobs it started (deterministic on a warm session)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def jobs(fn) -> int:
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group, False)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return jobs
+
+
+@pytest.fixture()
 def catalog(tmp_path):
     from lakekeeper_spark.catalog.catalog import Catalog
     from lakekeeper_spark.catalog.metastore import Metastore

@@ -3,9 +3,11 @@
 Several per-action driver barriers are replaced by metadata-gated fast
 paths:
 
-  - equality-delete sequence tags and v3 lineage id/seq resolution attach
-    as LITERAL map expressions below ``SparkTable._PATH_MAP_MAX`` (the
-    broadcast join remains above the gate);
+  - per-file values — equality-delete sequence tags and v3 lineage id/seq
+    resolution, for scans and DML alike (``SparkTable._file_values``) —
+    attach as LITERAL map expressions below ``SparkTable._PATH_MAP_MAX``
+    (the broadcast join remains above the gate, and takes over when a path
+    repeats with conflicting values);
   - small Puffin tombstone sets (<= ``icelite._DV_INLINE_POS_MAX``
     positions) anti-filter as one literal expression instead of a
     broadcast anti-join;
@@ -31,6 +33,13 @@ from lakekeeper_spark.format.types import struct_to_schema
 
 DDL = "id int, v double, s string"
 ROWS = [(i, float(i), f"s{i % 7}") for i in range(40)]
+
+
+def _lineage(t):
+    return sorted(
+        (r.id, r._row_id, r._last_updated_sequence_number)
+        for r in t.scan(row_lineage=True).collect()
+    )
 
 
 def _lifecycle(spark, catalog, name, ns):
@@ -63,6 +72,7 @@ def _lifecycle(spark, catalog, name, ns):
         mode="merge-on-read",
     )
     obs.append(sorted((r.id, r.v, r.s) for r in t.scan().collect()))
+    obs.append(_lineage(t))
     obs.append(t.delete_files().count())
     # summaries carry the deleted-row-id-ranges (driver-side numpy path)
     obs.append(
@@ -70,6 +80,7 @@ def _lifecycle(spark, catalog, name, ns):
     )
     t.rewrite_position_deletes()
     obs.append(sorted((r.id, r.v, r.s) for r in t.scan().collect()))
+    obs.append(_lineage(t))
     obs.append(
         sorted(
             ((-1 if r._row_id is None else r._row_id), r._change_type)
@@ -129,6 +140,28 @@ def test_inline_pos_filter_falls_back_on_decode_failure(
         and "driver decode unavailable" in r.getMessage()
         for r in caplog.records
     )
+
+
+def test_scan_report_failure_is_logged_not_raised(
+    spark, catalog, monkeypatch, caplog
+):
+    """A catalog whose report_metrics raises must not fail the scan; the
+    failure is logged at WARNING with its traceback."""
+    catalog.create_namespace("wh", ["rep"], exists_ok=True)
+    df = spark.createDataFrame(ROWS, DDL).coalesce(1)
+    catalog.create_table("wh", ["rep"], "t", struct_to_schema(df.schema))
+    t = SparkTable(spark, catalog, "wh", ["rep"], "t")
+    t.append(df)
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("metrics sink down")
+
+    monkeypatch.setattr(catalog, "report_metrics", broken)
+    with caplog.at_level(logging.WARNING, logger=icelite.__name__):
+        assert t.scan().count() == len(ROWS)
+    recs = [r for r in caplog.records if "scan report" in r.getMessage()]
+    assert len(recs) == 1 and "metrics sink down" in recs[0].getMessage()
+    assert recs[0].exc_info is not None
 
 
 def test_row_id_ranges_literal_cases(spark):
@@ -191,10 +224,13 @@ def test_inline_eq_filter_null_keys_fall_back(spark, tmp_path):
     assert t._inline_eq_filter(meta, e2, [("id", "long", "id")]) is not None
 
 
-def test_path_map_expr_tolerates_duplicate_paths(spark):
+def test_path_map_expr_tolerates_duplicate_paths(spark, caplog):
     """Duplicate manifest paths must not trip DUPLICATED_MAP_KEY under
     the default spark.sql.mapKeyDedupPolicy=EXCEPTION (ADVICE r17): the
-    literal map dedupes pairs the way the join fallback tolerated them."""
+    literal map dedupes pairs the way the join fallback tolerated them.
+    A path repeated with CONFLICTING values has no single map value: no
+    map is built (the caller takes the broadcast join) and a warning
+    names the path."""
     from pyspark.sql import functions as F
 
     col = SparkTable._path_map_expr([("a", 1), ("a", 1), ("b", None)])
@@ -203,6 +239,11 @@ def test_path_map_expr_tolerates_duplicate_paths(spark):
         F.try_element_at(col, F.lit("b")).alias("vb"),
     ).collect()[0]
     assert row.va == 1 and row.vb is None
+    with caplog.at_level(logging.WARNING, logger=icelite.__name__):
+        assert SparkTable._path_map_expr([("a", 1), ("b", 2), ("a", 3)]) is None
+        assert SparkTable._path_map_expr([("a", None), ("a", 0)]) is None
+    msgs = [r.getMessage() for r in caplog.records]
+    assert len(msgs) == 2 and all("broadcast-join lane" in m and "'a'" in m for m in msgs)
 
 
 def test_driver_dv_lane_failure_falls_back_without_orphans(
@@ -269,24 +310,12 @@ def test_driver_dv_lane_failure_falls_back_without_orphans(
 _MOR_JOBS = {"delete": 3, "update": 4, "merge": 8}
 
 
-def test_mor_commit_job_counts(spark, catalog):
+def test_mor_commit_job_counts(spark, catalog, spark_jobs):
     """Deterministic job-count guard for the MOR commit path: each op
     runs under its own job group and must not take more Spark jobs than
     recorded in _MOR_JOBS."""
-    import uuid
-
-    sc = spark.sparkContext
+    jobs = spark_jobs
     catalog.create_namespace("wh", ["jobs"], exists_ok=True)
-
-    def jobs(fn):
-        group = f"mor-jobs-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group, False)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
 
     def cycle(name):
         df = spark.range(400).selectExpr(
@@ -320,3 +349,77 @@ def test_mor_commit_job_counts(spark, catalog):
     cycle("warmup")
     got = cycle("measured")
     assert all(got[op] <= limit for op, limit in _MOR_JOBS.items()), got
+
+
+# Spark jobs per read and copy-on-write op on a warm session (400-row
+# table, two files; v3 after a MOR delete), measured identically on two
+# runs. Before the one live-row read, the v3 lineage scan took 3 jobs
+# (its own broadcast lineage join) and the v2 CoW merge 12 (its file
+# targeting read input_file_name()).
+_READ_JOBS = {
+    3: {
+        "scan": 2,
+        "lineage_scan": 2,
+        "changelog_lineage": 4,
+        "changelog_row_ids": 4,
+        "cow_delete": 3,
+        "cow_update": 3,
+        "cow_merge": 11,
+    },
+    2: {
+        "scan": 2,
+        "changelog": 2,
+        "cow_delete": 3,
+        "cow_update": 3,
+        "cow_merge": 11,
+    },
+}
+
+
+def test_read_and_cow_job_counts(spark, catalog, spark_jobs):
+    """Deterministic job-count guard for the live-row read and the
+    copy-on-write DML that builds on it: each op must not take more
+    Spark jobs than recorded in _READ_JOBS."""
+    catalog.create_namespace("wh", ["rjobs"], exists_ok=True)
+
+    def cycle(name, fv):
+        df = spark.range(400).selectExpr(
+            "cast(id as int) id", "cast(id as double) v", "concat('s', id % 7) s"
+        ).coalesce(2)
+        catalog.create_table(
+            "wh", ["rjobs"], name, struct_to_schema(df.schema), format_version=fv
+        )
+        t = SparkTable(spark, catalog, "wh", ["rjobs"], name)
+        t.append(df)
+        assert t.files_count() == 2
+        if fv >= 3:
+            t.delete_where("id >= 380", mode="merge-on-read")
+        src = spark.createDataFrame(
+            [(i, -1.0, "m") for i in range(100, 120)] + [(1000, -1.0, "new")], DDL
+        )
+        got = {"scan": spark_jobs(lambda: t.scan().count())}
+        if fv >= 3:
+            got["lineage_scan"] = spark_jobs(lambda: t.scan(row_lineage=True).count())
+            got["changelog_lineage"] = spark_jobs(
+                lambda: t.changelog(row_lineage=True).count()
+            )
+            got["changelog_row_ids"] = spark_jobs(lambda: t.changelog_row_ids().count())
+        else:
+            got["changelog"] = spark_jobs(lambda: t.changelog().count())
+        got["cow_delete"] = spark_jobs(lambda: t.delete_where("id >= 360 AND id < 370"))
+        got["cow_update"] = spark_jobs(lambda: t.update_where("id < 20", {"v": "v + 1"}))
+        got["cow_merge"] = spark_jobs(
+            lambda: t.merge(src, "t.id = s.id", matched_update={"v": "s.v"})
+        )
+        rows = {r.id: r.v for r in t.scan().collect()}
+        assert len(rows) == (371 if fv >= 3 else 391)
+        assert rows[1000] == -1.0 and rows[110] == -1.0 and rows[5] == 6.0
+        return got
+
+    got = {}
+    for fv in (3, 2):
+        cycle(f"warmup{fv}", fv)
+        got[fv] = cycle(f"measured{fv}", fv)
+    assert all(
+        got[fv][op] <= limit for fv in got for op, limit in _READ_JOBS[fv].items()
+    ), got
