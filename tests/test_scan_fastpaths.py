@@ -353,9 +353,8 @@ def test_mor_commit_job_counts(spark, catalog, spark_jobs):
 
 # Spark jobs per read and copy-on-write op on a warm session (400-row
 # table, two files; v3 after a MOR delete), measured identically on two
-# runs. Before the one live-row read, the v3 lineage scan took 3 jobs
-# (its own broadcast lineage join) and the v2 CoW merge 12 (its file
-# targeting read input_file_name()).
+# runs. Before the one live-row read, the v3 lineage scan took 3 jobs (its
+# own broadcast lineage join); every other op ran the same count.
 _READ_JOBS = {
     3: {
         "scan": 2,
