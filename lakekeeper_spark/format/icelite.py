@@ -45,11 +45,12 @@ import os
 import time
 import uuid
 from pathlib import Path
-from typing import Any
+from typing import Any, Callable
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from ..catalog.catalog import Catalog, CatalogError, NoSuchEntity, NotModified
 from ..functions.localframe import local_df
@@ -1206,6 +1207,23 @@ class SparkTable:
                     f["name"],
                     F.lit(f["write-default"]).cast(spark_ddl_of(f["type"])),
                 )
+        # the one type rule: a top-level primitive column is written as its
+        # DECLARED type. A wider value (a bigint source into an int column,
+        # a decimal literal into a double) would otherwise flip the file's
+        # physical type out from under the schema and fail every later
+        # scan. Spark CAST semantics apply (a fraction truncates; an
+        # out-of-range value raises under ANSI). Nested columns are written
+        # as given.
+        declared = {f.name: f.dataType for f in schema_to_struct(cur).fields}
+        casts = {
+            f.name: F.col(f"`{f.name}`").cast(declared[f.name])
+            for f in writer_df.schema.fields
+            if f.name in declared
+            and f.dataType != declared[f.name]
+            and not isinstance(declared[f.name], (ArrayType, MapType, StructType))
+        }
+        if casts:
+            writer_df = writer_df.withColumns(casts)
         for pname, pcol in partcols:
             writer_df = writer_df.withColumn(pname, pcol)
         sort_cols = self._sort_columns(meta)
@@ -2746,7 +2764,7 @@ class SparkTable:
     # reference tables are format v2, server/tables.rs format gate):
     # a DELETE/UPDATE can write small tombstone files of
     # (file_path, pos) instead of rewriting data files; scans anti-join
-    # the tombstones back out. Copy-on-write (the _rewrite family below)
+    # the tombstones back out. Copy-on-write (_cow_commit, below)
     # remains the default, matching Iceberg's write.delete.mode.
     _DELETE_SCHEMA = "file_path string, pos long"
 
@@ -3244,19 +3262,35 @@ class SparkTable:
         self,
         meta: dict[str, Any],
         snap: dict[str, Any],
-        matched: tuple[DataFrame, int, Any],
+        matched: DataFrame,
         operation: str,
-        new_rows: DataFrame | None = None,
+        project: Callable[[DataFrame], DataFrame] | None = None,
+        inserts: DataFrame | None = None,
+        distinct: bool = False,
         extra_summary: dict[str, Any] | None = None,
     ) -> dict[str, Any]:
-        """The one MOR commit path: tombstones for the matched set (see
-        _positional_artifacts), an append of ``new_rows`` (updated images
-        and MERGE inserts) and one snapshot carrying both. Commits nothing
-        when neither artifact has rows."""
-        positions, n, pdf = matched
+        """The merge-on-read commit step of DELETE/UPDATE/MERGE: tombstones
+        for the ``matched`` rows (_mor_matched, then _positional_artifacts;
+        ``distinct`` when a row can match more than once), an append of
+        their images ``project(matched)`` and of the MERGE ``inserts``, and
+        one snapshot carrying both. A statement that matched nothing and
+        inserts nothing commits no snapshot (Iceberg parity), and neither
+        does one whose artifacts hold no rows."""
+        if project is not None:
+            # the matched rows feed the tombstones AND the images: one
+            # materialization (the matched set's count fills it), not a
+            # second read of the table
+            matched = matched.localCheckpoint(eager=False)
+        positions, n, pdf = self._mor_matched(meta, matched, distinct)
+        if n == 0 and inserts is None:
+            return meta
         base_manifest, del_entries, removed = self._positional_artifacts(
             meta, snap, positions, n, pdf
         )
+        new_rows = inserts
+        if project is not None:
+            images = project(matched).drop("_file")
+            new_rows = images if inserts is None else images.unionByName(inserts)
         add_entries = self._write_files(meta, new_rows) if new_rows is not None else []
         if not del_entries and not add_entries:
             return meta
@@ -3278,29 +3312,6 @@ class SparkTable:
                 **({"deleted-row-id-ranges": ranges} if ranges else {}),
             },
         )
-
-    def _mor_delete(self, condition: str) -> dict[str, Any]:
-        """MOR DELETE: v2 stacks a position-delete file; v3 consolidates
-        into a single Puffin deletion vector per data file (reference v3
-        DELETE test, test_spark.py:1321-1340). Policy lives in
-        _positional_artifacts."""
-        meta = self.metadata()
-        snap = self._resolve_snapshot(meta)
-        if snap is None:
-            raise CatalogError("table has no data")
-        schema = self._current_schema(meta)
-        df = self._live_rows(
-            meta,
-            schema,
-            *_split_manifest(snapshot_entries(snap)),
-            snap["schema-id"],
-            lineage=meta.get("format-version", 2) >= 3,
-            keep_pos=True,
-        )
-        matched = self._mor_matched(meta, df.filter(condition))
-        if matched[1] == 0:
-            return meta  # DELETE matching nothing commits no snapshot
-        return self._mor_commit(meta, snap, matched, "delete")
 
     # deleted-row-id-range recording bound: a MOR commit or equality
     # delete matching more rows than this keeps the summary
@@ -3580,119 +3591,6 @@ class SparkTable:
             )
         return entries
 
-    def _mor_update(self, condition: str, assignments: dict[str, str]) -> dict[str, Any]:
-        """MOR UPDATE = one commit carrying tombstones for the matched
-        rows plus an append of their updated images (v3: consolidated
-        deletion vector, like every MOR mutation)."""
-        meta = self.metadata()
-        snap = self._resolve_snapshot(meta)
-        if snap is None:
-            raise CatalogError("table has no data")
-        schema = self._current_schema(meta)
-        # the full matched rows feed the updated images as well as the
-        # matched set — one materialization (the matched set's count
-        # fills it), not a second table scan. v3: lineage rides along so
-        # updated images KEEP their row ids
-        lineage = meta.get("format-version", 2) >= 3
-        rows = (
-            self._live_rows(
-                meta,
-                schema,
-                *_split_manifest(snapshot_entries(snap)),
-                snap["schema-id"],
-                lineage=lineage,
-                keep_pos=True,
-            )
-            .filter(condition)
-            .localCheckpoint(eager=False)
-        )
-        matched = self._mor_matched(meta, rows)
-        if matched[1] == 0:
-            return meta  # UPDATE matching nothing commits no snapshot
-        # cast each assignment back to the column's DECLARED type: a bare
-        # literal like `999.0` parses as DECIMAL(4,1), and writing that
-        # into a double column would flip the file's physical type out
-        # from under the schema (the CoW path coerces via otherwise(col);
-        # this path replaces the column, so it must cast explicitly)
-        struct = schema_to_struct(schema)
-        types = {f.name: f.dataType for f in struct.fields}
-        updated = rows
-        for col_name, expr in assignments.items():
-            updated = updated.withColumn(
-                col_name, F.expr(expr).cast(types[col_name])
-            )
-        updated = updated.select(
-            *[f["name"] for f in schema["fields"]],
-            *(["_row_id"] if lineage else []),
-        )
-        return self._mor_commit(meta, snap, matched, "overwrite", new_rows=updated)
-
-    def _mor_merge(
-        self,
-        source: DataFrame,
-        on: str,
-        matched_update: dict[str, str] | None,
-        not_matched_insert: bool,
-    ) -> dict[str, Any]:
-        """Merge-on-read MERGE: ONE commit carrying tombstones for every
-        matched target row, an append of the matched rows' updated images,
-        and the unmatched source inserts. No data file is rewritten
-        (Iceberg write.merge.mode=merge-on-read). On v3 tables the
-        tombstones consolidate with all prior positional artifacts into a
-        single deletion vector (the v3 invariant)."""
-        meta = self.metadata()
-        fv = meta.get("format-version", 2)
-        if fv < 2:
-            raise CatalogError(
-                f"merge-on-read merge requires format-version >= 2 (table is v{fv})"
-            )
-        snap = self._resolve_snapshot(meta)
-        if snap is None:
-            raise CatalogError("table has no data")
-        schema = self._current_schema(meta)
-        cols = [f["name"] for f in schema["fields"]]
-        lineage = fv >= 3
-        live = self._live_rows(
-            meta,
-            schema,
-            *_split_manifest(snapshot_entries(snap)),
-            snap["schema-id"],
-            lineage=lineage,
-            keep_pos=True,
-        )
-        mcol = _fresh_names(source, "__src_match")[0]
-        src = source.withColumn(mcol, F.lit(1)).alias("s")
-        t = live.alias("t")
-        joined = t.join(src, F.expr(on), "inner")
-        out_cols = []
-        for c in cols:
-            upd = (matched_update or {}).get(c)
-            out_cols.append(
-                F.expr(upd).alias(c) if upd is not None else F.col(f"t.{c}").alias(c)
-            )
-        if lineage:
-            # updated images keep their row ids (materialized column)
-            out_cols.append(F.col("t._row_id").alias("_row_id"))
-        new_rows = joined.select(*out_cols)
-        if not_matched_insert:
-            inserts = src.join(t, F.expr(on), "left_anti").select(
-                *_insert_cols(schema, source.columns),
-                *(
-                    [F.lit(None).cast("long").alias("_row_id")]
-                    if lineage
-                    else []
-                ),
-            )
-            new_rows = new_rows.unionByName(inserts)
-        return self._mor_commit(
-            meta,
-            snap,
-            self._mor_matched(meta, joined.select("t.*"), distinct=True),
-            "overwrite",
-            new_rows=new_rows,
-            extra_summary={"merge-mode": "merge-on-read"},
-        )
-
     def rewrite_position_deletes(self) -> dict[str, Any]:
         """Materialize tombstones (CALL rewrite_position_delete_files +
         minor compaction): rewrite ONLY data files that have pending
@@ -3776,50 +3674,120 @@ class SparkTable:
             "removed-delete-files": len(delete_entries),
         }
 
-    # ---------------- row-level DML (copy-on-write) ----------------
-    def _rewrite(
-        self,
-        condition: str | None,
-        rewriter,
-        operation: str,
-        extra_rows: DataFrame | None = None,
-        affected: list[str] | None = None,
-    ) -> dict[str, Any]:
-        """Copy-on-write core: find files containing rows matching
-        `condition` (or take the precomputed `affected` list of
-        table-relative paths, as _rel_file gives them), rewrite
-        ONLY those via `rewriter(df)`, keep the rest. This is the
-        merge-on-write strategy Iceberg uses for DELETE/UPDATE/MERGE with
-        copy-on-write tables (reference test_spark.py:1321-1340 exercises
-        DELETE FROM). The affected list is file-level metadata (small);
-        the row data itself never touches the driver.
+    # ---------------- row-level DML ----------------
+    # DELETE, UPDATE and MERGE each have ONE body: the prologue
+    # (_dml_base) loads the metadata once and reads the snapshot's rows
+    # once; the verb builds its matched set and, for UPDATE and MERGE, its
+    # row images (_dml_images) from that read; ``mode`` (Iceberg's
+    # write.delete/update/merge.mode) picks only the commit step —
+    # _mor_commit writes tombstones for the matched positions,
+    # _cow_commit rewrites the matched set's data files.
+    _DML_MODES = ("copy-on-write", "merge-on-read")
 
-        On v3 tables the rewrite PRESERVES row lineage automatically
-        (spec: a rewritten row keeps its _row_id): the read carries each
-        row's resolved id, rewriters pass it through, and the new files
-        materialize it as a physical column (rows a rewrite ADDS —
-        merge inserts — store NULL and inherit fresh ids from the new
-        file's claimed range)."""
+    def _dml_base(
+        self, verb: str, mode: str
+    ) -> tuple[dict[str, Any], dict[str, Any], DataFrame]:
+        """The one prologue of DELETE/UPDATE/MERGE: rejects an unknown
+        ``mode``, loads the metadata ONCE and returns (meta, snap, live).
+
+        ``snap`` is both the statement's read base and its commit base:
+        _commit_snapshot asserts the ref still points at it, so a writer
+        that commits in between fails this statement with
+        CommitFailedException instead of being committed over. ``live`` is
+        the one read of its rows (_live_rows: positioned, with v3 lineage),
+        aliased ``t``. Row-level delete files — every mode but
+        copy-on-write — are an Iceberg v2 feature (reference serves v1-3
+        with the same gate; upgrade guard commit_tables.rs:22-31)."""
+        modes = self._DML_MODES + (("equality",) if verb == "delete" else ())
+        if mode not in modes:
+            raise CatalogError(
+                f"unknown {verb} mode {mode!r}; valid modes: {', '.join(modes)}"
+            )
         meta = self.metadata()
+        fv = meta.get("format-version", 2)
+        if mode != "copy-on-write" and fv < 2:
+            raise CatalogError(
+                f"{mode} {verb} requires format-version >= 2 (table is v{fv});"
+                " upgrade-format-version first or use copy-on-write"
+            )
         snap = self._resolve_snapshot(meta)
         if snap is None:
             raise CatalogError("table has no data")
-        schema = self._current_schema(meta)
-        lineage = meta.get("format-version", 2) >= 3
-        df = self._live_rows(
+        live = self._live_rows(
             meta,
-            schema,
+            self._current_schema(meta),
             *_split_manifest(snapshot_entries(snap)),
             snap["schema-id"],
-            lineage=lineage,
+            lineage=fv >= 3,
             keep_pos=True,
         )
-        rel = self._rel_file(meta["location"])
-        if affected is None:
-            affected = [
-                r[0] for r in df.filter(condition).select(rel).distinct().collect()
+        return meta, snap, live.alias("t")
+
+    def _dml_images(
+        self,
+        meta: dict[str, Any],
+        rows: DataFrame,
+        hit: F.Column,
+        assignments: dict[str, str],
+        qual: str = "",
+    ) -> DataFrame:
+        """The one row-image projection of UPDATE and MERGE: every schema
+        column of ``rows`` (``qual`` qualifies the target's columns), each
+        assigned one as ``CASE WHEN hit THEN CAST(expr AS declared type)
+        ELSE column``. Every assignment reads the PRE-statement row (SQL
+        semantics: SET x = y, y = x swaps). The cast comes before the CASE
+        because CASE coerces its branches to one common type: an uncast
+        double assignment to a bigint column would round-trip every
+        unassigned value of the rewritten files through double.
+
+        v3 lineage: every row keeps its ``_row_id``; a hit row of a
+        statement that assigns anything stores a NULL
+        ``_last_updated_sequence_number`` (it inherits the new commit's
+        sequence number) and every other row keeps its own. ``_file``
+        passes through for the commit step."""
+        types = {
+            f.name: f.dataType
+            for f in schema_to_struct(self._current_schema(meta)).fields
+        }
+        out = []
+        for c, typ in types.items():
+            col = F.col(f"{qual}{c}")
+            if c in assignments:
+                col = F.when(hit, F.expr(assignments[c]).cast(typ)).otherwise(col)
+            out.append(col.alias(c))
+        if meta.get("format-version", 2) >= 3:
+            seq = F.col(f"{qual}_last_updated_sequence_number")
+            if assignments:
+                seq = F.when(hit, F.lit(None).cast("long")).otherwise(seq)
+            out += [
+                F.col(f"{qual}_row_id").alias("_row_id"),
+                seq.alias("_last_updated_sequence_number"),
             ]
-        affected_set = set(affected)
+        return rows.select(*out, F.col(f"{qual}_file").alias("_file"))
+
+    def _cow_commit(
+        self,
+        meta: dict[str, Any],
+        snap: dict[str, Any],
+        matched: DataFrame,
+        rows: DataFrame,
+        operation: str,
+        inserts: DataFrame | None = None,
+    ) -> dict[str, Any]:
+        """The copy-on-write commit step of DELETE/UPDATE/MERGE: rewrites
+        ONLY the distinct data files of the ``matched`` set and keeps the
+        rest (reference test_spark.py:1321-1340 drives DELETE FROM).
+        ``rows`` is the statement's image of every live row, with its
+        ``_file``: the rows of the matched files become the new files, and
+        MERGE ``inserts`` append. Only the distinct file list
+        (metadata-sized) reaches the driver; the rows never do.
+
+        On v3 the rewrite preserves row lineage (spec: a rewritten row
+        keeps its _row_id): ``rows`` carry each row's resolved id and the
+        new files store it; inserted rows store NULL and inherit fresh ids
+        from the new file's claimed range."""
+        rel = self._rel_file(meta["location"])
+        affected = {r[0] for r in matched.select(rel).distinct().collect()}
         # the rewritten data files leave the manifest, and so does every
         # delete entry whose referenced data files were all rewritten: its
         # tombstones would point only at vanished files, costing scans
@@ -3828,44 +3796,23 @@ class SparkTable:
         kept = [
             e
             for e in snapshot_entries(snap)
-            if e["path"] not in affected_set
+            if e["path"] not in affected
             and not (
                 e.get("content") in ("position-deletes", "deletion-vectors")
                 and e.get("referenced-files") is not None
-                and all(r in affected_set for r in e["referenced-files"])
+                and all(r in affected for r in e["referenced-files"])
             )
         ]
-        rewritten_entries: list[dict[str, Any]] = []
-        to_rewrite = (
-            df.filter(rel.isin(sorted(affected_set))).drop("_file", "_pos")
-            if affected
-            else None
-        )
-        new_rows = rewriter(to_rewrite) if to_rewrite is not None else None
-        if extra_rows is not None:
-            if lineage and extra_rows is not None:
-                # added rows store NULL: they inherit fresh ids from the
-                # new file's claimed range and the new commit's sequence
-                # number (per-row inheritance)
-                extra_rows = extra_rows.withColumn(
-                    "_row_id", F.lit(None).cast("long")
-                ).withColumn(
-                    "_last_updated_sequence_number", F.lit(None).cast("long")
-                )
-            new_rows = extra_rows if new_rows is None else new_rows.unionByName(extra_rows)
-        if new_rows is not None:
-            if lineage and "_row_id" not in new_rows.columns:
-                raise CatalogError(
-                    "v3 rewrite dropped the _row_id lineage column — "
-                    "rewriters must pass it through"
-                )
-            rewritten_entries = self._write_files(meta, new_rows)
-        manifest = kept + rewritten_entries
+        new_rows = inserts
+        if affected:
+            rewritten = rows.filter(rel.isin(sorted(affected))).drop("_file", "_pos")
+            new_rows = rewritten if inserts is None else rewritten.unionByName(inserts)
+        written = self._write_files(meta, new_rows) if new_rows is not None else []
         return self._commit_snapshot(
             meta,
-            manifest,
+            kept + written,
             operation,
-            extra_summary={"rewritten-files": len(affected_set)},
+            extra_summary={"rewritten-files": len(affected)},
         )
 
     def delete_where(
@@ -3874,56 +3821,48 @@ class SparkTable:
         mode: str = "copy-on-write",
         equality_cols: list[str] | None = None,
     ) -> dict[str, Any]:
-        """DELETE FROM. ``mode`` mirrors Iceberg's write.delete.mode:
-        copy-on-write rewrites affected files; merge-on-read writes
-        position-delete tombstones on v2 tables and consolidated
-        DELETION VECTORS on v3 (reference v3 DELETE,
-        test_spark.py:1321-1340); ``equality`` writes an equality-delete
-        file of the matching rows' ``equality_cols`` values — applied to
-        strictly-older data files at scan time (streaming-writer
-        semantics: delete without reading any data file)."""
-        if mode in ("equality", "merge-on-read"):
-            # row-level delete FILES are an Iceberg v2 feature; v1 tables
-            # only support copy-on-write rewrites (reference serves v1-3
-            # with the same gate; upgrade guard commit_tables.rs:22-31)
-            fv = self.metadata().get("format-version", 2)
-            if fv < 2:
-                raise CatalogError(
-                    f"{mode} delete requires format-version >= 2 (table is v{fv});"
-                    " upgrade-format-version first or use copy-on-write"
-                )
-        if mode == "equality":
-            if not equality_cols:
-                raise CatalogError("equality delete requires equality_cols")
-            return self._equality_delete(condition, equality_cols)
-        if mode == "merge-on-read":
-            return self._mor_delete(condition)
-        return self._rewrite(condition, lambda df: df.filter(f"NOT ({condition})"), "delete")
+        """DELETE FROM ... WHERE ``condition``. A row is deleted only where
+        the condition is TRUE: a row where it is NULL survives (SQL), in
+        every mode.
 
-    def _equality_delete(self, condition: str, cols: list[str]) -> dict[str, Any]:
+        ``mode`` mirrors Iceberg's write.delete.mode: ``copy-on-write``
+        rewrites the data files holding matched rows; ``merge-on-read``
+        writes position-delete tombstones on v2 tables and consolidated
+        DELETION VECTORS on v3 (reference v3 DELETE, test_spark.py:1321-1340);
+        ``equality`` writes an equality-delete file of the matching rows'
+        ``equality_cols`` values — applied to strictly-older data files at
+        scan time (streaming-writer semantics: delete without reading any
+        data file). Any other mode raises CatalogError, as does a
+        row-level mode on a v1 table."""
+        meta, snap, live = self._dml_base("delete", mode)
+        if mode == "equality":
+            return self._equality_delete(meta, snap, live, condition, equality_cols)
+        hit = F.coalesce(F.expr(condition), F.lit(False))
+        matched = live.filter(hit)
+        if mode == "merge-on-read":
+            return self._mor_commit(meta, snap, matched, "delete")
+        return self._cow_commit(meta, snap, matched, live.filter(~hit), "delete")
+
+    def _equality_delete(
+        self,
+        meta: dict[str, Any],
+        snap: dict[str, Any],
+        live: DataFrame,
+        condition: str,
+        cols: list[str] | None,
+    ) -> dict[str, Any]:
         """Write an equality-delete file: the DISTINCT equality-column
         values of currently-matching rows. No data file is read back or
         rewritten at delete time — the cost model that lets CDC/streaming
         writers delete at high frequency (Iceberg spec 'Equality Delete
         Files'). Scans anti-join it against strictly-older files only, so
         rows appended AFTER this delete with the same key survive."""
-        meta = self.metadata()
-        snap = self._resolve_snapshot(meta)
-        if snap is None:
-            raise CatalogError("table has no data")
-        schema = self._current_schema(meta)
-        by_name = {f["name"]: f["id"] for f in schema["fields"]}
+        if not cols:
+            raise CatalogError("equality delete requires equality_cols")
+        by_name = {f["name"]: f["id"] for f in self._current_schema(meta)["fields"]}
         missing = [c for c in cols if c not in by_name]
         if missing:
             raise CatalogError(f"unknown equality columns: {missing}")
-        lineage = meta.get("format-version", 2) >= 3
-        live = self._live_rows(
-            meta,
-            schema,
-            *_split_manifest(snapshot_entries(snap)),
-            snap["schema-id"],
-            lineage=lineage,
-        )
         del_rows = live.filter(condition).select(*cols).distinct()
         entries = self._write_delete_files(
             meta,
@@ -3945,7 +3884,7 @@ class SparkTable:
             self._row_id_ranges(
                 _null_safe_semi(live, del_rows, cols).select("_row_id")
             )
-            if lineage
+            if meta.get("format-version", 2) >= 3
             else None
         )
         return self._commit_snapshot(
@@ -3963,45 +3902,27 @@ class SparkTable:
     def update_where(
         self, condition: str, assignments: dict[str, str], mode: str = "copy-on-write"
     ) -> dict[str, Any]:
+        """UPDATE ... SET ``assignments`` (column -> SQL expression) WHERE
+        ``condition``. The condition is evaluated once per row, against the
+        pre-update row, and a row where it is NULL is not updated (SQL).
+        Each assigned value is cast to its column's declared type.
+
+        ``mode`` mirrors Iceberg's write.update.mode: ``copy-on-write``
+        rewrites the data files holding matched rows; ``merge-on-read``
+        commits tombstones for the matched rows (v3: deletion vectors) plus
+        an append of their updated images, and needs format-version >= 2.
+        Any other mode raises CatalogError."""
+        meta, snap, live = self._dml_base("update", mode)
+        hit_col = _fresh_names(live, "__upd_hit")[0]
+        flagged = live.withColumn(hit_col, F.coalesce(F.expr(condition), F.lit(False)))
+        matched = flagged.filter(F.col(hit_col))
+
+        def project(rows: DataFrame) -> DataFrame:
+            return self._dml_images(meta, rows, F.col(hit_col), assignments)
+
         if mode == "merge-on-read":
-            fv = self.metadata().get("format-version", 2)
-            if fv < 2:
-                raise CatalogError(
-                    f"merge-on-read update requires format-version >= 2 (table is v{fv})"
-                )
-            return self._mor_update(condition, assignments)
-
-        def rewriter(df: DataFrame) -> DataFrame:
-            # evaluate the condition ONCE against the pre-update row:
-            # SQL UPDATE semantics — an assignment that falsifies the
-            # condition (SET x=0 WHERE x>5) must not stop the remaining
-            # assignments (or the lineage bump) from applying
-            hit = _fresh_names(df, "__upd_hit")[0]
-            updated = df.withColumn(hit, F.expr(condition))
-            # one withColumns projection: every RHS evaluates against the
-            # PRE-update row (SQL semantics; SET x=y, y=x swaps)
-            updated = updated.withColumns(
-                {
-                    col_name: F.when(
-                        F.col(hit), F.expr(expr)
-                    ).otherwise(F.col(col_name))
-                    for col_name, expr in assignments.items()
-                }
-            )
-            if "_last_updated_sequence_number" in df.columns:
-                # v3 lineage: rows this UPDATE actually modifies take the
-                # NEW commit's sequence number (store NULL -> inherit the
-                # file's seq on read); untouched rows carried by the
-                # rewrite keep their old one (stored column wins)
-                updated = updated.withColumn(
-                    "_last_updated_sequence_number",
-                    F.when(
-                        F.col(hit), F.lit(None).cast("long")
-                    ).otherwise(F.col("_last_updated_sequence_number")),
-                )
-            return updated.drop(hit)
-
-        return self._rewrite(condition, rewriter, "update")
+            return self._mor_commit(meta, snap, matched, "overwrite", project)
+        return self._cow_commit(meta, snap, matched, project(flagged), "update")
 
     def merge(
         self,
@@ -4012,90 +3933,59 @@ class SparkTable:
         mode: str = "copy-on-write",
     ) -> dict[str, Any]:
         """MERGE INTO (reference test_spark.py:155-172): matched -> update,
-        not-matched -> insert. ``on`` is any equi-condition over ``t.`` and
-        ``s.`` aliases, including composite keys ("t.a = s.a AND t.b =
-        s.b"). Affected target files are located with a LEFT SEMI join
-        against the source — the source never collects to the driver, so
-        arbitrarily large merge sources work — then only those files are
-        rewritten (copy-on-write) and unmatched source rows append.
+        not-matched -> insert. ``on`` is any condition over the ``t.``
+        (target) and ``s.`` (source) aliases, including composite keys
+        ("t.a = s.a AND t.b = s.b"); a pair where it is NULL does not
+        match (SQL join semantics), so its source row is inserted. The
+        source never collects to the driver, so arbitrarily large merge
+        sources work. Updated values are cast to their column's declared
+        type; inserted values are cast by _write_files' type rule.
 
-        ``mode="merge-on-read"`` (Iceberg's write.merge.mode) instead
-        writes position-delete tombstones for the matched rows plus an
-        append of their updated images and the unmatched inserts — one
+        ``mode`` mirrors Iceberg's write.merge.mode: ``copy-on-write``
+        rewrites the data files holding matched rows and appends the
+        inserts; ``merge-on-read`` commits tombstones for the matched rows
+        plus an append of their updated images and the inserts — one
         commit, no data file rewritten; scans pay the anti-join until
-        rewrite_position_deletes. Requires format-version >= 2."""
-        if mode == "merge-on-read":
-            return self._mor_merge(source, on, matched_update, not_matched_insert)
-        meta = self.metadata()
-        schema = self._current_schema(meta)
-        struct = schema_to_struct(schema)
-        cols = [f.name for f in struct.fields]
+        rewrite_position_deletes. It needs format-version >= 2. Any other
+        mode raises CatalogError. Iceberg records MERGE commits as
+        operation=overwrite (the spec's closed operation set)."""
+        meta, snap, live = self._dml_base("merge", mode)
         # marker column: match detection that works for any composite key
         # (name picked fresh so a source column can't shadow it)
         mcol = _fresh_names(source, "__src_match")[0]
         src = source.withColumn(mcol, F.lit(1)).alias("s")
+        cond = F.expr(on)
+        joined = live.join(src, cond, "left_outer")
+        hit = F.col(f"s.{mcol}").isNotNull()
+        matched = joined.filter(hit)
 
-        def rewriter(tgt: DataFrame) -> DataFrame:
-            joined = tgt.alias("t").join(src, F.expr(on), "left_outer")
-            out_cols = []
-            for c in cols:
-                upd = (matched_update or {}).get(c)
-                if upd is not None:
-                    out_cols.append(
-                        F.when(F.col(f"s.{mcol}").isNotNull(), F.expr(upd))
-                        .otherwise(F.col(f"t.{c}"))
-                        .alias(c)
-                    )
-                else:
-                    out_cols.append(F.col(f"t.{c}").alias(c))
-            if "_row_id" in tgt.columns:
-                # v3 lineage: an updated row KEEPS its row id (spec) —
-                # pass the target's resolved id through the projection
-                out_cols.append(F.col("t._row_id").alias("_row_id"))
-            if "_last_updated_sequence_number" in tgt.columns:
-                # matched (modified) rows take the NEW commit's sequence
-                # number (store NULL -> inherit file seq on read);
-                # unmatched rows carried by the rewrite keep their own
-                out_cols.append(
-                    F.when(
-                        F.col(f"s.{mcol}").isNotNull() & F.lit(bool(matched_update)),
-                        F.lit(None).cast("long"),
-                    )
-                    .otherwise(F.col("t._last_updated_sequence_number"))
-                    .alias("_last_updated_sequence_number")
-                )
-            return joined.select(*out_cols)
+        def project(rows: DataFrame) -> DataFrame:
+            return self._dml_images(meta, rows, hit, matched_update or {}, "t.")
 
-        snap = self._resolve_snapshot(meta)
-        if snap is None:
-            raise CatalogError("table has no data")
-        tgt = self._live_rows(
-            meta,
-            schema,
-            *_split_manifest(snapshot_entries(snap)),
-            snap["schema-id"],
-            keep_pos=True,
-        ).alias("t")
         inserts = None
         if not_matched_insert:
-            inserts = (
-                src.join(tgt, F.expr(on), "left_anti")
-                .select(*_insert_cols(schema, source.columns))
+            lineage = meta.get("format-version", 2) >= 3
+            inserts = src.join(live, cond, "left_anti").select(
+                *_insert_cols(self._current_schema(meta), source.columns),
+                *(
+                    F.lit(None).cast("long").alias(c)
+                    for c in ("_row_id", "_last_updated_sequence_number")
+                    if lineage
+                ),
             )
-        # file targeting: LEFT SEMI join on the merge condition; only the
-        # distinct table-relative FILE LIST (metadata-sized) reaches the
-        # driver
-        affected = [
-            r[0]
-            for r in tgt.join(src, F.expr(on), "left_semi")
-            .select(self._rel_file(meta["location"]))
-            .distinct()
-            .collect()
-        ]
-        # Iceberg records MERGE commits as operation=overwrite (the spec's
-        # closed operation set: append/replace/overwrite/delete)
-        return self._rewrite(
-            None, rewriter, "overwrite", extra_rows=inserts, affected=affected
+        if mode == "merge-on-read":
+            return self._mor_commit(
+                meta,
+                snap,
+                matched,
+                "overwrite",
+                project,
+                inserts,
+                distinct=True,
+                extra_summary={"merge-mode": "merge-on-read"},
+            )
+        return self._cow_commit(
+            meta, snap, matched, project(joined), "overwrite", inserts
         )
 
     # ---------------- refs / time travel ----------------
@@ -4440,7 +4330,7 @@ class SparkTable:
         consumers see no phantom updates after compaction). Default
         False keeps the fresh-id behavior (cheaper files; ids change
         across compaction). Copy-on-write DELETE/UPDATE/MERGE preserve
-        ids automatically on v3 tables (_rewrite)."""
+        ids automatically on v3 tables (_cow_commit)."""
         meta = self.metadata()
         snap = self._resolve_snapshot(meta)
         if snap is None or not snapshot_file_count(snap):

@@ -91,7 +91,7 @@ def test_change_feed_mor_position_tombstones(spark, feed):
     the newly-tombstoned rows — byte-equal to the batch changelog."""
     cat, t, mpath = feed
     t.delete_where("k < 3")  # CoW rewrite commit
-    t._mor_delete("k >= 18")  # MoR position-delete commit (v2 tombstones)
+    t.delete_where("k >= 18", mode="merge-on-read")  # v2 tombstones
     collected: dict[int, list] = {}
     _drain(spark, mpath, collected)
     rows = _events(collected)
