@@ -50,7 +50,7 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, MapType, StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 from ..catalog.catalog import Catalog, CatalogError, NoSuchEntity, NotModified
 from ..functions.localframe import local_df
@@ -461,6 +461,21 @@ def diff_snapshots(
 
 
 
+def _store_cast(col: F.Column, typ: DataType, name: str) -> F.Column:
+    """The one type rule: ``col`` as it is stored in column ``name`` of
+    declared type ``typ``. ANSI CAST semantics whatever
+    spark.sql.ansi.enabled says: a fraction truncates, and a non-NULL
+    value the cast cannot carry (out of range, not a number) fails the
+    write instead of wrapping or turning NULL."""
+    cast = col.try_cast(typ)
+    return F.when(
+        col.isNotNull() & cast.isNull(),
+        F.raise_error(
+            F.lit(f"value of column {name!r} does not fit its declared type {typ.simpleString()}")
+        ),
+    ).otherwise(cast)
+
+
 def _insert_cols(
     schema: dict[str, Any], source_cols: list[str]
 ) -> list[F.Column]:
@@ -474,7 +489,10 @@ def _insert_cols(
     Spark's default resolution, and a REQUIRED column with no default
     is refused loudly instead of silently writing spec-invalid NULLs.
     The source side resolves through the ``s`` alias so a target
-    column of the same name can't capture it."""
+    column of the same name can't capture it. Each source column is
+    cast to its declared type (_store_cast) here, before the inserts
+    meet the updated images in a union that would otherwise coerce
+    both sides to a common, possibly lossy, type."""
     struct = schema_to_struct(schema)
     types = {f.name: f.dataType for f in struct.fields}
     exact = set(source_cols)
@@ -486,7 +504,7 @@ def _insert_cols(
         c = f["name"]
         s_name = c if c in exact else folded.get(c.lower())
         if s_name is not None:
-            out.append(F.col(f"s.{s_name}").alias(c))
+            out.append(_store_cast(F.col(f"s.{s_name}"), types[c], c).alias(c))
         elif f.get("required") and f.get("write-default") is None:
             raise CatalogError(
                 f"MERGE insert: source omits required column {c!r} "
@@ -1207,16 +1225,14 @@ class SparkTable:
                     f["name"],
                     F.lit(f["write-default"]).cast(spark_ddl_of(f["type"])),
                 )
-        # the one type rule: a top-level primitive column is written as its
-        # DECLARED type. A wider value (a bigint source into an int column,
-        # a decimal literal into a double) would otherwise flip the file's
-        # physical type out from under the schema and fail every later
-        # scan. Spark CAST semantics apply (a fraction truncates; an
-        # out-of-range value raises under ANSI). Nested columns are written
-        # as given.
+        # the one type rule (_store_cast): a top-level primitive column is
+        # written as its DECLARED type. A wider value (a bigint source into
+        # an int column, a decimal literal into a double) would otherwise
+        # flip the file's physical type out from under the schema and fail
+        # every later scan. Nested columns are written as given.
         declared = {f.name: f.dataType for f in schema_to_struct(cur).fields}
         casts = {
-            f.name: F.col(f"`{f.name}`").cast(declared[f.name])
+            f.name: _store_cast(F.col(f"`{f.name}`"), declared[f.name], f.name)
             for f in writer_df.schema.fields
             if f.name in declared
             and f.dataType != declared[f.name]
@@ -3729,12 +3745,11 @@ class SparkTable:
         rows: DataFrame,
         hit: F.Column,
         assignments: dict[str, str],
-        qual: str = "",
     ) -> DataFrame:
         """The one row-image projection of UPDATE and MERGE: every schema
-        column of ``rows`` (``qual`` qualifies the target's columns), each
-        assigned one as ``CASE WHEN hit THEN CAST(expr AS declared type)
-        ELSE column``. Every assignment reads the PRE-statement row (SQL
+        column of the target ``t`` in ``rows``, each assigned one as
+        ``CASE WHEN hit THEN CAST(expr AS declared type) ELSE column``
+        (the cast is _store_cast). Every assignment reads the PRE-statement row (SQL
         semantics: SET x = y, y = x swaps). The cast comes before the CASE
         because CASE coerces its branches to one common type: an uncast
         double assignment to a bigint column would round-trip every
@@ -3751,19 +3766,19 @@ class SparkTable:
         }
         out = []
         for c, typ in types.items():
-            col = F.col(f"{qual}{c}")
+            col = F.col(f"t.{c}")
             if c in assignments:
-                col = F.when(hit, F.expr(assignments[c]).cast(typ)).otherwise(col)
+                col = F.when(hit, _store_cast(F.expr(assignments[c]), typ, c)).otherwise(col)
             out.append(col.alias(c))
         if meta.get("format-version", 2) >= 3:
-            seq = F.col(f"{qual}_last_updated_sequence_number")
+            seq = F.col("t._last_updated_sequence_number")
             if assignments:
                 seq = F.when(hit, F.lit(None).cast("long")).otherwise(seq)
             out += [
-                F.col(f"{qual}_row_id").alias("_row_id"),
+                F.col("t._row_id").alias("_row_id"),
                 seq.alias("_last_updated_sequence_number"),
             ]
-        return rows.select(*out, F.col(f"{qual}_file").alias("_file"))
+        return rows.select(*out, F.col("t._file").alias("_file"))
 
     def _cow_commit(
         self,
@@ -3905,7 +3920,9 @@ class SparkTable:
         """UPDATE ... SET ``assignments`` (column -> SQL expression) WHERE
         ``condition``. The condition is evaluated once per row, against the
         pre-update row, and a row where it is NULL is not updated (SQL).
-        Each assigned value is cast to its column's declared type.
+        Each assigned value is cast to its column's declared type
+        (_store_cast): a value that does not fit fails the statement,
+        whatever spark.sql.ansi.enabled says.
 
         ``mode`` mirrors Iceberg's write.update.mode: ``copy-on-write``
         rewrites the data files holding matched rows; ``merge-on-read``
@@ -3938,8 +3955,9 @@ class SparkTable:
         ("t.a = s.a AND t.b = s.b"); a pair where it is NULL does not
         match (SQL join semantics), so its source row is inserted. The
         source never collects to the driver, so arbitrarily large merge
-        sources work. Updated values are cast to their column's declared
-        type; inserted values are cast by _write_files' type rule.
+        sources work. Updated and inserted values are cast to their
+        column's declared type (_store_cast): a value that does not fit
+        fails the statement, whatever spark.sql.ansi.enabled says.
 
         ``mode`` mirrors Iceberg's write.merge.mode: ``copy-on-write``
         rewrites the data files holding matched rows and appends the
@@ -3960,7 +3978,7 @@ class SparkTable:
         matched = joined.filter(hit)
 
         def project(rows: DataFrame) -> DataFrame:
-            return self._dml_images(meta, rows, hit, matched_update or {}, "t.")
+            return self._dml_images(meta, rows, hit, matched_update or {})
 
         inserts = None
         if not_matched_insert:

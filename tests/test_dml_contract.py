@@ -51,6 +51,54 @@ def test_written_values_take_the_declared_type(spark, catalog, mode):
     got = t.scan()
     assert [f.dataType.simpleString() for f in got.schema.fields] == ["int", "int"]
     assert sorted(tuple(r) for r in got.collect()) == [(1, 10), (2, 200), (3, 30), (4, 40)]
+    # a double MERGE source against bigint columns: the inserts and the
+    # updated images are both cast before they meet, so no value the
+    # statement leaves alone passes through double (2**53 + 1 would not
+    # survive it), neither in a rewritten file nor in a matched image
+    big = 2**53 + 1
+    w = _table(
+        spark,
+        catalog,
+        f"wide_{mode[:3]}",
+        [(1, big, big), (2, 20, big)],
+        "id int, x bigint, y bigint",
+    )
+    src = spark.createDataFrame([(2, 200.0, 0.0), (3, 30.0, 3.0)], "id int, x double, y double")
+    w.merge(src, "t.id = s.id", matched_update={"x": "s.x"}, mode=mode)
+    assert sorted(tuple(r) for r in w.scan().collect()) == [
+        (1, big, big),
+        (2, 200, big),
+        (3, 30, 3),
+    ]
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_type_rule_raises_without_ansi(spark, catalog, mode):
+    """The type rule does not depend on spark.sql.ansi.enabled: with it
+    off, a value out of the column's range or not a number still fails
+    the write instead of wrapping or turning NULL."""
+    t = _table(spark, catalog, f"ansi_{mode[:3]}", [(1, 10)], "id int, x int")
+    n_snaps = len(t.metadata()["snapshots"])
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        writes = [
+            lambda: t.append(spark.createDataFrame([(2, 2**40)], "id int, x bigint")),
+            lambda: t.update_where("id = 1", {"x": "'ten'"}, mode=mode),
+            lambda: t.merge(
+                spark.createDataFrame([(1, 2**40), (5, 2**40)], "id int, x bigint"),
+                "t.id = s.id",
+                matched_update={"x": "s.x"},
+                mode=mode,
+            ),
+        ]
+        for write in writes:
+            with pytest.raises(Exception, match="declared type"):
+                write()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+    assert len(t.metadata()["snapshots"]) == n_snaps
+    assert [tuple(r) for r in t.scan().collect()] == [(1, 10)]
 
 
 def test_unknown_mode_is_rejected(spark, catalog):
