@@ -517,6 +517,153 @@ def _insert_cols(
     return out
 
 
+def _main_lineage(
+    meta: dict[str, Any], from_id: int | None, to_id: int | None
+) -> list[dict[str, Any]]:
+    """The snapshots in (``from_id``, ``to_id``], oldest first, walked by
+    parent pointer from ``to_id``; ``from_id`` None means table creation.
+
+    ``from_id`` itself may have been expired while its child was
+    retained: the child's parent POINTER marks the boundary, so a
+    checkpointed stream keeps running after its offset snapshot expires.
+    History expired anywhere else in the range raises — diffing the
+    oldest survivor against an empty parent would re-emit carried files
+    as inserts of the wrong commit — and so does a ``from_id`` that is
+    not an ancestor of ``to_id`` (rolled back or never existed), which
+    would otherwise replay the whole history as duplicate events."""
+    by_id = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
+    out: list[dict[str, Any]] = []
+    cur = by_id.get(to_id)
+    while cur is not None and cur["snapshot-id"] != from_id:
+        out.append(cur)
+        pid = cur.get("parent-snapshot-id")
+        if pid is None or pid == from_id:
+            break
+        cur = by_id.get(pid)
+        if cur is None:
+            since = "table creation" if from_id is None else f"snapshot {from_id}"
+            raise ValueError(
+                f"snapshot history expired at {pid}: changes since {since} "
+                "cannot be reconstructed — pass a retained from_snapshot_id"
+            )
+    boundary = out[-1].get("parent-snapshot-id") if out else to_id
+    if from_id is not None and boundary != from_id:
+        raise ValueError(
+            f"from snapshot {from_id} is not an ancestor of {to_id} on the "
+            "main lineage (rolled back or never existed)"
+        )
+    out.reverse()
+    return out
+
+
+def _removed_masks(
+    removed: list[dict[str, Any]], parent_deletes: list[dict[str, Any]]
+) -> list[dict[str, Any]]:
+    """The parent's delete artifacts that can ADDRESS one of the
+    ``removed`` data files: positional/DV entries whose referenced-files
+    intersect the removed paths (entries without the summary are kept —
+    they may address anything), and equality deletes whose sequence
+    number can gate a removed file (strictly newer than the oldest one;
+    seq-less entries default to 0 in every consumer and never fire). A
+    rewrite touching 3 of 100k DV-carrying files masks with ~3 entries."""
+    paths = {e["path"] for e in removed}
+    min_seq = min(e.get("sequence-number", 0) for e in removed)
+    return [
+        d
+        for d in parent_deletes
+        if (
+            d.get("sequence-number", 0) > min_seq
+            if d.get("content") == "equality-deletes"
+            else d.get("referenced-files") is None
+            or not paths.isdisjoint(d["referenced-files"])
+        )
+    ]
+
+
+def plan_changes(
+    meta: dict[str, Any], from_id: int | None, to_id: int | None
+) -> list[dict[str, Any]]:
+    """PURE change planning: the row-level change events of every
+    main-lineage commit in (``from_id``, ``to_id``] as change GROUPS —
+    no Spark, no data file opened. SparkTable.changelog reads each group
+    with one _live_rows read; the streaming change feed turns each into
+    file scan tasks. A group is ``change`` ('insert' | 'delete'),
+    ``snapshot-id`` (the commit), ``entries`` (data files) read with the
+    ``deletes`` that mask them, ``schema-id`` (write schema of entries
+    that carry none) and at most one restriction:
+
+      - ``include-pos`` = (new positional artifacts, restated ones): only
+        the ordinals the commit newly tombstones — v3 consolidated
+        vectors re-state prior positions, which are subtracted;
+      - ``include-eq`` = one new equality-delete entry: only the rows
+        matching its keys.
+
+    Per commit: added data files are inserts; removed data files are
+    deletes of their rows live at the parent (masked by the parent
+    artifacts that address them, _removed_masks); new positional
+    artifacts delete the parent rows they newly address (candidates
+    narrowed by ``referenced-files``); each new equality delete deletes
+    the parent-live rows of strictly older files that match it.
+    ``replace`` commits (compaction) change no row and are skipped."""
+    by_id = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
+    groups: list[dict[str, Any]] = []
+    for s in _main_lineage(meta, from_id, to_id):
+        if s["summary"].get("operation") == "replace":
+            continue
+        parent = by_id.get(s.get("parent-snapshot-id"))
+        # descriptor-level diff: manifests shared with the parent never open
+        added, removed = diff_snapshots(parent, s)
+        added_data, added_dels = _split_manifest(added)
+        removed_data, removed_dels = _split_manifest(removed)
+        psid = parent.get("schema-id") if parent else None
+
+        def group(change, entries, deletes, schema_id, **restriction):
+            if entries:
+                groups.append({
+                    "change": change,
+                    "snapshot-id": s["snapshot-id"],
+                    "entries": entries,
+                    "deletes": deletes,
+                    "schema-id": schema_id,
+                    **restriction,
+                })
+
+        group("insert", added_data, [], s.get("schema-id"))
+        if parent is None:
+            continue
+        p_dels = snapshot_delete_entries(parent) if removed_data or added_dels else []
+        if removed_data:
+            group("delete", removed_data, _removed_masks(removed_data, p_dels), psid)
+        if not added_dels:
+            continue
+        # content work: the parent's rows are read anyway, so loading its
+        # data inventory is not the cost
+        p_data = _split_manifest(snapshot_entries(parent))[0]
+        pos_added = [e for e in added_dels if e.get("content") != "equality-deletes"]
+        if pos_added:
+            # artifacts without referenced-files may address any file
+            refs = [e.get("referenced-files") for e in pos_added]
+            addressed = None if None in refs else set().union(*refs)
+            restated = [e for e in removed_dels if e.get("content") != "equality-deletes"]
+            group(
+                "delete",
+                [e for e in p_data if addressed is None or e["path"] in addressed],
+                [],
+                psid,
+                **{"include-pos": (pos_added, restated)},
+            )
+        for eq in (e for e in added_dels if e.get("content") == "equality-deletes"):
+            seq = eq.get("sequence-number", 0)
+            group(
+                "delete",
+                [e for e in p_data if e.get("sequence-number", 0) < seq],
+                p_dels,
+                psid,
+                **{"include-eq": eq},
+            )
+    return groups
+
+
 def plan_lineage_events(
     meta: dict[str, Any],
     from_snapshot_id: int | None = None,
@@ -564,55 +711,8 @@ def plan_lineage_events(
     if to_snapshot_id is None:
         r = meta.get("refs", {}).get("main")
         to_snapshot_id = r["snapshot-id"] if r else None
-    lineage: list[dict[str, Any]] = []
-    cur = by_id.get(to_snapshot_id) if to_snapshot_id is not None else None
-    reached_from = from_snapshot_id is None
-    while cur is not None and cur["snapshot-id"] != from_snapshot_id:
-        lineage.append(cur)
-        pid = cur.get("parent-snapshot-id")
-        if pid is None:
-            cur = None
-            break  # true table root: the walked history is complete
-        if pid == from_snapshot_id:
-            # `from` itself may have been expired while its CHILD was
-            # retained — the parent POINTER is enough to know the
-            # boundary was reached (the streaming source's pid==lo
-            # escape tolerates exactly this; a checkpointed stream must
-            # keep running after its offset snapshot expires)
-            reached_from = True
-            cur = None
-            break
-        cur = by_id.get(pid)
-        if cur is None:
-            # mid-history expiry: the events between `from` (or table
-            # creation) and here are GONE. Diffing the oldest retained
-            # snapshot against an empty parent would re-emit carried
-            # files as inserts mis-attributed to the wrong commit —
-            # fail loudly instead (the full changelog raises here too)
-            raise ValueError(
-                f"snapshot history expired at {pid}: lineage events "
-                "since "
-                + (
-                    "table creation"
-                    if from_snapshot_id is None
-                    else f"snapshot {from_snapshot_id}"
-                )
-                + " cannot be reconstructed — pass a retained "
-                "from_snapshot_id"
-            )
-    if cur is not None and cur["snapshot-id"] == from_snapshot_id:
-        reached_from = True
-    if not reached_from:
-        # a rolled-back / mistyped `from` must FAIL, not silently replay
-        # the whole history as duplicate events
-        raise ValueError(
-            f"from snapshot {from_snapshot_id} is not an ancestor of "
-            f"{to_snapshot_id} on the main lineage (rolled back or "
-            "never existed)"
-        )
-    lineage.reverse()
     plans: list[dict[str, Any]] = []
-    for s in lineage:
+    for s in _main_lineage(meta, from_snapshot_id, to_snapshot_id):
         if s["summary"].get("operation") == "replace":
             continue
         sid = s["snapshot-id"]
@@ -635,32 +735,6 @@ def plan_lineage_events(
             # files' rows (live at the parent — its tombstone artifacts
             # mask already-dead rows), never the parent state; insert
             # events fall through to the shared range/entry handling.
-            # The mask list names only artifacts that can ADDRESS a
-            # removed file: positional/DV entries whose referenced-files
-            # intersect the removed paths (entries without the summary
-            # kept — they may address anything), equality deletes whose
-            # sequence number can gate a removed file (strictly newer
-            # than the oldest removed file). A rewrite touching 3 of
-            # 100k DV-carrying files therefore plans ~3 mask entries,
-            # not 100k.
-            removed_paths = {e["path"] for e in removed_data}
-            min_removed_seq = min(
-                e.get("sequence-number", 0) for e in removed_data
-            )
-            # parent tombstones: only delete-content manifests open here
-            p_del_entries = snapshot_delete_entries(parent)
-            masks = []
-            for e in p_del_entries:
-                if e.get("content") == "equality-deletes":
-                    # seq-less eq entries default to 0 in EVERY consumer
-                    # (cond seq < 0 never fires) — keeping them would
-                    # only bloat the plan with guaranteed no-ops
-                    if e.get("sequence-number", 0) > min_removed_seq:
-                        masks.append(e)
-                else:
-                    refs = e.get("referenced-files")
-                    if refs is None or set(refs) & removed_paths:
-                        masks.append(e)
             # content-fallback STAYS True: a consumer that predates the
             # targeted-diff keys (round-14 wire contract) must keep
             # producing this commit via the full changelog — always
@@ -669,7 +743,10 @@ def plan_lineage_events(
             plan["content-fallback"] = True
             plan["targeted-diff"] = True
             plan["delete-file-entries"] = removed_data
-            plan["delete-mask-entries"] = masks
+            # only delete-content manifests of the parent open here
+            plan["delete-mask-entries"] = _removed_masks(
+                removed_data, snapshot_delete_entries(parent)
+            )
             plan["parent-schema-id"] = (
                 parent.get("schema-id") if parent else None
             )
@@ -1873,26 +1950,55 @@ class SparkTable:
         (write-audit-publish, Iceberg's spark.wap.id): the data is
         committed and auditable via scan(snapshot_id=...), and main only
         advances when publish_wap(wap_id) cherry-picks it."""
-        from ..catalog.catalog import CommitFailedException
-
         new_entries = self._write_files(self.metadata(), df)
         if wap_id is not None:
             return self._stage_wap(new_entries, wap_id, branch)
+        return self._commit_files(new_entries, branch=branch, retries=commit_retries)
+
+    def _commit_files(
+        self,
+        entries: list[dict[str, Any]],
+        operation: str = "append",
+        *,
+        replace: bool = False,
+        branch: str = MAIN,
+        retries: int = 3,
+        extra_summary: dict[str, Any] | None = None,
+        skip: Callable[[dict[str, Any]], bool] | None = None,
+    ) -> dict[str, Any] | None:
+        """The one optimistic commit loop of a write whose data files are
+        already written (append and both DataSource writers): on
+        CommitFailedException the entries are rebased onto the winner's
+        snapshot and the commit retried — appends never conflict
+        logically, only on the assert-ref CAS. Each attempt re-stamps the
+        sequence number: the winner consumed the one the entries carried,
+        and a stale data seq would let an equality delete committed in
+        between wrongly apply to their rows. The ``schema-id`` they were
+        written under is never touched.
+
+        ``replace`` commits ``entries`` as the table's whole inventory
+        (an overwrite); otherwise they are added through the pure-ADD
+        path, which carries parent manifests by descriptor — O(delta).
+        ``skip(meta)`` is checked against each attempt's freshly loaded
+        metadata: when it holds, nothing commits and None is returned."""
+        from ..catalog.catalog import CommitFailedException
+
         last_err: Exception | None = None
-        for _ in range(commit_retries + 1):
+        for _ in range(retries + 1):
             meta = self.metadata()
-            # re-stamp per attempt: after a lost CAS the winner consumed
-            # the sequence number these entries were written under, and a
-            # stale data seq would let an equality delete committed
-            # in-between wrongly apply to this append's rows
+            if skip is not None and skip(meta):
+                return None
             seq = _next_seq(meta)
-            for e in new_entries:
+            for e in entries:
                 e["sequence-number"] = seq
             try:
-                # pure-ADD fast path: parent manifests carry by
-                # descriptor, nothing is loaded or compared — O(delta)
                 return self._commit_snapshot(
-                    meta, None, "append", branch, appended=new_entries
+                    meta,
+                    list(entries) if replace else None,
+                    operation,
+                    branch,
+                    extra_summary=extra_summary,
+                    appended=None if replace else entries,
                 )
             except CommitFailedException as e:  # lost the CAS race: rebase
                 last_err = e
@@ -2239,7 +2345,9 @@ class SparkTable:
         one row per NET row-level change between two snapshots, tagged
         `_change_type` ('insert' | 'delete') and `_commit_snapshot_id`.
 
-        Per commit on the main lineage (walked by parent pointers):
+        The events are plan_changes' groups, each read with one
+        _live_rows read (plus a semi-join for new tombstones). Per commit
+        on the main lineage (walked by parent pointers, _main_lineage):
           - data files ADDED       -> their rows as inserts
           - data files REMOVED     -> their rows as deletes (file-granular
             net change: a copy-on-write rewrite emits delete+insert pairs
@@ -2253,6 +2361,11 @@ class SparkTable:
 
         All reads are file-list-driven (metadata-sized driver state) and
         field-id-aware, so the changelog survives column renames.
+
+        ``from_snapshot_id`` must be an ancestor of the target snapshot: a
+        rolled-back or unknown id raises ValueError, as does history
+        expired inside the range. A ``from`` snapshot that was expired
+        while its child was retained still works.
 
         ``identifier_columns`` opts into Iceberg's
         create_changelog_view(identifier_columns=...) semantics: carry-over
@@ -2303,97 +2416,43 @@ class SparkTable:
         )
         if to_snap is None:
             return empty.limit(0)
-        # main lineage, oldest->newest, stopping after from_snapshot_id
-        lineage: list[dict[str, Any]] = []
-        cur: dict[str, Any] | None = to_snap
-        while cur is not None and cur["snapshot-id"] != from_snapshot_id:
-            lineage.append(cur)
-            pid = cur.get("parent-snapshot-id")
-            cur = self._snapshot(meta, pid) if pid is not None else None
-        lineage.reverse()
         parts: list[DataFrame] = []
-        for s in lineage:
-            if s["summary"].get("operation") == "replace":
-                continue
-            pid = s.get("parent-snapshot-id")
-            parent = self._snapshot(meta, pid) if pid is not None else None
-            added_all, removed_all = diff_snapshots(parent, s)
-            sid = s["snapshot-id"]
-
-            def tag(df: DataFrame, kind: str, _sid=sid) -> DataFrame:
-                return df.select(
+        order: dict[int, int] = {}  # commit -> lineage position, for net_changes
+        for g in plan_changes(meta, from_snapshot_id, to_snap["snapshot-id"]):
+            order.setdefault(g["snapshot-id"], len(order))
+            inc_pos, inc_eq = g.get("include-pos"), g.get("include-eq")
+            rows = self._live_rows(
+                meta,
+                schema,
+                g["entries"],
+                g["deletes"],
+                g["schema-id"],
+                lineage=row_lineage,
+                keep_pos=inc_pos is not None,
+            )
+            if inc_pos is not None:
+                new, restated = inc_pos
+                pos = self._read_positional(meta, new)
+                if restated:
+                    pos = pos.exceptAll(self._read_positional(meta, restated))
+                cond = (self._rel_file(meta["location"]) == pos["file_path"]) & (
+                    F.col("_pos") == pos["pos"]
+                )
+                rows = rows.join(pos, cond, "left_semi").drop("_file", "_pos")
+            if inc_eq is not None:
+                # NULL keys match, like _apply_equality_deletes — a
+                # name-list join would silently drop delete events for
+                # rows the table really removed
+                keys = self._read_eq_delete(meta, inc_eq)
+                rows = _null_safe_semi(rows, keys, keys.columns)
+            parts.append(
+                rows.select(
                     *[f["name"] for f in schema["fields"]],
                     *(["_row_id"] if row_lineage else []),
-                    F.lit(kind).alias("_change_type"),
-                    F.lit(_sid).cast("long").alias("_commit_snapshot_id"),
+                    F.lit(g["change"]).alias("_change_type"),
+                    F.lit(g["snapshot-id"]).cast("long").alias("_commit_snapshot_id"),
                 )
-
-            added_data, added_dels = _split_manifest(added_all)
-            removed_data, removed_dels = _split_manifest(removed_all)
-            if added_data:
-                ins = self._live_rows(
-                    meta, schema, added_data, [], s["schema-id"], lineage=row_lineage
-                )
-                parts.append(tag(ins, "insert"))
-            if removed_data:
-                # only rows LIVE at the parent emit delete events: apply the
-                # parent's tombstones to the removed files' raw rows, else a
-                # CoW rewrite would re-emit rows a MOR delete already removed
-                removed_rows = self._live_rows(
-                    meta,
-                    schema,
-                    removed_data,
-                    snapshot_delete_entries(parent),
-                    parent["schema-id"],
-                    lineage=row_lineage,
-                )
-                parts.append(tag(removed_rows, "delete"))
-            # newly-added tombstones -> deletes against the PARENT state
-            pos_added = [
-                e for e in added_dels if e.get("content") != "equality-deletes"
-            ]
-            eq_added = [e for e in added_dels if e.get("content") == "equality-deletes"]
-            if pos_added and parent is not None:
-                new_pos = self._read_positional(meta, pos_added)
-                pos_removed = [
-                    e for e in removed_dels if e.get("content") != "equality-deletes"
-                ]
-                if pos_removed:
-                    old_pos = self._read_positional(meta, pos_removed)
-                    new_pos = new_pos.exceptAll(old_pos)
-                # content work: the parent's live state must be read
-                # anyway, so loading its data entries is not the cost
-                rows = self._live_rows(
-                    meta,
-                    schema,
-                    _split_manifest(snapshot_entries(parent))[0],
-                    [],
-                    parent["schema-id"],
-                    lineage=row_lineage,
-                    keep_pos=True,
-                )
-                cond = (self._rel_file(meta["location"]) == new_pos["file_path"]) & (
-                    F.col("_pos") == new_pos["pos"]
-                )
-                parts.append(
-                    tag(rows.join(new_pos, cond, "left_semi").drop("_file", "_pos"), "delete")
-                )
-            if eq_added and parent is not None:
-                live = self._live_rows(
-                    meta,
-                    schema,
-                    *_split_manifest(snapshot_entries(parent)),
-                    parent["schema-id"],
-                    lineage=row_lineage,
-                )
-                for e in eq_added:
-                    del_rows = self._read_eq_delete(meta, e)
-                    # NULL keys match, like _apply_equality_deletes — a
-                    # name-list join would silently drop delete events
-                    # for rows the table really removed
-                    parts.append(
-                        tag(_null_safe_semi(live, del_rows, del_rows.columns), "delete")
-                    )
+            )
         if not parts:
             return empty.limit(0)
         out = parts[0]
@@ -2404,9 +2463,7 @@ class SparkTable:
                 out, list(identifier_columns), strict=strict_identifiers
             )
         if net_changes:
-            out = _net_changes_fn(
-                out, {s["snapshot-id"]: i for i, s in enumerate(lineage)}
-            )
+            out = _net_changes_fn(out, order)
         return out
 
     def changelog_row_ids(
@@ -3795,7 +3852,9 @@ class SparkTable:
         ``rows`` is the statement's image of every live row, with its
         ``_file``: the rows of the matched files become the new files, and
         MERGE ``inserts`` append. Only the distinct file list
-        (metadata-sized) reaches the driver; the rows never do.
+        (metadata-sized) reaches the driver; the rows never do. A
+        statement that matched nothing and inserts nothing commits no
+        snapshot, as in merge-on-read.
 
         On v3 the rewrite preserves row lineage (spec: a rewritten row
         keeps its _row_id): ``rows`` carry each row's resolved id and the
@@ -3823,6 +3882,8 @@ class SparkTable:
             rewritten = rows.filter(rel.isin(sorted(affected))).drop("_file", "_pos")
             new_rows = rewritten if inserts is None else rewritten.unionByName(inserts)
         written = self._write_files(meta, new_rows) if new_rows is not None else []
+        if not affected and not written:
+            return meta  # nothing matched, nothing inserted: no snapshot
         return self._commit_snapshot(
             meta,
             kept + written,
@@ -3939,7 +4000,7 @@ class SparkTable:
 
         if mode == "merge-on-read":
             return self._mor_commit(meta, snap, matched, "overwrite", project)
-        return self._cow_commit(meta, snap, matched, project(flagged), "update")
+        return self._cow_commit(meta, snap, matched, project(flagged), "overwrite")
 
     def merge(
         self,

@@ -1,23 +1,34 @@
-"""icelite as a Structured Streaming SOURCE (Spark 4 Python DataSource).
+"""icelite as a Spark 4 Python DataSource: streaming source, batch
+reader and two-phase writers — a thin shell over format/icelite.
 
 Iceberg tables are streamable: an engine reads the snapshot log and emits
-each append's added files as a micro-batch (Iceberg's Spark streaming
-read; the reference's catalog serves the metadata that planning walks).
-This module implements that for icelite tables with the stable Python
+each commit's changes as a micro-batch (Iceberg's Spark streaming read;
+the reference's catalog serves the metadata that planning walks). Every
+piece of table logic lives in icelite; this module only maps it onto the
 DataSource API:
 
   - offsets are snapshot ids (JSON dicts), resolved on the DRIVER from
-    the catalog metastore — metadata-sized work only;
-  - `partitions(start, end)` plans one InputPartition per data FILE added
-    by append commits in (start, end] — file-level parallelism, exactly
-    Iceberg's split planning;
-  - `read(partition)` runs on EXECUTORS and streams the parquet file via
-    pyarrow record batches — no driver data path;
-  - replace commits (compaction / rewrite_position_deletes) are skipped:
-    they add files but no logical rows (Iceberg's streaming read does the
-    same); delete/overwrite commits raise unless
-    `skip-delete-snapshots=true` (mirroring Iceberg's
-    streaming-skip-delete-snapshots option).
+    the catalog — metadata-sized work only. `partitions(start, end)`
+    plans the commits in (start, end] with icelite's one lineage walk
+    (_main_lineage) and turns them into file scan tasks (icelite's
+    file_scan_task, the contract plan_table_scan and the REST plan
+    endpoint serve):
+      - the default mode streams the data files ADDED by append commits;
+        replace commits (compaction) add no logical rows and are skipped,
+        other commits raise unless `skip-delete-snapshots=true`
+        (Iceberg's streaming-skip-delete-snapshots);
+      - `change-feed=true` streams insert/delete events of every commit,
+        merge-on-read included, from icelite.plan_changes — the same
+        change groups SparkTable.changelog reads;
+      - `lineage-events=true` streams (_row_id, _change_type,
+        _commit_snapshot_id) from icelite.plan_lineage_events, as
+        SparkTable.changelog_row_ids does: covered commits need no file.
+  - `read(partition)` runs on EXECUTORS: every file partition is one
+    `_TaskPartition` read by `_read_task_batches` into pyarrow record
+    batches (delete artifacts applied, CDC restrictions honored) — no
+    driver data path.
+  - writers stage parquet files on executors and commit them with
+    icelite's one optimistic append loop (SparkTable._commit_files).
 
 Restartability comes from Spark's checkpoint: the committed offset is a
 snapshot id, so a restarted query resumes from the last snapshot it saw.
@@ -81,45 +92,14 @@ def _range_event_batches(p: "_RangeEventsPartition"):
             )
 
 
-class _FilePartition(InputPartition):
-    def __init__(
-        self,
-        path: str,
-        fid_to_wname: dict[int, str],
-        target_fields: list[tuple[int, str]],
-        arrow_schema,
-        partition_values: dict | None = None,
-        partition_types: dict | None = None,
-        change_type: str | None = None,
-        commit_id: int | None = None,
-        first_row_id: int | None = None,
-        row_lineage: bool = False,
-    ):
-        self.path = path
-        # field-id -> write-time column name for THIS file's write schema:
-        # the reader projects by field id (Iceberg read semantics), so
-        # RENAME COLUMN reaches old files and added columns read as NULL
-        self.fid_to_wname = fid_to_wname
-        self.target_fields = target_fields  # [(field-id, target name)]
-        self.arrow_schema = arrow_schema  # pa.Schema incl. CDC tail, or None
-        self.partition_values = partition_values or {}
-        self.partition_types = partition_types or {}
-        # change-feed mode only: every row of this file becomes one
-        # 'insert' or 'delete' event of commit `commit_id`
-        self.change_type = change_type
-        self.commit_id = commit_id
-        # v3 row lineage: the file's claimed range start (None for
-        # pre-lineage files) + whether to emit the _row_id column
-        self.first_row_id = first_row_id
-        self.row_lineage = row_lineage
-
-
-def _load_meta(options: dict) -> dict[str, Any]:
-    """Planning metadata from either a library Catalog (option
+def _table(options: dict):
+    """A metadata-only icelite handle (no SparkSession: planning and
+    commits never touch .spark) on either a library Catalog (option
     `metastore`) or an Iceberg-REST endpoint (option `rest-url`) — the
-    stock-engine topology: the stream PLANS against the HTTP catalog
-    while executors read storage directly."""
-    levels = options["namespace"].split(".")
+    stock-engine topology: the driver PLANS and commits against the HTTP
+    catalog while executors read and write storage directly."""
+    from ..format.icelite import SparkTable
+
     if options.get("rest-url"):
         from ..rest.client import RestCatalogClient
 
@@ -129,22 +109,17 @@ def _load_meta(options: dict) -> dict[str, Any]:
         from ..catalog.metastore import Metastore
 
         cat = Catalog(Metastore(options["metastore"]))
-    meta, _ = cat.load_table(options["warehouse"], levels, options["table"])
-    return meta
-
-
-def _schema_fields(meta: dict[str, Any], schema_id: int | None = None) -> list[tuple[str, str]]:
-    sid = meta["current-schema-id"] if schema_id is None else schema_id
-    schema = next(s for s in meta["schemas"] if s["schema-id"] == sid)
-    return [(f["name"], f["type"]) for f in schema["fields"]]
-
-
-def _schema_doc(meta: dict[str, Any], schema_id: int | None = None) -> dict[str, Any]:
-    sid = meta["current-schema-id"] if schema_id is None else schema_id
-    return next(
-        (s for s in meta["schemas"] if s["schema-id"] == sid),
-        next(s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]),
+    return SparkTable(
+        None, cat, options["warehouse"], options["namespace"].split("."), options["table"]
     )
+
+
+def _load_meta(options: dict) -> dict[str, Any]:
+    return _table(options).metadata()
+
+
+def _schema_doc(meta: dict[str, Any]) -> dict[str, Any]:
+    return next(s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"])
 
 
 def _fid_map(schema_doc: dict[str, Any]) -> dict[int, str]:
@@ -302,116 +277,93 @@ class IceliteStreamReader(DataSourceStreamReader):
         return {"snapshot-id": ref["snapshot-id"] if ref else 0}
 
     def partitions(self, start: dict, end: dict):
+        from ..format.icelite import plan_changes
+
         meta = _load_meta(self.options)
-        lo, hi = start["snapshot-id"], end["snapshot-id"]
-        target_doc = _schema_doc(meta)
-        if self.lineage_events:
-            target_doc = {"fields": []}  # key stream: no data columns
-        target = [
-            (f.get("id", i + 1), f["name"])
-            for i, f in enumerate(target_doc["fields"])
-        ]
+        # offset 0 is the start of the stream, before the first snapshot
+        lo, hi = start["snapshot-id"] or None, end["snapshot-id"]
         if self.row_lineage and meta.get("format-version", 2) < 3:
             raise ValueError(
                 "row-lineage=true (and lineage-events) requires "
                 f"format-version >= 3 (table is "
                 f"v{meta.get('format-version', 2)})"
             )
+        # the lineage-events key stream has no data columns
+        target_doc = {"fields": []} if self.lineage_events else _schema_doc(meta)
+        target = [
+            (f.get("id", i + 1), f["name"])
+            for i, f in enumerate(target_doc["fields"])
+        ]
         self._aschema = _arrow_schema_of(
             target_doc,
             cdc=self.change_feed or self.lineage_events,
             lineage=self.row_lineage,
         )
-        # self._aschema may be None here (the planner subprocess has no
-        # active SparkSession for the DDL parse) — both the arrow path
-        # and the row fallbacks carry lineage, so nothing to gate
-        self._ptypes = {
-            f["name"]: f["type"]
-            for f in target_doc["fields"]
-            if isinstance(f["type"], str)
-        }
-        by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
-        parts: list[_FilePartition] = []
-        # walk main-lineage snapshots in (lo, hi]
-        lineage: list[dict[str, Any]] = []
-        cur = by_id.get(hi)
-        reached_lo = lo == 0
-        while cur is not None and cur["snapshot-id"] > lo:
-            lineage.append(cur)
-            pid = cur.get("parent-snapshot-id")
-            if pid is None:
-                reached_lo = lo == 0
-                break
-            if pid == lo:
-                reached_lo = True
-            cur = by_id.get(pid)
-            if cur is None and pid != lo:
-                # the committed offset's ancestry was expired from the
-                # snapshot log: emitting "everything reachable" would
-                # re-deliver rows the consumer already saw — fail loudly
-                # (Iceberg streaming reads error the same way when the
-                # start snapshot is gone)
-                raise ValueError(
-                    f"start snapshot {lo} is no longer reachable from "
-                    f"{hi} (snapshot log expired past the stream offset)"
-                )
-        if lo != 0 and not reached_lo and lineage:
-            raise ValueError(
-                f"start snapshot {lo} not on the main lineage of {hi}"
-            )
         if self.lineage_events:
-            self._plan_lineage_events(meta, lineage, by_id, target, parts)
+            parts = self._lineage_event_parts(meta, lo, hi, target)
         elif self.change_feed:
-            self._plan_change_feed(meta, lineage, by_id, target, parts)
+            parts = [
+                p
+                for g in plan_changes(meta, lo, hi)
+                for p in self._group_parts(meta, g, target)
+            ]
         else:
-            for snap in reversed(lineage):
-                op = snap["summary"].get("operation")
-                if op == "replace":
-                    continue  # rewrites add no logical rows
-                if op != "append":
-                    if self.skip_deletes:
-                        continue
-                    raise ValueError(
-                        f"streaming read hit a {op!r} snapshot "
-                        f"{snap['snapshot-id']}; set skip-delete-snapshots=true "
-                        "to skip non-append commits (Iceberg parity)"
-                    )
-                from ..format.icelite import diff_snapshots
+            parts = self._group_parts(
+                meta, {"entries": self._appended(meta, lo, hi), "deletes": []}, target
+            )
+        # Spark requires >=1 partition per batch; an empty one reads nothing
+        return parts or [_RangeEventsPartition([], "insert", 0)]
 
-                pid = snap.get("parent-snapshot-id")
-                parent = by_id.get(pid) if pid is not None else None
-                # descriptor-level diff: per micro-batch only the
-                # manifests NEW to this commit are opened (O(delta), the
-                # same discipline the commit path now has)
-                for e in diff_snapshots(parent, snap)[0]:
-                    if e.get("content", "data") != "data":
-                        continue
-                    parts.append(self._file_part(meta, e, target))
-        # Spark requires >=1 partition per batch; empty path reads nothing
-        return parts or [_FilePartition("", {}, target, self._aschema)]
+    def _appended(self, meta, lo, hi) -> list[dict]:
+        """Data files added by the append commits in (lo, hi]. A replace
+        commit (compaction) adds no logical rows; any other commit raises
+        unless skip-delete-snapshots is set (Iceberg parity). The
+        descriptor-level diff opens only the manifests NEW to each commit
+        (O(delta) per micro-batch)."""
+        from ..format.icelite import _main_lineage, _split_manifest, diff_snapshots
 
-    def _file_part(
-        self, meta, entry, target, change_type=None, commit_id=None
-    ) -> _FilePartition:
-        wdoc = _schema_doc(meta, entry.get("schema-id"))
-        return _FilePartition(
-            f"{meta['location']}/{entry['path']}",
-            _fid_map(wdoc),
-            target,
+        by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
+        out: list[dict] = []
+        for snap in _main_lineage(meta, lo, hi):
+            op = snap["summary"].get("operation")
+            if op == "replace" or (op != "append" and self.skip_deletes):
+                continue
+            if op != "append":
+                raise ValueError(
+                    f"streaming read hit a {op!r} snapshot "
+                    f"{snap['snapshot-id']}; set skip-delete-snapshots=true "
+                    "to skip non-append commits (Iceberg parity)"
+                )
+            parent = by_id.get(snap.get("parent-snapshot-id"))
+            out += _split_manifest(diff_snapshots(parent, snap)[0])[0]
+        return out
+
+    def _group_parts(self, meta, g, target) -> list["_TaskPartition"]:
+        """Executor partitions for one icelite.plan_changes group (or a
+        plain entry list, with no ``change``): one file scan task per data
+        entry, masked by the group's delete artifacts, tagged with the
+        group's change type and commit, restricted like the group."""
+        inc_pos, inc_eq = g.get("include-pos"), g.get("include-eq")
+        return _task_partitions(
+            meta,
+            _scan_tasks(g["entries"], g["deletes"]),
             self._aschema,
-            first_row_id=entry.get("first-row-id"),
+            target_override=target,
+            change_type=g.get("change"),
+            commit_id=g.get("snapshot-id"),
+            include_pos=(
+                None
+                if inc_pos is None
+                else tuple([e["path"] for e in es] for es in inc_pos)
+            ),
+            include_eq=None if inc_eq is None else _eq_include_spec(meta, inc_eq),
             row_lineage=self.row_lineage,
-            partition_values=entry.get("partition", {}),
-            partition_types=self._ptypes,
-            change_type=change_type,
-            commit_id=commit_id,
         )
 
-    def _plan_lineage_events(self, meta, lineage, by_id, target, parts) -> None:
+    def _lineage_event_parts(self, meta, lo, hi, target) -> list:
         """Metadata-only CDC planning, streaming form: consumes the SAME
         pure plan as SparkTable.changelog_row_ids
-        (format/icelite.plan_lineage_events — the single point of truth
-        for commit classification) and maps it onto partitions:
+        (format/icelite.plan_lineage_events) and maps it onto partitions:
 
           - insert-ranges / delete-ranges -> range partitions (NO file
             opened; large commits split into ~1M-row partitions for
@@ -420,23 +372,15 @@ class IceliteStreamReader(DataSourceStreamReader):
             rewrites) -> file partitions with an EMPTY column target
             (only those files read, never the parent state);
           - targeted-diff commits (pure CoW rewrites) -> delete events
-            from tasks built straight off the plan's delete-file-entries
-            + delete-mask-entries (each task bundles the file's
-            addressing tombstone artifacts, so already-dead rows stay
-            out), insert events from the shared range/entry handling —
-            the parent state is never scanned OR metadata-walked;
-          - content-fallback commits -> the regular CDC file tasks for
-            that one commit, column target empty.
+            from the plan's delete-file-entries masked by its
+            delete-mask-entries, so already-dead rows stay out and the
+            parent state is never scanned; inserts as above;
+          - content-fallback commits -> that one commit's plan_changes
+            groups, column target empty.
         """
-        from ..format.icelite import plan_lineage_events
+        from ..format.icelite import plan_changes, plan_lineage_events
 
-        if not lineage:
-            return
-        plans = plan_lineage_events(
-            meta,
-            from_snapshot_id=lineage[-1].get("parent-snapshot-id"),
-            to_snapshot_id=lineage[0]["snapshot-id"],
-        )
+        parts: list = []
         rows_per_part = 1 << 20
 
         def _range_parts(ranges, change, sid):
@@ -459,206 +403,33 @@ class IceliteStreamReader(DataSourceStreamReader):
             if cur:
                 parts.append(_RangeEventsPartition(cur, change, sid))
 
-        for plan in plans:
+        for plan in plan_lineage_events(meta, lo, hi):
             sid = plan["snapshot-id"]
             # targeted-diff FIRST: those commits also carry
             # content-fallback=True for consumers that predate the
             # targeted keys (round-14 wire contract)
-            if plan["content-fallback"] and not plan.get("targeted-diff"):
-                self._plan_change_feed(meta, [by_id[sid]], by_id, target, parts)
-                continue
             if plan.get("targeted-diff"):
-                # delete side: tasks built straight from the plan's OWN
-                # keys — delete-file-entries plus the pre-filtered
-                # delete-mask-entries — O(removed x masks), never a full
-                # parent plan_table_scan (whose cost grows with table
-                # size, not change size); insert side shared below
-                tmap = {
-                    t["data-file"]["path"]: t
-                    for t in _targeted_diff_tasks(
-                        plan["delete-file-entries"],
-                        plan["delete-mask-entries"],
-                    )
-                }
-                self._removed_delete_tasks(
-                    meta, plan["delete-file-entries"], tmap, target, sid,
-                    parts,
-                )
+                parts += self._group_parts(meta, {
+                    "change": "delete",
+                    "snapshot-id": sid,
+                    "entries": plan["delete-file-entries"],
+                    "deletes": plan["delete-mask-entries"],
+                }, target)
+            elif plan["content-fallback"]:
+                for g in plan_changes(meta, plan["parent-snapshot-id"], sid):
+                    parts += self._group_parts(meta, g, target)
+                continue
             if plan["insert-ranges"]:
                 _range_parts(plan["insert-ranges"], "insert", sid)
-            for e in plan["insert-file-entries"]:
-                parts.append(self._file_part(meta, e, target, "insert", sid))
+            parts += self._group_parts(meta, {
+                "change": "insert",
+                "snapshot-id": sid,
+                "entries": plan["insert-file-entries"],
+                "deletes": [],
+            }, target)
             if plan["delete-ranges"]:
                 _range_parts(plan["delete-ranges"], "delete", sid)
-
-    def _removed_delete_tasks(
-        self, meta, removed, tmap, target, sid, parts
-    ) -> None:
-        """Map removed data files onto parent-scan 'delete' tasks — the
-        shared delete side of the change feed's CoW branch and the
-        lineage-events targeted-diff branch. ``tmap`` is the parent
-        snapshot's plan_table_scan tasks by data-file path (each task
-        bundles the tombstone artifacts that mask already-dead rows)."""
-        rtasks = []
-        for e in removed:
-            t = tmap.get(e["path"])
-            if t is None:
-                continue
-            # lineage rides on the task: plan_table_scan's data-file
-            # payload predates v3 lineage, so attach the manifest
-            # entry's range start on a COPY — the memoized ptasks() map
-            # is shared state and must not inherit per-branch mutations
-            # (round-15 ADVICE)
-            t = {**t, "data-file": {**t["data-file"], "first-row-id": e.get("first-row-id")}}
-            rtasks.append(t)
-        parts.extend(
-            _task_partitions(
-                meta,
-                rtasks,
-                self._aschema,
-                target_override=target,
-                change_type="delete",
-                commit_id=sid,
-                row_lineage=self.row_lineage,
-            )
-        )
-
-    def _plan_change_feed(self, meta, lineage, by_id, target, parts) -> None:
-        """CDC planning, merge-on-read included — the STREAMING twin of
-        SparkTable.changelog() (same event semantics, file-task form).
-        Per lineage commit:
-
-          - data files ADDED    -> their rows as 'insert' events
-            (plain file partitions — every row of a new file is live at
-            its own commit);
-          - data files REMOVED  -> 'delete' events for the rows LIVE at
-            the parent: a parent-state plan_table_scan task per file, so
-            parent tombstones keep already-dead rows out (a CoW rewrite
-            after a MOR delete must not re-emit those);
-          - positional tombstones ADDED -> 'delete' events for the
-            ordinals they NEWLY assert: bare parent-file tasks with
-            ``include_pos`` = (new artifact paths, replaced artifact
-            paths) — v3 consolidated vectors re-state prior positions,
-            so the executor subtracts the replaced artifacts' ordinals
-            (the batch changelog's new_pos.exceptAll(old_pos));
-          - equality deletes ADDED -> 'delete' events for the PARENT-live
-            rows they match: parent tasks (full MOR artifact set) with
-            ``include_eq``, sequence-gated to strictly-older data files;
-          - operation 'replace' (compaction) -> skipped, no logical rows.
-        """
-        from ..format.icelite import (
-            _split_manifest,
-            diff_snapshots,
-            plan_table_scan,
-            snapshot_entries,
-        )
-
-        for snap in reversed(lineage):
-            op = snap["summary"].get("operation")
-            if op == "replace":
-                continue  # compaction: no logical change
-            sid = snap["snapshot-id"]
-            pid = snap.get("parent-snapshot-id")
-            parent = by_id.get(pid)
-            # descriptor-level diff (O(changed manifests) per commit);
-            # the parent's FULL data inventory loads only in the
-            # tombstone branches below, which need the parent state plan
-            # anyway
-            added_all, removed_all = diff_snapshots(parent, snap)
-            added_data, added_dels = _split_manifest(added_all)
-            removed, removed_dels = _split_manifest(removed_all)
-            for e in added_data:
-                parts.append(self._file_part(meta, e, target, "insert", sid))
-            parent_tasks: dict[str, dict] | None = None
-
-            def ptasks(_pid=pid, _has=parent is not None):
-                nonlocal parent_tasks
-                if parent_tasks is None:
-                    plan = (
-                        plan_table_scan(meta, snapshot_id=_pid)
-                        if _has
-                        else {"plan-tasks": []}
-                    )
-                    parent_tasks = {
-                        t["data-file"]["path"]: t for t in plan["plan-tasks"]
-                    }
-                return parent_tasks
-
-            if removed:
-                self._removed_delete_tasks(
-                    meta, removed, ptasks(), target, sid, parts
-                )
-            pos_added = [
-                e for e in added_dels if e.get("content") != "equality-deletes"
-            ]
-            eq_added = [
-                e for e in added_dels if e.get("content") == "equality-deletes"
-            ]
-            if pos_added and parent is not None:
-                new_paths = [e["path"] for e in pos_added]
-                restated = [
-                    e["path"]
-                    for e in removed_dels
-                    if e.get("content") != "equality-deletes"
-                ]
-                # plan only files a new artifact can address: DV entries
-                # declare referenced-files; artifacts without the summary
-                # attach everywhere (executors filter by file_path)
-                refs: set[str] | None = set()
-                for e in pos_added:
-                    if e.get("referenced-files") is None:
-                        refs = None
-                        break
-                    refs.update(e["referenced-files"])
-                p_data = _split_manifest(snapshot_entries(parent))[0]
-                cand = [e for e in p_data if refs is None or e["path"] in refs]
-                parts.extend(
-                    _task_partitions(
-                        meta,
-                        [_bare_task(e) for e in cand],
-                        self._aschema,
-                        target_override=target,
-                        change_type="delete",
-                        commit_id=sid,
-                        include_pos=(new_paths, restated),
-                        row_lineage=self.row_lineage,
-                    )
-                )
-            if eq_added and parent is not None:
-                # COPIES of the memoized tasks: the lineage attachment
-                # below must not leak into the shared ptasks() map
-                tmap = {
-                    pth: {**t, "data-file": dict(t["data-file"])}
-                    for pth, t in ptasks().items()
-                }
-                frid_by_path = {
-                    e["path"]: e.get("first-row-id")
-                    for e in _split_manifest(snapshot_entries(parent))[0]
-                }
-                for t in tmap.values():
-                    t["data-file"].setdefault(
-                        "first-row-id",
-                        frid_by_path.get(t["data-file"]["path"]),
-                    )
-                for eqe in eq_added:
-                    eseq = eqe.get("sequence-number", 0)
-                    tasks = [
-                        t
-                        for t in tmap.values()
-                        if t["data-file"].get("sequence-number", 0) < eseq
-                    ]
-                    parts.extend(
-                        _task_partitions(
-                            meta,
-                            tasks,
-                            self._aschema,
-                            target_override=target,
-                            change_type="delete",
-                            commit_id=sid,
-                            include_eq=_eq_include_spec(meta, eqe),
-                            row_lineage=self.row_lineage,
-                        )
-                    )
+        return parts
 
     def commit(self, end: dict) -> None:
         pass  # offsets are snapshot ids; nothing to clean up
@@ -667,73 +438,12 @@ class IceliteStreamReader(DataSourceStreamReader):
     def read(self, partition):
         """Arrow-batched executor read: yields `pyarrow.RecordBatch`es
         (Spark 4 Python DataSource fast path — no per-row Python loop).
-        Columns resolve by FIELD ID against the file's write schema, so
-        renamed columns still read and later-added columns are NULL;
-        identity-partition columns fill from the manifest's partition
-        tuple (they live in the directory name, not the file)."""
+        Lineage-event range partitions are generated from metadata;
+        every file partition is a file scan task (_read_task_batches)."""
         if isinstance(partition, _RangeEventsPartition):
-            # metadata-only lineage events: generated, nothing opened
             yield from _range_event_batches(partition)
-            return
-        if isinstance(partition, _TaskPartition):
-            # MoR change-feed task (include_pos / include_eq restricted)
+        else:
             yield from _read_task_batches(partition)
-            return
-        if not getattr(partition, "path", ""):
-            return
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pf = pq.ParquetFile(partition.path)
-        avail = set(pf.schema_arrow.names)
-        fid_to_w = partition.fid_to_wname
-        tgt = partition.target_fields
-        aschema = partition.arrow_schema
-        change = getattr(partition, "change_type", None)
-        if aschema is None:  # arrow-unexpressible schema: row fallback
-            yield from _row_fallback(
-                pf, partition, avail,
-                (change, partition.commit_id) if change else (),
-            )
-            return
-        lineage = getattr(partition, "row_lineage", False)
-        need = sorted(
-            {
-                fid_to_w[fid]
-                for fid, _ in tgt
-                if fid in fid_to_w and fid_to_w[fid] in avail
-            }
-            | ({"_row_id"} if lineage and "_row_id" in avail else set())
-        )
-        ordinal = 0
-        for batch in pf.iter_batches(columns=need):
-            n = batch.num_rows
-            got = dict(zip(batch.schema.names, batch.columns))
-            arrays = []
-            for (fid, name), ftype in zip(tgt, aschema.types):
-                arrays.append(
-                    _project_column(
-                        got.get(fid_to_w.get(fid)), ftype, n,
-                        partition.partition_values.get(name),
-                    )
-                )
-            if lineage:
-                arrays.append(
-                    _lineage_array(
-                        got.get("_row_id"),
-                        partition.first_row_id,
-                        ordinal,
-                        n,
-                        None,
-                    )
-                )
-            ordinal += n
-            if change:
-                arrays.append(pa.array([change] * n, type=pa.string()))
-                arrays.append(
-                    pa.array([partition.commit_id] * n, type=pa.int64())
-                )
-            yield pa.RecordBatch.from_arrays(arrays, schema=aschema)
 
 
 def _lineage_array(stored, first_row_id, base_ordinal: int, n: int, sel):
@@ -776,45 +486,6 @@ def _project_column(arr, pa_type, n: int, pvalue=None):
     return pa.nulls(n, pa_type)
 
 
-def _row_fallback(pf, partition, avail, cdc_tail):
-    """Row-tuple fallback used when the planner couldn't build an arrow
-    schema (variant types, or no active session in the planner
-    subprocess). Carries v3 row lineage when requested: the stored
-    ``_row_id`` wins, else first-row-id + the row's ordinal."""
-    fid_to_w = partition.fid_to_wname
-    tgt = partition.target_fields
-    lineage = getattr(partition, "row_lineage", False)
-    frid = getattr(partition, "first_row_id", None)
-    ordinal = 0
-    for batch in pf.iter_batches():
-        cols = {
-            n: batch.column(i).to_pylist()
-            for i, n in enumerate(batch.schema.names)
-        }
-        stored = cols.get("_row_id") if lineage else None
-        for i in range(batch.num_rows):
-            lin = ()
-            if lineage:
-                rid = stored[i] if stored is not None else None
-                if rid is None and frid is not None:
-                    rid = frid + ordinal
-                lin = (rid,)
-            ordinal += 1
-            yield (
-                tuple(
-                    cols[fid_to_w[fid]][i]
-                    if fid in fid_to_w and fid_to_w[fid] in cols
-                    else _cast_partition_value(
-                        partition.partition_values.get(name),
-                        partition.partition_types.get(name),
-                    )
-                    for fid, name in tgt
-                )
-                + lin
-                + cdc_tail
-            )
-
-
 class IceliteStreamDataSource(DataSource):
     """spark.readStream.format("icelite").option(...) source.
 
@@ -834,12 +505,10 @@ class IceliteStreamDataSource(DataSource):
                 "`_row_id` bigint, `_change_type` string, "
                 "`_commit_snapshot_id` bigint"
             )
-        meta = _load_meta(self.options)
-        sid = meta["current-schema-id"]
-        cur = next(s for s in meta["schemas"] if s["schema-id"] == sid)
+        cur = _schema_doc(_load_meta(self.options))
         leg = is_legacy_schema(cur)
         cols = ", ".join(
-            f"`{n}` {spark_ddl_of(t, legacy=leg)}" for n, t in _schema_fields(meta)
+            f"`{f['name']}` {spark_ddl_of(f['type'], legacy=leg)}" for f in cur["fields"]
         )
         if str(self.options.get("row-lineage", "false")).lower() == "true":
             cols += ", `_row_id` bigint"
@@ -874,9 +543,11 @@ def json_offset(d: dict) -> str:  # debugging helper
 
 # ---------------------------------------------------------------- batch
 class _TaskPartition(InputPartition):
-    """One PlanTableScan file task: the data file plus exactly the delete
-    artifacts an independent reader must apply (resolved driver-side so
-    executors touch only storage). CDC additions: `change_type`/
+    """One file scan task (icelite.file_scan_task, the PlanTableScan task
+    shape): the data file plus exactly the delete artifacts an
+    independent reader must apply (resolved driver-side so executors
+    touch only storage). Every file partition of the stream source and
+    the batch reader is one of these. CDC additions: `change_type`/
     `commit_id` tag every surviving row as one change event;
     `include_pos` = (new tombstone paths, re-stated tombstone paths)
     restricts output to positions newly deleted by a commit;
@@ -930,7 +601,7 @@ def _task_partitions(
     target_override: list | None = None,
     **cdc,
 ) -> list[_TaskPartition]:
-    """Resolve PlanTableScan tasks into executor partitions: the data
+    """Resolve file scan tasks into executor partitions: the data
     file's write schema (field-id map) and each equality-delete file's
     (write name, field id) read spec, all from table metadata on the
     driver. `cdc` kwargs pass through to _TaskPartition."""
@@ -955,12 +626,7 @@ def _task_partitions(
         d = task["data-file"]
         dsid = d.get("schema-id")
         ws = by_sid.get(cur_sid if dsid is None else dsid, by_sid[cur_sid])
-        eq_read = []
-        for eq in task["equality-delete-files"]:
-            esid = eq.get("schema-id")
-            esid = cur_sid if esid is None else esid
-            eby_id = _fid_map(by_sid.get(esid, by_sid[cur_sid]))
-            eq_read.append([(eby_id[i], i) for i in eq.get("equality-ids", [])])
+        eq_read = [_eq_include_spec(meta, eq)[1] for eq in task["equality-delete-files"]]
         parts.append(
             _TaskPartition(
                 meta["location"],
@@ -977,12 +643,11 @@ def _task_partitions(
     return parts
 
 
-def _targeted_diff_tasks(entries: list[dict], masks: list[dict]) -> list[dict]:
-    """Plan-task shells for a targeted-diff commit's removed files, with
-    each file's addressing tombstone artifacts attached from the plan's
-    pre-filtered delete-mask-entries. The matching rules and task shape
-    come from icelite.file_scan_task — ONE source of truth with
-    plan_table_scan — applied to only the change-sized entry lists."""
+def _scan_tasks(entries: list[dict], masks: list[dict]) -> list[dict]:
+    """One file scan task per data entry, with the ``masks`` artifacts
+    that address it attached — the matching rules and task shape come
+    from icelite.file_scan_task, ONE source of truth with
+    plan_table_scan, applied to change-sized entry lists."""
     from ..format.icelite import file_scan_task
 
     pos_like = [d for d in masks if d.get("content") != "equality-deletes"]
@@ -990,30 +655,10 @@ def _targeted_diff_tasks(entries: list[dict], masks: list[dict]) -> list[dict]:
     return [file_scan_task(e, pos_like, eq_dels) for e in entries]
 
 
-def _bare_task(e: dict) -> dict:
-    """A plan-task shell for one manifest data entry with NO delete
-    artifacts attached — the include_pos CDC path reads raw parent rows
-    at exactly the newly-tombstoned ordinals, so ordinary tombstone
-    application must not interfere."""
-    return {
-        "data-file": {
-            "path": e["path"],
-            "record-count": e.get("record-count", 0),
-            "file-size-in-bytes": e.get("file-size-in-bytes", 0),
-            "partition": e.get("partition", {}),
-            "sequence-number": e.get("sequence-number", 0),
-            "schema-id": e.get("schema-id"),
-            "first-row-id": e.get("first-row-id"),
-        },
-        "position-delete-files": [],
-        "equality-delete-files": [],
-    }
-
-
 def _eq_include_spec(meta: dict, entry: dict) -> tuple[str, list[tuple[str, int]]]:
-    """(path, [(write-time name, field id)]) for a newly-added equality
-    delete file — the reader loads the tombstone by its own write names
-    and matches data columns by field id."""
+    """(path, [(write-time name, field id)]) for an equality delete file
+    — the reader loads the tombstone by its own write names and matches
+    data columns by field id."""
     by_sid = {s["schema-id"]: s for s in meta["schemas"]}
     cur_sid = meta["current-schema-id"]
     esid = entry.get("schema-id")
@@ -1049,38 +694,16 @@ class IceliteBatchReader(DataSourceReader):
             partition_filter=pfilter,
         )
         # row-lineage=true (v3): emit _row_id after the data columns —
-        # the DataFrame-API twin of SparkTable.scan(row_lineage=True).
-        # plan_table_scan payloads predate v3 lineage, so attach each
-        # entry's claimed range start from the resolved snapshot.
+        # the DataFrame-API twin of SparkTable.scan(row_lineage=True);
+        # each task's data file carries its claimed range start
         row_lineage = (
             str(options.get("row-lineage", "false")).lower() == "true"
         )
-        if row_lineage:
-            if meta.get("format-version", 2) < 3:
-                raise ValueError(
-                    "row-lineage=true requires format-version >= 3 "
-                    f"(table is v{meta.get('format-version', 2)})"
-                )
-            if options.get("snapshot-id"):
-                sid = int(options["snapshot-id"])
-            elif options.get("ref"):
-                sid = meta["refs"][options["ref"]]["snapshot-id"]
-            else:
-                sid = meta.get("current-snapshot-id")
-            from ..format.icelite import snapshot_entries
-
-            snap = next(
-                (s for s in meta["snapshots"] if s["snapshot-id"] == sid),
-                None,
+        if row_lineage and meta.get("format-version", 2) < 3:
+            raise ValueError(
+                "row-lineage=true requires format-version >= 3 "
+                f"(table is v{meta.get('format-version', 2)})"
             )
-            frid = {
-                e["path"]: e.get("first-row-id")
-                for e in snapshot_entries(snap)
-            }
-            for t in plan["plan-tasks"]:
-                t["data-file"]["first-row-id"] = frid.get(
-                    t["data-file"]["path"]
-                )
         self.parts: list[_TaskPartition] = _task_partitions(
             meta,
             plan["plan-tasks"],
@@ -1378,15 +1001,16 @@ class IceliteBatchWriter(DataSourceArrowWriter):
         tables get hive-style dirs), and returns the files' manifest
         entries (path/size/count/bounds/partition) as its commit
         message — data-sized work never touches the driver;
-      phase 2 (driver): commit() assembles the snapshot from the
-        collected entries and runs the optimistic-concurrency commit
-        loop against the catalog (CAS on the branch head, rebase +
-        retry on conflict — appends never conflict logically); abort()
-        removes the orphaned files.
+      phase 2 (driver): commit() hands the collected entries to
+        icelite's one optimistic commit loop (SparkTable._commit_files:
+        CAS on the branch head, rebase + retry on conflict — appends
+        never conflict logically); abort() removes the orphaned files.
 
     The writer validates the incoming schema against the table's
     CURRENT schema by name+type (callers cast first; silent coercion
-    would corrupt the field-id mapping)."""
+    would corrupt the field-id mapping), and every written file carries
+    the id of that schema: a RENAME COLUMN committed before this write
+    commits must not re-map the files' columns."""
 
     def __init__(self, options: dict, schema, overwrite: bool):
         from ..format.types import is_legacy_schema, spark_ddl_of
@@ -1396,8 +1020,8 @@ class IceliteBatchWriter(DataSourceArrowWriter):
         meta = _load_meta(options)
         self.location = meta["location"]
         self.commit_id = __import__("uuid").uuid4().hex
-        sid = meta["current-schema-id"]
-        cur = next(s for s in meta["schemas"] if s["schema-id"] == sid)
+        cur = _schema_doc(meta)
+        self.schema_id = cur["schema-id"]
         leg = is_legacy_schema(cur)
         want = {f["name"]: spark_ddl_of(f["type"], legacy=leg) for f in cur["fields"]}
         got = {f.name: f.dataType.simpleString() for f in schema.fields}
@@ -1470,56 +1094,18 @@ class IceliteBatchWriter(DataSourceArrowWriter):
                     "file-size-in-bytes": os.path.getsize(fpath),
                     "record-count": md.num_rows,
                     "partition": {k: str(v) for k, v in pvals.items()},
+                    "schema-id": self.schema_id,
                     "bounds": _file_bounds(md),
                 }
             )
         return _WriteMessage(entries)
 
-    def _table(self):
-        from ..format.icelite import SparkTable
-
-        levels = self.options["namespace"].split(".")
-        if self.options.get("rest-url"):
-            from ..rest.client import RestCatalogClient
-
-            cat = RestCatalogClient(self.options["rest-url"])
-        else:
-            from ..catalog.catalog import Catalog
-            from ..catalog.metastore import Metastore
-
-            cat = Catalog(Metastore(self.options["metastore"]))
-        # metadata-only handle: the commit path never touches .spark
-        return SparkTable(None, cat, self.options["warehouse"], levels, self.options["table"])
-
     def commit(self, messages) -> None:
-        from ..catalog.catalog import CommitFailedException
-        from ..format.icelite import _next_seq
-
-        new_entries = [e for m in messages if m is not None for e in m.entries]
-        t = self._table()
-        last_err = None
-        for _ in range(4):  # optimistic-concurrency retry, like append()
-            meta = t.metadata()
-            for e in new_entries:
-                e["schema-id"] = meta["current-schema-id"]
-                e["sequence-number"] = _next_seq(meta)
-            if self.overwrite:
-                manifest = list(new_entries)
-                op = "overwrite"
-            else:
-                manifest = None  # pure-ADD fast path (appended=)
-                op = "append"
-            try:
-                t._commit_snapshot(
-                    meta,
-                    manifest,
-                    op,
-                    appended=None if manifest is not None else new_entries,
-                )
-                return
-            except CommitFailedException as e:  # lost the CAS: rebase
-                last_err = e
-        raise last_err
+        _table(self.options)._commit_files(
+            [e for m in messages if m is not None for e in m.entries],
+            "overwrite" if self.overwrite else "append",
+            replace=self.overwrite,
+        )
 
     def abort(self, messages) -> None:
         import shutil
@@ -1549,42 +1135,28 @@ class IceliteStreamSinkWriter(IceliteBatchWriter, DataSourceStreamArrowWriter):
         self.stream_id = str(options.get("stream-id", "default"))
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803 (API)
-        from ..catalog.catalog import CommitFailedException
-        from ..format.icelite import _next_seq
+        entries = [e for m in messages if m is not None for e in m.entries]
+        if not entries:
+            return
 
-        new_entries = [e for m in messages if m is not None for e in m.entries]
-        t = self._table()
-        last_err = None
-        for _ in range(4):
-            meta = t.metadata()
+        def replayed(meta) -> bool:
             done = [
                 s["summary"].get("streaming-epoch")
                 for s in meta["snapshots"]
                 if s["summary"].get("streaming-stream-id") == self.stream_id
             ]
-            if done and batchId <= max(done):
-                self.abort(messages, batchId)  # replayed epoch: files are dupes
-                return
-            if not new_entries:
-                return
-            for e in new_entries:
-                e["schema-id"] = meta["current-schema-id"]
-                e["sequence-number"] = _next_seq(meta)
-            try:
-                t._commit_snapshot(
-                    meta,
-                    None,
-                    "append",
-                    appended=new_entries,
-                    extra_summary={
-                        "streaming-stream-id": self.stream_id,
-                        "streaming-epoch": batchId,
-                    },
-                )
-                return
-            except CommitFailedException as e:
-                last_err = e
-        raise last_err
+            return bool(done) and batchId <= max(done)
+
+        committed = _table(self.options)._commit_files(
+            entries,
+            extra_summary={
+                "streaming-stream-id": self.stream_id,
+                "streaming-epoch": batchId,
+            },
+            skip=replayed,
+        )
+        if committed is None:
+            self.abort(messages, batchId)  # replayed epoch: files are dupes
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803 (API)
         for m in messages or []:

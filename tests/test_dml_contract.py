@@ -174,3 +174,29 @@ def test_merge_fails_on_a_concurrent_append(spark, catalog, monkeypatch, mode):
         t.merge(src, "t.id = s.id", matched_update={"v": "s.v"}, mode=mode)
     monkeypatch.setattr(catalog, "load_table", real)
     assert sorted(tuple(r) for r in t.scan().collect()) == [(1, 1.0), (2, 9.0)]
+
+
+@pytest.mark.parametrize("fv", [2, 3])
+@pytest.mark.parametrize("mode", MODES)
+def test_update_commits_operation_overwrite(spark, catalog, mode, fv):
+    """Iceberg's operation set is closed (append, replace, overwrite,
+    delete): an UPDATE commits ``overwrite`` in every mode."""
+    t = _table(spark, catalog, f"opname_{mode[:3]}_{fv}", [(1, 10), (2, 20)], "id int, x int", fv)
+    t.update_where("id = 1", {"x": "11"}, mode=mode)
+    assert t.metadata()["snapshots"][-1]["summary"]["operation"] == "overwrite"
+    assert sorted(tuple(r) for r in t.scan().collect()) == [(1, 11), (2, 20)]
+
+
+@pytest.mark.parametrize("fv", [2, 3])
+@pytest.mark.parametrize("mode", MODES)
+def test_statement_that_changes_nothing_commits_nothing(spark, catalog, mode, fv):
+    """A DELETE, UPDATE or MERGE that matches no row and inserts none
+    writes no snapshot, in every mode."""
+    t = _table(spark, catalog, f"noop_{mode[:3]}_{fv}", [(1, 10), (2, 20)], "id int, x int", fv)
+    n_snaps = len(t.metadata()["snapshots"])
+    src = spark.createDataFrame([(9, 90)], "id int, x int")
+    t.delete_where("id > 5", mode=mode)
+    t.update_where("id > 5", {"x": "0"}, mode=mode)
+    t.merge(src, "t.id = s.id", matched_update={"x": "s.x"}, not_matched_insert=False, mode=mode)
+    assert len(t.metadata()["snapshots"]) == n_snaps
+    assert sorted(tuple(r) for r in t.scan().collect()) == [(1, 10), (2, 20)]

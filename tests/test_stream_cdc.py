@@ -774,3 +774,135 @@ def test_lineage_events_stream_cow_rewrite_is_targeted(spark, tmp_path):
         kinds.setdefault(ct, set()).add(rid)
     # all 6 parent rows of file B emit deletes; 4 survivors re-insert
     assert len(kinds["delete"]) >= 6 and 7 in kinds["delete"]
+
+
+# ---------------------------------------------------------------------------
+# one append commit, one lineage walk, one change planner
+# ---------------------------------------------------------------------------
+def test_writers_keep_the_write_schema_across_a_rename(spark, tmp_path):
+    """A RENAME COLUMN that lands between a DataSource write and its
+    commit must not re-map the written files: they keep the schema id
+    they were written under, so the renamed column reads back its values
+    through the engine scan and the DataSource reader — for the batch
+    writer and the streaming sink alike."""
+    import pyarrow as pa
+
+    from lakekeeper_spark.streaming.source import (
+        IceliteBatchWriter,
+        IceliteStreamSinkWriter,
+    )
+
+    spark.dataSource.register(IceliteStreamDataSource)
+    mpath = str(tmp_path / "m.db")
+    cat = Catalog(Metastore(mpath))
+    cat.create_warehouse("wh", str(tmp_path / "wh"))
+    cat.create_namespace("wh", ["r"])
+    schema = spark.createDataFrame([], "k long, v double").schema
+    cat.create_table("wh", ["r"], "t", struct_to_schema(schema))
+    opts = {"metastore": mpath, "warehouse": "wh", "namespace": "r", "table": "t"}
+
+    def batch(ks):
+        return pa.RecordBatch.from_pydict(
+            {"k": ks, "v": [float(k) for k in ks]},
+            schema=pa.schema([("k", pa.int64()), ("v", pa.float64())]),
+        )
+
+    writer = IceliteBatchWriter(opts, schema, overwrite=False)
+    sink = IceliteStreamSinkWriter(opts, schema, overwrite=False)
+    written = writer.write(iter([batch([1, 2])]))
+    streamed = sink.write(iter([batch([3])]))
+    t = SparkTable(spark, cat, "wh", ["r"], "t")
+    t.rename_column("v", "w")
+    writer.commit([written])
+    sink.commit([streamed], 0)
+
+    want = [(1, 1.0), (2, 2.0), (3, 3.0)]
+    assert sorted(map(tuple, t.scan().collect())) == want
+    got = spark.read.format("icelite").options(**opts).load()
+    assert got.columns == ["k", "w"]
+    assert sorted(map(tuple, got.collect())) == want
+
+
+def test_changelog_rejects_a_from_that_is_not_an_ancestor(spark, feed):
+    """changelog(from_snapshot_id=...) walks the same lineage as
+    plan_lineage_events and the stream source: a rolled-back or unknown
+    `from` raises instead of replaying the whole history, while a `from`
+    that was expired under a retained child still bounds the range."""
+    import time
+
+    cat, t, mpath = feed
+    row = "k long, v double"
+    t.append(spark.createDataFrame([(100, 1.0)], row))
+    rolled_back = t.metadata()["current-snapshot-id"]
+    first = t.metadata()["snapshots"][0]["snapshot-id"]
+    t.rollback_to_snapshot(first)
+    t.append(spark.createDataFrame([(200, 2.0)], row))
+    for bad in (rolled_back, 999999):
+        with pytest.raises(ValueError, match="not an ancestor"):
+            t.changelog(from_snapshot_id=bad)
+
+    t.append(spark.createDataFrame([(300, 3.0)], row))
+    child, head = [s["snapshot-id"] for s in t.metadata()["snapshots"][-2:]]
+    t.expire_snapshots(older_than_ms=int(time.time() * 1000) + 10_000, retain_last=2)
+    assert first not in {s["snapshot-id"] for s in t.metadata()["snapshots"]}
+    events = t.changelog(from_snapshot_id=first).collect()
+    assert {r["_commit_snapshot_id"] for r in events} == {child, head}
+    assert [(r["k"], r["_change_type"]) for r in events if r["_commit_snapshot_id"] == head] == [
+        (300, "insert")
+    ]
+
+
+@pytest.mark.parametrize(
+    "fv, lineage", [(2, False), (3, False), (3, True)], ids=["v2", "v3", "v3-lineage"]
+)
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_stream_equals_changelog(spark, tmp_path, mode, fv, lineage):
+    """The change feed and SparkTable.changelog read the same change
+    groups (icelite.plan_changes), so their events are equal row for row
+    over DELETE, UPDATE and MERGE in each mode, an equality delete
+    followed by a re-insert of the same key, and v3 deletion vectors that
+    restate earlier positions."""
+    spark.dataSource.register(IceliteStreamDataSource)
+    mpath = str(tmp_path / "m.db")
+    cat = Catalog(Metastore(mpath))
+    cat.create_warehouse("wh", str(tmp_path / "wh"))
+    cat.create_namespace("wh", ["p"])
+    row = "k long, v double"
+    df = spark.createDataFrame([(i, float(i)) for i in range(20)], row)
+    cat.create_table("wh", ["p"], "t", struct_to_schema(df.schema), format_version=fv)
+    t = SparkTable(spark, cat, "wh", ["p"], "t")
+    t.append(df.coalesce(1))
+    t.delete_where("k < 3", mode=mode)
+    t.update_where("k = 10", {"v": "v + 100"}, mode=mode)
+    src = spark.createDataFrame([(11, -11.0), (50, 50.0)], row)
+    t.merge(src, "t.k = s.k", matched_update={"v": "s.v"}, mode=mode)
+    t.delete_where("k IN (4, 5)", mode="equality", equality_cols=["k"])
+    t.append(spark.createDataFrame([(4, 400.0)], row))
+    t.delete_where("k >= 18", mode="merge-on-read")
+    t.delete_where("k = 12", mode="merge-on-read")  # v3: restates k >= 18
+
+    collected: dict[int, list] = {}
+
+    def collect(batch, batch_id):
+        collected[batch_id] = batch.collect()
+
+    (
+        spark.readStream.format("icelite")
+        .option("metastore", mpath)
+        .option("warehouse", "wh")
+        .option("namespace", "p")
+        .option("table", "t")
+        .option("change-feed", "true")
+        .option("row-lineage", str(lineage).lower())
+        .load()
+        .writeStream.foreachBatch(collect)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    streamed = sorted(map(tuple, _events(collected)))
+    assert streamed == sorted(map(tuple, t.changelog(row_lineage=lineage).collect()))
+    # the restating deletion vector emits only its new row
+    last = t.metadata()["current-snapshot-id"]
+    assert [r[0] for r in streamed if r[-1] == last] == [12]
