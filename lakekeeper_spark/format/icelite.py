@@ -556,6 +556,30 @@ def _main_lineage(
     return out
 
 
+def _commit_diff(
+    by_id: dict[int, dict[str, Any]], s: dict[str, Any]
+) -> tuple[dict[str, Any] | None, list[dict[str, Any]], list[dict[str, Any]]]:
+    """(parent, entries added by ``s``, entries removed from the parent)
+    for a commit of a _main_lineage walk. A parent that was expired (the
+    ``from`` boundary the walk lets through) cannot be diffed against:
+    an append's added files are still known — the entries stamped with
+    its own sequence number, the manifest writer's ADDED rule — but any
+    other commit may remove files or mask rows only the parent held, so
+    it raises rather than report the files it carries as its inserts."""
+    pid = s.get("parent-snapshot-id")
+    parent = by_id.get(pid)
+    if pid is None or parent is not None:
+        return (parent, *diff_snapshots(parent, s))
+    if s["summary"].get("operation") != "append":
+        raise ValueError(
+            f"parent {pid} of {s['summary'].get('operation')!r} snapshot "
+            f"{s['snapshot-id']} expired: its changes cannot be "
+            "reconstructed — pass a retained from_snapshot_id"
+        )
+    seq = s["sequence-number"]
+    return None, [e for e in snapshot_entries(s) if e.get("sequence-number", seq) == seq], []
+
+
 def _removed_masks(
     removed: list[dict[str, Any]], parent_deletes: list[dict[str, Any]]
 ) -> list[dict[str, Any]]:
@@ -610,9 +634,8 @@ def plan_changes(
     for s in _main_lineage(meta, from_id, to_id):
         if s["summary"].get("operation") == "replace":
             continue
-        parent = by_id.get(s.get("parent-snapshot-id"))
         # descriptor-level diff: manifests shared with the parent never open
-        added, removed = diff_snapshots(parent, s)
+        parent, added, removed = _commit_diff(by_id, s)
         added_data, added_dels = _split_manifest(added)
         removed_data, removed_dels = _split_manifest(removed)
         psid = parent.get("schema-id") if parent else None
@@ -717,11 +740,10 @@ def plan_lineage_events(
             continue
         sid = s["snapshot-id"]
         pid = s.get("parent-snapshot-id")
-        parent = by_id.get(pid)
         # descriptor-level diff: manifests shared with the parent are
         # never opened, so a 3-file rewrite on a 100k-file table plans
         # from O(changed manifests), not O(table)
-        added, removed = diff_snapshots(parent, s)
+        parent, added, removed = _commit_diff(by_id, s)
         added_data, added_dels = _split_manifest(added)
         removed_data = _split_manifest(removed)[0]
         del_ranges = s["summary"].get("deleted-row-id-ranges")
@@ -1958,7 +1980,6 @@ class SparkTable:
     def _commit_files(
         self,
         entries: list[dict[str, Any]],
-        operation: str = "append",
         *,
         replace: bool = False,
         branch: str = MAIN,
@@ -1977,7 +1998,7 @@ class SparkTable:
         written under is never touched.
 
         ``replace`` commits ``entries`` as the table's whole inventory
-        (an overwrite); otherwise they are added through the pure-ADD
+        (an ``overwrite`` snapshot); otherwise they are added through the pure-ADD
         path, which carries parent manifests by descriptor — O(delta).
         ``skip(meta)`` is checked against each attempt's freshly loaded
         metadata: when it holds, nothing commits and None is returned."""
@@ -1995,7 +2016,7 @@ class SparkTable:
                 return self._commit_snapshot(
                     meta,
                     list(entries) if replace else None,
-                    operation,
+                    "overwrite" if replace else "append",
                     branch,
                     extra_summary=extra_summary,
                     appended=None if replace else entries,
@@ -2365,7 +2386,9 @@ class SparkTable:
         ``from_snapshot_id`` must be an ancestor of the target snapshot: a
         rolled-back or unknown id raises ValueError, as does history
         expired inside the range. A ``from`` snapshot that was expired
-        while its child was retained still works.
+        while its child was retained still works when that child is an
+        append (its own files are known by sequence number); any other
+        child raises, since what it removed or masked was in the parent.
 
         ``identifier_columns`` opts into Iceberg's
         create_changelog_view(identifier_columns=...) semantics: carry-over

@@ -114,10 +114,6 @@ def _table(options: dict):
     )
 
 
-def _load_meta(options: dict) -> dict[str, Any]:
-    return _table(options).metadata()
-
-
 def _schema_doc(meta: dict[str, Any]) -> dict[str, Any]:
     return next(s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"])
 
@@ -272,14 +268,14 @@ class IceliteStreamReader(DataSourceStreamReader):
         return {"snapshot-id": 0}
 
     def latestOffset(self) -> dict:
-        meta = _load_meta(self.options)
+        meta = _table(self.options).metadata()
         ref = meta["refs"].get("main")
         return {"snapshot-id": ref["snapshot-id"] if ref else 0}
 
     def partitions(self, start: dict, end: dict):
         from ..format.icelite import plan_changes
 
-        meta = _load_meta(self.options)
+        meta = _table(self.options).metadata()
         # offset 0 is the start of the stream, before the first snapshot
         lo, hi = start["snapshot-id"] or None, end["snapshot-id"]
         if self.row_lineage and meta.get("format-version", 2) < 3:
@@ -320,7 +316,7 @@ class IceliteStreamReader(DataSourceStreamReader):
         unless skip-delete-snapshots is set (Iceberg parity). The
         descriptor-level diff opens only the manifests NEW to each commit
         (O(delta) per micro-batch)."""
-        from ..format.icelite import _main_lineage, _split_manifest, diff_snapshots
+        from ..format.icelite import _commit_diff, _main_lineage, _split_manifest
 
         by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
         out: list[dict] = []
@@ -334,8 +330,7 @@ class IceliteStreamReader(DataSourceStreamReader):
                     f"{snap['snapshot-id']}; set skip-delete-snapshots=true "
                     "to skip non-append commits (Iceberg parity)"
                 )
-            parent = by_id.get(snap.get("parent-snapshot-id"))
-            out += _split_manifest(diff_snapshots(parent, snap)[0])[0]
+            out += _split_manifest(_commit_diff(by_id, snap)[1])[0]
         return out
 
     def _group_parts(self, meta, g, target) -> list["_TaskPartition"]:
@@ -505,7 +500,7 @@ class IceliteStreamDataSource(DataSource):
                 "`_row_id` bigint, `_change_type` string, "
                 "`_commit_snapshot_id` bigint"
             )
-        cur = _schema_doc(_load_meta(self.options))
+        cur = _schema_doc(_table(self.options).metadata())
         leg = is_legacy_schema(cur)
         cols = ", ".join(
             f"`{f['name']}` {spark_ddl_of(f['type'], legacy=leg)}" for f in cur["fields"]
@@ -678,7 +673,7 @@ class IceliteBatchReader(DataSourceReader):
         from ..format.icelite import plan_table_scan
 
         self.options = dict(options)
-        meta = _load_meta(options)
+        meta = _table(options).metadata()
         self.location = meta["location"]
         pfilter = (
             json.loads(options["partition-filter"])
@@ -1017,7 +1012,7 @@ class IceliteBatchWriter(DataSourceArrowWriter):
 
         self.options = dict(options)
         self.overwrite = overwrite
-        meta = _load_meta(options)
+        meta = _table(options).metadata()
         self.location = meta["location"]
         self.commit_id = __import__("uuid").uuid4().hex
         cur = _schema_doc(meta)
@@ -1103,7 +1098,6 @@ class IceliteBatchWriter(DataSourceArrowWriter):
     def commit(self, messages) -> None:
         _table(self.options)._commit_files(
             [e for m in messages if m is not None for e in m.entries],
-            "overwrite" if self.overwrite else "append",
             replace=self.overwrite,
         )
 

@@ -846,10 +846,17 @@ def test_changelog_rejects_a_from_that_is_not_an_ancestor(spark, feed):
     t.expire_snapshots(older_than_ms=int(time.time() * 1000) + 10_000, retain_last=2)
     assert first not in {s["snapshot-id"] for s in t.metadata()["snapshots"]}
     events = t.changelog(from_snapshot_id=first).collect()
-    assert {r["_commit_snapshot_id"] for r in events} == {child, head}
-    assert [(r["k"], r["_change_type"]) for r in events if r["_commit_snapshot_id"] == head] == [
-        (300, "insert")
-    ]
+    assert sorted((r["_commit_snapshot_id"], r["k"], r["_change_type"]) for r in events) == sorted(
+        [(child, 200, "insert"), (head, 300, "insert")]
+    )
+
+    # a non-append child of an expired `from` removed or masked rows only
+    # the parent held: it raises instead of reporting its carried rows
+    t.delete_where("k = 5", mode="merge-on-read")
+    t.expire_snapshots(older_than_ms=int(time.time() * 1000) + 10_000, retain_last=1)
+    (only,) = t.metadata()["snapshots"]
+    with pytest.raises(ValueError, match="expired"):
+        t.changelog(from_snapshot_id=only["parent-snapshot-id"])
 
 
 @pytest.mark.parametrize(
