@@ -98,6 +98,11 @@ _V3_ONLY_TYPES = frozenset(
 )
 
 
+#: snapshot keys of retired layouts: ``manifest`` was an inline entry
+#: list, replaced by ``manifests`` descriptors over Avro manifest files
+_RETIRED_SNAPSHOT_KEYS = frozenset({"manifest"})
+
+
 #: Iceberg reserved metadata column names (MetadataColumns + the v3 row
 #: lineage pair + the changelog view columns): a data column with one of
 #: these names would shadow the engine-produced column in scans,
@@ -454,6 +459,14 @@ def _apply_update(  # noqa: C901 - intentionally a flat 24-way dispatch
         meta["default-sort-order-id"] = oid
     elif action == "add-snapshot":
         snap = _deep_copy(upd["snapshot"])
+        retired = _RETIRED_SNAPSHOT_KEYS.intersection(snap)
+        if retired:
+            # an inline entry list is no longer read by anything: a
+            # snapshot carrying one would plan as empty, so refuse it
+            raise CommitValidationError(
+                f"add-snapshot: {sorted(retired)} is not supported; a "
+                "snapshot lists its files through `manifests` descriptors"
+            )
         if any(s["snapshot-id"] == snap["snapshot-id"] for s in meta["snapshots"]):
             raise CommitValidationError(f"snapshot-id {snap['snapshot-id']} already exists")
         seq = snap.get("sequence-number")
@@ -479,58 +492,33 @@ def _apply_update(  # noqa: C901 - intentionally a flat 24-way dispatch
                     f"table's next-row-id {base} (row-id ranges must not "
                     "overlap)"
                 )
-            # every data file in the new manifest that lacks a
-            # first-row-id gets one — both files ADDED by this commit and
-            # files carried forward from a pre-v3 parent (the spec
-            # directs writers to assign first_row_id to data files
-            # lacking one whenever a new manifest is written, so upgraded
-            # tables converge to non-null _row_id without rewriting
-            # bytes; add-snapshot _deep_copy isolates these entries, so
-            # the PARENT snapshot's manifest still reads null — time
-            # travel is unaffected). Every assigned file claims a range —
-            # including files that materialize some/all row ids as a
-            # physical column (spec inheritance is PER ROW: a null stored
-            # _row_id inherits first-row-id + position, a non-null one
-            # wins; unused ids in a claimed range are simply never
-            # observed).
+            # every data manifest whose files lack a first-row-id gets a
+            # base id from its descriptor's ``null-id-rows`` count: both
+            # files ADDED by this commit and files carried forward from a
+            # pre-v3 parent (the spec directs writers to assign
+            # first_row_id to data files lacking one whenever a new
+            # manifest is written, so upgraded tables converge to non-null
+            # _row_id without rewriting bytes). O(manifests) work with no
+            # storage read, the v3 spec's manifest-list first_row_id
+            # inheritance; per-entry materialization happens lazily at
+            # read (iceberg_manifests.overlay_entries), so the same
+            # manifest file read under the PARENT snapshot still yields
+            # null ids and time travel is unaffected. Every assigned file
+            # claims a range, including files that materialize some or
+            # all row ids as a physical column (spec inheritance is PER
+            # ROW: a null stored _row_id inherits first-row-id +
+            # position, a non-null one wins; unused ids in a claimed
+            # range are simply never observed).
             running = frid
-            if "manifests" in snap:
-                # out-of-line manifests (round 16): the engine assigns
-                # PER-MANIFEST base ids from each descriptor's
-                # ``null-id-rows`` count — O(manifests) work with no
-                # storage read, exactly the v3 spec's manifest-list
-                # first_row_id inheritance. Per-entry materialization
-                # happens lazily at read (iceberg_manifests.
-                # overlay_entries), so the same manifest file read under
-                # the PARENT snapshot still yields null ids — time
-                # travel unaffected, no _deep_copy of entries needed.
-                for d in snap["manifests"]:
-                    if d.get("content") != "data":
-                        continue  # delete manifests carry no row ids
-                    if d.get("first-row-id") is not None:
-                        continue  # carried: keeps its assigned base
-                    nid = int(d.get("null-id-rows", 0))
-                    if nid:
-                        d["first-row-id"] = running
-                        running += nid
-            else:
-                for e in snap.get("manifest", []):
-                    if e.get("content", "data") != "data":
-                        continue  # delete files carry no row ids
-                    if e.get("first-row-id") is None:
-                        rc = e.get("record-count")
-                        if rc is None:
-                            # a defaulted 0 would make the NEXT file's
-                            # range overlap this file's inherited ids —
-                            # the same invariant the stale-first-row-id
-                            # check above rejects
-                            raise CommitValidationError(
-                                "add-snapshot: v3 data file "
-                                f"{e.get('path')!r} has no record-count — "
-                                "row-id range assignment requires it"
-                            )
-                        e["first-row-id"] = running
-                        running += int(rc)
+            for d in snap.get("manifests", []):
+                if d.get("content") != "data":
+                    continue  # delete manifests carry no row ids
+                if d.get("first-row-id") is not None:
+                    continue  # carried: keeps its assigned base
+                nid = int(d.get("null-id-rows", 0))
+                if nid:
+                    d["first-row-id"] = running
+                    running += nid
             meta["next-row-id"] = max(base, running)
         meta["snapshots"].append(snap)
     elif action == "set-snapshot-ref":

@@ -15,10 +15,11 @@ crates/iceberg-ext/src/spec/mod.rs re-exports Manifest/ManifestList):
   - data files and delete files land in SEPARATE manifests
     (``content`` 0 vs 1) as the spec requires.
 
-The engine's inline JSON ``manifest`` key stays the authoritative copy
-(documented vendor extension); these files are the interop surface a
-stock Iceberg reader parses. format/avro.py is the clean-room Avro
-encoder they ride on.
+A snapshot holds only the descriptors of its manifests. Each manifest
+OCF carries the spec records (the interop surface a stock Iceberg
+reader parses) and, in its header, the engine's lossless JSON entry
+list, the authoritative copy icelite reads. format/avro.py is the
+clean-room Avro encoder they ride on.
 """
 
 from __future__ import annotations
@@ -352,8 +353,8 @@ def _dv_entry_records(
 
 # ------------------------------------------------ out-of-line manifest store
 #
-# Round 16: snapshots no longer embed their file inventory in the table
-# metadata JSON. Each snapshot carries a small ``manifests`` DESCRIPTOR
+# Snapshots do not embed their file inventory in the table metadata
+# JSON. Each snapshot carries a small ``manifests`` DESCRIPTOR
 # list; the entries themselves live in immutable Avro manifest OCFs that
 # UNCHANGED commits reference without rewriting (real Iceberg's shape:
 # an append writes ONE new manifest and a manifest list that points at
@@ -476,8 +477,7 @@ def write_manifest_file(
     if kind == "data":
         # v3 row-id inheritance charges null-id files by record-count; a
         # missing count would default to 0 and make the NEXT file's
-        # range overlap this one's — the same invariant the commit
-        # engine's inline branch rejects (catalog/commit.py add-snapshot)
+        # range overlap this one's
         bad = next(
             (
                 e
@@ -694,8 +694,8 @@ def overlay_entries(
     add-snapshot, O(manifests) work) seeds a running offset consumed by
     data entries that stored none — exactly the Iceberg v3 lazy
     assignment rule, scoped per manifest. Entries with an explicit id
-    keep it and consume nothing (matching the engine's historical
-    inline assignment). Copies entries it changes; shares the rest."""
+    keep it and consume nothing. Copies entries it changes; shares the
+    rest."""
     frid = desc.get("first-row-id")
     if frid is None or desc.get("content") != "data":
         return list(raw)
@@ -709,97 +709,10 @@ def overlay_entries(
     return out
 
 
-def write_snapshot_manifests(
-    meta: dict[str, Any], snapshot: dict[str, Any], out_dir: str
-) -> str:
-    """Write the snapshot's REAL Avro manifests + manifest list under
-    ``out_dir``; returns the manifest-list path. Data and delete entries
-    go to separate manifests (spec: a manifest's ``content`` is uniform).
-    Cost is metadata-sized: O(files in snapshot), no data read.
-
-    LEGACY path: only used for snapshots that still carry the inline
-    ``manifest`` vendor key (hand-built test snapshots / pre-round-16
-    metadata); engine commits write incremental manifests through
-    write_manifest_file + write_manifest_list_file instead."""
-    import os
-
-    schema = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )
-    spec = next(
-        (s for s in meta["partition-specs"] if s["spec-id"] == meta["default-spec-id"]),
-        {"spec-id": 0, "fields": []},
-    )
-    pfields, ptypes = _partition_avro_fields(spec, schema)
-    entry_schema = manifest_entry_schema(pfields)
-    sid = snapshot["snapshot-id"]
-    seq_to_sid = {
-        s.get("sequence-number", 0): s["snapshot-id"]
-        for s in meta.get("snapshots", [])
-    }
-
-    groups: dict[int, list[dict[str, Any]]] = {}
-    for e in snapshot.get("manifest", []):
-        content = 0 if _CONTENT_OF.get(e.get("content"), 0) == 0 else 1
-        groups.setdefault(content, []).append(e)
-
-    mf_rows = []
-    for content, entries in sorted(groups.items()):
-        mpath = os.path.join(out_dir, f"m{content}-{sid}-{len(entries)}.avro")
-        records = [
-            rec
-            for e in entries
-            for rec in _dv_entry_records(
-                _entry_record(e, snapshot, schema, ptypes, seq_to_sid), e
-            )
-        ]
-        write_ocf(
-            mpath,
-            entry_schema,
-            records,
-            metadata={
-                "schema-id": str(meta["current-schema-id"]),
-                "partition-spec-id": str(spec["spec-id"]),
-                "format-version": str(meta.get("format-version", 2)),
-                "content": "data" if content == 0 else "deletes",
-            },
-        )
-        seqs = [r["sequence_number"] for r in records]
-        added = [r for r in records if r["status"] == 1]
-        existing = [r for r in records if r["status"] == 0]
-        mf_rows.append(
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": spec["spec-id"],
-                "content": content,
-                "sequence_number": snapshot["sequence-number"],
-                "min_sequence_number": min(seqs, default=snapshot["sequence-number"]),
-                "added_snapshot_id": sid,
-                "added_files_count": len(added),
-                "existing_files_count": len(existing),
-                "deleted_files_count": 0,
-                "added_rows_count": sum(r["data_file"]["record_count"] for r in added),
-                "existing_rows_count": sum(
-                    r["data_file"]["record_count"] for r in existing
-                ),
-                "deleted_rows_count": 0,
-                "partitions": None,
-                "key_metadata": None,
-            }
-        )
-    list_path = os.path.join(out_dir, f"snap-{sid}.avro")
-    write_ocf(
-        list_path,
-        MANIFEST_FILE_SCHEMA,
-        mf_rows,
-        metadata={
-            "snapshot-id": str(sid),
-            "sequence-number": str(snapshot["sequence-number"]),
-            "format-version": str(meta.get("format-version", 2)),
-        },
-    )
-    return list_path
+def manifest_entries(desc: dict[str, Any]) -> list[dict[str, Any]]:
+    """The engine entries of the manifest ``desc`` names, with its v3
+    first-row-id inheritance materialized (load + overlay)."""
+    return overlay_entries(desc, load_manifest_entries(desc["path"]))
 
 
 # ----------------------------------------------------------------- readers
@@ -814,10 +727,10 @@ def read_manifest(path: str) -> list[dict[str, Any]]:
 
 
 def mirrors_inline(snapshot: dict[str, Any]) -> bool:
-    """True when the snapshot's Avro manifest-list + manifests decode to
-    the same file inventory as the inline ``manifest`` vendor copy
-    (path, counts, sizes, sequence numbers, delete kind, equality ids,
-    partition values)."""
+    """True when the snapshot's spec Avro manifest-list + manifest
+    records decode to the same file inventory as the engine entries its
+    manifests carry in their OCF headers (path, counts, sizes, sequence
+    numbers, delete kind, equality ids, partition values)."""
 
     def key(e: dict[str, Any]):
         content = e.get("content")
@@ -843,27 +756,17 @@ def mirrors_inline(snapshot: dict[str, Any]) -> bool:
 
     try:
         decoded = entries_from_manifest_list(snapshot["manifest-list"])
+        engine = [e for d in snapshot.get("manifests", []) for e in manifest_entries(d)]
     except (OSError, ValueError, EOFError, KeyError):
         return False
-    if "manifest" in snapshot:
-        inline = snapshot["manifest"]
-    else:  # out-of-line snapshots: the engine copy lives in the OCFs
-        try:
-            inline = [
-                e
-                for d in snapshot.get("manifests", [])
-                for e in overlay_entries(d, load_manifest_entries(d["path"]))
-            ]
-        except (OSError, ValueError, EOFError, KeyError):
-            return False
-    return sorted(key(e) for e in decoded) == sorted(key(e) for e in inline)
+    return sorted(key(e) for e in decoded) == sorted(key(e) for e in engine)
 
 
 def entries_from_manifest_list(path: str) -> list[dict[str, Any]]:
-    """Decode a manifest-list + its manifests back into ENGINE-shaped
-    entries (path/record-count/content/equality-ids/partition), the
-    inverse of write_snapshot_manifests — used to prove the Avro files
-    carry the same inventory as the inline manifest."""
+    """Decode a manifest-list + its manifests' spec records back into
+    ENGINE-shaped entries (path/record-count/content/equality-ids/
+    partition), the inverse of write_manifest_file's record encoding —
+    used to prove the Avro records carry the engine's inventory."""
     out = []
     dv_by_path: dict[str, dict[str, Any]] = {}
     for mf in read_manifest_list(path):

@@ -45,7 +45,7 @@ import os
 import time
 import uuid
 from pathlib import Path
-from typing import Any, Callable
+from typing import Any, Callable, Iterable
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,6 +54,7 @@ from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 from ..catalog.catalog import Catalog, CatalogError, NoSuchEntity, NotModified
 from ..functions.localframe import local_df
+from .iceberg_manifests import manifest_entries
 from .types import (
     _SPARK_TO_ICEBERG as _ICEBERG_PRIM,
 )
@@ -321,12 +322,10 @@ def _split_manifest(
 
 
 # ---------------------------------------------------------------------
-# out-of-line manifests (round 16): a snapshot carries a ``manifests``
-# descriptor list; entries live in immutable Avro manifest files that
-# unchanged commits REUSE (format/iceberg_manifests.py store layer).
-# Every reader goes through these helpers, which also accept the legacy
-# inline ``manifest`` key (hand-built test snapshots, pre-round-16
-# metadata blobs) so old tables stay readable.
+# out-of-line manifests: a snapshot carries a ``manifests`` descriptor
+# list; entries live in immutable Avro manifest files that unchanged
+# commits REUSE (format/iceberg_manifests.py store layer). Every reader
+# goes through these helpers.
 # ---------------------------------------------------------------------
 def snapshot_manifests(snap: dict[str, Any] | None) -> list[dict[str, Any]]:
     return (snap or {}).get("manifests") or []
@@ -338,47 +337,37 @@ def snapshot_entries(snap: dict[str, Any] | None) -> list[dict[str, Any]]:
     first-row-id inheritance materialized per manifest descriptor.
     Returned entry dicts are SHARED across callers — treat as
     read-only; copy before mutating."""
-    if not snap:
-        return []
-    if "manifest" in snap:  # legacy inline vendor copy
-        return list(snap["manifest"])
-    from .iceberg_manifests import load_manifest_entries, overlay_entries
-
-    return [
-        e
-        for d in snapshot_manifests(snap)
-        for e in overlay_entries(d, load_manifest_entries(d["path"]))
-    ]
+    return [e for d in snapshot_manifests(snap) for e in manifest_entries(d)]
 
 
 def snapshot_delete_entries(snap: dict[str, Any] | None) -> list[dict[str, Any]]:
     """Only the snapshot's DELETE artifacts — opens only delete-content
     manifests (the common planner need: tombstones are few; the data
     inventory stays unopened)."""
-    if not snap:
-        return []
-    if "manifest" in snap:
-        return _split_manifest(snap["manifest"])[1]
-    from .iceberg_manifests import load_manifest_entries, overlay_entries
-
     return [
         e
         for d in snapshot_manifests(snap)
         if d.get("content") == "deletes"
-        for e in overlay_entries(d, load_manifest_entries(d["path"]))
+        for e in manifest_entries(d)
     ]
 
 
 def snapshot_file_count(snap: dict[str, Any] | None) -> int:
     """Total entry count (data + deletes) straight from descriptor sums —
     no manifest is opened."""
-    if not snap:
-        return 0
-    if "manifest" in snap:
-        return len(snap["manifest"])
     return sum(
         d.get("added-files-count", 0) + d.get("existing-files-count", 0)
         for d in snapshot_manifests(snap)
+    )
+
+
+def _data_totals(descs: list[dict[str, Any]]) -> tuple[int, int]:
+    """(data files, records) of the data manifests among ``descs`` —
+    descriptor sums, no manifest opened."""
+    data = [d for d in descs if d.get("content") == "data"]
+    return (
+        sum(d.get("added-files-count", 0) + d.get("existing-files-count", 0) for d in data),
+        sum(d.get("added-rows-count", 0) + d.get("existing-rows-count", 0) for d in data),
     )
 
 
@@ -393,28 +382,18 @@ def snapshot_split_pruned(
     opens it — the read-path payoff of out-of-line manifests at scale.
     Callers still apply the per-entry filters to the surviving data
     entries (descriptor summaries are manifest-granular supersets)."""
-    if not snap:
-        return [], [], 0
-    if "manifest" in snap:
-        data, dels = _split_manifest(snap["manifest"])
-        return data, dels, len(data)
-    from .iceberg_manifests import (
-        descriptor_keep,
-        load_manifest_entries,
-        overlay_entries,
-    )
+    from .iceberg_manifests import descriptor_keep
 
     data: list[dict[str, Any]] = []
     dels: list[dict[str, Any]] = []
     total = 0
     for d in snapshot_manifests(snap):
         if d.get("content") == "deletes":
-            dels.extend(overlay_entries(d, load_manifest_entries(d["path"])))
+            dels.extend(manifest_entries(d))
             continue
         total += d.get("added-files-count", 0) + d.get("existing-files-count", 0)
-        if not descriptor_keep(d, partition_filter, stats_filter):
-            continue
-        data.extend(overlay_entries(d, load_manifest_entries(d["path"])))
+        if descriptor_keep(d, partition_filter, stats_filter):
+            data.extend(manifest_entries(d))
     return data, dels, total
 
 
@@ -422,35 +401,23 @@ def diff_snapshots(
     parent: dict[str, Any] | None, snap: dict[str, Any]
 ) -> tuple[list[dict[str, Any]], list[dict[str, Any]]]:
     """(entries added by ``snap``, entries removed from ``parent``) by
-    path — O(changed manifests) when both snapshots are out-of-line
-    (manifests common to both sides cannot contribute to either set, so
-    they are never opened); falls back to the full path-set diff when
-    either side still carries an inline manifest."""
+    path — O(changed manifests): manifests common to both sides cannot
+    contribute to either set, so they are never opened."""
     if parent is None:
         return snapshot_entries(snap), []
-    if "manifest" in snap or "manifest" in parent:
-        pe, se = snapshot_entries(parent), snapshot_entries(snap)
-        pp = {e["path"] for e in pe}
-        sp = {e["path"] for e in se}
-        return (
-            [e for e in se if e["path"] not in pp],
-            [e for e in pe if e["path"] not in sp],
-        )
-    from .iceberg_manifests import load_manifest_entries, overlay_entries
-
     p_paths = {d["path"] for d in snapshot_manifests(parent)}
     s_paths = {d["path"] for d in snapshot_manifests(snap)}
     p_ents = [
         e
         for d in snapshot_manifests(parent)
         if d["path"] not in s_paths
-        for e in overlay_entries(d, load_manifest_entries(d["path"]))
+        for e in manifest_entries(d)
     ]
     s_ents = [
         e
         for d in snapshot_manifests(snap)
         if d["path"] not in p_paths
-        for e in overlay_entries(d, load_manifest_entries(d["path"]))
+        for e in manifest_entries(d)
     ]
     pp = {e["path"] for e in p_ents}
     sp = {e["path"] for e in s_ents}
@@ -1715,28 +1682,29 @@ class SparkTable:
         self,
         meta: dict[str, Any],
         parent: dict[str, Any] | None,
-        entries: list[dict[str, Any]] | None,
+        removed: set[str],
+        appended: list[dict[str, Any]],
         snapshot_id: int,
         sequence_number: int,
-        appended: list[dict[str, Any]] | None = None,
     ) -> list[dict[str, Any]]:
-        """Incremental manifest construction — commit cost O(delta), not
-        O(table): diff the desired inventory against the parent's
-        manifests; a parent manifest whose every entry survives
-        unchanged is CARRIED by descriptor (its Avro file is never
-        rewritten — byte-identical across commits), a manifest losing
-        entries is rewritten with only its survivors, and entries new to
-        the table land in at most one fresh manifest per content kind.
-        An append to an N-file table therefore writes 1-2 new manifest
-        files and the stored metadata blob stays O(manifests) — the
-        shape real Iceberg commits have and the reference's normalized
-        metadata layout encodes (SURVEY §1.2;
+        """The new snapshot's manifests from its delta over ``parent`` —
+        commit cost O(delta), not O(table). A parent manifest holding no
+        ``removed`` path is CARRIED by descriptor (its Avro file is never
+        rewritten — byte-identical across commits); one holding some is
+        dropped, and its survivors re-encode with the ``appended``
+        entries into at most one fresh manifest per content kind.
+
+        Only the manifests of the kinds ``removed`` touches are opened.
+        When nothing is removed (an append) none is. Otherwise the delete
+        manifests are opened first (tombstones are few, and every
+        removing caller has just read them), and the data manifests only
+        when some removed path is not a tombstone. An append to an N-file
+        table therefore writes 1-2 new manifest files and the stored
+        metadata blob stays O(manifests) — the shape real Iceberg commits
+        have and the reference's normalized metadata layout encodes
+        (SURVEY §1.2;
         migrations/20241106201139_split_table_metadata.sql:39-167)."""
-        from .iceberg_manifests import (
-            load_manifest_entries,
-            overlay_entries,
-            write_manifest_file,
-        )
+        from .iceberg_manifests import write_manifest_file
 
         out_dir = str(Path(meta["location"]) / "metadata")
         seq_to_sid = {
@@ -1744,28 +1712,31 @@ class SparkTable:
             for s in meta.get("snapshots", [])
         }
         seq_to_sid[sequence_number] = snapshot_id
+        parent_descs = snapshot_manifests(parent)
+        opened: set[str] = set()
+        if removed:
+            opened.add("deletes")
+            dead = {
+                e["path"]
+                for d in parent_descs
+                if d.get("content") == "deletes"
+                for e in manifest_entries(d)
+            }
+            if not removed <= dead:
+                opened.add("data")
         descs: list[dict[str, Any]] = []
-        if entries is None:
-            # APPEND fast path: the commit only ADDS files, so every
-            # parent manifest is carried verbatim WITHOUT being loaded
-            # or compared — commit CPU is O(new entries + manifests),
-            # not O(table)
-            descs = [dict(d) for d in snapshot_manifests(parent)]
-            leftover = appended or []
-        else:
-            desired = {e["path"]: e for e in entries}
-            covered: set[str] = set()
-            for d in snapshot_manifests(parent):
-                over = overlay_entries(d, load_manifest_entries(d["path"]))
-                if not over:
-                    continue  # drop empty manifests instead of carrying
-                if all(desired.get(e["path"]) == e for e in over):
-                    descs.append(dict(d))  # carried verbatim: file reused
-                    covered.update(e["path"] for e in over)
-                # else: its survivors stay un-covered and re-encode below
-            leftover = [e for e in entries if e["path"] not in covered]
+        survivors: list[dict[str, Any]] = []
+        for d in parent_descs:
+            if d.get("content") in opened:
+                over = manifest_entries(d)
+                if not any(e["path"] in removed for e in over):
+                    descs.append(dict(d))
+                    continue
+                survivors += [e for e in over if e["path"] not in removed]
+            else:
+                descs.append(dict(d))
         groups: dict[str, list[dict[str, Any]]] = {}
-        for e in leftover:
+        for e in survivors + appended:
             kind = "deletes" if e.get("content") in _DELETE_KINDS else "data"
             groups.setdefault(kind, []).append(e)
         for kind in sorted(groups):
@@ -1797,7 +1768,7 @@ class SparkTable:
         all but the largest half coalesce into one — amortized O(delta
         log) rewrite work that keeps plan-time descriptor scans and the
         manifest list bounded regardless of commit count."""
-        from .iceberg_manifests import load_manifest_entries, overlay_entries, write_manifest_file
+        from .iceberg_manifests import write_manifest_file
 
         threshold = int(
             meta.get("properties", {}).get(
@@ -1830,11 +1801,7 @@ class SparkTable:
             keep_n = max(threshold // 2 - 1, 0)
             victims = kd[: len(kd) - keep_n] if keep_n else kd
             kept = kd[len(victims):]
-            merged_entries = [
-                e
-                for d in victims
-                for e in overlay_entries(d, load_manifest_entries(d["path"]))
-            ]
+            merged_entries = [e for d in victims for e in manifest_entries(d)]
             out.append(
                 write_manifest_file(
                     meta,
@@ -1852,45 +1819,35 @@ class SparkTable:
         self,
         meta: dict[str, Any],
         parent: dict[str, Any] | None,
-        manifest: list[dict[str, Any]] | None,
+        removed: Iterable[str] | None,
         operation: str,
         extra_summary: dict[str, Any] | None = None,
         appended: list[dict[str, Any]] | None = None,
     ) -> dict[str, Any]:
-        """One new snapshot dict: incremental ``manifests`` descriptors
-        + the spec-required ``manifest-list`` Avro OCF (carried
-        manifests referenced by their original paths). The snapshot —
-        and therefore the metadata blob, the commit wire payload, and
-        the metastore row — holds descriptors only, never entries.
+        """One new snapshot dict stating its delta over ``parent``: the
+        ``appended`` entries it adds and the ``removed`` paths it drops
+        (None or empty: nothing). It holds incremental ``manifests``
+        descriptors (_build_manifests) + the spec-required
+        ``manifest-list`` Avro OCF (carried manifests referenced by their
+        original paths). The snapshot — and therefore the metadata blob,
+        the commit wire payload, and the metastore row — holds
+        descriptors only, never entries.
 
-        ``appended`` (with ``manifest=None``) is the pure-ADD fast
-        path: parent manifests carry by descriptor without ever being
-        loaded, so an append's commit CPU is O(new files), not
-        O(table); the summary's whole-inventory counts come from
-        descriptor sums."""
+        The summary's ``added-*`` counts are this commit's new data
+        entries; ``total-*`` come from the new data descriptors' sums, so
+        no manifest is opened for them."""
         from .iceberg_manifests import write_manifest_list_file
 
-        if appended is not None and parent is not None and "manifest" in parent:
-            # legacy inline parent: one-time conversion through the
-            # general diff path (everything re-encodes out-of-line once)
-            manifest = snapshot_entries(parent) + appended
-            appended = None
+        appended = appended or []
         snapshot_id = (
             max((s["snapshot-id"] for s in meta["snapshots"]), default=0) + 1
         )
         seq = _next_seq(meta)
         descs = self._build_manifests(
-            meta, parent, manifest, snapshot_id, seq, appended=appended
+            meta, parent, set(removed or ()), appended, snapshot_id, seq
         )
-        if manifest is not None:
-            added_files = len(manifest)
-            added_records = sum(e["record-count"] for e in manifest)
-        else:  # fast path: whole-inventory counts from descriptor sums
-            added_files = snapshot_file_count(parent) + len(appended or [])
-            added_records = sum(
-                d.get("added-rows-count", 0) + d.get("existing-rows-count", 0)
-                for d in snapshot_manifests(parent)
-            ) + sum(e.get("record-count", 0) for e in appended or [])
+        added = _split_manifest(appended)[0]
+        total_files, total_records = _data_totals(descs)
         return {
             "snapshot-id": snapshot_id,
             "parent-snapshot-id": parent["snapshot-id"] if parent else None,
@@ -1899,8 +1856,10 @@ class SparkTable:
             "schema-id": meta["current-schema-id"],
             "summary": {
                 "operation": operation,
-                "added-data-files": added_files,
-                "added-records": added_records,
+                "added-data-files": len(added),
+                "added-records": sum(e["record-count"] for e in added),
+                "total-data-files": total_files,
+                "total-records": total_records,
                 **(extra_summary or {}),
             },
             "manifests": descs,
@@ -1913,33 +1872,43 @@ class SparkTable:
             ),
         }
 
+    def _branch_head(self, meta: dict[str, Any], branch: str) -> dict[str, Any] | None:
+        """The snapshot ``branch`` points at, or None when it does not
+        exist yet."""
+        ref = meta["refs"].get(branch)
+        return self._snapshot(meta, ref["snapshot-id"]) if ref else None
+
     def _commit_snapshot(
         self,
         meta: dict[str, Any],
-        manifest: list[dict[str, Any]] | None,
+        removed: Iterable[str] | None,
         operation: str,
         branch: str = MAIN,
         extra_summary: dict[str, Any] | None = None,
         appended: list[dict[str, Any]] | None = None,
     ) -> dict[str, Any]:
-        parent_ref = meta["refs"].get(branch)
-        parent_id = parent_ref["snapshot-id"] if parent_ref else None
-        parent = self._snapshot(meta, parent_id) if parent_id is not None else None
+        """Commit the delta (``removed`` paths, ``appended`` entries) as a
+        new snapshot on top of ``branch``, guarded by the ref still
+        pointing at the head it was computed against."""
+        parent = self._branch_head(meta, branch)
         snapshot = self._snapshot_payload(
-            meta, parent, manifest, operation, extra_summary, appended=appended
+            meta, parent, removed, operation, extra_summary, appended
         )
-        snapshot_id = snapshot["snapshot-id"]
         requirements = [
             {"type": "assert-table-uuid", "uuid": meta["table-uuid"]},
             {
                 "type": "assert-ref-snapshot-id",
                 "ref": branch,
-                "snapshot-id": parent_id,
+                "snapshot-id": parent["snapshot-id"] if parent else None,
             },
         ]
         updates = [
             {"action": "add-snapshot", "snapshot": snapshot},
-            {"action": "set-snapshot-ref", "ref-name": branch, "snapshot-id": snapshot_id},
+            {
+                "action": "set-snapshot-ref",
+                "ref-name": branch,
+                "snapshot-id": snapshot["snapshot-id"],
+            },
         ]
         return self._commit(requirements, updates)
 
@@ -1988,18 +1957,20 @@ class SparkTable:
         skip: Callable[[dict[str, Any]], bool] | None = None,
     ) -> dict[str, Any] | None:
         """The one optimistic commit loop of a write whose data files are
-        already written (append and both DataSource writers): on
-        CommitFailedException the entries are rebased onto the winner's
-        snapshot and the commit retried — appends never conflict
+        already written (append, overwrite and both DataSource writers):
+        on CommitFailedException the entries are rebased onto the
+        winner's snapshot and the commit retried — appends never conflict
         logically, only on the assert-ref CAS. Each attempt re-stamps the
         sequence number: the winner consumed the one the entries carried,
         and a stale data seq would let an equality delete committed in
         between wrongly apply to their rows. The ``schema-id`` they were
         written under is never touched.
 
-        ``replace`` commits ``entries`` as the table's whole inventory
-        (an ``overwrite`` snapshot); otherwise they are added through the pure-ADD
-        path, which carries parent manifests by descriptor — O(delta).
+        ``replace`` commits an ``overwrite`` snapshot that also removes
+        every file of the branch head, read afresh on each attempt (as
+        Iceberg's OverwriteFiles does), so a lost race re-derives the
+        removed set instead of failing; otherwise the commit is a pure
+        append, which carries parent manifests unopened — O(delta).
         ``skip(meta)`` is checked against each attempt's freshly loaded
         metadata: when it holds, nothing commits and None is returned."""
         from ..catalog.catalog import CommitFailedException
@@ -2012,22 +1983,29 @@ class SparkTable:
             seq = _next_seq(meta)
             for e in entries:
                 e["sequence-number"] = seq
+            removed = (
+                [e["path"] for e in snapshot_entries(self._branch_head(meta, branch))]
+                if replace
+                else None
+            )
             try:
                 return self._commit_snapshot(
                     meta,
-                    list(entries) if replace else None,
+                    removed,
                     "overwrite" if replace else "append",
                     branch,
                     extra_summary=extra_summary,
-                    appended=None if replace else entries,
+                    appended=entries,
                 )
             except CommitFailedException as e:  # lost the CAS race: rebase
                 last_err = e
         raise last_err
 
     def overwrite(self, df: DataFrame, branch: str = MAIN) -> dict[str, Any]:
-        meta = self.metadata()
-        return self._commit_snapshot(meta, self._write_files(meta, df), "overwrite", branch)
+        """Replace the branch's rows with ``df``'s (_commit_files)."""
+        return self._commit_files(
+            self._write_files(self.metadata(), df), replace=True, branch=branch
+        )
 
     # ---------------- read path ----------------
     def scan(
@@ -3380,9 +3358,7 @@ class SparkTable:
         positions, n, pdf = self._mor_matched(meta, matched, distinct)
         if n == 0 and inserts is None:
             return meta
-        base_manifest, del_entries, removed = self._positional_artifacts(
-            meta, snap, positions, n, pdf
-        )
+        removed, del_entries = self._positional_artifacts(meta, snap, positions, n, pdf)
         new_rows = inserts
         if project is not None:
             images = project(matched).drop("_file")
@@ -3398,12 +3374,13 @@ class SparkTable:
         ranges = self._ranges_from_series(pdf["_row_id"]) if pdf is not None else None
         return self._commit_snapshot(
             meta,
-            base_manifest + del_entries + add_entries,
+            removed,
             operation,
+            appended=del_entries + add_entries,
             extra_summary={
                 "added-delete-files": len(del_entries),
                 "added-position-deletes": sum(e["record-count"] for e in del_entries),
-                "removed-delete-files": removed,
+                "removed-delete-files": len(removed),
                 **(extra_summary or {}),
                 **({"deleted-row-id-ranges": ranges} if ranges else {}),
             },
@@ -3464,12 +3441,12 @@ class SparkTable:
         positions: DataFrame,
         n: int,
         positions_pdf: Any | None,
-    ) -> tuple[list[dict[str, Any]], list[dict[str, Any]], int]:
+    ) -> tuple[list[str], list[dict[str, Any]]]:
         """Shared tombstone-writing policy for the MOR DML family: returns
-        (base_manifest, new_delete_entries, removed_delete_files).
+        (removed delete paths, new delete entries).
 
-        v2: the new tombstones stack onto the existing manifest as a
-        parquet position-delete file.
+        v2: the new tombstones stack onto the existing ones as a parquet
+        position-delete file; nothing is removed.
         v3: they CONSOLIDATE with every prior positional artifact into
         deletion vectors that replace them (at most one positional
         artifact chain per data file — the v3 invariant); equality-delete
@@ -3491,16 +3468,14 @@ class SparkTable:
         (every MOR op with _small_commit forced False) and the driver
         lane's fallback by
         tests/test_scan_fastpaths.py::test_driver_dv_lane_failure_falls_back_without_orphans."""
-        data_entries, delete_entries = _split_manifest(snapshot_entries(snap))
         if meta.get("format-version", 2) < 3:
             _log.debug("MOR commit: n=%d, v2 position-delete file", n)
-            return (
-                data_entries + delete_entries,
-                self._write_delete_files(meta, positions),
-                0,
-            )
-        pos_like = [e for e in delete_entries if e.get("content") != "equality-deletes"]
-        eq_dels = [e for e in delete_entries if e.get("content") == "equality-deletes"]
+            return [], self._write_delete_files(meta, positions)
+        pos_like = [
+            e
+            for e in snapshot_delete_entries(snap)
+            if e.get("content") != "equality-deletes"
+        ]
         lane = "distributed"
         if positions_pdf is not None and self._small_commit(n, pos_like):
             try:
@@ -3529,9 +3504,9 @@ class SparkTable:
             # positions only ever reference data files of this snapshot,
             # so its data-file count bounds the referenced files
             del_entries = self._write_deletion_vectors(
-                meta, merged, max_files=len(data_entries)
+                meta, merged, max_files=_data_totals(snapshot_manifests(snap))[0]
             )
-        return data_entries + eq_dels, del_entries, len(pos_like)
+        return [e["path"] for e in pos_like], del_entries
 
     @staticmethod
     def _prior_dv_positions(
@@ -3726,40 +3701,27 @@ class SparkTable:
             for e in data_entries
             if e["path"] in targets or e.get("sequence-number", 0) < max_eq_seq
         ]
-        affected_paths = {e["path"] for e in affected}
-        kept = [e for e in data_entries if e["path"] not in affected_paths]
-        if not affected:
-            # every tombstoned data file was since rewritten (e.g. by a
-            # later copy-on-write DML): the delete entries are dead weight
-            # pointing at vanished files — drop them without any IO.
-            self._commit_snapshot(
-                meta,
-                kept,
-                "replace",
-                extra_summary={
-                    "removed-delete-files": len(delete_entries),
-                    "rewritten-data-files": 0,
-                },
-            )
-            return {
-                "rewritten-data-files": 0,
-                "removed-delete-files": len(delete_entries),
-            }
         # v3: materialization preserves row ids — survivors carry their
-        # resolved id into the rewritten files (per-row inheritance)
-        df = self._live_rows(
-            meta,
-            schema,
-            affected,
-            delete_entries,
-            snap["schema-id"],
-            lineage=meta.get("format-version", 2) >= 3,
-        )
-        new_entries = self._write_files(meta, df)
+        # resolved id into the rewritten files (per-row inheritance).
+        # When every tombstoned data file was since rewritten (e.g. by a
+        # later copy-on-write DML), the delete entries are dead weight
+        # pointing at vanished files: they drop without any IO.
+        new_entries = []
+        if affected:
+            df = self._live_rows(
+                meta,
+                schema,
+                affected,
+                delete_entries,
+                snap["schema-id"],
+                lineage=meta.get("format-version", 2) >= 3,
+            )
+            new_entries = self._write_files(meta, df)
         self._commit_snapshot(
             meta,
-            kept + new_entries,
+            [e["path"] for e in affected + delete_entries],
             "replace",
+            appended=new_entries,
             extra_summary={
                 "removed-delete-files": len(delete_entries),
                 "rewritten-data-files": len(affected),
@@ -3885,21 +3847,18 @@ class SparkTable:
         from the new file's claimed range."""
         rel = self._rel_file(meta["location"])
         affected = {r[0] for r in matched.select(rel).distinct().collect()}
-        # the rewritten data files leave the manifest, and so does every
+        # the rewritten data files leave the snapshot, and so does every
         # delete entry whose referenced data files were all rewritten: its
         # tombstones would point only at vanished files, costing scans
         # the anti-join path (and accumulating forever). Entries without
         # referenced-files (pre-upgrade tombstones) are conservatively kept.
-        kept = [
-            e
-            for e in snapshot_entries(snap)
-            if e["path"] not in affected
-            and not (
-                e.get("content") in ("position-deletes", "deletion-vectors")
-                and e.get("referenced-files") is not None
-                and all(r in affected for r in e["referenced-files"])
-            )
-        ]
+        dead = {
+            e["path"]
+            for e in snapshot_delete_entries(snap)
+            if e.get("content") in ("position-deletes", "deletion-vectors")
+            and e.get("referenced-files") is not None
+            and all(r in affected for r in e["referenced-files"])
+        }
         new_rows = inserts
         if affected:
             rewritten = rows.filter(rel.isin(sorted(affected))).drop("_file", "_pos")
@@ -3909,8 +3868,9 @@ class SparkTable:
             return meta  # nothing matched, nothing inserted: no snapshot
         return self._commit_snapshot(
             meta,
-            kept + written,
+            affected | dead,
             operation,
+            appended=written,
             extra_summary={"rewritten-files": len(affected)},
         )
 
@@ -4050,7 +4010,10 @@ class SparkTable:
         commit, no data file rewritten; scans pay the anti-join until
         rewrite_position_deletes. It needs format-version >= 2. Any other
         mode raises CatalogError. Iceberg records MERGE commits as
-        operation=overwrite (the spec's closed operation set)."""
+        operation=overwrite (the spec's closed operation set). Without
+        ``matched_update`` the statement only inserts, in every mode: it
+        commits the inserts as an ``append`` (nothing when there are
+        none)."""
         meta, snap, live = self._dml_base("merge", mode)
         # marker column: match detection that works for any composite key
         # (name picked fresh so a source column can't shadow it)
@@ -4062,17 +4025,34 @@ class SparkTable:
         matched = joined.filter(hit)
 
         def project(rows: DataFrame) -> DataFrame:
-            return self._dml_images(meta, rows, hit, matched_update or {})
+            return self._dml_images(meta, rows, hit, matched_update)
 
         inserts = None
         if not_matched_insert:
-            lineage = meta.get("format-version", 2) >= 3
             inserts = src.join(live, cond, "left_anti").select(
-                *_insert_cols(self._current_schema(meta), source.columns),
+                *_insert_cols(self._current_schema(meta), source.columns)
+            )
+        if matched_update is None:
+            # insert-only: matched rows stay as they are, so the statement
+            # is an append of the anti-join — no tombstone, no rewrite. An
+            # empty anti-join still leaves a row-less file, which commits
+            # nothing
+            written = self._write_files(meta, inserts) if inserts is not None else []
+            for e in written:
+                if not e["record-count"]:
+                    os.remove(f"{meta['location']}/{e['path']}")
+            written = [e for e in written if e["record-count"]]
+            if not written:
+                return meta
+            return self._commit_snapshot(meta, None, "append", appended=written)
+        if inserts is not None and meta.get("format-version", 2) >= 3:
+            # the rewritten or re-imaged rows store their lineage; the
+            # inserted ones store NULL and inherit fresh ids
+            inserts = inserts.select(
+                "*",
                 *(
                     F.lit(None).cast("long").alias(c)
                     for c in ("_row_id", "_last_updated_sequence_number")
-                    if lineage
                 ),
             )
         if mode == "merge-on-read":
@@ -4153,22 +4133,13 @@ class SparkTable:
         recorded in the summary so publish_wap lands it where the writer
         asked (append(branch=..., wap_id=...) is honored, not ignored)."""
         meta = self.metadata()
-        parent = (
-            self._resolve_snapshot(meta, ref=branch) if meta["refs"].get(branch) else None
-        )
         snapshot = self._snapshot_payload(
             meta,
-            parent,
+            self._branch_head(meta, branch),
             None,
             "append",
             extra_summary={"wap.id": wap_id, "wap.branch": branch},
             appended=new_entries,
-        )
-        # the summary's added-* counts describe THIS write, not the
-        # carried inventory (pre-round-16 staged-WAP behavior)
-        snapshot["summary"]["added-data-files"] = len(new_entries)
-        snapshot["summary"]["added-records"] = sum(
-            e["record-count"] for e in new_entries
         )
         return self._commit(
             [{"type": "assert-table-uuid", "uuid": meta["table-uuid"]}],
@@ -4195,12 +4166,11 @@ class SparkTable:
         parent_id = src.get("parent-snapshot-id")
         parent = self._snapshot(meta, parent_id) if parent_id is not None else None
         added = diff_snapshots(parent, src)[0]
-        cur = self._resolve_snapshot(meta, ref=branch) if meta["refs"].get(branch) else None
+        cur = self._branch_head(meta, branch)
         # files ALREADY on the branch head must not re-add (a repeated
-        # cherry-pick, or picking an ancestor's append, was a data no-op
-        # under the old full-list commit and must stay one under the
-        # pure-ADD fast path — without this filter each file would land
-        # in two manifests and scans would duplicate its rows)
+        # cherry-pick, or picking an ancestor's append, is a data no-op —
+        # without this filter each file would land in two manifests and
+        # scans would duplicate its rows)
         cur_paths = {e["path"] for e in snapshot_entries(cur)}
         added = [e for e in added if e["path"] not in cur_paths]
         extra: dict[str, Any] = {"cherry-picked-from": snapshot_id}
@@ -4459,8 +4429,9 @@ class SparkTable:
         entries = self._write_files(meta, df, distribute=False)
         return self._commit_snapshot(
             meta,
-            entries,
+            [e["path"] for e in snapshot_entries(snap)],
             "replace",
+            appended=entries,
             extra_summary={
                 "compacted-from": snapshot_file_count(snap),
                 **({"zorder-by": zorder_by} if zorder_by else {}),
@@ -4539,8 +4510,8 @@ class SparkTable:
     @staticmethod
     def _manifest_avro_files(snapshot: dict[str, Any]) -> list[str]:
         """The snapshot's manifest-list, every manifest it references
-        (descriptors when out-of-line; decoded from the Avro list for
-        legacy snapshots) and any bloom sidecar containers its entries
+        (its descriptors; decoded from the Avro list for a registered
+        snapshot without them) and any bloom sidecar containers its entries
         point at — the metadata-file set GC must account per snapshot."""
         out: list[str] = []
         ml = snapshot.get("manifest-list")
@@ -4772,34 +4743,18 @@ class SparkTable:
         """One row per (snapshot, manifest file) — REAL manifest paths;
         a manifest carried across N commits appears under each snapshot
         that references it, by the same path (Iceberg all_manifests
-        semantics). Counts come from descriptors, no manifest opened.
-        Legacy inline snapshots surface one pseudo-manifest row."""
-        meta = self.metadata()
-        rows = []
-        for s in meta["snapshots"]:
-            if "manifests" in s:
-                for d in snapshot_manifests(s):
-                    rows.append(
-                        (
-                            d["path"],
-                            s["snapshot-id"],
-                            d.get("added-files-count", 0)
-                            + d.get("existing-files-count", 0),
-                            d.get("added-rows-count", 0)
-                            + d.get("existing-rows-count", 0),
-                            d.get("length", 0),
-                        )
-                    )
-            else:
-                rows.append(
-                    (
-                        f"inline://{meta['table-uuid']}/{s['snapshot-id']}",
-                        s["snapshot-id"],
-                        len(s["manifest"]),
-                        sum(e["record-count"] for e in s["manifest"]),
-                        sum(e["file-size-in-bytes"] for e in s["manifest"]),
-                    )
-                )
+        semantics). Counts come from descriptors, no manifest opened."""
+        rows = [
+            (
+                d["path"],
+                s["snapshot-id"],
+                d.get("added-files-count", 0) + d.get("existing-files-count", 0),
+                d.get("added-rows-count", 0) + d.get("existing-rows-count", 0),
+                d.get("length", 0),
+            )
+            for s in self.metadata()["snapshots"]
+            for d in snapshot_manifests(s)
+        ]
         return local_df(self.spark, 
             rows,
             "manifest_path string, snapshot_id long, data_file_count int,"

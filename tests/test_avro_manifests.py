@@ -168,7 +168,8 @@ def test_snapshot_manifests_roundtrip(tmp_path):
         mirrors_inline,
         read_manifest,
         read_manifest_list,
-        write_snapshot_manifests,
+        write_manifest_file,
+        write_manifest_list_file,
     )
 
     meta = {
@@ -201,38 +202,42 @@ def test_snapshot_manifests_roundtrip(tmp_path):
             }
         ],
     }
+    data = [
+        {
+            "path": "data/day=3/f1.parquet",
+            "record-count": 10,
+            "file-size-in-bytes": 1234,
+            "sequence-number": 7,
+            "partition": {"day": "3"},
+            "bounds": {"k": [1, 10], "v": ["a", "z"]},
+        },
+        {
+            "path": "data/day=4/f0.parquet",
+            "record-count": 4,
+            "file-size-in-bytes": 600,
+            "sequence-number": 5,  # carried over -> status=existing
+            "partition": {"day": "4"},
+        },
+    ]
+    dels = [
+        {
+            "path": "data/deletes/d1.parquet",
+            "record-count": 2,
+            "file-size-in-bytes": 300,
+            "sequence-number": 7,
+            "partition": {},
+            "content": "equality-deletes",
+            "equality-ids": [1],
+        },
+    ]
+    descs = [write_manifest_file(meta, es, 42, 7, str(tmp_path)) for es in (data, dels)]
+    lp = write_manifest_list_file(meta, 42, 7, descs, str(tmp_path))
     snapshot = {
         "snapshot-id": 42,
         "sequence-number": 7,
-        "manifest": [
-            {
-                "path": "data/day=3/f1.parquet",
-                "record-count": 10,
-                "file-size-in-bytes": 1234,
-                "sequence-number": 7,
-                "partition": {"day": "3"},
-                "bounds": {"k": [1, 10], "v": ["a", "z"]},
-            },
-            {
-                "path": "data/day=4/f0.parquet",
-                "record-count": 4,
-                "file-size-in-bytes": 600,
-                "sequence-number": 5,  # carried over -> status=existing
-                "partition": {"day": "4"},
-            },
-            {
-                "path": "data/deletes/d1.parquet",
-                "record-count": 2,
-                "file-size-in-bytes": 300,
-                "sequence-number": 7,
-                "partition": {},
-                "content": "equality-deletes",
-                "equality-ids": [1],
-            },
-        ],
+        "manifests": descs,
+        "manifest-list": lp,
     }
-    lp = write_snapshot_manifests(meta, snapshot, str(tmp_path))
-    snapshot["manifest-list"] = lp
     mfs = read_manifest_list(lp)
     assert [m["content"] for m in mfs] == [0, 1]  # data + deletes split
     data_mf = mfs[0]
@@ -253,8 +258,13 @@ def test_snapshot_manifests_roundtrip(tmp_path):
     assert del_entries[0]["data_file"]["content"] == 2
     assert del_entries[0]["data_file"]["equality_ids"] == [1]
     assert mirrors_inline(snapshot)
-    # tampering is detected by the mirror check
-    snapshot["manifest"][0]["record-count"] = 11
+    # tampering is detected by the mirror check: an engine copy whose
+    # record count differs from the listed manifest's records
+    tampered = [{**data[0], "record-count": 11}, data[1]]
+    snapshot["manifests"] = [
+        write_manifest_file(meta, tampered, 42, 7, str(tmp_path)),
+        descs[1],
+    ]
     assert not mirrors_inline(snapshot)
 
 

@@ -91,7 +91,7 @@ def test_optimistic_concurrency_conflict(catalog):
     catalog.create_namespace("wh", ["ns"])
     catalog.create_table("wh", ["ns"], "t", SCHEMA)
     # writer A and B both read snapshot state None; A commits first
-    snap = {"snapshot-id": 1, "timestamp-ms": 1, "manifest": [], "summary": {"operation": "append"}}
+    snap = {"snapshot-id": 1, "timestamp-ms": 1, "manifests": [], "summary": {"operation": "append"}}
     reqs = [{"type": "assert-ref-snapshot-id", "ref": "main", "snapshot-id": None}]
     upds = [
         {"action": "add-snapshot", "snapshot": snap},

@@ -106,7 +106,7 @@ def test_schema_evolution_flow():
 
 def test_snapshot_and_refs():
     m = meta()
-    snap = {"snapshot-id": 10, "timestamp-ms": 1, "manifest": [], "summary": {"operation": "append"}}
+    snap = {"snapshot-id": 10, "timestamp-ms": 1, "manifests": [], "summary": {"operation": "append"}}
     out = apply_commit(
         m,
         [],

@@ -116,7 +116,7 @@ def update_sequences(draw):
                     "snapshot": {
                         "snapshot-id": sid,
                         "timestamp-ms": 1000 + sid,
-                        "manifest": [],
+                        "manifests": [],
                         "summary": {"operation": "append"},
                     },
                 }

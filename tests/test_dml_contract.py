@@ -200,3 +200,42 @@ def test_statement_that_changes_nothing_commits_nothing(spark, catalog, mode, fv
     t.merge(src, "t.id = s.id", matched_update={"x": "s.x"}, not_matched_insert=False, mode=mode)
     assert len(t.metadata()["snapshots"]) == n_snaps
     assert sorted(tuple(r) for r in t.scan().collect()) == [(1, 10), (2, 20)]
+
+
+@pytest.mark.parametrize("fv", [2, 3])
+@pytest.mark.parametrize("mode", MODES)
+def test_insert_only_merge_commits_an_append(spark, catalog, mode, fv):
+    """A MERGE with no matched_update only inserts: it commits the source
+    rows that match no target row as an ``append`` — no delete file, no
+    rewritten file, no prior tombstone re-encoded — and the changelog
+    holds inserts only. With not_matched_insert=False as well, or when
+    every source row matches, it commits nothing."""
+    from lakekeeper_spark.format.icelite import (
+        _split_manifest,
+        snapshot_entries,
+    )
+
+    t = _table(
+        spark, catalog, f"ins_{mode[:3]}_{fv}", [(1, 10), (2, 20), (3, 30)], "id int, x int", fv
+    )
+    t.delete_where("id = 3", mode="merge-on-read")  # a prior tombstone
+    before = _split_manifest(snapshot_entries(t.metadata()["snapshots"][-1]))
+    src = spark.createDataFrame([(2, 99), (4, 40), (5, 50)], "id int, x int")
+    t.merge(src, "t.id = s.id", mode=mode)
+    snap = t.metadata()["snapshots"][-1]
+    assert snap["summary"]["operation"] == "append"
+    assert "added-delete-files" not in snap["summary"]
+    data, dels = _split_manifest(snapshot_entries(snap))
+    assert dels == before[1]  # tombstones carried as they were
+    assert {e["path"] for e in before[0]} <= {e["path"] for e in data}
+    assert snap["summary"]["added-records"] == 2
+    events = sorted(
+        (r.id, r.x, r._change_type)
+        for r in t.changelog().filter(f"_commit_snapshot_id = {snap['snapshot-id']}").collect()
+    )
+    assert events == [(4, 40, "insert"), (5, 50, "insert")]
+    assert sorted(tuple(r) for r in t.scan().collect()) == [(1, 10), (2, 20), (4, 40), (5, 50)]
+    n_snaps = len(t.metadata()["snapshots"])
+    t.merge(src, "t.id = s.id", not_matched_insert=False, mode=mode)
+    t.merge(src.filter("id = 2"), "t.id = s.id", mode=mode)
+    assert len(t.metadata()["snapshots"]) == n_snaps

@@ -5,11 +5,13 @@ real SparkSession, mirroring reference test_spark.py scenarios."""
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
 
 from lakekeeper_spark.catalog.catalog import CommitFailedException
+from lakekeeper_spark.format.iceberg_manifests import write_manifest_file
 from lakekeeper_spark.format.icelite import SparkTable, snapshot_entries
 from lakekeeper_spark.format.types import struct_to_schema
 
@@ -266,7 +268,14 @@ def test_concurrent_append_conflict_then_retry(table, spark, catalog):
     table.append(df)  # writer A wins
     # writer B replays A-era requirements against the new state
     parent_id = meta_stale["refs"]["main"]["snapshot-id"]
-    entries = []
+    stale_head = next(s for s in meta_stale["snapshots"] if s["snapshot-id"] == parent_id)
+    manifest = write_manifest_file(
+        meta_stale,
+        snapshot_entries(stale_head),
+        999,
+        stale_head["sequence-number"] + 1,
+        os.path.join(meta_stale["location"], "metadata"),
+    )
     with pytest.raises(CommitFailedException):
         catalog.commit_table(
             "wh",
@@ -275,7 +284,7 @@ def test_concurrent_append_conflict_then_retry(table, spark, catalog):
             [{"type": "assert-ref-snapshot-id", "ref": "main", "snapshot-id": parent_id}],
             [
                 {"action": "add-snapshot", "snapshot": {
-                    "snapshot-id": 999, "timestamp-ms": 1, "manifest": entries,
+                    "snapshot-id": 999, "timestamp-ms": 1, "manifests": [manifest],
                     "summary": {"operation": "append"}}},
                 {"action": "set-snapshot-ref", "ref-name": "main", "snapshot-id": 999},
             ],

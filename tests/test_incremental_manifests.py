@@ -473,6 +473,90 @@ def test_append_cas_rebase_restamps_sequence_numbers(spark, catalog):
     assert sorted(r.id for r in t1.scan().collect()) == [1, 2, 3]
 
 
+def test_overwrite_rebases_onto_a_concurrent_append(spark, catalog):
+    """An append that lands between an overwrite's file write and its
+    commit: the overwrite retries against the fresh head, removing the
+    appended file too, so it still commits and the table holds only the
+    overwrite's rows (Iceberg's OverwriteFiles retry)."""
+    from lakekeeper_spark.catalog.catalog import CommitFailedException
+
+    catalog.create_namespace("wh", ["ow"])
+    catalog.create_table("wh", ["ow"], "t", SCHEMA)
+    t1 = SparkTable(spark, catalog, "wh", ["ow"], "t")
+    t2 = SparkTable(spark, catalog, "wh", ["ow"], "t")
+    t1.append(spark.createDataFrame([(1, "a")], "id long, v string"))
+    orig = catalog.commit_table
+    state = {"raced": False}
+
+    def racy(wh, levels, name, req, upd):
+        if not state["raced"]:
+            state["raced"] = True
+            t2.append(spark.createDataFrame([(2, "b")], "id long, v string"))
+            raise CommitFailedException("raced")
+        return orig(wh, levels, name, req, upd)
+
+    catalog.commit_table = racy
+    try:
+        t1.overwrite(spark.createDataFrame([(7, "x"), (8, "y")], "id long, v string"))
+    finally:
+        catalog.commit_table = orig
+    assert state["raced"]
+    snaps = t1.metadata()["snapshots"]
+    assert [s["summary"]["operation"] for s in snaps] == ["append", "append", "overwrite"]
+    assert snaps[-1]["parent-snapshot-id"] == snaps[-2]["snapshot-id"]
+    assert sorted(r.id for r in t1.scan().collect()) == [7, 8]
+
+
+@pytest.mark.parametrize("fv", [2, 3])
+def test_summary_counts_state_the_commit_delta(spark, catalog, fv):
+    """Every commit verb's summary counts its own delta: ``added-*`` are
+    the data entries new in the snapshot, ``total-data-files`` its data
+    entries, and ``total-records`` the rows a scan reads wherever no
+    delete is pending."""
+    from lakekeeper_spark.format.icelite import diff_snapshots, snapshot_delete_entries
+
+    catalog.create_namespace("wh", ["sum"], exists_ok=True)
+    catalog.create_table("wh", ["sum"], f"t{fv}", SCHEMA, format_version=fv)
+    t = SparkTable(spark, catalog, "wh", ["sum"], f"t{fv}")
+
+    def rows(lo, hi):
+        return spark.createDataFrame(
+            [(i, f"v{i}") for i in range(lo, hi)], "id long, v string"
+        ).coalesce(2)
+
+    t.append(rows(0, 20))
+    t.append(rows(20, 30))
+    t.delete_where("id < 3", mode="merge-on-read")
+    t.update_where("id >= 25", {"v": "'u'"})  # copy-on-write
+    t.delete_where("id = 10", mode="equality", equality_cols=["id"])
+    t.rewrite_data_files(target_files=2)
+    t.append(rows(40, 45), wap_id="w1")  # staged
+    t.publish_wap("w1")
+    t.create_branch("b")
+    t.append(rows(50, 53), branch="b")
+    t.cherry_pick(t.metadata()["refs"]["b"]["snapshot-id"])
+    meta = t.metadata()
+    by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
+    checked_totals = 0
+    for s in meta["snapshots"]:
+        summary = s["summary"]
+        added = [
+            e
+            for e in diff_snapshots(by_id.get(s.get("parent-snapshot-id")), s)[0]
+            if e.get("content", "data") == "data"
+        ]
+        data = [e for e in snapshot_entries(s) if e.get("content", "data") == "data"]
+        assert summary["added-data-files"] == len(added), summary
+        assert summary["added-records"] == sum(e["record-count"] for e in added), summary
+        assert summary["total-data-files"] == len(data), summary
+        assert summary["total-records"] == sum(e["record-count"] for e in data), summary
+        if not snapshot_delete_entries(s):
+            assert summary["total-records"] == t.scan(snapshot_id=s["snapshot-id"]).count()
+            checked_totals += 1
+    assert checked_totals >= 5
+    assert by_id[max(by_id)]["summary"]["total-records"] == t.scan().count() == 34
+
+
 def test_append_fast_path_opens_zero_manifests(spark, table):
     """The pure-ADD fast path: committing an append against an N-file
     table opens ZERO parent manifests (carried by descriptor), even
@@ -525,7 +609,7 @@ def test_descriptor_pooling_bounds_stored_blob(spark, catalog):
 def test_pack_unpack_property_roundtrip():
     """Property: pack/unpack round-trips ANY metadata document whose
     snapshots carry descriptor lists — shared, unshared, empty, frid
-    variations, interleaved with inline-manifest and manifest-less
+    variations, interleaved with empty-descriptor and manifest-less
     snapshots — and never mutates its input."""
     import copy
     import json as _json
@@ -568,7 +652,7 @@ def test_pack_unpack_property_roundtrip():
                 }
             ),
             st.fixed_dictionaries(
-                {"snapshot-id": st.just(i), "manifest": st.just([])}
+                {"snapshot-id": st.just(i), "manifests": st.just([])}
             ),
             st.fixed_dictionaries({"snapshot-id": st.just(i)}),
         )

@@ -108,7 +108,7 @@ def _commit_next(client, sid):
     snap = {
         "snapshot-id": sid,
         "timestamp-ms": 1,
-        "manifest": [],
+        "manifests": [],
         "summary": {"operation": "append"},
     }
     if cur_id is not None:

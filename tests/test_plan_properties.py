@@ -9,10 +9,42 @@ planner and model can't share a bug through common code.
 
 from __future__ import annotations
 
+import tempfile
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from lakekeeper_spark.format.iceberg_manifests import write_manifest_file
 from lakekeeper_spark.format.icelite import plan_table_scan
+
+_SCHEMA = {
+    "schema-id": 0,
+    "fields": [
+        {"id": 1, "name": "k", "type": "int", "required": False},
+        {"id": 2, "name": "p", "type": "string", "required": False},
+    ],
+}
+
+
+def _table_meta(snapshot_id, seq, kinds, out_dir):
+    """Table metadata whose one snapshot lists ``kinds`` (entry lists of
+    one content kind each) through manifests written as a commit does."""
+    meta = {
+        "schemas": [_SCHEMA],
+        "current-schema-id": 0,
+        "partition-specs": [{"spec-id": 0, "fields": []}],
+        "default-spec-id": 0,
+        "refs": {"main": {"snapshot-id": snapshot_id}},
+    }
+    manifests = [
+        write_manifest_file(meta, entries, snapshot_id, seq, str(out_dir))
+        for entries in kinds
+        if entries
+    ]
+    meta["snapshots"] = [
+        {"snapshot-id": snapshot_id, "sequence-number": seq, "manifests": manifests}
+    ]
+    return meta
 
 
 def _data_file(i, seq, part, lo, hi):
@@ -73,12 +105,11 @@ def test_plan_matches_independent_model(spec, pfilter_val, use_stats):
         if content == "equality-deletes":
             d["equality-ids"] = [1]
         dels.append(d)
-    meta = {
-        "snapshots": [
-            {"snapshot-id": 7, "sequence-number": 9, "manifest": datas + dels}
-        ],
-        "refs": {"main": {"snapshot-id": 7}},
-    }
+    with tempfile.TemporaryDirectory() as out_dir:
+        _check_plan(_table_meta(7, 9, [datas, dels], out_dir), datas, dels, pfilter_val, use_stats)
+
+
+def _check_plan(meta, datas, dels, pfilter_val, use_stats):
     pfilter = {"p": str(pfilter_val)} if pfilter_val is not None else None
     sfilter = {"k": (10, 30)} if use_stats else None
     plan = plan_table_scan(meta, partition_filter=pfilter, stats_filter=sfilter)

@@ -515,30 +515,40 @@ def test_t16_corpus_scanned_once_then_vocab_rounds(spark):
     assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan
 
 
-def test_c13_plan_is_metadata_only():
+def test_c13_plan_is_metadata_only(tmp_path):
     """plan_table_scan is a pure dict computation — callable with no
     SparkSession at all (the REST server has none)."""
+    from lakekeeper_spark.format.iceberg_manifests import write_manifest_file
     from lakekeeper_spark.format.icelite import plan_table_scan
 
     meta = {
-        "snapshots": [
-            {
-                "snapshot-id": 1,
-                "sequence-number": 2,
-                "manifest": [
-                    {"path": "data/a.parquet", "record-count": 5, "sequence-number": 1,
-                     "partition": {"p": "0"}},
-                    {"path": "data/deletes/e.parquet", "record-count": 1,
-                     "sequence-number": 2, "content": "equality-deletes",
-                     "equality-ids": [1], "partition": {}},
-                    {"path": "data/deletes/p.parquet", "record-count": 1,
-                     "sequence-number": 2, "content": "position-deletes",
-                     "referenced-files": ["data/a.parquet"], "partition": {}},
-                ],
-            }
-        ],
+        "schemas": [{"schema-id": 0, "fields": [
+            {"id": 1, "name": "p", "type": "string", "required": False}]}],
+        "current-schema-id": 0,
+        "partition-specs": [{"spec-id": 0, "fields": []}],
+        "default-spec-id": 0,
         "refs": {"main": {"snapshot-id": 1}},
     }
+    data = [{"path": "data/a.parquet", "record-count": 5, "sequence-number": 1,
+             "partition": {"p": "0"}}]
+    dels = [
+        {"path": "data/deletes/e.parquet", "record-count": 1,
+         "sequence-number": 2, "content": "equality-deletes",
+         "equality-ids": [1], "partition": {}},
+        {"path": "data/deletes/p.parquet", "record-count": 1,
+         "sequence-number": 2, "content": "position-deletes",
+         "referenced-files": ["data/a.parquet"], "partition": {}},
+    ]
+    meta["snapshots"] = [
+        {
+            "snapshot-id": 1,
+            "sequence-number": 2,
+            "manifests": [
+                write_manifest_file(meta, entries, 1, 2, str(tmp_path))
+                for entries in (data, dels)
+            ],
+        }
+    ]
     plan = plan_table_scan(meta)
     (task,) = plan["plan-tasks"]
     assert task["position-delete-files"] and task["equality-delete-files"]

@@ -17,6 +17,7 @@ from lakekeeper_spark.catalog.commit import (
     apply_commit,
     new_table_metadata,
 )
+from lakekeeper_spark.format.iceberg_manifests import write_manifest_file
 from lakekeeper_spark.format.icelite import SparkTable, snapshot_entries
 
 SCHEMA = {
@@ -28,13 +29,13 @@ SCHEMA = {
 }
 
 
-def _snap(sid, manifest, first_row_id=None, parent=None):
+def _snap(sid, manifests, first_row_id=None, parent=None):
     s = {
         "snapshot-id": sid,
         "parent-snapshot-id": parent,
         "summary": {"operation": "append"},
         "schema-id": 0,
-        "manifest": manifest,
+        "manifests": manifests,
     }
     if first_row_id is not None:
         s["first-row-id"] = first_row_id
@@ -47,6 +48,17 @@ def _entry(path, n, content="data", frid=None):
     if frid is not None:
         e["first-row-id"] = frid
     return e
+
+
+def _manifest(meta, out_dir, entries, sid=1):
+    """One real manifest file for ``entries``, written as a commit does."""
+    return write_manifest_file(meta, entries, sid, sid, str(out_dir))
+
+
+def _frids(snap):
+    """Per-file first-row-ids as a reader sees them (descriptor
+    inheritance materialized), in manifest order."""
+    return [e.get("first-row-id") for e in snapshot_entries(snap)]
 
 
 # ---------------------------------------------------------------------------
@@ -66,72 +78,98 @@ def test_upgrade_to_v3_initializes_next_row_id():
     assert out["next-row-id"] == 0
 
 
-def test_add_snapshot_assigns_file_row_id_ranges():
+def test_add_snapshot_assigns_file_row_id_ranges(tmp_path):
     meta = new_table_metadata("u", "loc", SCHEMA, format_version=3)
-    m1 = [_entry("data/a.parquet", 10), _entry("data/b.parquet", 5)]
+    m1 = _manifest(meta, tmp_path, [_entry("data/a.parquet", 10), _entry("data/b.parquet", 5)])
+    assert m1["null-id-rows"] == 15
     out = apply_commit(
-        meta, [], [{"action": "add-snapshot", "snapshot": _snap(1, m1)}]
+        meta, [], [{"action": "add-snapshot", "snapshot": _snap(1, [m1])}]
     )
     s1 = out["snapshots"][0]
     assert s1["first-row-id"] == 0
-    assert [e["first-row-id"] for e in s1["manifest"]] == [0, 10]
+    assert [d["first-row-id"] for d in s1["manifests"]] == [0]
+    assert _frids(s1) == [0, 10]
     assert out["next-row-id"] == 15
-    # second append: carried entries keep their ids, new file starts at 15
-    m2 = [dict(e) for e in s1["manifest"]] + [_entry("data/c.parquet", 7)]
+    # second append: the carried manifest keeps its base, the new one
+    # starts at 15
+    m2 = _manifest(out, tmp_path, [_entry("data/c.parquet", 7)], sid=2)
     out2 = apply_commit(
-        out, [], [{"action": "add-snapshot", "snapshot": _snap(2, m2, parent=1)}]
+        out,
+        [],
+        [{"action": "add-snapshot",
+          "snapshot": _snap(2, [dict(s1["manifests"][0]), m2], parent=1)}],
     )
     s2 = out2["snapshots"][1]
     assert s2["first-row-id"] == 15
-    assert [e["first-row-id"] for e in s2["manifest"]] == [0, 10, 15]
+    assert [d["first-row-id"] for d in s2["manifests"]] == [0, 15]
+    assert _frids(s2) == [0, 10, 15]
     assert out2["next-row-id"] == 22
+    # the parent snapshot still reads its own ids
+    assert _frids(out2["snapshots"][0]) == [0, 10]
 
 
-def test_delete_files_carry_no_row_ids():
+def test_delete_files_carry_no_row_ids(tmp_path):
     meta = new_table_metadata("u", "loc", SCHEMA, format_version=3)
-    m = [
-        _entry("data/a.parquet", 4),
-        _entry("data/d.parquet", 3, content="position-deletes"),
-    ]
+    data = _manifest(meta, tmp_path, [_entry("data/a.parquet", 4)])
+    dels = _manifest(
+        meta, tmp_path, [_entry("data/d.parquet", 3, content="position-deletes")]
+    )
+    assert "null-id-rows" not in dels
     out = apply_commit(
-        meta, [], [{"action": "add-snapshot", "snapshot": _snap(1, m)}]
+        meta, [], [{"action": "add-snapshot", "snapshot": _snap(1, [data, dels])}]
     )
     s = out["snapshots"][0]
-    assert s["manifest"][0]["first-row-id"] == 0
-    assert "first-row-id" not in s["manifest"][1]
+    assert s["manifests"][0]["first-row-id"] == 0
+    assert "first-row-id" not in s["manifests"][1]
+    assert _frids(s) == [0, None]
     assert out["next-row-id"] == 4
 
 
-def test_stale_first_row_id_rejected():
+def test_stale_first_row_id_rejected(tmp_path):
     meta = new_table_metadata("u", "loc", SCHEMA, format_version=3)
     out = apply_commit(
         meta,
         [],
         [{"action": "add-snapshot",
-          "snapshot": _snap(1, [_entry("data/a.parquet", 10)])}],
+          "snapshot": _snap(1, [_manifest(meta, tmp_path, [_entry("data/a.parquet", 10)])])}],
     )
     with pytest.raises(CommitValidationError, match="behind"):
         apply_commit(
             out,
             [],
             [{"action": "add-snapshot",
-              "snapshot": _snap(2, [_entry("data/b.parquet", 1)],
+              "snapshot": _snap(2, [_manifest(out, tmp_path, [_entry("data/b.parquet", 1)], 2)],
                                 first_row_id=3)}],
         )
 
 
-def test_v2_snapshots_untouched():
+def test_v2_snapshots_untouched(tmp_path):
     meta = new_table_metadata("u", "loc", SCHEMA, format_version=2)
     out = apply_commit(
         meta,
         [],
         [{"action": "add-snapshot",
-          "snapshot": _snap(1, [_entry("data/a.parquet", 10)])}],
+          "snapshot": _snap(1, [_manifest(meta, tmp_path, [_entry("data/a.parquet", 10)])])}],
     )
     s = out["snapshots"][0]
     assert "first-row-id" not in s
-    assert "first-row-id" not in s["manifest"][0]
+    assert "first-row-id" not in s["manifests"][0]
+    assert _frids(s) == [None]
     assert "next-row-id" not in out
+
+
+def test_add_snapshot_with_inline_entry_list_rejected():
+    """The retired inline ``manifest`` entry list is refused: nothing
+    reads it, so the snapshot would plan as an empty table."""
+    meta = new_table_metadata("u", "loc", SCHEMA, format_version=3)
+    snap = _snap(1, [])
+    snap["manifest"] = [_entry("data/a.parquet", 10)]
+    with pytest.raises(CommitValidationError, match="manifest"):
+        apply_commit(meta, [], [{"action": "add-snapshot", "snapshot": snap}])
+    del snap["manifest"]
+    assert apply_commit(meta, [], [{"action": "add-snapshot", "snapshot": snap}])[
+        "snapshots"
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -239,58 +277,80 @@ if _HAS_HYP:
         )
     )
     def test_property_row_id_ranges_disjoint_and_stable(appends):
+        import tempfile
+
         meta = new_table_metadata("u", "loc", SCHEMA, format_version=3)
         seen: dict[str, int] = {}  # path -> first-row-id, must never move
+        bases: dict[str, int] = {}  # manifest -> first-row-id, likewise
         fidx = 0
         sid = 0
-        for counts in appends:
-            sid += 1
-            parent = meta.get("current-snapshot-id")
-            prev = next(
-                (
-                    s
-                    for s in meta["snapshots"]
-                    if s["snapshot-id"] == parent
-                ),
-                None,
-            )
-            manifest = [dict(e) for e in (prev["manifest"] if prev else [])]
-            for rc in counts:
-                manifest.append(_entry(f"data/f{fidx}.parquet", rc))
-                fidx += 1
-            meta = apply_commit(
-                meta,
-                [],
-                [
-                    {
-                        "action": "add-snapshot",
-                        "snapshot": _snap(sid, manifest, parent=parent),
-                    },
-                    {
-                        "action": "set-snapshot-ref",
-                        "ref-name": "main",
-                        "snapshot-id": sid,
-                    },
-                ],
-            )
-            snap = meta["snapshots"][-1]
-            ranges = []
-            for e in snap["manifest"]:
-                frid = e["first-row-id"]
-                # stability: once assigned, a file's id never moves
-                if e["path"] in seen:
-                    assert seen[e["path"]] == frid
-                else:
-                    seen[e["path"]] = frid
-                ranges.append((frid, frid + e["record-count"]))
-            # disjoint (zero-length ranges may share a start point)
-            ranges.sort()
-            for (a0, a1), (b0, b1) in zip(ranges, ranges[1:]):
-                assert a1 <= b0
-            # next-row-id is past every claimed range
-            assert meta["next-row-id"] >= max(
-                (end for _, end in ranges), default=0
-            )
+        with tempfile.TemporaryDirectory() as out_dir:
+            for counts in appends:
+                sid += 1
+                parent = meta.get("current-snapshot-id")
+                prev = next(
+                    (
+                        s
+                        for s in meta["snapshots"]
+                        if s["snapshot-id"] == parent
+                    ),
+                    None,
+                )
+                before = meta["next-row-id"]
+                new = []
+                for rc in counts:
+                    new.append(_entry(f"data/f{fidx}.parquet", rc))
+                    fidx += 1
+                fresh = _manifest(meta, out_dir, new, sid)
+                manifests = [dict(d) for d in (prev["manifests"] if prev else [])]
+                meta = apply_commit(
+                    meta,
+                    [],
+                    [
+                        {
+                            "action": "add-snapshot",
+                            "snapshot": _snap(sid, manifests + [fresh], parent=parent),
+                        },
+                        {
+                            "action": "set-snapshot-ref",
+                            "ref-name": "main",
+                            "snapshot-id": sid,
+                        },
+                    ],
+                )
+                snap = meta["snapshots"][-1]
+                # per manifest: a base id exactly when it holds rows to
+                # number, the new one starting at the old next-row-id, and
+                # a carried one keeping its base
+                for d in snap["manifests"]:
+                    if d["path"] in bases:
+                        assert d["first-row-id"] == bases[d["path"]]
+                    elif d["null-id-rows"]:
+                        assert d["first-row-id"] == before
+                        bases[d["path"]] = d["first-row-id"]
+                    else:
+                        assert "first-row-id" not in d
+                assert meta["next-row-id"] == before + fresh["null-id-rows"]
+                ranges = []
+                for e in snapshot_entries(snap):
+                    frid = e.get("first-row-id")
+                    if frid is None:
+                        assert e["record-count"] == 0  # nothing to number
+                        continue
+                    # stability: once assigned, a file's id never moves
+                    if e["path"] in seen:
+                        assert seen[e["path"]] == frid
+                    else:
+                        seen[e["path"]] = frid
+                    ranges.append((frid, frid + e["record-count"]))
+                # disjoint (zero-length ranges may share a start point)
+                ranges.sort()
+                for (a0, a1), (b0, b1) in zip(ranges, ranges[1:]):
+                    assert a1 <= b0
+                # next-row-id is past every claimed range
+                assert meta["next-row-id"] >= max(
+                    (end for _, end in ranges), default=0
+                )
 
 
 # ---------------------------------------------------------------------------
@@ -589,24 +649,13 @@ def test_update_where_multi_assignment_sees_pre_update_row(spark, table):
     assert got == [(0, "hit"), (0, "hit"), (0, "x0"), (1, "x1"), (2, "x2")]
 
 
-def test_add_snapshot_rejects_added_file_without_record_count():
+def test_add_snapshot_rejects_added_file_without_record_count(tmp_path):
     """A v3 added data file with no record-count cannot claim a row-id
-    range (a defaulted 0 would overlap the next file's ids)."""
+    range (a defaulted 0 would overlap the next file's ids): the manifest
+    writer refuses it, so no snapshot can list it."""
     meta = new_table_metadata("u", "file:///tmp/t", SCHEMA, format_version=3)
-    with pytest.raises(CommitValidationError, match="record-count"):
-        apply_commit(
-            meta,
-            [],
-            [
-                {
-                    "action": "add-snapshot",
-                    "snapshot": _snap(
-                        1,
-                        [{"path": "data/a.parquet", "content": "data"}],
-                    ),
-                },
-            ],
-        )
+    with pytest.raises(ValueError, match="record-count"):
+        _manifest(meta, tmp_path, [{"path": "data/a.parquet", "content": "data"}])
 
 
 # ---------------------------------------------------------------------------

@@ -308,8 +308,9 @@ def test_driver_dv_lane_failure_falls_back_without_orphans(
 # measured identically on two runs. Before the shared MOR commit path
 # the same ops took delete 3, update 4, merge 18; before one DML body per
 # verb (the matched join checkpointed once, images read from it) merge
-# took 8.
-_MOR_JOBS = {"delete": 3, "update": 4, "merge": 7}
+# took 8. An insert-only MERGE (no matched_update) commits an append of
+# its anti-join; before, it ran the full MERGE's 7 jobs.
+_MOR_JOBS = {"delete": 3, "update": 4, "merge": 7, "merge_insert": 2}
 
 
 def test_mor_commit_job_counts(spark, catalog, spark_jobs):
@@ -332,6 +333,7 @@ def test_mor_commit_job_counts(spark, catalog, spark_jobs):
         src = spark.createDataFrame(
             [(i, -1.0, "m") for i in range(100, 120)] + [(1000, -1.0, "new")], DDL
         )
+        new_key = spark.createDataFrame([(2000, -2.0, "ins")], DDL)
         got = {
             "delete": jobs(lambda: t.delete_where("id >= 380", mode="merge-on-read")),
             "update": jobs(
@@ -346,6 +348,10 @@ def test_mor_commit_job_counts(spark, catalog, spark_jobs):
         rows = {r.id: r.v for r in t.scan().collect()}
         assert len(rows) == 381 and rows[1000] == -1.0 and rows[110] == -1.0
         assert rows[5] == 6.0 and 380 not in rows
+        got["merge_insert"] = jobs(
+            lambda: t.merge(src.union(new_key), "t.id = s.id", mode="merge-on-read")
+        )
+        assert t.scan().count() == 382
         return got
 
     cycle("warmup")
@@ -358,7 +364,8 @@ def test_mor_commit_job_counts(spark, catalog, spark_jobs):
 # runs. Before the one live-row read, the v3 lineage scan took 3 jobs (its
 # own broadcast lineage join). Before one DML body per verb, the
 # copy-on-write merge took 11: its file targeting ran as a separate
-# left-semi join, planned as a sort-merge join.
+# left-semi join, planned as a sort-merge join. An insert-only MERGE
+# commits an append of its anti-join; before, it ran the full MERGE's 8.
 _READ_JOBS = {
     3: {
         "scan": 2,
@@ -368,6 +375,7 @@ _READ_JOBS = {
         "cow_delete": 3,
         "cow_update": 3,
         "cow_merge": 8,
+        "cow_merge_insert": 2,
     },
     2: {
         "scan": 2,
@@ -375,6 +383,7 @@ _READ_JOBS = {
         "cow_delete": 3,
         "cow_update": 3,
         "cow_merge": 8,
+        "cow_merge_insert": 2,
     },
 }
 
@@ -400,6 +409,7 @@ def test_read_and_cow_job_counts(spark, catalog, spark_jobs):
         src = spark.createDataFrame(
             [(i, -1.0, "m") for i in range(100, 120)] + [(1000, -1.0, "new")], DDL
         )
+        new_key = spark.createDataFrame([(2000, -2.0, "ins")], DDL)
         got = {"scan": spark_jobs(lambda: t.scan().count())}
         if fv >= 3:
             got["lineage_scan"] = spark_jobs(lambda: t.scan(row_lineage=True).count())
@@ -417,6 +427,10 @@ def test_read_and_cow_job_counts(spark, catalog, spark_jobs):
         rows = {r.id: r.v for r in t.scan().collect()}
         assert len(rows) == (371 if fv >= 3 else 391)
         assert rows[1000] == -1.0 and rows[110] == -1.0 and rows[5] == 6.0
+        got["cow_merge_insert"] = spark_jobs(
+            lambda: t.merge(src.union(new_key), "t.id = s.id")
+        )
+        assert t.scan().count() == len(rows) + 1
         return got
 
     got = {}
