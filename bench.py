@@ -176,33 +176,6 @@ def main() -> None:
         "queries": times,
         "sf": sf,
         "cold_total_sec": round(sum(cold.values()), 3),
-        # measured crossovers / scale caveats (see PLANS.md):
-        "notes": {
-            "s04_cache_points": "re-scan wins at sf0.1 (4.0s vs 4.4s "
-            "persisted); persist wins at synthetic sf1 (4.4s vs 5.6s) - "
-            "flag SPARK_GRAFT_KMEANS_CACHE=1 is the cluster default "
-            "recommendation, off locally",
-            "d02_scale": "output-cardinality-bound at sf1 by design; "
-            "scale-critical dedup routes through d01/d03/d08/d09",
-            "r5_drift": "r5's broad +12% vs r4 was environmental, not a "
-            "plan regression: re-measured at r6 head (which CONTAINS all "
-            "r5 changes) the drifted queries reach or beat their r4 "
-            "times - s01 0.72s (r4 0.74), q13 0.42-0.60s (r4 0.47), q05 "
-            "0.80s (r4 0.73 +9%), d09 2.62s (r4 2.29, run-to-run spread "
-            "2.6-4.7s at identical code under load avg ~5) - single-run "
-            "spread on this shared box exceeds the r4->r5 delta on every "
-            "flagged query",
-            "r8_drift": "r8's uniform +30-80% vs r7 re-measured at r9 "
-            "head (two quiet-box runs, 2026-08-15): anchor q01 back to "
-            "0.796-1.039s (r8 logged ~1.18s, r7 0.674s) and the r8-flagged "
-            "queries returned with it - r02 2.20-2.74s (r8 2.67), p02 "
-            "1.79-2.37s (r8 2.22), with code identical on both. Confirms "
-            "the r8 verdict's adjudication: environmental box drift, no "
-            "plan regression. The guard is now anchor-normalized with "
-            "ceilings recorded from ratios observed together in these "
-            "runs (tools/record_budget.py), so this class of false alarm "
-            "is closed in both directions",
-        },
     }
     if BUDGET_FILE.exists() and abs(sf - 0.1) < 1e-9:
         budget = json.loads(BUDGET_FILE.read_text())

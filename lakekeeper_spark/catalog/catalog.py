@@ -1015,8 +1015,14 @@ class Catalog:
         )
         if row is None:
             raise NoSuchEntity(f"table {'.'.join(levels)}.{name} not found")
-        self.store.record_endpoint("load_table", wh["wh_key"])
         return row["metadata"], row["metadata_seq"], row["location"]
+
+    def record_request(self, endpoint: str, warehouse: str) -> None:
+        """Count one served REST request in the endpoint statistics. Only
+        the REST handlers call this: library loads, scan planning and
+        in-process scan reports are not endpoint calls. ``warehouse`` was
+        resolved by the request, so its key is the folded name part."""
+        self.store.record_endpoint(endpoint, ident.fold(warehouse.split("/", 1)[-1]))
 
     def report_metrics(
         self, warehouse: str, levels, name: str, report: dict[str, Any]
@@ -1031,7 +1037,6 @@ class Catalog:
             str(report.get("report-type", "scan-report")),
             report,
         )
-        self.store.record_endpoint("report_metrics", wh["wh_key"])
 
     def list_metrics_reports(
         self, warehouse: str, levels=None, name: str | None = None
@@ -1982,7 +1987,6 @@ class Catalog:
             adls_vendor=self.adls_vendor,
             gcs_vendor=self.gcs_vendor,
         )
-        self.store.record_endpoint("load_credentials", wh["wh_key"])
         remaining = cred["config"]["expiration-ms"] - now
         return {
             "storage-credentials": [cred],

@@ -1266,6 +1266,7 @@ class SparkTable:
         self, meta: dict[str, Any], df: DataFrame, distribute: bool = True
     ) -> list[dict[str, Any]]:
         """Write df as parquet data files; returns manifest entries.
+        Zero-row files are deleted and get no entry.
 
         Applies the table's default sort order via sortWithinPartitions —
         a per-task sort, no shuffle — so every data file is internally
@@ -1360,6 +1361,10 @@ class SparkTable:
                     0,  # row-group-less file: holds no rows
                 )
                 bounds = {}
+            if nrows == 0:
+                # Spark leaves an empty file for an empty write task
+                p.unlink()
+                continue
             partition = {}
             for part in p.relative_to(out_dir).parts[:-1]:
                 if "=" in part:
@@ -3278,6 +3283,7 @@ class SparkTable:
         for p in sorted(Path(out_dir).rglob("*.parquet")):
             md = pq.ParquetFile(p).metadata
             if md.num_rows == 0:
+                p.unlink()
                 continue
             entry = {
                 "path": p.relative_to(meta["location"]).as_posix(),
@@ -4035,13 +4041,8 @@ class SparkTable:
         if matched_update is None:
             # insert-only: matched rows stay as they are, so the statement
             # is an append of the anti-join — no tombstone, no rewrite. An
-            # empty anti-join still leaves a row-less file, which commits
-            # nothing
+            # empty anti-join commits nothing
             written = self._write_files(meta, inserts) if inserts is not None else []
-            for e in written:
-                if not e["record-count"]:
-                    os.remove(f"{meta['location']}/{e['path']}")
-            written = [e for e in written if e["record-count"]]
             if not written:
                 return meta
             return self._commit_snapshot(meta, None, "append", appended=written)

@@ -54,8 +54,7 @@ public ``file2.proto`` / ``file.proto``:
   dictionary/packed-struct/mini-block layouts, non-page buffers) raise
   the actionable "needs the lance library" error instead of
   mis-decoding; the ArrayEncoding field numbers follow the public
-  ``encodings.proto`` shapes. Round-14 files (a ``LanceliteEncoding``
-  message in those bytes) auto-detect and stay readable;
+  ``encodings.proto`` shapes;
 - file descriptor = ``FileDescriptor{ schema=1, num_rows=2 }`` with
   ``Schema{ fields=1, metadata=2 }`` and the ``file.proto``
   ``Field{ type=1, name=2, id=3, parent_id=4, logical_type=5,
@@ -63,9 +62,9 @@ public ``file2.proto`` / ``file.proto``:
   schemas do, as a PARENT field (``logical_type="fixed_size_list:<dim>"``)
   with a LEAF ``item`` child, ids depth-first, top-level parent_id = -1.
 
-Files written by earlier lancelite rounds carried the same information
-as canonical JSON; the reader auto-detects per payload (JSON starts with
-``{``, protobuf never does) so old datasets stay readable.
+Files written by earlier lancelite rounds (JSON metadata payloads, or a
+``LanceliteEncoding`` message in place of the Any) are no longer read:
+the reader raises ``LanceLiteError`` naming the legacy format.
 
 Supported logical types (the test_lance.py fixture set + vectors):
 ``int32``, ``int64``, ``float32``, ``float64``, ``utf8`` (string), and
@@ -89,7 +88,6 @@ own shard and nothing but the file list touches the driver.
 
 from __future__ import annotations
 
-import json
 import os
 import struct
 from dataclasses import dataclass
@@ -114,17 +112,6 @@ _FIXED = {  # logical type -> (numpy dtype, bytes per value)
 # protobuf message schemas (file2.proto / file.proto shapes; see module
 # docstring). protowire is schema-driven: name -> (field number, kind).
 # ---------------------------------------------------------------------------
-_P_LL_ENCODING = {  # LEGACY round-14 payload inside DirectEncoding.encoding
-    "kind": (1, "string"),  # plain | utf8 | fsl
-    "has_validity": (2, "bool"),
-    "dim": (3, "uint32"),  # fsl only
-    "has_stats": (4, "bool"),  # page zone map present
-    "stats_float": (5, "bool"),  # live pair: int (sint64) or float (double)
-    "min_int": (6, "sint64"),
-    "max_int": (7, "sint64"),
-    "min_double": (8, "double"),
-    "max_double": (9, "double"),
-}
 # google.protobuf.Any (well-known type): real Lance packs the page's
 # ArrayEncoding message into DirectEncoding.encoding through this
 # wrapper — type_url names the message, value carries its bytes.
@@ -240,12 +227,6 @@ class Field:
             d["dim"] = self.dim
         return d
 
-    @staticmethod
-    def from_json(d: dict) -> "Field":
-        return Field(
-            d["name"], d["type"], bool(d.get("nullable", True)),
-            int(d.get("dim", 0)),
-        )
 
 
 def _pa_type(f: Field):
@@ -347,8 +328,7 @@ def _fields_from_proto(pfields: list[dict]) -> list[Field]:
 
 
 # ---------------------------------------------------------------------------
-# metadata payload (de)serialization: protobuf, with a JSON read fallback
-# for files written by earlier lancelite rounds
+# metadata payload (de)serialization: protobuf
 # ---------------------------------------------------------------------------
 def _ae_flat(bits: int, buffer_index: int) -> dict:
     return {
@@ -523,54 +503,36 @@ def _enc_from_proto(pmsg: dict | None) -> tuple[dict, dict | None]:
     if not direct or not direct.get("encoding"):
         raise _unsupported("page has no direct encoding")
     raw = direct["encoding"]
-    # real-library layout first: a google.protobuf.Any wrapping the
-    # page's ArrayEncoding (legacy LanceliteEncoding bytes either fail
-    # the Any parse — field 2 is a varint there — or surface a kind
-    # string in type_url that never matches the ArrayEncoding URL)
-    any_msg = None
+    # the real-library layout: a google.protobuf.Any wrapping the page's
+    # ArrayEncoding. Round-14 lancelite wrote a LanceliteEncoding message
+    # here instead; it either fails the Any parse (field 2 is a varint
+    # there) or carries a kind string without "/" in field 1.
     try:
         any_msg = decode_message(_P_ANY, raw)
     except ProtoWireError:
-        pass
-    if any_msg is not None and "/" in any_msg.get("type_url", ""):
-        # a genuine Any (legacy payloads never put "/" in field 1):
-        # anything but the ArrayEncoding vocabulary is out of subset
-        if not any_msg["type_url"].endswith("lance.encodings.ArrayEncoding"):
-            raise _unsupported(
-                f"encoding message {any_msg['type_url']!r}"
-            )
-        try:
-            ae = decode_message(_P_AE, any_msg.get("value", b""))
-        except ProtoWireError as e:
-            raise LanceLiteError(
-                f"Any-wrapped ArrayEncoding does not parse: {e}"
-            ) from e
-        enc = _enc_from_array_encoding(ae)
-        stats = None
-        s = direct.get("stats") if isinstance(direct, dict) else None
-        if s:
-            stats = (
-                {"min": s["min_double"], "max": s["max_double"]}
-                if s["stats_float"]
-                else {"min": s["min_int"], "max": s["max_int"]}
-            )
-        return enc, stats
-    # legacy round-14 LanceliteEncoding payload
-    doc = decode_message(_P_LL_ENCODING, raw)
-    if doc["kind"] not in ("plain", "utf8", "fsl"):
-        raise _unsupported(f"unknown page encoding {doc['kind']!r}")
-    enc = {
-        "type": doc["kind"],
-        "has_validity": doc["has_validity"],
-    }
-    if doc["dim"]:
-        enc["dim"] = doc["dim"]
+        any_msg = {}
+    if "/" not in any_msg.get("type_url", ""):
+        raise LanceLiteError(
+            "page encoding is not an Any-wrapped ArrayEncoding (a round-14 "
+            "lancelite LanceliteEncoding payload?); it is no longer read"
+        )
+    # anything but the ArrayEncoding vocabulary is out of subset
+    if not any_msg["type_url"].endswith("lance.encodings.ArrayEncoding"):
+        raise _unsupported(f"encoding message {any_msg['type_url']!r}")
+    try:
+        ae = decode_message(_P_AE, any_msg.get("value", b""))
+    except ProtoWireError as e:
+        raise LanceLiteError(
+            f"Any-wrapped ArrayEncoding does not parse: {e}"
+        ) from e
+    enc = _enc_from_array_encoding(ae)
     stats = None
-    if doc["has_stats"]:
+    s = direct.get("stats") if isinstance(direct, dict) else None
+    if s:
         stats = (
-            {"min": doc["min_double"], "max": doc["max_double"]}
-            if doc["stats_float"]
-            else {"min": doc["min_int"], "max": doc["max_int"]}
+            {"min": s["min_double"], "max": s["max_double"]}
+            if s["stats_float"]
+            else {"min": s["min_int"], "max": s["max_int"]}
         )
     return enc, stats
 
@@ -593,17 +555,17 @@ def _col_meta_to_bytes(cm: dict, field: Field) -> bytes:
 
 
 def parse_column_metadata(blob: bytes) -> dict:
-    """Decode one column-metadata payload (protobuf, or legacy lancelite
-    JSON) into the internal page-dict shape. Public for tests/tools that
-    inspect raw files."""
-    if blob[:1] == b"{":  # legacy JSON payload
-        return json.loads(blob)
+    """Decode one protobuf column-metadata payload into the internal
+    page-dict shape. Public for tests/tools that inspect raw files."""
+    if blob[:1] == b"{":
+        raise LanceLiteError(
+            "column metadata is a round-13 lancelite JSON payload, which "
+            "is no longer read"
+        )
     try:
         pcm = decode_message(_P_COLUMN_METADATA, blob)
     except ProtoWireError as e:
-        raise LanceLiteError(
-            f"column metadata is neither lancelite protobuf nor JSON: {e}"
-        ) from e
+        raise LanceLiteError(f"column metadata is not lancelite protobuf: {e}") from e
     pages = []
     for p in pcm["pages"]:
         enc, stats = _enc_from_proto(p["encoding"])
@@ -636,10 +598,10 @@ def _descriptor_to_bytes(fields: list[Field], n_rows: int) -> bytes:
 
 
 def _descriptor_from_bytes(blob: bytes) -> tuple[list[Field], int]:
-    if blob[:1] == b"{":  # legacy JSON descriptor
-        doc = json.loads(blob)
-        return [Field.from_json(f) for f in doc["fields"]], int(
-            doc["num_rows"]
+    if blob[:1] == b"{":
+        raise LanceLiteError(
+            "file descriptor is a round-13 lancelite JSON payload, which "
+            "is no longer read"
         )
     try:
         fd = decode_message(_P_FILE_DESCRIPTOR, blob)

@@ -1,28 +1,19 @@
 """Distributed connected components over an edge DataFrame.
 
-Two interchangeable algorithms behind one API (``connected_components``):
+``connected_components`` runs the large-star / small-star alternation of
+Kiveris et al., "Connected Components in MapReduce and Beyond" (SoCC'14):
+it converges in O(log^2 n) rounds regardless of diameter, so long chains
+(path graphs, linked near-dup shingles) finish in a handful of rounds.
+Each round is two groupBy-min + join phases over the edge set only —
+vertex labels are derived once at the end.
 
-- ``propagation`` — min-label propagation: each round is one join + one
-  min-aggregate; converges in O(component diameter) rounds. The right
-  choice for dedup graphs (diameter is tiny: near-dup clusters are dense).
-  Raises on non-convergence instead of silently returning partial labels.
-
-- ``two_phase`` — the large-star / small-star alternation of Kiveris et
-  al., "Connected Components in MapReduce and Beyond" (SoCC'14):
-  converges in O(log^2 n) rounds regardless of diameter, so long chains
-  (path graphs, linked near-dup shingles) that would need diameter-many
-  propagation rounds finish in a handful. Each round is two
-  groupBy-min + join phases over the edge set only — vertex labels are
-  derived once at the end.
-
-Both return a ``(doc_id, label)`` DataFrame where ``label`` is the minimum
+It returns a ``(doc_id, label)`` DataFrame where ``label`` is the minimum
 vertex id reachable from ``doc_id`` (isolated vertices label themselves).
-Only O(1) scalars cross to the driver per round (change counts / edge-set
-checksums); intermediate frames are localCheckpointed to truncate lineage.
+Only O(1) scalars cross to the driver per round (edge-set checksums);
+each round's edge set is localCheckpointed to truncate lineage.
 
-Scale notes (100 TB): propagation shuffles |E| + |V| per round on the join
-keys; two_phase shuffles |E| twice per round but needs exponentially fewer
-rounds on high-diameter graphs. Neither collects data-sized results.
+Scale notes (100 TB): each round shuffles |E| twice; nothing data-sized
+is collected.
 """
 
 from __future__ import annotations
@@ -35,60 +26,11 @@ class ComponentsNotConverged(RuntimeError):
     """Raised when the iteration cap is hit before the fixpoint."""
 
 
-def _symmetrize(edges: DataFrame) -> DataFrame:
-    return edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-
-
-def min_label_propagation(
-    edges: DataFrame, vertices: DataFrame, max_iters: int = 25
-) -> tuple[DataFrame, int]:
-    """Min-label propagation to fixpoint.
-
-    edges: (src, dst) undirected (each pair once, either direction).
-    vertices: one column ``doc_id`` covering every vertex (isolated ok).
-    Returns (labels, n_rounds); raises ComponentsNotConverged if the
-    fixpoint was not reached within max_iters — partial labels are wrong
-    answers, never returned.
-    """
-    sym = _symmetrize(edges).localCheckpoint(eager=True)
-    labels = vertices.select("doc_id", F.col("doc_id").alias("label")).localCheckpoint(
-        eager=True
-    )
-    for rounds in range(1, max_iters + 1):
-        prop = (
-            sym.join(labels, F.col("src") == F.col("doc_id"))
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        updated = (
-            labels.join(prop, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
-                ).alias("label"),
-                (F.col("nbr_min") < F.col("label")).alias("changed"),
-            )
-        ).localCheckpoint(eager=False)  # truncate lineage each round
-        # the change-count action is what materializes the (lazy)
-        # checkpoint — one job per round instead of a separate
-        # materialization barrier followed by the count (r17, guide §1.2)
-        n_changed = updated.filter(F.col("changed")).count()  # scalar only
-        labels = updated.select("doc_id", "label")
-        if n_changed == 0:
-            return labels, rounds
-    raise ComponentsNotConverged(
-        f"min-label propagation did not reach a fixpoint in {max_iters} rounds "
-        "(component diameter exceeds the cap); use algorithm='two_phase' "
-        "for long-chain graphs"
-    )
-
-
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect every strictly-larger neighbor of u to min(N(u) + {u})."""
-    sym = _symmetrize(edges)
+    sym = edges.select("src", "dst").unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
     mins = (
         sym.groupBy("src")
         .agg(F.min("dst").alias("mn"))
@@ -116,14 +58,19 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.where(F.col("src") != F.col("dst")).distinct()
 
 
-def large_small_star(
+def connected_components(
     edges: DataFrame, vertices: DataFrame, max_iters: int = 20
 ) -> tuple[DataFrame, int]:
-    """Kiveris et al. two-phase alternation; O(log^2 n) rounds.
+    """Label every vertex with the min vertex id of its component; returns
+    (labels, n_rounds).
 
+    edges: (src, dst) undirected (each pair once, either direction).
+    vertices: one column ``doc_id`` covering every vertex (isolated ok).
     Convergence is detected by an order-independent edge-set checksum
-    (count + sum of xxhash64 over canonicalized pairs) staying unchanged
-    across a round — two scalars to the driver per round.
+    (count + bit_xor of xxhash64 over canonicalized pairs) staying
+    unchanged across a round — two scalars to the driver per round.
+    Raises ComponentsNotConverged if that takes more than max_iters
+    rounds — partial labels are wrong answers, never returned.
     """
     cur = (
         edges.select(
@@ -168,18 +115,3 @@ def large_small_star(
     )
     return labels, rounds_used
 
-
-def connected_components(
-    edges: DataFrame,
-    vertices: DataFrame,
-    algorithm: str = "propagation",
-    max_iters: int = 25,
-) -> DataFrame:
-    """Label every vertex with the min vertex id of its component."""
-    if algorithm == "propagation":
-        labels, _ = min_label_propagation(edges, vertices, max_iters)
-    elif algorithm == "two_phase":
-        labels, _ = large_small_star(edges, vertices, max_iters)
-    else:
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
-    return labels

@@ -1698,9 +1698,11 @@ def c15_task_management(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append(("horizon_refused", refused))
 
         # --- endpoint statistics over HTTP, rolled up via Spark ---------
-        # (LoadEndpointStatistics, endpoints.rs:234): the load_table calls
-        # this very row made are visible in the hourly counters; the
-        # rollup of the returned slices runs through a Spark aggregate.
+        # (LoadEndpointStatistics, endpoints.rs:234): the REST loadTable
+        # this row makes is visible in the hourly counters (library loads
+        # are not endpoint calls); the rollup of the returned slices runs
+        # through a Spark aggregate.
+        req("GET", "/catalog/v1/wh/namespaces/ops/tables/t4")
         stats = req("POST", "/management/v1/endpoint-statistics", {})
         flat = [
             (s["http-route"], int(s["count"]))

@@ -789,16 +789,14 @@ def d08_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # must then cluster them transitively (A~B, B~C => one cluster) and keep
 # one canonical doc per cluster. d09 builds the duplicate graph from
 # shared chunks (d08's unit: docs sharing any CHUNK_W-word window are
-# connected) and runs min-label propagation to a FIXPOINT: every vertex
-# ends labeled with the smallest doc_id reachable from it — the
-# distributed connected-components algorithm (Kiveris et al. 2014's
-# baseline; GraphFrames' default). Each iteration is one join + one
-# min-aggregate, labels localCheckpoint between rounds to truncate
-# lineage, and ONLY the per-iteration change count (a scalar) reaches the
-# driver. Iterations are bounded by component diameter; the synthetic
-# corpus converges in <= 3. The DuckDB oracle computes the same fixpoint
-# as a recursive CTE over the identical edge set.
-CC_MAX_ITERS = 25  # >> any real component diameter; loop exits on fixpoint
+# connected) and runs connected components to a FIXPOINT: every vertex
+# ends labeled with the smallest doc_id reachable from it. The kernel is
+# the large/small-star alternation (Kiveris et al. 2014): O(log^2 n)
+# rounds whatever the component diameter, each round's edge set
+# localCheckpointed to truncate lineage, and ONLY a per-round edge-set
+# checksum (two scalars) reaches the driver. The DuckDB oracle computes
+# the same fixpoint as a recursive CTE over the identical edge set.
+CC_MAX_ITERS = 25  # >> the rounds any real graph needs; loop exits on fixpoint
 
 
 def _cc_chunk_edges_sql() -> str:
@@ -841,9 +839,9 @@ GROUP BY component
 HAVING COUNT(*) > 1
 """,
     description="Duplicate clusters via distributed connected components: "
-    "chunk-sharing pairs form edges, min-label propagation iterates one "
-    "join + min-aggregate per round to the fixpoint (only a scalar change "
-    "count crosses to the driver), multi-doc clusters reported with their "
+    "chunk-sharing pairs form edges, the large/small-star alternation "
+    "iterates to the fixpoint (only an edge-set checksum crosses to the "
+    "driver per round), multi-doc clusters reported with their "
     "canonical member. Oracle = recursive-CTE transitive closure.",
     tags=("dedup", "llm", "graph", "iterative"),
 )
@@ -874,13 +872,10 @@ def d09_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
         .distinct()
     )
-    # shared CC kernel (functions/components.py): min-label propagation
-    # raises ComponentsNotConverged instead of returning partial labels if
-    # the diameter exceeds CC_MAX_ITERS; long-chain graphs can opt into
-    # the O(log^2 n) large/small-star alternation via algorithm="two_phase"
-    labels = connected_components(
-        edges, docs.select("doc_id"), algorithm="propagation", max_iters=CC_MAX_ITERS
-    )
+    # shared CC kernel (functions/components.py): the large/small-star
+    # alternation raises ComponentsNotConverged instead of returning
+    # partial labels if it needs more than CC_MAX_ITERS rounds
+    labels, _ = connected_components(edges, docs.select("doc_id"), CC_MAX_ITERS)
     return (
         labels.groupBy(F.col("label").alias("component"))
         .agg(
@@ -1383,9 +1378,7 @@ def d13_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _h48_verified_pairs(spark, docs, sh, pre, "doc_a", "doc_b").select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
-    labels = connected_components(
-        edges, docs.select("doc_id"), algorithm="propagation", max_iters=CC_MAX_ITERS
-    )
+    labels, _ = connected_components(edges, docs.select("doc_id"), CC_MAX_ITERS)
     sizes_by_label = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         labels.join(sizes_by_label, "label")

@@ -19,8 +19,6 @@ bit-identical across engines (see queries/similarity.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -404,19 +402,8 @@ def _km_cte_body() -> str:
     "(embeddings_ops.py docstring: the production swap-in).",
     tags=("embeddings", "ml", "iterative", "ann"),
 )
-def s04_kmeans_train(
-    spark: SparkSession, sf_dir: str, cache_points: bool | None = None
-) -> DataFrame:
-    # cache_points=False: each Lloyd iteration re-scans the parquet —
-    # measured FASTER at sf0.1 (4.0s vs 4.4s persisted: OS page cache
-    # makes local parquet scans cheaper than the persist round-trip) but
-    # SLOWER at synthetic sf1 (5.6s vs 4.4s) — the crossover the flag
-    # exists for. cache_points=True is the MLlib topology, the right
-    # call on a cluster where "re-scan" means remote object-store reads.
-    # Same result bit-for-bit either way; flag defaults from
-    # $SPARK_GRAFT_KMEANS_CACHE so cluster deployments flip it without a
-    # code change.
-    _assigned, centroids, counts = _lloyd_assign(spark, sf_dir, cache_points)
+def s04_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
+    _assigned, centroids, counts = _lloyd_assign(spark, sf_dir)
 
     # half-away-from-zero, matching SQL ROUND (Python round() is banker's)
     def _r6(v: float) -> int:
@@ -441,7 +428,7 @@ def s04_kmeans_train(
 
 
 def _lloyd_assign(
-    spark: SparkSession, sf_dir: str, cache_points: bool | None = None
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, dict[int, list[float]], dict[int, int]]:
     """KM_ITERS Lloyd iterations; returns the final (vec_id, embedding,
     cid) assignment DataFrame, the final centroid matrix (K x D driver
@@ -450,11 +437,9 @@ def _lloyd_assign(
     cluster's point count). Shared by s04 (training summary) and d12
     (SemDeDup)."""
     d, k = KM_DIM, KM_K
-    if cache_points is None:
-        cache_points = os.environ.get("SPARK_GRAFT_KMEANS_CACHE", "0") == "1"
-    pts = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    if cache_points:
-        pts = pts.persist()
+    # the points are persisted across the iterations (the MLlib
+    # topology): each Lloyd pass reads them from memory, not the source
+    pts = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").persist()
     init = {
         int(r["vec_id"]): [float(x) for x in r["embedding"]]
         for r in pts.filter(F.col("vec_id") < k).collect()
@@ -533,10 +518,9 @@ def _lloyd_assign(
         counts = {
             int(r["cid"]): int(r["n"]) for r in upd if int(r["dim0"]) == 0
         }
-    if cache_points:
-        # iterations are done; downstream consumers re-read the source
-        # once rather than pinning the points for the session
-        pts.unpersist()
+    # iterations are done; downstream consumers re-read the source
+    # once rather than pinning the points for the session
+    pts.unpersist()
     return assigned, centroids, counts
 
 

@@ -1,10 +1,9 @@
 """Similarity search over the `embeddings` table (array<float> vectors).
 
   s01 brute-force top-k cosine — the exactness baseline. Broadcast the query
-      vectors, score every row, take top-k per query via a rank window.
-      Adaptive physical plan: small corpora use a codegen'd JVM expression,
-      large ones an Arrow-batched numpy kernel (bit-identical results,
-      pytest-asserted). At 100 TB the data side stays partitioned; cost is
+      vectors, score every row with an Arrow-batched numpy kernel, take
+      top-k per query via a rank window. At 100 TB the data side stays
+      partitioned; cost is
       a single narrow pass (no shuffle except the final per-query top-k,
       which is #queries*k rows).
   s02 LSH-bucketed ANN — random-hyperplane signatures; only rows sharing a
@@ -68,9 +67,6 @@ def _work_dir(kind: str, sf_dir: str) -> str:
 N_QUERIES = 10  # vec_id < 10 are the query vectors
 TOP_K = 10
 QUANT = 1_000_000
-# below this many vectors the JVM expression plan beats the numpy kernel
-# (Python worker-pool + Arrow startup isn't amortized)
-_NUMPY_SCORER_MIN_ROWS = 100_000
 # 16 tables x 6 bits: for a neighbor at cosine ~0.4 (typical nearest on
 # near-random data) collision prob per table is (1-theta/pi)^6 ~ 6%, union
 # over 16 tables ~ 63%; a random pair collides in <= ~22% of tables' buckets,
@@ -169,57 +165,15 @@ WHERE rnk <= {TOP_K}
     "s01_knn_bruteforce",
     oracle=_S01_ORACLE,
     description="Exact top-k cosine neighbors for the first 10 vectors; "
-    "broadcast queries x full scan, quantized-integer dot products. "
-    "Adaptive physical plan: JVM expression scoring for small corpora, "
-    "Arrow-batched numpy kernel above _NUMPY_SCORER_MIN_ROWS.",
+    "broadcast queries x full scan, quantized-integer dot products "
+    "scored by an Arrow-batched numpy kernel.",
     tags=("similarity", "llm"),
 )
 def s01_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _s01_adaptive(load_table(spark, sf_dir, "embeddings"))
+    return _s01_exact(load_table(spark, sf_dir, "embeddings"))
 
 
-def _s01_adaptive(emb: DataFrame) -> DataFrame:
-    # Same exact semantics, two physical strategies: the Python-worker pool
-    # + Arrow startup (~10 s on local[32]) only amortizes once the
-    # vectorized (batch x queries x dim) kernel saves more than that, so
-    # small corpora stay on the codegen'd JVM expression plan (measured
-    # faster below ~1e5 x 64-dim vectors); large corpora take the numpy
-    # kernel, whose per-row cost is ~100x lower than the interpreted
-    # higher-order fold. count() is parquet-metadata cheap.
-    if emb.count() <= _NUMPY_SCORER_MIN_ROWS:
-        return _s01_jvm(emb)
-    return _s01_numpy(emb)
-
-
-def _s01_jvm(emb: DataFrame) -> DataFrame:
-    norms = emb.select("vec_id", _dot6("embedding", "embedding").alias("norm6"))
-    embn = emb.join(norms, "vec_id")
-    q = embn.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm6").alias("q_norm6"),
-    )
-    pairs = F.broadcast(q).crossJoin(embn.withColumnRenamed("vec_id", "neighbor_id"))
-    scored = pairs.filter(F.col("neighbor_id") != F.col("query_id")).select(
-        "query_id",
-        "neighbor_id",
-        (
-            _dot6("q_emb", "embedding").cast("double")
-            / F.sqrt(F.col("q_norm6").cast("double") * F.col("norm6").cast("double"))
-        ).alias("cosine"),
-    )
-    return _topk(scored)
-
-
-def _topk(scored: DataFrame) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= TOP_K)
-    )
-
-
-def _s01_numpy(emb: DataFrame) -> DataFrame:
+def _s01_exact(emb: DataFrame) -> DataFrame:
     spark = emb.sparkSession
     # The 10 query vectors ride to every executor in the UDF closure (the
     # broadcast-small-side pattern); scoring is one Arrow-batched numpy
@@ -262,7 +216,10 @@ def _s01_numpy(emb: DataFrame) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    return _topk(scored)
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return scored.withColumn("rnk", F.row_number().over(w).cast("int")).filter(
+        F.col("rnk") <= TOP_K
+    )
 
 
 # --------------------------------------------------------------------------
@@ -880,7 +837,7 @@ def s09_generic_vector_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load_table(spark, sf_dir, "embeddings")
     create_vector_dataset(cat, "wh", ["vectors"], "emb", src, "embedding")
     emb = read_vector_dataset(spark, cat, "wh", ["vectors"], "emb")
-    return _s01_adaptive(emb)
+    return _s01_exact(emb)
 
 
 # --------------------------------------------------------------------------
@@ -934,7 +891,7 @@ def s12_lance_vector_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: the lancelite sink writes one data file per
     partition EXECUTOR-side (mapInPandas), the read runs one decode task
     per file — only the file list crosses the driver, like a native
-    DataSource. The KNN kernel is s01's adaptive exact scorer."""
+    DataSource. The KNN kernel is s01's exact scorer."""
     from ..catalog.catalog import Catalog
     from ..catalog.metastore import Metastore
     from ..format.generic import read_generic_table
@@ -984,7 +941,7 @@ def s12_lance_vector_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb.select("vec_id", "embedding", "label").repartition(
         spark.sparkContext.defaultParallelism
     ).write.mode("overwrite").parquet(mat)
-    return _s01_adaptive(spark.read.parquet(mat))
+    return _s01_exact(spark.read.parquet(mat))
 
 
 # --------------------------------------------------------------------------
@@ -1024,7 +981,7 @@ WHERE rnk <= {TOP_K}
     f"dataset restricted to vec_id <= {S13_MAX_ID} — the restriction is "
     "pushed to lancelite's page ZONE MAPS (excluded stripes' bytes are "
     "never read; the decoder applies the exact residual), then s01's "
-    "adaptive kernel scores the surviving subset. The filtered-corpus "
+    "numpy kernel scores the surviving subset. The filtered-corpus "
     "retrieval shape every metadata-filtered vector search runs.",
     tags=("similarity", "catalog", "generic-table", "llm", "lance", "pushdown"),
 )
@@ -1054,7 +1011,7 @@ def s13_lance_zonemap_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb.select("vec_id", "embedding", "label").repartition(
         spark.sparkContext.defaultParallelism
     ).write.mode("overwrite").parquet(mat)
-    return _s01_adaptive(spark.read.parquet(mat))
+    return _s01_exact(spark.read.parquet(mat))
 
 
 # --------------------------------------------------------------------------
@@ -1089,13 +1046,13 @@ FROM hits ORDER BY query_id
 )
 def s11_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale shape: the exact side is the one expensive pass (s01's
-    adaptive broadcast/numpy kernel); the LSH side touches only bucket
+    numpy kernel); the LSH side touches only bucket
     collisions. The recall join keys on (query_id, neighbor_id) — at
     N_QUERIES x TOP_K rows per side it broadcasts regardless of corpus
     size, so evaluation cost is dominated by the index builds, never
     the comparison."""
     emb = load_table(spark, sf_dir, "embeddings")
-    exact = _s01_adaptive(emb).select("query_id", "neighbor_id")
+    exact = _s01_exact(emb).select("query_id", "neighbor_id")
     approx = _s02_lsh(emb).select(
         "query_id", "neighbor_id", F.lit(1).alias("hit")
     )

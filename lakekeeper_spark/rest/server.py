@@ -492,6 +492,7 @@ class _Handler(BaseHTTPRequestHandler):
                 ]
             except AuthorizationError:
                 pass  # metadata-only load
+        self.catalog.record_request("load_table", prefix)
         self._reply(200, _metadata_envelope(doc, out), headers={"ETag": f'W/"{seq}"'})
 
     @route("HEAD", rf"/catalog/v1/{P}/namespaces/{NS}/tables/{TBL}")
@@ -720,11 +721,14 @@ class _Handler(BaseHTTPRequestHandler):
     @route("POST", rf"/catalog/v1/{P}/namespaces/{NS}/tables/{TBL}/metrics")
     def report_metrics(self, prefix, ns, tbl):
         self.catalog.report_metrics(prefix, _ns(ns), unquote(tbl), self._body())
+        self.catalog.record_request("report_metrics", prefix)
         self._reply(204)
 
     @route("GET", rf"/catalog/v1/{P}/namespaces/{NS}/tables/{TBL}/credentials")
     def load_table_credentials(self, prefix, ns, tbl):
-        self._reply(200, self.catalog.load_credentials(prefix, _ns(ns), unquote(tbl)))
+        creds = self.catalog.load_credentials(prefix, _ns(ns), unquote(tbl))
+        self.catalog.record_request("load_credentials", prefix)
+        self._reply(200, creds)
 
     # ---- S3 remote signing (reference endpoints.rs:181-185, three route
     # shapes; handler semantics in rest/s3_sign.py) ----------------------
@@ -874,10 +878,9 @@ class _Handler(BaseHTTPRequestHandler):
 
     @route("GET", rf"/data/v1/{P}/namespaces/{NS}/generic-tables/{TBL}/credentials")
     def load_generic_credentials(self, prefix, ns, tbl):
-        self._reply(
-            200,
-            self.catalog.load_credentials(prefix, _ns(ns), unquote(tbl), kind="generic"),
-        )
+        creds = self.catalog.load_credentials(prefix, _ns(ns), unquote(tbl), kind="generic")
+        self.catalog.record_request("load_credentials", prefix)
+        self._reply(200, creds)
 
     # ---- management v1 --------------------------------------------------
     def _project_id(self) -> str:

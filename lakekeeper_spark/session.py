@@ -13,8 +13,10 @@ Settings chosen for the 100 TB design point:
 
 from __future__ import annotations
 
+import logging
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 
@@ -53,7 +55,7 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
 
     The driver hands us its own SparkSession in ``entry``/``queries``; these
     confs are all runtime-settable SQLConf entries, so this works on any
-    session. Failures are ignored (conf may be static in exotic setups).
+    session. A conf the session holds static is logged and left as it is.
     """
     for key, value in [
         ("spark.sql.session.timeZone", "UTC"),
@@ -66,5 +68,7 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
     ]:
         try:
             spark.conf.set(key, value)
-        except Exception:
-            pass
+        except AnalysisException as exc:  # CANNOT_MODIFY_(STATIC_)CONFIG
+            logging.getLogger(__name__).warning(
+                "cannot set %s=%s on this session: %s", key, value, exc
+            )

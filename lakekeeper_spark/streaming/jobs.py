@@ -31,7 +31,6 @@ on a cluster it would be an object-store path.
 from __future__ import annotations
 
 import math
-import os
 import shutil
 import tempfile
 import time
@@ -79,13 +78,22 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_ts_ns(stream)
 
 
-# One streaming state shard per this many MiB of staged source input
-# (env-tunable). Micro-batch plans get no AQE: the shuffle/state partition
+def _stream_session(spark: SparkSession) -> None:
+    """Runtime confs plus the icelite stream source. Registering the same
+    class again returns normally, so a failure here is a real error."""
+    from .source import IceliteStreamDataSource
+
+    ensure_runtime_confs(spark)
+    spark.dataSource.register(IceliteStreamDataSource)
+
+
+# One streaming state shard per this many MiB of staged source input.
+# Micro-batch plans get no AQE: the shuffle/state partition
 # count is spark.sql.shuffle.partitions at first start, frozen into the
 # checkpoint, and every stateful operator pays a fixed per-shard cost PER
 # TRIGGER (state store open/commit/maintenance; the trailing no-data
 # finalization batch iterates every shard even with zero input rows).
-_STATE_SHARD_MB = int(os.environ.get("SPARK_GRAFT_STATE_SHARD_MB", "8"))
+_STATE_SHARD_MB = 8
 
 
 def _state_shards(spark: SparkSession, *paths: str) -> int:
@@ -617,13 +625,8 @@ def st07_stream_table_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..data import load_table
     from ..format.icelite import SparkTable
     from ..format.types import struct_to_schema
-    from .source import IceliteStreamDataSource
 
-    ensure_runtime_confs(spark)
-    try:
-        spark.dataSource.register(IceliteStreamDataSource)
-    except Exception:
-        pass  # idempotent per-session registration
+    _stream_session(spark)
 
     tmp = tempfile.mkdtemp(prefix="lkspark_src_")
     mpath = f"{tmp}/metastore.db"
@@ -937,13 +940,8 @@ def st10_stream_table_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..data import load_table
     from ..format.icelite import SparkTable
     from ..format.types import struct_to_schema
-    from .source import IceliteStreamDataSource
 
-    ensure_runtime_confs(spark)
-    try:
-        spark.dataSource.register(IceliteStreamDataSource)
-    except Exception:
-        pass  # idempotent per-session registration
+    _stream_session(spark)
 
     tmp = tempfile.mkdtemp(prefix="lkspark_loop_")
     mpath = f"{tmp}/metastore.db"
@@ -1090,13 +1088,8 @@ def st11_stream_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..data import load_table
     from ..format.icelite import SparkTable
     from ..format.types import struct_to_schema
-    from .source import IceliteStreamDataSource
 
-    ensure_runtime_confs(spark)
-    try:
-        spark.dataSource.register(IceliteStreamDataSource)
-    except Exception:
-        pass  # idempotent per-session registration
+    _stream_session(spark)
 
     tmp = tempfile.mkdtemp(prefix="lkspark_cdcfeed_")
     mpath = f"{tmp}/metastore.db"
@@ -1412,13 +1405,8 @@ def st15_stream_native_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..data import load_table
     from ..format.icelite import SparkTable
     from ..format.types import struct_to_schema
-    from .source import IceliteStreamDataSource
 
-    ensure_runtime_confs(spark)
-    try:
-        spark.dataSource.register(IceliteStreamDataSource)
-    except Exception:
-        pass
+    _stream_session(spark)
 
     tmp = tempfile.mkdtemp(prefix="lkspark_sink_")
     mpath = f"{tmp}/metastore.db"
@@ -1537,13 +1525,8 @@ def st16_stream_update_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..data import load_table
     from ..format.icelite import SparkTable, pair_update_images
     from ..format.types import struct_to_schema
-    from .source import IceliteStreamDataSource
 
-    ensure_runtime_confs(spark)
-    try:
-        spark.dataSource.register(IceliteStreamDataSource)
-    except Exception:
-        pass
+    _stream_session(spark)
 
     tmp = tempfile.mkdtemp(prefix="lkspark_updfeed_")
     mpath = f"{tmp}/metastore.db"
@@ -2146,13 +2129,8 @@ def st21_stream_lineage_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..data import load_table
     from ..format.icelite import SparkTable, pair_update_images
     from ..format.types import struct_to_schema
-    from .source import IceliteStreamDataSource
 
-    ensure_runtime_confs(spark)
-    try:
-        spark.dataSource.register(IceliteStreamDataSource)
-    except Exception:
-        pass
+    _stream_session(spark)
 
     tmp = tempfile.mkdtemp(prefix="lkspark_lincdc_")
     mpath = f"{tmp}/metastore.db"
@@ -2251,13 +2229,8 @@ def st22_stream_lineage_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..data import load_table
     from ..format.icelite import SparkTable
     from ..format.types import struct_to_schema
-    from .source import IceliteStreamDataSource
 
-    ensure_runtime_confs(spark)
-    try:
-        spark.dataSource.register(IceliteStreamDataSource)
-    except Exception:
-        pass
+    _stream_session(spark)
 
     tmp = tempfile.mkdtemp(prefix="lkspark_linev_")
     mpath = f"{tmp}/metastore.db"

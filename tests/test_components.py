@@ -1,9 +1,9 @@
-"""Connected-components kernel: propagation vs large/small-star vs union-find.
+"""Connected-components kernel (large/small-star) vs union-find.
 
-The two algorithms must agree with a driver-side union-find oracle on every
-graph; the two-phase alternation must additionally converge in O(log^2 n)
-rounds on a path graph where plain propagation needs diameter-many rounds
-(Kiveris et al., SoCC'14).
+The kernel must agree with a driver-side union-find oracle on every
+graph, converge in O(log^2 n) rounds on a path graph, where label
+propagation would need diameter-many rounds (Kiveris et al., SoCC'14),
+and refuse rather than return partial labels when capped.
 """
 
 from __future__ import annotations
@@ -15,8 +15,6 @@ import pytest
 from lakekeeper_spark.functions.components import (
     ComponentsNotConverged,
     connected_components,
-    large_small_star,
-    min_label_propagation,
 )
 
 
@@ -53,31 +51,23 @@ def _labels_dict(df) -> dict[int, int]:
     return {int(r["doc_id"]): int(r["label"]) for r in df.collect()}
 
 
-def test_path_graph_two_phase_beats_propagation(spark):
-    # path 0-1-2-...-40: diameter 40, so propagation needs 40 rounds —
-    # with a 10-round cap it must REFUSE (not return partial labels) ...
+def test_path_graph_converges_in_log_rounds(spark):
+    # path 0-1-2-...-40: diameter 40, label propagation would need 40
+    # rounds; large/small-star collapses the chain in O(log^2 n) rounds
     n = 41
     edges = [(i, i + 1) for i in range(n - 1)]
     e, v = _frames(spark, n, edges)
+    labels, rounds = connected_components(e, v, max_iters=12)
+    assert rounds <= 8, f"took {rounds} rounds on a 41-path"
+    assert _labels_dict(labels) == union_find(n, edges)
+    # capped below the rounds it needs, it must REFUSE (not return
+    # partial labels)
     with pytest.raises(ComponentsNotConverged):
-        min_label_propagation(e, v, max_iters=10)
-    # ... while large/small-star collapses the chain in O(log^2 n) rounds
-    labels, rounds = large_small_star(e, v, max_iters=12)
-    assert rounds <= 8, f"two-phase took {rounds} rounds on a 41-path"
-    assert _labels_dict(labels) == union_find(n, edges)
-
-
-def test_path_graph_propagation_converges_given_budget(spark):
-    n = 12
-    edges = [(i, i + 1) for i in range(n - 1)]
-    e, v = _frames(spark, n, edges)
-    labels, rounds = min_label_propagation(e, v, max_iters=25)
-    assert rounds <= n
-    assert _labels_dict(labels) == union_find(n, edges)
+        connected_components(e, v, max_iters=1)
 
 
 @pytest.mark.parametrize("seed", [7, 99])
-def test_random_graph_all_algorithms_agree(spark, seed):
+def test_random_graph_matches_union_find(spark, seed):
     rng = random.Random(seed)
     n = 60
     edges = [
@@ -85,12 +75,11 @@ def test_random_graph_all_algorithms_agree(spark, seed):
     ]  # sparse: isolated vertices + multi-node components + self-loops
     expected = union_find(n, edges)
     e, v = _frames(spark, n, edges)
-    for algo in ("propagation", "two_phase"):
-        got = _labels_dict(connected_components(e, v, algorithm=algo, max_iters=30))
-        assert got == expected, f"{algo} diverged from union-find (seed {seed})"
+    labels, _ = connected_components(e, v, max_iters=30)
+    assert _labels_dict(labels) == expected, f"diverged from union-find (seed {seed})"
 
 
 def test_isolated_vertices_label_themselves(spark):
     e, v = _frames(spark, 5, [])
-    got = _labels_dict(connected_components(e, v, algorithm="two_phase"))
-    assert got == {i: i for i in range(5)}
+    labels, _ = connected_components(e, v)
+    assert _labels_dict(labels) == {i: i for i in range(5)}

@@ -122,18 +122,6 @@ def test_d02_bitmap_plan_gated_on_doc_count(spark, monkeypatch):
     assert dedup._d02_choose_vocab(docs) is None
 
 
-def test_s01_numpy_path_matches_jvm_path(spark):
-    """The adaptive scorer's two physical plans (JVM expression vs Arrow
-    numpy kernel) must produce bit-identical top-k results."""
-    from lakekeeper_spark.data import load_table
-    from lakekeeper_spark.queries.similarity import _s01_jvm, _s01_numpy
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    jvm = {(r.query_id, r.neighbor_id): r.cosine for r in _s01_jvm(emb).collect()}
-    np_ = {(r.query_id, r.neighbor_id): r.cosine for r in _s01_numpy(emb).collect()}
-    assert jvm == np_
-
-
 def test_d02_prefix_filter_path_matches_bitmap_path(spark, monkeypatch):
     """Both physical strategies of d02 (bitmap all-pairs vs AllPairs/PPJoin
     prefix filter) must produce identical exact-Jaccard pairs."""

@@ -239,3 +239,32 @@ def test_insert_only_merge_commits_an_append(spark, catalog, mode, fv):
     t.merge(src, "t.id = s.id", not_matched_insert=False, mode=mode)
     t.merge(src.filter("id = 2"), "t.id = s.id", mode=mode)
     assert len(t.metadata()["snapshots"]) == n_snaps
+
+
+@pytest.mark.parametrize("fv", [2, 3])
+def test_written_data_files_all_hold_rows(spark, catalog, fv):
+    """Spark leaves an empty parquet file for an empty write task. A
+    merge-on-read MERGE with updates and inserts commits no zero-row data
+    entry and leaves no row-less file under data/. An append of an empty
+    frame still commits an append snapshot, with no data entry."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    from lakekeeper_spark.format.icelite import snapshot_entries
+
+    t = _table(spark, catalog, f"rows_{fv}", [(i, i) for i in range(4)], "id int, x int", fv)
+    src = spark.createDataFrame([(1, 100), (9, 90)], "id int, x int").repartition(6)
+    t.merge(src, "t.id = s.id", matched_update={"x": "s.x"}, mode="merge-on-read")
+    entries = snapshot_entries(t.metadata()["snapshots"][-1])
+    assert [e["path"] for e in entries if e["record-count"] == 0] == []
+    n_snaps = len(t.metadata()["snapshots"])
+    t.append(spark.createDataFrame([], "id int, x int"))
+    snap = t.metadata()["snapshots"][-1]
+    assert len(t.metadata()["snapshots"]) == n_snaps + 1
+    assert snap["summary"]["operation"] == "append"
+    assert snap["summary"].get("added-data-files", 0) == 0
+    assert [e for e in snapshot_entries(snap) if e["record-count"] == 0] == []
+    data = Path(t.metadata()["location"]) / "data"
+    assert [p for p in data.rglob("*.parquet") if pq.ParquetFile(p).metadata.num_rows == 0] == []
+    assert sorted(tuple(r) for r in t.scan().collect()) == [(0, 0), (1, 100), (2, 2), (3, 3), (9, 90)]

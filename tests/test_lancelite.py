@@ -609,63 +609,6 @@ def test_column_metadata_is_real_protobuf(tmp_path):
             assert o + s <= cm_start  # pages live before the metadata
 
 
-def test_legacy_json_metadata_files_still_read(tmp_path):
-    """Files written by earlier lancelite rounds carried JSON payloads;
-    the reader auto-detects per payload, so old datasets stay
-    readable."""
-    import json as _json
-
-    fields = [Field("k", "int64", nullable=False), Field("s", "utf8")]
-    cols = {"k": [1, 2, 3], "s": ["a", None, "c"]}
-    # assemble a legacy file: same container, JSON metadata payloads
-    out = bytearray()
-    col_meta = []
-    for f in fields:
-        arr = ll._to_arrow_column(f, cols[f.name])
-        bufs, enc, stats = ll._encode_page(f, arr)
-        offs, sizes = [], []
-        for b in bufs:
-            offs.append(len(out))
-            sizes.append(len(b))
-            out += b
-        page = {
-            "buffer_offsets": offs, "buffer_sizes": sizes,
-            "length": 3, "priority": 0, "encoding": enc,
-        }
-        if stats is not None:
-            page["stats"] = stats
-        col_meta.append({"pages": [page]})
-    cm_start = len(out)
-    cm_entries = []
-    for cm in col_meta:
-        blob = _json.dumps(cm, sort_keys=True).encode()
-        cm_entries.append((len(out), len(blob)))
-        out += blob
-    cmo = len(out)
-    for o, s in cm_entries:
-        out += struct.pack("<QQ", o, s)
-    desc = _json.dumps(
-        {"fields": [f.to_json() for f in fields], "num_rows": 3},
-        sort_keys=True,
-    ).encode()
-    gb = [(len(out), len(desc))]
-    out += desc
-    gbo = len(out)
-    for o, s in gb:
-        out += struct.pack("<QQ", o, s)
-    out += struct.pack(
-        "<QQQIIHH4s", cm_start, cmo, gbo, 1, len(fields), 0, 3, b"LANC"
-    )
-    p = str(tmp_path / "legacy.lance")
-    open(p, "wb").write(bytes(out))
-    got_fields, got = ll.read_file(p)
-    assert [f.name for f in got_fields] == ["k", "s"]
-    assert got == cols
-    # zone maps from JSON stats work too
-    _, pruned = ll.read_file(p, range_filter={"k": (100, 200)})
-    assert pruned["k"] == []  # single page skipped by its stats
-
-
 # --------------------------------------------------------------------------
 # round-15: google.protobuf.Any-wrapped ArrayEncoding (real-library layout)
 # --------------------------------------------------------------------------
@@ -827,77 +770,79 @@ def test_written_pages_carry_any_wrapped_array_encoding(tmp_path):
                 assert set(st) <= {1, 2, 3, 4, 5}
 
 
-def test_legacy_round14_encoding_payloads_still_read(tmp_path):
-    """Files written by round-14 lancelite carried a LanceliteEncoding
-    message in DirectEncoding.encoding; the reader auto-detects and
-    stays exact."""
+def test_legacy_payloads_raise_naming_their_format(tmp_path):
+    """Earlier lancelite rounds wrote JSON metadata payloads (round <= 13)
+    and a LanceliteEncoding message in place of the Any (round 14). No
+    code writes either; a file carrying one raises LanceLiteError naming
+    the legacy format instead of mis-decoding."""
+    from lakekeeper_spark.format.protowire import encode_message
+    from lakekeeper_spark.format.lancelite import (
+        _P_COLUMN_METADATA, _descriptor_from_bytes, parse_column_metadata,
+    )
+
     p = str(tmp_path / "f.lance")
     ll.write_file(p, FIELDS, _columns(5))
-    data = bytearray(open(p, "rb").read())
+    data = open(p, "rb").read()
     cm_start, cmo, gbo, ngb, n_cols = struct.unpack_from(
         "<QQQII", data, len(data) - 40
     )
-    # rewrite every column's metadata with the legacy payload
-    from lakekeeper_spark.format.protowire import encode_message
-    from lakekeeper_spark.format.lancelite import (
-        _P_COLUMN_METADATA, _P_LL_ENCODING, parse_column_metadata,
-    )
 
-    legacy_blobs = []
+    def swap_metadata(col_blobs, desc):
+        """The written file with its metadata section replaced."""
+        out = bytearray(data[:cm_start])
+        entries = []
+        for blob in col_blobs:
+            entries.append((len(out), len(blob)))
+            out += blob
+        cmo2 = len(out)
+        for o, s in entries:
+            out += struct.pack("<QQ", o, s)
+        gb = (len(out), len(desc))
+        out += desc
+        gbo2 = len(out)
+        out += struct.pack("<QQ", *gb)
+        out += struct.pack(
+            "<QQQIIHH4s", cm_start, cmo2, gbo2, 1, n_cols, 0, 3, b"LANC")
+        q = str(tmp_path / f"legacy{len(list(tmp_path.iterdir()))}.lance")
+        open(q, "wb").write(bytes(out))
+        return q
+
+    col_blobs = []
     for ci in range(n_cols):
         off, size = struct.unpack_from("<QQ", data, cmo + 16 * ci)
-        cm = parse_column_metadata(bytes(data[off:off + size]))
-        pages = []
-        for pg in cm["pages"]:
-            enc = pg["encoding"]
-            doc = {"kind": enc["type"],
-                   "has_validity": enc["has_validity"],
-                   "dim": int(enc.get("dim", 0))}
-            if pg.get("stats") is not None:
-                is_f = isinstance(pg["stats"]["min"], float)
-                doc["has_stats"] = True
-                doc["stats_float"] = is_f
-                if is_f:
-                    doc["min_double"] = pg["stats"]["min"]
-                    doc["max_double"] = pg["stats"]["max"]
-                else:
-                    doc["min_int"] = pg["stats"]["min"]
-                    doc["max_int"] = pg["stats"]["max"]
-            pages.append({
-                "buffer_offsets": pg["buffer_offsets"],
-                "buffer_sizes": pg["buffer_sizes"],
-                "length": pg["length"], "priority": pg["priority"],
-                "encoding": {"direct": {
-                    "encoding": encode_message(_P_LL_ENCODING, doc)}},
-            })
-        legacy_blobs.append(
-            encode_message(_P_COLUMN_METADATA, {"pages": pages}))
-    # rebuild the file with the legacy metadata section
-    body = bytes(data[:cm_start])
-    out = bytearray(body)
-    cm_entries = []
-    for blob in legacy_blobs:
-        cm_entries.append((len(out), len(blob)))
-        out += blob
-    cmo2 = len(out)
-    for o, s in cm_entries:
-        out += struct.pack("<QQ", o, s)
+        col_blobs.append(bytes(data[off:off + size]))
     goff, gsize = struct.unpack_from("<QQ", data, gbo)
     desc = bytes(data[goff:goff + gsize])
-    gb_entries = [(len(out), len(desc))]
-    out += desc
-    gbo2 = len(out)
-    for o, s in gb_entries:
-        out += struct.pack("<QQ", o, s)
-    out += struct.pack(
-        "<QQQIIHH4s", cm_start, cmo2, gbo2, 1, n_cols, 0, 3, b"LANC")
-    p2 = str(tmp_path / "legacy14.lance")
-    open(p2, "wb").write(bytes(out))
-    f1, c1 = ll.read_file(p)
-    f2, c2 = ll.read_file(p2)
-    assert c1 == c2
+    assert ll.read_file(swap_metadata(col_blobs, desc))[1] == _columns(5)
 
+    # round <= 13: JSON column metadata, JSON descriptor
+    json_cm = b'{"pages": []}'
+    json_desc = b'{"fields": [{"name": "k", "type": "int64"}], "num_rows": 5}'
+    with pytest.raises(LanceLiteError, match="round-13 lancelite JSON"):
+        parse_column_metadata(json_cm)
+    with pytest.raises(LanceLiteError, match="round-13 lancelite JSON"):
+        _descriptor_from_bytes(json_desc)
+    with pytest.raises(LanceLiteError, match="round-13 lancelite JSON"):
+        ll.read_file(swap_metadata(col_blobs, json_desc))
+    with pytest.raises(LanceLiteError, match="round-13 lancelite JSON"):
+        ll.read_file(swap_metadata([json_cm] * n_cols, desc))
 
+    # round 14: LanceliteEncoding{kind=1, has_validity=2} in place of the Any
+    round14 = _ld(1, b"plain") + _vi(2, 0)
+    legacy = []
+    for blob in col_blobs:
+        cm = parse_column_metadata(blob)
+        legacy.append(encode_message(_P_COLUMN_METADATA, {"pages": [
+            {"buffer_offsets": pg["buffer_offsets"],
+             "buffer_sizes": pg["buffer_sizes"],
+             "length": pg["length"], "priority": pg["priority"],
+             "encoding": {"direct": {"encoding": round14}}}
+            for pg in cm["pages"]
+        ]}))
+    with pytest.raises(LanceLiteError, match="round-14 lancelite"):
+        parse_column_metadata(legacy[0])
+    with pytest.raises(LanceLiteError, match="round-14 lancelite"):
+        ll.read_file(swap_metadata(legacy, desc))
 def test_unsupported_array_encodings_raise_actionable(tmp_path):
     """Unknown ArrayEncoding variants are OUTSIDE the lancelite subset:
     the error says to register the real library. (All-null pages joined

@@ -1087,6 +1087,57 @@ def test_endpoint_statistics_over_http(tmp_path):
         server.stop()
 
 
+def test_endpoint_statistics_count_only_rest_requests(tmp_path, spark):
+    """The endpoint statistics count REST endpoint calls, nothing else: a
+    PlanTableScan, a library SparkTable load, an in-process scan report
+    and a vended-credentials loadTable each leave the other endpoints'
+    counters alone, and a REST loadTable adds exactly 1."""
+    import json as _json
+    import urllib.request
+
+    catalog = Catalog(Metastore(str(tmp_path / "m.db")))
+    catalog.create_warehouse("wh", str(tmp_path / "wh"))
+    catalog.create_namespace("wh", ["ns"])
+    df = spark.createDataFrame([(1,), (2,)], "k long")
+    catalog.create_table("wh", ["ns"], "t", struct_to_schema(df.schema))
+    server = RestCatalogServer(catalog).start()
+    client = RestCatalogClient(server.url)
+    try:
+        def counts():
+            r = urllib.request.Request(
+                server.url + "/management/v1/endpoint-statistics",
+                data=b"{}",
+                headers={"Content-Type": "application/json"},
+                method="POST",
+            )
+            with urllib.request.urlopen(r) as resp:
+                out = _json.loads(resp.read())
+            got: dict[str, int] = {}
+            for hour_slice in out["called-endpoints"]:
+                for e in hour_slice:
+                    got[e["http-route"]] = got.get(e["http-route"], 0) + e["count"]
+            return got
+
+        lib = SparkTable(spark, catalog, "wh", ["ns"], "t")
+        lib.append(df)
+        assert lib.scan().count() == 2  # library loads + a scan report
+        assert client.plan_table_scan("wh", ["ns"], "t")["plan-tasks"]
+        assert counts() == {}
+
+        client.load_table("wh", ["ns"], "t")
+        assert counts() == {"load_table": 1}
+
+        r = urllib.request.Request(
+            server.url + "/catalog/v1/wh/namespaces/ns/tables/t",
+            headers={"X-Iceberg-Access-Delegation": "vended-credentials"},
+        )
+        with urllib.request.urlopen(r) as resp:
+            resp.read()
+        assert counts() == {"load_table": 2}
+    finally:
+        server.stop()
+
+
 def test_pooled_load_table_payload_equivalent_and_smaller(rest, spark):
     """The ?pooled-manifests wire form (round 16): the engine client's
     rehydrated document equals the plain spec document a foreign client
