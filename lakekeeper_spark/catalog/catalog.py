@@ -332,9 +332,7 @@ class Catalog:
         WarehouseNotActive); management operations pass
         ``any_status=True`` (the reference's
         WarehouseStatus::active_and_inactive() fetches)."""
-        project_scope = None
-        if "/" in warehouse:
-            project_scope, warehouse = warehouse.split("/", 1)
+        project_scope, warehouse = _warehouse_ident(warehouse)
         wh_key = ident.fold(warehouse)
         if self.warehouse_cache is not None:
             import copy
@@ -1021,8 +1019,8 @@ class Catalog:
         """Count one served REST request in the endpoint statistics. Only
         the REST handlers call this: library loads, scan planning and
         in-process scan reports are not endpoint calls. ``warehouse`` was
-        resolved by the request, so its key is the folded name part."""
-        self.store.record_endpoint(endpoint, ident.fold(warehouse.split("/", 1)[-1]))
+        resolved by the request."""
+        self.store.record_endpoint(endpoint, ident.fold(_warehouse_ident(warehouse)[1]))
 
     def report_metrics(
         self, warehouse: str, levels, name: str, report: dict[str, Any]
@@ -2035,6 +2033,15 @@ class Catalog:
             }
             for r in rows
         ]
+
+
+def _warehouse_ident(warehouse: str) -> tuple[str | None, str]:
+    """Split a warehouse identifier into (project, name): engines pass
+    ``project/name`` to GET /config, everyone else the bare name."""
+    if "/" in warehouse:
+        project, name = warehouse.split("/", 1)
+        return project, name
+    return None, warehouse
 
 
 # ---------------------------------------------------------------------------

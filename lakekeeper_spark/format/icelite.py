@@ -46,7 +46,7 @@ import time
 import uuid
 from pathlib import Path
 from typing import Any, Callable, Iterable
-from urllib.parse import unquote
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1054,6 +1054,12 @@ def _next_seq(meta: dict[str, Any]) -> int:
     )
 
 
+def _local_path(uri: str) -> str:
+    """The local file path of a file URI as Spark reports it
+    (percent-encoded)."""
+    return unquote(urlparse(uri).path)
+
+
 def _file_bounds(md) -> dict[str, list]:
     """Per-column [min, max] from the parquet footer (Iceberg manifests
     carry lower/upper bounds per data file; this is the icelite analogue).
@@ -1336,30 +1342,33 @@ class SparkTable:
                 # the footer carries a LogicalType this pyarrow build
                 # can't parse (Spark 4 writes a VARIANT logical type);
                 # fall back to one Spark count over the commit dir and
-                # skip stats bounds for these files
+                # skip stats bounds for these files. Files match on the
+                # full path, not the basename: one dynamic-partitioning
+                # task writes the SAME basename into several partition
+                # dirs. Spark reports paths as URIs ('a b' -> 'a%20b',
+                # the hive-escaped 'c%3Ad' -> 'c%253Ad'), so both sides
+                # compare as absolute local paths. A listed file that
+                # yields no row holds none; an unlisted one is an error,
+                # never a count of 0 (a 0 deletes the file below)
                 if counts_by_file is None:
-                    counts_by_file = {
-                        r.f: r.n
-                        for r in self.spark.read.parquet(out_dir)
-                        .groupBy(F.col("_metadata.file_path").alias("f"))
+                    files = self.spark.read.parquet(out_dir)
+                    counts_by_file = dict.fromkeys(
+                        map(_local_path, files.inputFiles()), 0
+                    )
+                    counts_by_file.update(
+                        (_local_path(r.f), r.n)
+                        for r in files.groupBy(
+                            F.col("_metadata.file_path").alias("f")
+                        )
                         .agg(F.count(F.lit(1)).alias("n"))
                         .collect()
-                    }
-                # match on the out_dir-relative path, not the basename:
-                # one dynamic-partitioning task writes the SAME basename
-                # (part-NNNNN-<jobuuid>.parquet) into several partition
-                # dirs, so a basename match could pick another
-                # partition's count (wrong manifest stats and, on v3
-                # tables, overlapping first-row-id ranges)
-                relp = p.relative_to(out_dir).as_posix()
-                nrows = next(
-                    (
-                        n
-                        for f, n in counts_by_file.items()
-                        if f.endswith("/" + relp)
-                    ),
-                    0,  # row-group-less file: holds no rows
-                )
+                    )
+                nrows = counts_by_file.get(os.path.abspath(p))
+                if nrows is None:
+                    raise CatalogError(
+                        f"written file {p} is missing from Spark's listing "
+                        f"of {out_dir}; its row count is unknown"
+                    )
                 bounds = {}
             if nrows == 0:
                 # Spark leaves an empty file for an empty write task

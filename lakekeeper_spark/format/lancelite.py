@@ -228,7 +228,6 @@ class Field:
         return d
 
 
-
 def _pa_type(f: Field):
     import pyarrow as pa
 

@@ -204,17 +204,11 @@ def test_commit_engine_rejects_nested_defaults_below_v3():
     apply_commit(meta3, [], [{"action": "add-schema", "schema": bad}])
 
 
-def test_variant_footer_fallback_counts_by_partition_path(
-    spark, catalog, monkeypatch
-):
-    """The pyarrow-footer fallback (VARIANT logical type) must attribute
-    per-file row counts by the out_dir-RELATIVE path: with dynamic
-    partitioning one task writes the SAME basename into several
-    partition dirs, so a basename match could return another partition's
-    count — wrong manifest stats and, on v3, overlapping first-row-id
-    ranges."""
+def _variant_fallback_table(spark, catalog, monkeypatch, ns):
+    """A v3 table partitioned by ``part`` with a VARIANT column, whose
+    appends take the pyarrow-footer fallback even if this pyarrow build
+    parses the footer."""
     import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
 
     p_schema = {
         "schema-id": 0,
@@ -225,39 +219,85 @@ def test_variant_footer_fallback_counts_by_partition_path(
              "required": False},
         ],
     }
-    catalog.create_namespace("wh", ["vfb"])
+    catalog.create_namespace("wh", [ns])
     catalog.create_table(
-        "wh", ["vfb"], "t", p_schema, format_version=3,
+        "wh", [ns], "t", p_schema, format_version=3,
         partition_spec={
             "spec-id": 0,
             "fields": [{"source-id": 2, "field-id": 1000,
                         "transform": "identity", "name": "part"}],
         },
     )
-    t = SparkTable(spark, catalog, "wh", ["vfb"], "t")
-    # 2 rows in partition a, 5 in partition b, ONE upstream task ->
-    # identical basenames across both partition directories
-    df = (
+
+    def _boom(*a, **k):
+        raise OSError("unsupported logical type")
+
+    monkeypatch.setattr(pq, "ParquetFile", _boom)
+    return SparkTable(spark, catalog, "wh", [ns], "t")
+
+
+def _variant_rows(spark, parts):
+    """2 rows in partition parts[0], 5 in parts[1], from ONE upstream
+    task -> identical basenames across both partition directories."""
+    from pyspark.sql import functions as F
+
+    return (
         spark.createDataFrame(
-            [(i, "a" if i < 2 else "b") for i in range(7)],
+            [(i, parts[0] if i < 2 else parts[1]) for i in range(7)],
             "id long, part string",
         )
         .withColumn("payload", F.parse_json(F.lit('{"x": 1}')))
         .coalesce(1)
     )
-    # force the fallback even if this pyarrow build parses the footer
-    def _boom(*a, **k):
-        raise OSError("unsupported logical type")
 
-    monkeypatch.setattr(pq, "ParquetFile", _boom)
-    t.append(df)
-    snap = t.metadata()["snapshots"][-1]
-    counts = {
+
+def _data_counts(t):
+    return {
         e["partition"]["part"]: e["record-count"]
-        for e in snapshot_entries(snap)
+        for e in snapshot_entries(t.metadata()["snapshots"][-1])
         if e.get("content", "data") == "data"
     }
-    assert counts == {"a": 2, "b": 5}
+
+
+def test_variant_footer_fallback_counts_by_partition_path(
+    spark, catalog, monkeypatch
+):
+    """The pyarrow-footer fallback (VARIANT logical type) must attribute
+    per-file row counts by the full path: with dynamic partitioning one
+    task writes the SAME basename into several partition dirs, so a
+    basename match could return another partition's count — wrong
+    manifest stats and, on v3, overlapping first-row-id ranges."""
+    t = _variant_fallback_table(spark, catalog, monkeypatch, "vfb")
+    t.append(_variant_rows(spark, ["a", "b"]))
+    assert _data_counts(t) == {"a": 2, "b": 5}
     # and the v3 row-id ranges built on those counts stay disjoint
     rows = {r.id: r._row_id for r in t.scan(row_lineage=True).collect()}
     assert sorted(rows.values()) == list(range(7))
+
+
+def test_variant_footer_fallback_keeps_files_in_escaped_partitions(
+    spark, catalog, monkeypatch
+):
+    """Spark reports file paths percent-encoded: a partition dir 'a b'
+    reads back as 'a%20b' and the hive-escaped 'c%3Ad' as 'c%253Ad'. The
+    fallback still finds their counts; a file it could not match would
+    count as empty and be deleted with its rows. The empty file Spark
+    writes for an empty unpartitioned append is known empty: it is
+    deleted and gets no entry."""
+    from pathlib import Path
+
+    t = _variant_fallback_table(spark, catalog, monkeypatch, "vesc")
+    t.append(_variant_rows(spark, ["a b", "c:d"]))
+    assert _data_counts(t) == {"a b": 2, "c:d": 5}
+    assert sorted(r.id for r in t.scan().collect()) == list(range(7))
+
+    catalog.create_table("wh", ["vesc"], "u", V_SCHEMA, format_version=3)
+    u = SparkTable(spark, catalog, "wh", ["vesc"], "u")
+    deleted, unlink = [], Path.unlink
+    monkeypatch.setattr(
+        Path, "unlink", lambda p: (deleted.append(p.suffix), unlink(p))
+    )
+    u.append(_variant_rows(spark, ["a", "b"]).select("id", "payload").limit(0))
+    assert deleted == [".parquet"]
+    assert u.metadata()["snapshots"][-1]["summary"].get("added-data-files", 0) == 0
+    assert list((Path(u.metadata()["location"]) / "data").rglob("*.parquet")) == []

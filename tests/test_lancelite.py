@@ -843,6 +843,8 @@ def test_legacy_payloads_raise_naming_their_format(tmp_path):
         parse_column_metadata(legacy[0])
     with pytest.raises(LanceLiteError, match="round-14 lancelite"):
         ll.read_file(swap_metadata(legacy, desc))
+
+
 def test_unsupported_array_encodings_raise_actionable(tmp_path):
     """Unknown ArrayEncoding variants are OUTSIDE the lancelite subset:
     the error says to register the real library. (All-null pages joined
